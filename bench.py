@@ -547,9 +547,11 @@ def main() -> None:
     # over each query's completed stages gives the compute actually done:
     # task_sec/wall_sec ≈ effective parallelism, which separates
     # compute-bound queries (ratio » 1, should scale with cores) from
-    # overhead-bound ones (ratio ≈ 1, won't) — readable from ONE run, and
-    # comparable across the driver's 32- and 8-core runs (task_sec is
-    # core-count-invariant for the same plan). Stages are attributed by
+    # overhead-bound ones (ratio ≈ 1, won't) — readable from ONE run.
+    # task_sec is NOT core-count-invariant: AQE coalesces to a different
+    # partition count and per-task overhead scales with the task count,
+    # so compare it across the 32- and 8-core runs only as a rough
+    # indication of where compute went. Stages are attributed by
     # arrival: between two fetches the only jobs are the current query's
     # iterations. Fetch failures degrade to empty maps, never fail bench.
     import urllib.request

@@ -38,6 +38,7 @@ from __future__ import annotations
 
 import math
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -72,6 +73,32 @@ def _retire_assign_broadcasts() -> None:
             b.unpersist(blocking=False)
         except Exception:
             pass  # session already stopped
+
+
+def _assign_to_centers(batches, ce, cn, cv):
+    """Per Arrow batch of (vec_id, e, nr) rows: the nearest center by
+    cosine distance against the center vectors ``ce``, their norms ``cn``
+    and vec_ids ``cv``. A 0-row batch is skipped: its vector matrix is
+    1-D and has no dimension axis to fold over."""
+    import numpy as np
+
+    for pdf in batches:
+        if pdf.empty:
+            continue
+        m = np.array(pdf["e"].tolist(), dtype="float64")
+        nr = pdf["nr"].to_numpy()
+        acc = np.zeros((len(m), len(ce)))
+        for i in range(m.shape[1]):  # left fold over dims == _dot
+            acc = acc + m[:, i : i + 1] * ce[:, i][None, :]
+        d = 1.0 - acc / (nr[:, None] * cn[None, :])
+        pick = np.argmin(d, axis=1)  # first min == lowest rank
+        yield pd.DataFrame(
+            {
+                "center_rank": (pick + 1).astype("int32"),
+                "center_vec_id": cv[pick],
+                "d": d[np.arange(len(m)), pick],
+            }
+        )
 
 
 def _dot(a: list[float], b: list[float]) -> float:
@@ -157,24 +184,7 @@ def kcenter_coreset(t: Tables) -> DataFrame:
     _ASSIGN_BROADCASTS.append(b)
 
     def assign_batches(batches):
-        import pandas as pd
-
-        ce, cn, cv = b.value
-        for pdf in batches:
-            m = np.array(pdf["e"].tolist(), dtype="float64")
-            nr = pdf["nr"].to_numpy()
-            acc = np.zeros((len(m), len(ce)))
-            for i in range(m.shape[1]):  # left fold over dims == _dot
-                acc = acc + m[:, i : i + 1] * ce[:, i][None, :]
-            d = 1.0 - acc / (nr[:, None] * cn[None, :])
-            pick = np.argmin(d, axis=1)  # first min == lowest rank
-            yield pd.DataFrame(
-                {
-                    "center_rank": (pick + 1).astype("int32"),
-                    "center_vec_id": cv[pick],
-                    "d": d[np.arange(len(m)), pick],
-                }
-            )
+        return _assign_to_centers(batches, *b.value)
 
     assigned = (
         emb.select("vec_id", "e", norm.alias("nr"))

@@ -2320,6 +2320,37 @@ def _retire_assign_broadcasts() -> None:
             pass  # session already stopped
 
 
+def _unit_rows(m):
+    import numpy as np
+
+    return m / np.linalg.norm(m, axis=1, keepdims=True)
+
+
+def _kmeans_assign(batches, cents, probes: int = 1):
+    """Per Arrow batch of (vec_id, vec) rows: one row per (vector, probed
+    cluster) for the ``probes`` nearest unit centroids ``cents``. A 0-row
+    batch is skipped: its vector matrix is 1-D and has no dimension axis
+    to normalize over."""
+    import numpy as np
+
+    for pdf in batches:
+        if pdf.empty:
+            continue
+        sims = _unit_rows(np.array(pdf["vec"].tolist(), dtype="float64")) @ cents.T
+        if probes == 1:
+            top = sims.argmax(axis=1).astype("int32")[:, None]
+        else:
+            top = np.argsort(-sims, axis=1)[:, :probes].astype("int32")
+        p = top.shape[1]
+        yield pd.DataFrame(
+            {
+                "vec_id": pdf["vec_id"].to_numpy().repeat(p),
+                "cluster": top.ravel(),
+                "vec": pdf["vec"].to_numpy().repeat(p),
+            }
+        )
+
+
 def _spherical_kmeans(emb: DataFrame, k: int, iters: int, tol: float = KMEANS_TOL):
     """Distributed spherical k-means (Lloyd's) over (vec_id, vec).
 
@@ -2366,10 +2397,7 @@ def _spherical_kmeans(emb: DataFrame, k: int, iters: int, tol: float = KMEANS_TO
     spark = emb.sparkSession
     _retire_assign_broadcasts()
 
-    def normalize(m):
-        return m / np.linalg.norm(m, axis=1, keepdims=True)
-
-    cents = normalize(
+    cents = _unit_rows(
         np.array(
             emb.orderBy("vec_id").limit(k).toPandas()["vec"].tolist(),
             dtype="float64",
@@ -2381,21 +2409,7 @@ def _spherical_kmeans(emb: DataFrame, k: int, iters: int, tol: float = KMEANS_TO
         _ASSIGN_BROADCASTS.append(b)
 
         def assign(batches):
-            for pdf in batches:
-                mat = normalize(np.array(pdf["vec"].tolist(), dtype="float64"))
-                sims = mat @ b.value.T
-                if probes == 1:
-                    top = sims.argmax(axis=1).astype("int32")[:, None]
-                else:
-                    top = np.argsort(-sims, axis=1)[:, :probes].astype("int32")
-                p = top.shape[1]
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"].to_numpy().repeat(p),
-                        "cluster": top.ravel(),
-                        "vec": pdf["vec"].to_numpy().repeat(p),
-                    }
-                )
+            return _kmeans_assign(batches, b.value, probes)
 
         return assign
 
@@ -2407,8 +2421,10 @@ def _spherical_kmeans(emb: DataFrame, k: int, iters: int, tol: float = KMEANS_TO
 
             pid = TaskContext.get().partitionId()
             for seq, pdf in enumerate(batches):
+                if pdf.empty:
+                    continue  # 1-D vector matrix: no dimension axis
                 raw = np.array(pdf["vec"].tolist(), dtype="float64")
-                sims = normalize(raw) @ b.value.T
+                sims = _unit_rows(raw) @ b.value.T
                 top = sims.argmax(axis=1)
                 clusters = np.unique(top)
                 yield pd.DataFrame(
@@ -3267,7 +3283,6 @@ def whiten_check(t: Tables) -> DataFrame:
     emb = _emb_frame(t)
     mean, zca, _ = _whitening_model(emb)
     b = emb.sparkSession.sparkContext.broadcast((mean, zca))
-    _ASSIGN_BROADCASTS.append(b)
 
     def whitened_moments(batches):
         from pyspark import TaskContext
@@ -3298,7 +3313,12 @@ def whiten_check(t: Tables) -> DataFrame:
         whitened_moments,
         schema="pid int, n long, s array<double>, g array<double>",
     )
-    n, s, g = _collect_moment_partials(parts)
+    try:
+        n, s, g = _collect_moment_partials(parts)
+    finally:
+        # the moment pass is eager: free the broadcast now instead of
+        # leaving it for the next _spherical_kmeans call to retire
+        b.unpersist(blocking=False)
     d = len(s)
     mu = s / n
     cov = g.reshape(d, d) / n - np.outer(mu, mu)

@@ -5,6 +5,21 @@ correct on a multi-executor cluster: AQE enabled (runtime coalescing + skew
 join handling), Arrow enabled for the pandas-UDF paths, UTC session timezone
 so results compare bit-for-bit against the DuckDB oracle (DuckDB timestamps
 are UTC-naive).
+
+One default is local-only. Spark lists more than
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` (default 32)
+paths with a distributed job, one task per path. The file-stream source
+rebuilds its file index over each trigger's new files in ``getBatch``, so
+with ``maxFilesPerTrigger`` above 32 every micro-batch would launch an
+extra N-task Spark job just to ``stat`` N local files. Measured on the
+60-file taxi drain (``local[4]``), ``getBatch`` takes ~300-500 ms of a
+~1.0-1.4 s batch cycle with that job and ~15-20 ms when the driver lists
+the files. Under a ``local[...]`` master the threshold is therefore
+raised so listing never becomes a job. Cluster
+masters keep Spark's default, because there listing is remote I/O worth
+spreading over executors. The file source reads this conf from the live
+session at every ``getBatch``, so it must be a session default, not a
+per-query setting; ``extra_conf`` still overrides it.
 """
 
 from __future__ import annotations
@@ -15,6 +30,11 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+#: above this many paths Spark lists files with a distributed job; raised
+#: under local masters only (module docstring)
+LISTING_THRESHOLD_KEY = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+LOCAL_LISTING_THRESHOLD = str(2**31 - 1)
 
 #: streaming state-store providers by short name. HDFSBackedStateStore
 #: (Spark's default — what the reference ran) keeps every stateful
@@ -72,32 +92,11 @@ def get_spark(
             pkg_root + (os.pathsep + py_path if py_path else "")
         )
 
-    builder = SparkSession.builder.appName(app_name)
     if master is None:
         master = f"local[{DEFAULT_CPUS}]"
-    builder = builder.master(master)
-    conf = {
-        "spark.sql.shuffle.partitions": str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.parquet.filterPushdown": "true",
-        "spark.ui.enabled": "false",
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-        # ship the package path to executors on a real cluster too (in
-        # local mode workers inherit the driver env set above)
-        "spark.executorEnv.PYTHONPATH": os.environ["PYTHONPATH"],
-    }
     state_store = state_store or os.environ.get("SPARK_GRAFT_STATE_STORE")
-    if state_store:
-        conf["spark.sql.streaming.stateStore.providerClass"] = (
-            STATE_STORE_PROVIDERS.get(state_store, state_store)
-        )
-    if extra_conf:
-        conf.update(extra_conf)
-    for k, v in conf.items():
+    builder = SparkSession.builder.appName(app_name).master(master)
+    for k, v in session_conf(master, shuffle_partitions, extra_conf, state_store).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     if state_store:
@@ -110,3 +109,36 @@ def get_spark(
         )
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def session_conf(
+    master: str,
+    shuffle_partitions: str | int | None = None,
+    extra_conf: dict[str, str] | None = None,
+    state_store: str | None = None,
+) -> dict[str, str]:
+    """The builder confs :func:`get_spark` applies for ``master``."""
+    conf = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.parquet.filterPushdown": "true",
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        # ship the package path to executors on a real cluster too (in
+        # local mode workers inherit the driver env set above)
+        "spark.executorEnv.PYTHONPATH": os.environ.get("PYTHONPATH", ""),
+    }
+    if master == "local" or master.startswith("local["):
+        # list files on the driver: see the module docstring
+        conf[LISTING_THRESHOLD_KEY] = LOCAL_LISTING_THRESHOLD
+    if state_store:
+        conf["spark.sql.streaming.stateStore.providerClass"] = (
+            STATE_STORE_PROVIDERS.get(state_store, state_store)
+        )
+    if extra_conf:
+        conf.update(extra_conf)
+    return conf

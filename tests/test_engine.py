@@ -111,3 +111,23 @@ def test_check_order_front_loads_changed_sources(monkeypatch):
     # flagged (never a new op with no receipt)
     monkeypatch.undo()
     assert R._changed_since_receipt(hashes) <= set(R._source_receipts())
+
+
+def test_file_listing_threshold_is_local_only(spark):
+    """Local masters list files on the driver; cluster masters keep
+    Spark's distributed listing; ``extra_conf`` still overrides."""
+    from streamming_processing_pyspark_spark.session import (
+        LISTING_THRESHOLD_KEY,
+        LOCAL_LISTING_THRESHOLD,
+        session_conf,
+    )
+
+    for master in ("local", "local[4]", "local[*]"):
+        assert session_conf(master)[LISTING_THRESHOLD_KEY] == LOCAL_LISTING_THRESHOLD
+    for master in ("spark://head:7077", "yarn", "k8s://https://api:6443",
+                   "local-cluster[2,1,1024]"):
+        assert LISTING_THRESHOLD_KEY not in session_conf(master)
+    override = {LISTING_THRESHOLD_KEY: "32"}
+    assert session_conf("local[4]", extra_conf=override)[LISTING_THRESHOLD_KEY] == "32"
+    # the test session is local, so it carries the raised default
+    assert spark.conf.get(LISTING_THRESHOLD_KEY) == LOCAL_LISTING_THRESHOLD

@@ -1468,6 +1468,42 @@ def test_bradley_terry_manual(spark):
     assert got == [("A", 2, 1, 666666), ("B", 1, 2, 333333)]
 
 
+def test_assign_udfs_skip_empty_arrow_batches():
+    """The kcenter and kmeans assignment batch functions skip a 0-row
+    Arrow batch (its vector matrix is 1-D, with no dimension axis) and
+    still assign the batches after it."""
+    import numpy as np
+    import pandas as pd
+
+    from streamming_processing_pyspark_spark.operators import coreset
+
+    def frame(vec_col, vecs):
+        return pd.DataFrame(
+            {
+                "vec_id": pd.Series(range(len(vecs)), dtype="int64"),
+                vec_col: pd.Series(vecs, dtype=object),
+                "nr": pd.Series([np.linalg.norm(v) for v in vecs], dtype="float64"),
+            }
+        )
+
+    ce, cn, cv = np.eye(2), np.ones(2), np.array([10, 20], dtype="int64")
+    out = list(
+        coreset._assign_to_centers(
+            iter([frame("e", []), frame("e", [[0.0, 3.0]])]), ce, cn, cv
+        )
+    )
+    assert [o["center_vec_id"].tolist() for o in out] == [[20]]
+    assert list(coreset._assign_to_centers(iter([frame("e", [])]), ce, cn, cv)) == []
+
+    out = list(
+        similarity._kmeans_assign(
+            iter([frame("vec", []), frame("vec", [[0.0, 3.0]])]), ce, probes=2
+        )
+    )
+    assert [o["cluster"].tolist() for o in out] == [[1, 0]]
+    assert list(similarity._kmeans_assign(iter([frame("vec", [])]), ce)) == []
+
+
 def test_kcenter_coreset_orthogonal_clusters(spark):
     """Greedy k-center on 4 orthogonal directions x 3 power-of-two
     magnitudes: the first 4 picks cover the 4 directions (radius 0 cells,
@@ -2298,9 +2334,12 @@ def test_whitening_identity_covariance(spark):
     assert np.abs(np.diag(cov) - 1.0).max() <= 1e-6
     off = cov - np.diag(np.diag(cov))
     assert np.abs(off).max() <= 1e-6
+    held = len(similarity._ASSIGN_BROADCASTS)
     row = similarity.whiten_check(t).first()
     assert row["diag_ok"] and row["offdiag_ok"]
     assert row["n_vecs"] == len(pdf)
+    # whiten_check is eager: it frees its broadcast instead of holding it
+    assert len(similarity._ASSIGN_BROADCASTS) == held
     # scalar slate projection: driver-safe AND traceable to the vectors
     audit = similarity.embedding_whiten_audit(t).toPandas()
     assert set(audit.columns) == {"vec_id", "whiten_checksum", "whiten_norm"}

@@ -110,6 +110,38 @@ def test_file_order_independence(spark, tmp_path):
     assert results[0] == results[1]
 
 
+def test_file_stream_batches_list_files_without_a_job(spark, tmp_path):
+    """A trigger of more than 32 files must not launch a file-listing Spark
+    job in ``getBatch``: the query's job group holds only the sink job of
+    each non-empty micro-batch, and the counts stay those of a batch read."""
+    d = str(tmp_path / "taxi")
+    plan = []
+    for i in range(80):
+        hh, mm = divmod(i * 3, 60)
+        ts = f"2015-12-01 {8 + hh:02d}:{mm:02d}:00"
+        plan.append(
+            (f"part-2015-12-01-{8 + hh:02d}{mm:02d}.csv",
+             [yellow_row(ts, *CITIGROUP_INSIDE)] * (1 + i % 3))
+        )
+    write_taxi_files(d, plan)
+    q, table = run_to_memory(
+        hourly_dropoff_counts(normalize_trips(stream_taxi_csv(spark, d, 40)))
+    )
+    try:
+        got = sorted(
+            (r["hour_of_day"], r["cnt"]) for r in spark.table(table).collect()
+        )
+        non_empty = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    finally:
+        q.stop()
+    assert non_empty == 2
+    assert len(jobs) == non_empty, sorted(jobs)
+    batch = hourly_dropoff_counts(normalize_trips(read_taxi_csv(spark, d)))
+    assert got == sorted((r["hour_of_day"], r["cnt"]) for r in batch.collect())
+    assert sum(c for _, c in got) == sum(1 + i % 3 for i in range(80))
+
+
 def test_streaming_geofence_counts(spark, tmp_path):
     d = str(tmp_path / "taxi")
     write_taxi_files(d, default_plan())
