@@ -29,10 +29,13 @@ for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from streamming_processing_pyspark_spark.operators.pipeline import clear_cc_memo
 from streamming_processing_pyspark_spark.registry import build_queries
 from streamming_processing_pyspark_spark.session import get_spark
-from streamming_processing_pyspark_spark.tables import DEFAULT_SF_DIR, load_table
+from streamming_processing_pyspark_spark.tables import (
+    DEFAULT_SF_DIR,
+    clear_persist_slots,
+    load_table,
+)
 from streamming_processing_pyspark_spark.taxi_datagen import generate_taxi_day
 
 # iters≥3 so the carried median isn't hostage to one bad run on a shared
@@ -520,16 +523,12 @@ def main() -> None:
         t0 = time.perf_counter()
         queries[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
         elapsed = time.perf_counter() - t0
-        # benchmark hygiene: operators that persist/localCheckpoint
-        # shared frames (minhash, dedup_clusters) are done with them
-        # once the query is materialized — drop the blocks so later
+        # benchmark hygiene: release every shared intermediate so later
         # queries aren't measured under another query's storage/GC
-        # pressure. clearCache only unpersists cached frames;
-        # localCheckpoint RDDs are freed by the ContextCleaner when
-        # their Python references die, so collect those too. The CC
-        # label memo would otherwise make iterations 2..N measure a
-        # dict lookup instead of the loop — clear it every iteration.
-        clear_cc_memo()
+        # pressure and iterations 2..N measure the work, not a slot
+        # lookup. localCheckpoint RDDs are freed by the ContextCleaner
+        # when their Python references die, so collect those too.
+        clear_persist_slots()
         spark.catalog.clearCache()
         gc.collect()
         return elapsed

@@ -113,10 +113,8 @@ def _winnow_doc_arrays(t: Tables) -> DataFrame:
     of Python workers and Arrow bridge traffic — the right trade at
     100 TB ingest.
 
-    PERSISTED under one shared slot: every winnowing consumer (pairs,
-    stats, ingest novelty) branches this frame at least twice, and
-    ``persist_replacing``'s sameSemantics reuse means sibling winnowing
-    queries in one session extract fingerprints once, not per query.
+    PERSISTED under one shared slot, so sibling winnowing queries (pairs,
+    stats, ingest novelty) in one session extract fingerprints once.
 
     Suite-context variance (VERDICT r9 §6, closed r10): the suggested
     lower-lambda-depth rewrite — per-window ``array_min(slice(...))``
@@ -177,15 +175,9 @@ def _winnow_doc_arrays(t: Tables) -> DataFrame:
         F.size("hs").alias("n_kgrams"),
         picked.alias("picked"),
     )
-    out = persist_replacing(arrays, "analytics5.winnow_doc_arrays")
-    # r12: fill the cache EAGERLY — every consumer branches this frame
-    # 2-4×, and AQE materializes independent query stages concurrently,
-    # so a lazy persist was rebuilt once per racing branch (measured 3-4
-    # simultaneous extraction builds in the pairs query). One count()
-    # fills the cache before any consumer plan branches; on a warm slot
-    # it is a cached-scan count.
-    out.count()
-    return out
+    # filled on placement: every consumer branches this frame 2-4× (the
+    # pairs query built it 3-4 times in parallel before the fill)
+    return persist_replacing(arrays, "analytics5.winnow_doc_arrays", fill=True)
 
 
 def _winnow_positions(t: Tables) -> DataFrame:

@@ -117,7 +117,9 @@ def dedup_campaign_summary(
     # dict(t) copy materialized every table under lazy Tables)
     sub = {"documents": exact.select("doc_id", "text")}
     clusters = _connected_components(
-        ngram_jaccard_pairs(sub).select("id_a", "id_b"), checkpoint_dir
+        ngram_jaccard_pairs(sub).select("id_a", "id_b"),
+        "campaign",
+        checkpoint_dir,
     )
     surv = (
         exact.join(F.broadcast(clusters), "doc_id", "left")

@@ -42,7 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..tables import local_df
+from ..tables import broadcast_replacing, local_df
 
 Tables = dict[str, DataFrame]
 
@@ -57,22 +57,6 @@ KCENTER_K = 8
 #: the product is overflow-safe BIGINT arithmetic in both engines
 _LEHMER_MOD = 2147483647
 _LEHMER_MUL = 48271
-
-
-#: live assignment broadcast of the CURRENT kcenter call — slot pattern,
-#: same lifetime discipline as similarity._ASSIGN_BROADCASTS (the
-#: assignment frame is lazy, so the broadcast must outlive the call; the
-#: NEXT call retires it)
-_ASSIGN_BROADCASTS: list = []
-
-
-def _retire_assign_broadcasts() -> None:
-    while _ASSIGN_BROADCASTS:
-        b = _ASSIGN_BROADCASTS.pop()
-        try:
-            b.unpersist(blocking=False)
-        except Exception:
-            pass  # session already stopped
 
 
 def _assign_to_centers(batches, ce, cn, cv):
@@ -173,15 +157,15 @@ def kcenter_coreset(t: Tables) -> DataFrame:
     # collected rows equal; output hash-pinned by the oracle either way.
     import numpy as np
 
-    _retire_assign_broadcasts()
-    b = spark.sparkContext.broadcast(
+    b = broadcast_replacing(
+        spark.sparkContext,
         (
             np.array([e for _, e, _ in centers], dtype="float64"),
             np.array([nr for _, _, nr in centers], dtype="float64"),
             np.array([vid for vid, _, _ in centers], dtype="int64"),
-        )
+        ),
+        "coreset.kcenter_assign",
     )
-    _ASSIGN_BROADCASTS.append(b)
 
     def assign_batches(batches):
         return _assign_to_centers(batches, *b.value)

@@ -108,26 +108,17 @@ def _shingles(df: DataFrame) -> DataFrame:
     )
 
 
-def _doc_shingles_cached(t: Tables, eager: bool = True) -> DataFrame:
-    """The shared shingle frame, slot-persisted AND eagerly filled (r12):
-    every consumer branches it at least twice (posting build + size
-    sides, or signatures + exact-verify sides), and AQE materializes
-    those query stages CONCURRENTLY — a lazily-persisted slot ran the
-    Arrow shingler 2x in parallel before the cache filled (measured two
-    ~300 ms Python-wait stages per dedup_clusters call). One count()
-    fills the slot first; on a warm slot it is a cached-scan count.
-    Callers whose FIRST consumer is an eager localCheckpoint (the
-    minhash/banded paths) pass eager=False — the checkpoint already
+def _doc_shingles_cached(t: Tables) -> DataFrame:
+    """The shared shingle frame behind the dedup ladder, filled on
+    placement: every consumer branches it at least twice (posting build +
+    size sides, or signatures + exact-verify sides). Callers whose first
+    consumer is an eager localCheckpoint (the minhash/banded paths) take
+    the ``doc_shingles`` slot without the fill — the checkpoint already
     serializes the build, so the count would be a pure extra job
     (measured +0.2 s on minhash_lsh_pairs)."""
     from ..tables import persist_replacing
 
-    sh = persist_replacing(
-        _shingles(t["documents"]), "doc_shingles"
-    )
-    if eager:
-        sh.count()
-    return sh
+    return persist_replacing(_shingles(t["documents"]), "doc_shingles", fill=True)
 
 
 def _exploded_shingles(df: DataFrame) -> DataFrame:
@@ -585,8 +576,6 @@ def ngram_jaccard_pairs(
     the uncapped exact baseline; the true scale path for pair discovery
     is :func:`minhash_lsh_pairs`, whose cost is candidate-proportional.
     """
-    from ..tables import persist_replacing
-
     if max_shingle_df == "auto":
         max_shingle_df = AUTO_DF_CAP
     sh = _doc_shingles_cached(t)
@@ -732,9 +721,9 @@ def near_dup_threshold_sweep_check(t: Tables) -> DataFrame:
 
     # rebuild the capped pair-commons (ngram_jaccard_pairs applies the
     # registered threshold before returning, so it can't be reused here)
-    sh = persist_replacing(_shingles(t["documents"]), "dedup.sweep_shingles")
-    # eager fill — same AQE stage-race as _doc_shingles_cached
-    sh.count()
+    sh = persist_replacing(
+        _shingles(t["documents"]), "dedup.sweep_shingles", fill=True
+    )
     sizes = sh.select("doc_id", F.size("shingles").alias("n"))
     e = sh.select("doc_id", F.explode("shingles").alias("s")).select(
         "doc_id", F.xxhash64("s").alias("shh")
@@ -886,7 +875,7 @@ def minhash_lsh_pairs(t: Tables) -> DataFrame:
     """
     from ..tables import persist_replacing
 
-    sh = _doc_shingles_cached(t, eager=False)
+    sh = persist_replacing(_shingles(t["documents"]), "doc_shingles")
     # checkpoint before the bucket aggregate: consumers that fan the
     # candidate frame into several branches would otherwise recompute
     # the signature pipeline per branch
@@ -965,7 +954,7 @@ def incremental_minhash_pairs(t: Tables) -> DataFrame:
     """
     from ..tables import persist_replacing
 
-    sh = _doc_shingles_cached(t, eager=False)
+    sh = persist_replacing(_shingles(t["documents"]), "doc_shingles")
     banded = _banded(_signatures_from_shingles(sh)).localCheckpoint()
     # same capped posting-list form as _band_bucket_pairs, with the
     # batch × corpus split done INSIDE each bucket's array (filter by the
@@ -1168,8 +1157,6 @@ def containment_pairs(
     set can MISS pairs the banded op (which rescores with uncapped
     ``array_intersect``) finds — the check therefore compares against
     the UNCAPPED exact set, where banded ⊆ exact by construction."""
-    from ..tables import persist_replacing
-
     if max_shingle_df == "auto":
         max_shingle_df = AUTO_DF_CAP
     sh = _doc_shingles_cached(t)
@@ -1259,7 +1246,7 @@ def containment_pairs_banded(t: Tables) -> DataFrame:
     the exact baseline out for this one unchanged."""
     from ..tables import persist_replacing
 
-    sh = _doc_shingles_cached(t, eager=False)
+    sh = persist_replacing(_shingles(t["documents"]), "doc_shingles")
     banded = _banded(_signatures_from_shingles(sh)).localCheckpoint()
     cands = _band_bucket_pairs(banded)
     sa = sh.select(

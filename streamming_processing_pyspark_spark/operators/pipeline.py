@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import words
+from ..tables import clear_persist_slots, held
 from .dedup import (
     INCR_BATCH_MOD,
     JACCARD_THRESHOLD,
@@ -338,41 +339,12 @@ def regex_scrub(t: Tables) -> DataFrame:
 #: 64-edge chain graph — a plain neighbor-min loop would take ~64 rounds)
 LAST_CC_ROUNDS = 0
 
-#: pair-plan → converged-label memo, bounded FIFO. dedup_canonical_docs /
-#: dedup_clusters_minhash_check re-run the SAME pair discovery + CC loop
-#: their sibling query just converged; the memo returns the
-#: already-materialized (checkpointed) labels instead. Keyed by
-#: (``semanticHash``, effective checkpoint mode) but CONFIRMED with
-#: ``sameSemantics`` (exact canonical-plan equality — a hash collision
-#: can't leak wrong labels; a stopped/replaced session makes
-#: sameSemantics raise → miss). The checkpoint mode is part of the key
-#: because the durability of the stored labels is a property of HOW they
-#: were built: a caller requesting reliable ``checkpoint()`` into a
-#: directory must never be served labels backed by executor-local
-#: ``localCheckpoint`` blocks from an earlier call (executor loss would
-#: then kill the long campaign run the reliable mode exists for).
-#: Entries hold checkpoint-backed frames — evicting one frees its blocks
-#: via the ContextCleaner once no plan references them. bench.py calls
-#: :func:`clear_cc_memo` between timed iterations so repeat timings
-#: measure the loop, not the memo.
-#:
-#: SESSION-STATIC-DATA ASSUMPTION: ``sameSemantics`` compares logical
-#: plans, not bytes on disk — overwriting the parquet behind the same
-#: path mid-session would make the memo return labels for the OLD data.
-#: The registry/bench/test inputs are immutable per session; any caller
-#: that rewrites a source table must call :func:`clear_cc_memo` after
-#: the rewrite (the same hygiene bench.py applies between iterations).
-_CC_MEMO: dict[tuple[int, str], tuple[DataFrame, DataFrame]] = {}
-_CC_MEMO_CAP = 4
-
-
-def clear_cc_memo() -> None:
-    """Drop all memoized CC label frames (benchmark/test hygiene)."""
-    _CC_MEMO.clear()
+#: CC labels live in the slot table, released by its one clear
+clear_cc_memo = clear_persist_slots
 
 
 def _connected_components(
-    pairs: DataFrame, checkpoint_dir: str | None = None
+    pairs: DataFrame, slot: str, checkpoint_dir: str | None = None
 ) -> DataFrame:
     """Min-label connected components over an (id_a, id_b) pair frame →
     (doc_id, component) labels. The pair plan is checkpointed here —
@@ -399,24 +371,24 @@ def _connected_components(
     localCheckpoint — single-JVM executors can't fail independently.
     This is the scalable GraphFrames-free formulation, shared by every
     registered pair source.
+
+    The converged labels are held in the caller's ``slot`` of the slot
+    table (:func:`tables.persist_replacing`), one per checkpoint mode.
     """
     import os
 
-    spark = pairs.sparkSession
     if checkpoint_dir is None:
         checkpoint_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR") or None
-    # the effective checkpoint mode is part of the memo identity: labels
-    # built under localCheckpoint must not satisfy a reliable-mode request
-    memo_key = (pairs.semanticHash(), checkpoint_dir or "<local>")
-    hit = _CC_MEMO.get(memo_key)
-    if hit is not None:
-        stored_pairs, stored_labels = hit
-        try:
-            if pairs.sameSemantics(stored_pairs):
-                return stored_labels
-        except Exception:
-            pass  # stopped/replaced session → recompute
-        _CC_MEMO.pop(memo_key, None)
+    # the checkpoint mode is part of the slot: labels built under
+    # localCheckpoint must not satisfy a reliable-mode request
+    mode = "reliable" if checkpoint_dir else "local"
+    return held(
+        f"{slot}.cc.{mode}", pairs, lambda: _cc_labels(pairs, checkpoint_dir)
+    )[1]
+
+
+def _cc_labels(pairs: DataFrame, checkpoint_dir: str | None) -> DataFrame:
+    spark = pairs.sparkSession
     if checkpoint_dir:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
         _ckpt = lambda df, eager=True: df.checkpoint(eager=eager)
@@ -426,7 +398,6 @@ def _connected_components(
     # below free. (A second checkpoint after the repartition would store
     # the pair RDD twice until GC — the storage leak bench.py has to
     # gc-collect around.)
-    orig_pairs = pairs
     pairs = _ckpt(pairs)
     # Size the loop's shuffles to the GRAPH, not the corpus: near-dup pairs
     # are a tiny fraction of the input, so running every CC round at the
@@ -501,13 +472,9 @@ def _connected_components(
         raise RuntimeError("dedup_clusters did not converge")
     global LAST_CC_ROUNDS
     LAST_CC_ROUNDS = rounds
-    out = labels.select(
+    return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("component")
     )
-    while len(_CC_MEMO) >= _CC_MEMO_CAP:
-        _CC_MEMO.pop(next(iter(_CC_MEMO)))
-    _CC_MEMO[memo_key] = (orig_pairs, out)
-    return out
 
 
 def dedup_clusters(t: Tables, checkpoint_dir: str | None = None) -> DataFrame:
@@ -523,7 +490,9 @@ def dedup_clusters(t: Tables, checkpoint_dir: str | None = None) -> DataFrame:
     shingle→posting→pair pipeline twice in one action.
     """
     return _connected_components(
-        ngram_jaccard_pairs(t).select("id_a", "id_b"), checkpoint_dir
+        ngram_jaccard_pairs(t).select("id_a", "id_b"),
+        "dedup_clusters",
+        checkpoint_dir,
     )
 
 
@@ -542,7 +511,9 @@ def dedup_clusters_minhash(
     SQL-reproducible; its quality contract is ``minhash_recall_check``.
     """
     return _connected_components(
-        minhash_lsh_pairs(t).select("id_a", "id_b"), checkpoint_dir
+        minhash_lsh_pairs(t).select("id_a", "id_b"),
+        "dedup_clusters_minhash",
+        checkpoint_dir,
     )
 
 
@@ -599,9 +570,8 @@ def dedup_canonical_docs(
     from :func:`dedup_clusters`). This is the set a training pipeline
     feeds downstream; at 100 TB the cluster map is a small fraction of
     the corpus, so the final filter is a broadcast-able left join.
-    Cluster labels come through the :data:`_CC_MEMO` — in a session that
-    just ran :func:`dedup_clusters` on the same corpus this reuses the
-    converged (checkpoint-backed) labels instead of re-running the loop.
+    In a session that just ran :func:`dedup_clusters` on the same corpus
+    this reuses its converged labels instead of re-running the loop.
     """
     clusters = dedup_clusters(t, checkpoint_dir)
     return (
@@ -621,7 +591,7 @@ def dedup_cluster_size_histogram(t: Tables) -> DataFrame:
     redundancy sits in pairs vs giant templated clusters (a few huge
     clusters mean boilerplate; many near-pairs mean true near-copies).
 
-    Cost on top of the CC labels (reused through the label memo when a
+    Cost on top of the CC labels (reused from their slot when a
     sibling query just converged them): one groupBy(component) on the
     cluster map — graph-sized, not corpus-sized — plus a bounded
     histogram rollup. ``docs_removed`` per size = (size − 1)·n_clusters,

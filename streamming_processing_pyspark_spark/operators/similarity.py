@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double, cosine_pudf
-from ..tables import fan_out, local_df, persist_replacing
+from ..tables import broadcast_replacing, fan_out, local_df, persist_replacing
 from .dedup import INCR_BATCH_MOD
 
 Tables = dict[str, DataFrame]
@@ -2303,23 +2303,6 @@ KMEANS_TOL = 1e-4
 #: that path is what runs at cluster scale and stays test-covered.
 KMEANS_DRIVER_REDUCE_MAX_PARTS = 64
 
-#: live assignment broadcasts of the CURRENT _spherical_kmeans call.
-#: Assignment frames are lazy — the broadcast must outlive the call — so
-#: each new call retires the previous call's broadcasts instead (slot
-#: pattern, same lifetime discipline as tables.persist_replacing). Bounds
-#: a long session at one call's broadcast blocks (ADVICE r7).
-_ASSIGN_BROADCASTS: list = []
-
-
-def _retire_assign_broadcasts() -> None:
-    while _ASSIGN_BROADCASTS:
-        b = _ASSIGN_BROADCASTS.pop()
-        try:
-            b.unpersist(blocking=False)
-        except Exception:
-            pass  # session already stopped
-
-
 def _unit_rows(m):
     import numpy as np
 
@@ -2378,10 +2361,8 @@ def _spherical_kmeans(emb: DataFrame, k: int, iters: int, tol: float = KMEANS_TO
 
     Broadcast hygiene (ADVICE r7): every Lloyd round's partial-sum
     broadcast is unpersisted as soon as the round's toPandas() completes
-    (the job is done with it), and assignment broadcasts are slot-managed
-    — a new ``_spherical_kmeans`` call retires the previous call's live
-    assignment broadcasts — so a long session holds at most one call's
-    worth of broadcast blocks instead of accumulating one per round.
+    (the job is done with it); the one assignment broadcast is held in a
+    slot (:func:`tables.broadcast_replacing`).
 
     Deterministic: init = the k lowest vec_ids; no RNG anywhere.
     Returns (centroids ndarray, assign_fn, persisted_emb) where
@@ -2395,7 +2376,6 @@ def _spherical_kmeans(emb: DataFrame, k: int, iters: int, tol: float = KMEANS_TO
 
     emb = persist_replacing(emb, "similarity.kmeans_emb")
     spark = emb.sparkSession
-    _retire_assign_broadcasts()
 
     cents = _unit_rows(
         np.array(
@@ -2403,15 +2383,6 @@ def _spherical_kmeans(emb: DataFrame, k: int, iters: int, tol: float = KMEANS_TO
             dtype="float64",
         )
     )
-
-    def make_assign(c, probes=1):
-        b = spark.sparkContext.broadcast(c)
-        _ASSIGN_BROADCASTS.append(b)
-
-        def assign(batches):
-            return _kmeans_assign(batches, b.value, probes)
-
-        return assign
 
     def make_partials(c):
         b = spark.sparkContext.broadcast(c)
@@ -2530,8 +2501,13 @@ def _spherical_kmeans(emb: DataFrame, k: int, iters: int, tol: float = KMEANS_TO
         if moved < tol:
             break
 
+    b = broadcast_replacing(spark.sparkContext, cents, "similarity.kmeans_assign")
+
     def assign_df(df: DataFrame, probes: int = 1) -> DataFrame:
-        return df.mapInPandas(make_assign(cents, probes), schema=_ASSIGN_SCHEMA)
+        def assign(batches):
+            return _kmeans_assign(batches, b.value, probes)
+
+        return df.mapInPandas(assign, schema=_ASSIGN_SCHEMA)
 
     # the persisted frame, so the caller's final assignment pass reads
     # the cache instead of re-scanning parquet
@@ -3220,8 +3196,9 @@ def _whitened_vectors(t: Tables) -> DataFrame:
     # transform pass both scan it; see _emb_frame
     emb = _emb_frame(t)
     mean, zca, _ = _whitening_model(emb)
-    b = emb.sparkSession.sparkContext.broadcast((mean, zca))
-    _ASSIGN_BROADCASTS.append(b)
+    b = broadcast_replacing(
+        emb.sparkSession.sparkContext, (mean, zca), "similarity.whiten"
+    )
 
     def transform(batches):
         mu, wm = b.value
@@ -3316,8 +3293,7 @@ def whiten_check(t: Tables) -> DataFrame:
     try:
         n, s, g = _collect_moment_partials(parts)
     finally:
-        # the moment pass is eager: free the broadcast now instead of
-        # leaving it for the next _spherical_kmeans call to retire
+        # the moment pass is eager: nothing lazy outlives this call
         b.unpersist(blocking=False)
     d = len(s)
     mu = s / n

@@ -146,75 +146,111 @@ def load_tables(
     return LazyTables(spark, sf_dir, names)
 
 
-#: one cached frame per operator slot — see persist_replacing
-_PERSIST_SLOTS: dict[str, DataFrame] = {}
+#: slot name → (key plan, held value, release, filled) — the one table of
+#: shared intermediates; the rule is in persist_replacing
+_SLOTS: dict[str, tuple] = {}
 
 
-def persist_replacing(df: DataFrame, slot: str) -> DataFrame:
-    """persist() with a bounded lifetime: the previous frame cached under
-    the same slot is unpersisted first.
+def _unpersist(value) -> None:
+    value.unpersist(blocking=False)  # DataFrame or Broadcast
 
-    DataFrame.persist registers the plan in Spark's CacheManager, which
-    holds cached blocks until an explicit unpersist/clearCache — they are
-    NOT reclaimed when the Python object is garbage-collected. Operators
-    that persist a shared subframe per call (MinHash shingles, span
-    spans) would therefore leak storage across repeated calls in a
-    long-lived session; slot replacement caps the footprint at one cached
-    frame per operator. Unpersisting the previous frame is always safe:
-    any still-live plan built on it just recomputes.
 
-    When the incoming plan is semantically identical to the slot's cached
-    frame (``sameSemantics`` — same session, same resolved logical plan),
-    the cached frame is RETURNED instead of replaced: expensive shared
-    subframes (the shingle index feeding ngram-Jaccard, MinHash-LSH and
-    dedup-cluster queries) are computed once per session and reused
-    across operator calls, while a changed input (different sf_dir, new
-    session) still swaps the slot. Memory stays bounded at one cached
-    frame per slot either way.
-
-    Liveness is checked through ``DataFrame.storageLevel`` — which asks
-    the CacheManager — NOT ``is_cached``, which is a plan-local flag
-    that stays True after ``spark.catalog.clearCache()`` (measured on
-    PySpark 4.1: is_cached True / storageLevel no-memory-no-disk after a
-    clearCache). With the is_cached guard, a clearCache'd slot frame was
-    returned forever UNPERSISTED (every use recomputed — a silent perf
-    cliff after any cache flush), and worse: ``sameSemantics`` compares
-    canonical plans, not bytes on disk, so a caller that overwrote the
-    parquet behind the same path got the DROPPED file listing back
-    (FAILED_READ_FILE in the r11 scale-probe targeted runs). A
-    rewritten-path caller must still call :func:`clear_persist_slots` —
-    same hygiene as ``pipeline.clear_cc_memo`` — because a slot whose
-    blocks are genuinely live cannot detect the rewrite.
-    """
-    prev = _PERSIST_SLOTS.get(slot)
-    if prev is not None:
+def _release(value, release) -> None:
+    if release is not None:
         try:
-            lvl = prev.storageLevel  # CacheManager-backed, unlike is_cached
-            if (lvl.useMemory or lvl.useDisk) and df.sameSemantics(prev):
-                return prev
-        except Exception:
-            pass  # cross-session comparison / stopped session → replace
-        try:
-            prev.unpersist(blocking=False)
+            release(value)
         except Exception:
             pass  # e.g. its SparkSession is already stopped
-    out = df.persist()
-    _PERSIST_SLOTS[slot] = out
+
+
+def held(
+    slot: str, key: DataFrame | None, build, release=None, live=None, filled=False
+):
+    """The slot table's rule (see :func:`persist_replacing`): the entry
+    held in ``slot`` when ``key`` passes ``sameSemantics`` against the
+    held key and ``live(value)`` holds; otherwise the held value is
+    released and ``build()`` is placed under ``key`` with ``release`` and
+    ``filled``. Returns the (key, value, release, filled) entry."""
+    entry = _SLOTS.pop(slot, None)
+    if entry is not None:
+        old_key, value, old_release, _ = entry
+        try:
+            if (
+                key is not None
+                and (live is None or live(value))
+                and key.sameSemantics(old_key)
+            ):
+                _SLOTS[slot] = entry
+                return entry
+        except Exception:
+            pass  # cross-session comparison / stopped session → replace
+        _release(value, old_release)
+    entry = _SLOTS[slot] = (key, build(), release, filled)
+    return entry
+
+
+def _cached(df: DataFrame) -> bool:
+    # CacheManager-backed, unlike the plan-local is_cached flag
+    lvl = df.storageLevel
+    return lvl.useMemory or lvl.useDisk
+
+
+def persist_replacing(df: DataFrame, slot: str, fill: bool = False) -> DataFrame:
+    """persist() through the slot table that owns every shared
+    intermediate (persisted frames, connected-component labels,
+    broadcasts behind lazy frames).
+
+    The rule: a slot holds a key plan, a value and how to release it. A
+    request on the same slot whose key passes ``sameSemantics`` (same
+    session, same resolved logical plan) and whose value is still live
+    gets the held value back — so shared subframes (the shingle index
+    behind the dedup ladder, the CC labels behind its cluster queries)
+    are computed once per session. Any other request releases the held
+    value and places the new one, which caps storage at one value per
+    slot: DataFrame.persist blocks, checkpoint-backed labels and
+    broadcasts are NOT reclaimed when the Python object dies. Releasing
+    is always safe — a still-live plan built on a released value just
+    recomputes (a broadcast is re-sent from the driver).
+
+    ``fill=True`` runs one ``count()`` unless the held frame was placed
+    by a fill request: AQE materializes sibling query stages
+    concurrently, so a lazily persisted frame that several branches read
+    is built once per racing branch before the cache fills. A frame
+    placed without the fill (its placer's checkpoint serializes the
+    build) is not marked filled, so every fill request on it counts.
+
+    Liveness of a persisted frame is ``DataFrame.storageLevel`` (asks the
+    CacheManager), NOT ``is_cached``, a plan-local flag that stays True
+    after ``spark.catalog.clearCache()``. ``sameSemantics`` compares
+    plans, not bytes on disk: a caller that rewrites data behind a
+    previously-read path must call :func:`clear_persist_slots`.
+    """
+
+    def build() -> DataFrame:
+        out = df.persist()
+        if fill:
+            out.count()
+        return out
+
+    _, out, _, filled = held(slot, df, build, _unpersist, _cached, fill)
+    if fill and not filled:
+        out.count()  # reuse of a frame placed without the fill
     return out
 
 
+def broadcast_replacing(sc, value, slot: str):
+    """``sc.broadcast(value)`` for a LAZY frame: the broadcast must outlive
+    the call that builds the frame, so the slot holds it until the next
+    request on that slot (see :func:`persist_replacing`)."""
+    return held(slot, None, lambda: sc.broadcast(value), _unpersist)[1]
+
+
 def clear_persist_slots() -> None:
-    """Unpersist and forget every slot frame. Required hygiene for any
-    caller that rewrites data behind a previously-read path mid-session
-    (the scale probe's replicated-corpus writes): ``sameSemantics`` is
-    plan-level, so a live slot built on the old bytes would otherwise be
-    reused. The sibling of ``pipeline.clear_cc_memo``."""
-    for prev in _PERSIST_SLOTS.values():
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:
-            pass
-    _PERSIST_SLOTS.clear()
+    """Release and forget every slot value (benchmark and test hygiene;
+    required after rewriting data behind a previously-read path)."""
+    while _SLOTS:
+        _, (_, value, release, _) = _SLOTS.popitem()
+        _release(value, release)
 
 
 def local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:

@@ -298,7 +298,9 @@ def test_cc_reliable_checkpoint_identical_labels(spark, tmp_path):
     """With a reliable checkpoint dir configured (the cluster-durable
     posture — localCheckpoint blocks die with their executor), the CC
     loop must produce byte-identical labels AND actually write checkpoint
-    data into the directory."""
+    data into the directory. The checkpoint mode is part of the label
+    slot's identity: with the local labels still held, the reliable
+    request must miss and run its own loop."""
     import os
 
     pairs = spark.createDataFrame(
@@ -308,14 +310,13 @@ def test_cc_reliable_checkpoint_identical_labels(spark, tmp_path):
     pipeline.clear_cc_memo()
     local = {
         r["doc_id"]: r["component"]
-        for r in pipeline._connected_components(pairs).collect()
+        for r in pipeline._connected_components(pairs, "test").collect()
     }
-    pipeline.clear_cc_memo()
     ckpt_dir = str(tmp_path / "cc_ckpt")
     reliable = {
         r["doc_id"]: r["component"]
         for r in pipeline._connected_components(
-            pairs, checkpoint_dir=ckpt_dir
+            pairs, "test", checkpoint_dir=ckpt_dir
         ).collect()
     }
     assert reliable == local == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10,
@@ -339,7 +340,7 @@ def test_cc_chain_converges_in_log_rounds(spark):
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
     pipeline.clear_cc_memo()
-    labels = pipeline._connected_components(pairs).collect()
+    labels = pipeline._connected_components(pairs, "test").collect()
     assert {r["component"] for r in labels} == {0}
     assert len(labels) == n
     # log2(64) = 6 doubling rounds + neighbor slack + the equal-sum
@@ -351,19 +352,65 @@ def test_cc_chain_converges_in_log_rounds(spark):
 def test_cc_memo_reuses_converged_labels(spark):
     """Two calls on the same pair plan must reuse the first call's
     converged labels (dedup_canonical_docs re-deriving dedup_clusters'
-    clustering) — and clear_cc_memo must drop the entry."""
-    pipeline.clear_cc_memo()
-    first = pipeline.dedup_clusters(load_tables(spark, SF_DIR))
-    # a FRESH plan over the same parquet canonicalizes equal → memo hit
+    clustering). The one clear of the slot table must release the
+    labels together with persisted frames and lazy-frame broadcasts."""
+    from streamming_processing_pyspark_spark import tables
+
+    tables.clear_persist_slots()
+    t = load_tables(spark, SF_DIR)
+    first = pipeline.dedup_clusters(t)
+    # a FRESH plan over the same parquet canonicalizes equal → slot hit
     again = pipeline.dedup_clusters(load_tables(spark, SF_DIR))
-    assert again is first  # memo hit: same materialized frame
+    assert again is first  # slot hit: same materialized frame
+    shingles = tables._SLOTS["doc_shingles"][1]  # persisted by the pairs
+    assert shingles.storageLevel.useMemory
+    similarity._spherical_kmeans(similarity._emb_frame(t), 4, 1)
+    assert "similarity.kmeans_assign" in tables._SLOTS
     pipeline.clear_cc_memo()
+    assert tables._SLOTS == {}
+    lvl = shingles.storageLevel
+    assert not (lvl.useMemory or lvl.useDisk)
     third = pipeline.dedup_clusters(load_tables(spark, SF_DIR))
     assert third is not first
     assert sorted(map(tuple, third.collect())) == sorted(
         map(tuple, first.collect())
     )
     pipeline.clear_cc_memo()
+
+
+@pytest.mark.parametrize(
+    "module, fill_fn",
+    [
+        ("analytics5", "_winnow_doc_arrays"),
+        ("dedup", "_doc_shingles_cached"),
+    ],
+)
+def test_warm_slot_skips_fill(spark, module, fill_fn):
+    """A slot filled when it is placed must not pay the fill ``count()``
+    again: the second, warm call runs no Spark job at all."""
+    import importlib
+
+    from streamming_processing_pyspark_spark.tables import clear_persist_slots
+
+    fn = getattr(
+        importlib.import_module(
+            f"streamming_processing_pyspark_spark.operators.{module}"
+        ),
+        fill_fn,
+    )
+    t = load_tables(spark, SF_DIR)
+    clear_persist_slots()
+    fn(t)  # cold: places and fills the slot
+    sc = spark.sparkContext
+    group = f"warm-{fill_fn}"
+    sc.setJobGroup(group, group)
+    try:
+        fn(t)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    clear_persist_slots()
 
 
 def test_token_pack_bins_invariants(spark):
@@ -437,12 +484,12 @@ def test_persist_replacing_reuses_identical_plan(spark):
     d.count()
     assert d.storageLevel.useMemory
     from streamming_processing_pyspark_spark.tables import (
-        _PERSIST_SLOTS,
+        _SLOTS,
         clear_persist_slots,
     )
 
     clear_persist_slots()
-    assert "_test_slot" not in _PERSIST_SLOTS
+    assert "_test_slot" not in _SLOTS
     assert not d.storageLevel.useMemory
 
 
@@ -2334,12 +2381,15 @@ def test_whitening_identity_covariance(spark):
     assert np.abs(np.diag(cov) - 1.0).max() <= 1e-6
     off = cov - np.diag(np.diag(cov))
     assert np.abs(off).max() <= 1e-6
-    held = len(similarity._ASSIGN_BROADCASTS)
+    from streamming_processing_pyspark_spark.tables import _SLOTS
+
+    held = dict(_SLOTS)
     row = similarity.whiten_check(t).first()
     assert row["diag_ok"] and row["offdiag_ok"]
     assert row["n_vecs"] == len(pdf)
     # whiten_check is eager: it frees its broadcast instead of holding it
-    assert len(similarity._ASSIGN_BROADCASTS) == held
+    assert _SLOTS.keys() == held.keys()
+    assert _SLOTS["similarity.whiten"] is held["similarity.whiten"]
     # scalar slate projection: driver-safe AND traceable to the vectors
     audit = similarity.embedding_whiten_audit(t).toPandas()
     assert set(audit.columns) == {"vec_id", "whiten_checksum", "whiten_norm"}

@@ -6,7 +6,7 @@ Usage:
         query_a query_b ...
 
 For each query: N warm iterations with the bench's exact hygiene
-(clear_cc_memo + clearCache + gc between runs), then a per-job table for
+(clear_persist_slots + clearCache + gc between runs), then a per-job table for
 the LAST iteration (description, wall ms, task count, executor run time)
 pulled from the UI REST API, so per-stage task time and job-count claims
 in OPTIMIZATION_r12.md are reproducible.
@@ -27,9 +27,9 @@ for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-from streamming_processing_pyspark_spark.operators.pipeline import clear_cc_memo
 from streamming_processing_pyspark_spark.registry import build_queries
 from streamming_processing_pyspark_spark.session import get_spark
+from streamming_processing_pyspark_spark.tables import clear_persist_slots
 
 N_ITERS = int(os.environ.get("PROFILE_ITERS", "3"))
 
@@ -56,7 +56,7 @@ def main() -> int:
         fn = queries[name]
         walls = []
         for i in range(N_ITERS):
-            clear_cc_memo()
+            clear_persist_slots()
             spark.catalog.clearCache()
             gc.collect()
             sc.setJobGroup(f"{name}#{i}", name)

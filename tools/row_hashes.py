@@ -30,9 +30,9 @@ for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-from streamming_processing_pyspark_spark.operators.pipeline import clear_cc_memo
 from streamming_processing_pyspark_spark.registry import build_queries
 from streamming_processing_pyspark_spark.session import get_spark
+from streamming_processing_pyspark_spark.tables import clear_persist_slots
 
 
 def query_hash(df) -> str:
@@ -57,7 +57,7 @@ def main() -> int:
             out[name] = "!unknown"
             continue
         if not hot:
-            clear_cc_memo()
+            clear_persist_slots()
             spark.catalog.clearCache()
             gc.collect()
         try:

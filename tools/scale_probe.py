@@ -212,10 +212,10 @@ def scaled_documents(docs, k: int):
     for r in reps[1:]:
         out = out.unionAll(r)
     # one write+read so every run starts from a comparable parquet scan.
-    # The path is UNIQUE per call (never rewritten in-session): plan-level
-    # reuse guards (persist_replacing sameSemantics, the CC memo) cannot
-    # see bytes change behind a path, so rewriting one mid-session served
-    # dropped file listings to the measured run (r11 targeted probes).
+    # The path is UNIQUE per call (never rewritten in-session): the slot
+    # table's plan-level reuse guard (sameSemantics) cannot see bytes
+    # change behind a path, so rewriting one mid-session served dropped
+    # file listings to the measured run (r11 targeted probes).
     path = f"/tmp/scale_probe_docs_k{k}_{_next_seq()}"
     out.write.mode("overwrite").parquet(path)
     return docs.sparkSession.read.parquet(path)
@@ -287,14 +287,14 @@ def main() -> None:
             # k=8 killed the whole 75-minute probe run at the single
             # failing op) — record the failure, keep probing
             try:
-                pipeline.clear_cc_memo()  # warm-up labels would leak in
+                clear_persist_slots()  # warm-up labels would leak in
                 spark.catalog.clearCache()
                 t0 = time.perf_counter()
                 fn(t).write.mode("overwrite").format("noop").save()
                 warm = time.perf_counter() - t0
                 # second run: measured figure (first absorbs cache/JIT);
-                # drop the CC label memo so the rerun measures the loop
-                pipeline.clear_cc_memo()
+                # drop the CC labels so the rerun measures the loop
+                clear_persist_slots()
                 spark.catalog.clearCache()
                 t0 = time.perf_counter()
                 fn(t).write.mode("overwrite").format("noop").save()
@@ -304,7 +304,7 @@ def main() -> None:
                 if name in PAIR_COUNT_OPS:
                     # untimed: the pair-graph/output size that CONTEXTS
                     # the timing (VERDICT r10 §3)
-                    pipeline.clear_cc_memo()
+                    clear_persist_slots()
                     counts[name][k] = fn(t).count()
             except Exception as e:  # noqa: BLE001 — report-and-continue
                 results[name][k] = None
@@ -313,19 +313,8 @@ def main() -> None:
                     f"{type(e).__name__}: {str(e)[:200]}",
                     flush=True,
                 )
-            # same hygiene as bench.py: clearCache only unpins cached
-            # frames; localCheckpoint RDDs (dedup_clusters, k-means) are
-            # freed by the ContextCleaner when their Python refs die —
-            # collect them so op N's leftover blocks don't squeeze op
-            # N+1's executor memory (measured: the k=8 embedding matmuls
-            # read 5-10x slower when run after the k=8 dedup ops without
-            # this, and normal in a fresh JVM). The CC label memo would
-            # otherwise turn the measured (second) run of dedup_clusters /
-            # campaign into a dict lookup — clear it between runs.
-            # clear_persist_slots drops the slot dict's frame refs too —
             # the probe rewrites its replicated corpus between ks, and a
-            # plan-level reuse guard can't see bytes change behind a path.
-            pipeline.clear_cc_memo()
+            # plan-level reuse guard can't see bytes change behind a path
             clear_persist_slots()
             spark.catalog.clearCache()
             gc.collect()
@@ -375,7 +364,7 @@ def main() -> None:
             runs = []
             try:
                 for _ in range(2):
-                    pipeline.clear_cc_memo()
+                    clear_persist_slots()
                     spark.catalog.clearCache()
                     gc.collect()
                     t0 = time.perf_counter()
