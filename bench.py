@@ -256,8 +256,7 @@ def taxi_replay_rows_per_sec() -> tuple[int, float, float]:
     Replay tuning (matters at this state size, not a benchmark trick):
     4 shuffle/state partitions — the aggregate state is ≤ |geofences| ×
     |10-min windows| rows, so 32+ partitions is pure task overhead (the
-    reference paid 200) — and the per-batch trend frame is coalesced to 1
-    partition before the lag window for the same reason.
+    reference paid 200).
     """
     import shutil
     import tempfile
@@ -286,7 +285,7 @@ def taxi_replay_rows_per_sec() -> tuple[int, float, float]:
         batch_ends: list[float] = []
 
         def sink(batch_df, _batch_id):
-            alerts.append(detect_trends_in_batch(batch_df.coalesce(1)).count())
+            alerts.append(detect_trends_in_batch(batch_df).count())
             batch_ends.append(time.perf_counter())
 
         t0 = time.perf_counter()

@@ -6,7 +6,7 @@ join handling), Arrow enabled for the pandas-UDF paths, UTC session timezone
 so results compare bit-for-bit against the DuckDB oracle (DuckDB timestamps
 are UTC-naive).
 
-One default is local-only. Spark lists more than
+Two defaults are local-only. First, Spark lists more than
 ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (default 32)
 paths with a distributed job, one task per path. The file-stream source
 rebuilds its file index over each trigger's new files in ``getBatch``, so
@@ -20,6 +20,27 @@ masters keep Spark's default, because there listing is remote I/O worth
 spreading over executors. The file source reads this conf from the live
 session at every ``getBatch``, so it must be a session default, not a
 per-query setting; ``extra_conf`` still overrides it.
+
+The second local-only default is the streaming checkpoint file manager.
+Every micro-batch writes an offset log entry, a commit log entry and a
+state-store delta per partition, each as a temp file renamed into place.
+Spark's default manager renames through Hadoop's ``FileContext``, which on
+``file:`` asks for the link status of source and target; without the
+native Hadoop library each such call forks a ``readlink`` process, about
+88 forks per batch of the 60-file taxi drain. Under a ``local[...]``
+master the FileSystem-based manager is used instead. It is just as safe
+there: on ``file:`` both managers check that the target does not exist and
+then call the same local rename, so a no-overwrite write over an existing
+file still fails with ``FileAlreadyExistsException``. A write that may
+overwrite (state-store deltas and snapshots) is, to that manager, a plain
+``FileSystem.rename`` over the target. Spark's Hive jars register Hive's
+``ProxyLocalFileSystem`` for ``file:``, whose ``rename`` refuses an
+existing target, so the manager would silently keep the old file where
+the ``FileContext`` manager replaces it. Local masters therefore also pin
+``file:`` to Hadoop's own ``LocalFileSystem``; its rename replaces the
+target as the ``FileContext`` rename does. Hadoop's ``.crc`` side files and
+Spark's state-file checksums are unchanged. Cluster masters keep Spark's
+defaults, and ``extra_conf`` still overrides each of them.
 """
 
 from __future__ import annotations
@@ -35,6 +56,18 @@ DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 #: under local masters only (module docstring)
 LISTING_THRESHOLD_KEY = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 LOCAL_LISTING_THRESHOLD = str(2**31 - 1)
+
+#: renames checkpoint files without forking ``readlink``; local masters
+#: only (module docstring)
+CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+LOCAL_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+#: a ``file:`` FileSystem whose rename replaces an existing target, as the
+#: manager's overwriting writes need (module docstring)
+FILE_SYSTEM_KEY = "spark.hadoop.fs.file.impl"
+LOCAL_FILE_SYSTEM = "org.apache.hadoop.fs.LocalFileSystem"
 
 #: streaming state-store providers by short name. HDFSBackedStateStore
 #: (Spark's default — what the reference ran) keeps every stateful
@@ -133,8 +166,11 @@ def session_conf(
         "spark.executorEnv.PYTHONPATH": os.environ.get("PYTHONPATH", ""),
     }
     if master == "local" or master.startswith("local["):
-        # list files on the driver: see the module docstring
+        # list files on the driver and rename checkpoint files without
+        # forks: see the module docstring
         conf[LISTING_THRESHOLD_KEY] = LOCAL_LISTING_THRESHOLD
+        conf[CHECKPOINT_MANAGER_KEY] = LOCAL_CHECKPOINT_MANAGER
+        conf[FILE_SYSTEM_KEY] = LOCAL_FILE_SYSTEM
     if state_store:
         conf["spark.sql.streaming.stateStore.providerClass"] = (
             STATE_STORE_PROVIDERS.get(state_store, state_store)

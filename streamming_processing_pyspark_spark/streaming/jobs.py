@@ -112,12 +112,19 @@ def detect_trends_in_batch(
     Matches the reference's same-batch-only semantics when applied to an
     update-mode micro-batch; apply to the full aggregate (or use
     streaming/trend.py's stateful operator) for cross-batch detection.
+
+    ``counts`` is read as one partition before the ``lag`` window: a single
+    partition already satisfies the window's clustering, so no shuffle
+    stage runs. The stage that produces ``counts`` then runs as one task,
+    which suits its size — windowed counts are at most |keys| × |windows|
+    rows, a few dozen per micro-batch.
     """
     from pyspark.sql import Window
 
     w = Window.partitionBy(key_col).orderBy("window_start")
     return (
-        counts.withColumn("prev_cnt", F.lag("cnt").over(w))
+        counts.coalesce(1)
+        .withColumn("prev_cnt", F.lag("cnt").over(w))
         .withColumn("prev_start", F.lag("window_start").over(w))
         .where(
             (F.col("cnt") >= min_count)

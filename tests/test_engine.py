@@ -4,6 +4,9 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
+from streamming_processing_pyspark_spark import session as S
 from streamming_processing_pyspark_spark.engine import Engine
 
 from .conftest import SF_DIR
@@ -113,21 +116,35 @@ def test_check_order_front_loads_changed_sources(monkeypatch):
     assert R._changed_since_receipt(hashes) <= set(R._source_receipts())
 
 
-def test_file_listing_threshold_is_local_only(spark):
-    """Local masters list files on the driver; cluster masters keep
-    Spark's distributed listing; ``extra_conf`` still overrides."""
-    from streamming_processing_pyspark_spark.session import (
-        LISTING_THRESHOLD_KEY,
-        LOCAL_LISTING_THRESHOLD,
-        session_conf,
-    )
-
+@pytest.mark.parametrize(
+    "key, local_value",
+    [
+        (S.LISTING_THRESHOLD_KEY, S.LOCAL_LISTING_THRESHOLD),
+        (S.CHECKPOINT_MANAGER_KEY, S.LOCAL_CHECKPOINT_MANAGER),
+        (S.FILE_SYSTEM_KEY, S.LOCAL_FILE_SYSTEM),
+    ],
+    ids=["listing_threshold", "checkpoint_manager", "file_system"],
+)
+def test_local_only_session_defaults(spark, tmp_path, key, local_value):
+    """Local masters list files on the driver and commit checkpoint files
+    through the FileSystem-based manager on Hadoop's LocalFileSystem;
+    cluster masters keep Spark's defaults; ``extra_conf`` still
+    overrides."""
     for master in ("local", "local[4]", "local[*]"):
-        assert session_conf(master)[LISTING_THRESHOLD_KEY] == LOCAL_LISTING_THRESHOLD
+        assert S.session_conf(master)[key] == local_value
     for master in ("spark://head:7077", "yarn", "k8s://https://api:6443",
                    "local-cluster[2,1,1024]"):
-        assert LISTING_THRESHOLD_KEY not in session_conf(master)
-    override = {LISTING_THRESHOLD_KEY: "32"}
-    assert session_conf("local[4]", extra_conf=override)[LISTING_THRESHOLD_KEY] == "32"
-    # the test session is local, so it carries the raised default
-    assert spark.conf.get(LISTING_THRESHOLD_KEY) == LOCAL_LISTING_THRESHOLD
+        assert key not in S.session_conf(master)
+    override = {key: "x"}
+    assert S.session_conf("local[4]", extra_conf=override)[key] == "x"
+    # the test session is local, so it carries the local default
+    assert spark.conf.get(key) == local_value
+
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path(str(tmp_path))
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    if key == S.CHECKPOINT_MANAGER_KEY:
+        manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+        assert manager.create(path, hadoop_conf).getClass().getName() == local_value
+    if key == S.FILE_SYSTEM_KEY:
+        assert path.getFileSystem(hadoop_conf).getClass().getName() == local_value

@@ -8,7 +8,9 @@ detection.
 
 from __future__ import annotations
 
+import contextlib
 import os
+import re
 import shutil
 import time
 
@@ -31,6 +33,10 @@ from streamming_processing_pyspark_spark.streaming.jobs import (
     word_counts_stream,
     write_geofence_files,
     write_hourly_files,
+)
+from streamming_processing_pyspark_spark.session import (
+    CHECKPOINT_MANAGER_KEY,
+    LOCAL_CHECKPOINT_MANAGER,
 )
 from streamming_processing_pyspark_spark.streaming.trend import trending_stateful
 from streamming_processing_pyspark_spark.tables import load_table
@@ -270,37 +276,138 @@ def test_upsert_partition_overwrite_exactly_once(spark, tmp_path):
     assert table == batch
 
 
-def test_checkpoint_recovery_no_reprocessing(spark, tmp_path):
-    """Stop → add file → restart from checkpoint: old files not re-counted,
-    new file processed exactly once (reference K6 semantics)."""
+FILE_CONTEXT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
+
+
+@contextlib.contextmanager
+def _checkpoint_manager(spark, manager_class):
+    """Queries started in the block commit checkpoint files through
+    ``manager_class``; the session's local default is restored after."""
+    spark.conf.set(CHECKPOINT_MANAGER_KEY, manager_class)
+    try:
+        yield
+    finally:
+        spark.conf.set(CHECKPOINT_MANAGER_KEY, LOCAL_CHECKPOINT_MANAGER)
+
+
+def _resume_with_new_file(spark, tmp_path, first_run_manager=LOCAL_CHECKPOINT_MANAGER):
+    """Count hourly drop-offs over default_plan() from a checkpoint, stop,
+    add a file with one more drop-off in the 11:00 window and resume from
+    the checkpoint under the session's default manager. The first run
+    commits through ``first_run_manager``. Returns each run's batches as
+    (batch_id, {hour_of_day: cnt}) and the input rows of the resumed run."""
     d = str(tmp_path / "taxi")
     ckpt = str(tmp_path / "ckpt")
     write_taxi_files(d, default_plan())
-    seen: list[tuple[int, int]] = []
+    seen: list[tuple[int, dict[int, int]]] = []
 
     def sink(df, batch_id):
-        seen.append((batch_id, df.count()))
+        seen.append((batch_id, {r["hour_of_day"]: r["cnt"] for r in df.collect()}))
 
-    def start():
+    def run():
         agg = hourly_dropoff_counts(_trips_stream(spark, d, max_files=10))
-        return run_foreach_batch(agg, sink, "update", checkpoint_dir=ckpt)
+        q = run_foreach_batch(agg, sink, "update", checkpoint_dir=ckpt)
+        q.processAllAvailable()
+        q.stop()
+        return q
 
-    q = start()
-    q.processAllAvailable()
-    q.stop()
-    first_batches = len(seen)
-    assert first_batches >= 1
+    with _checkpoint_manager(spark, first_run_manager):
+        run()
+    first = list(seen)
 
     write_taxi_files(
         d, [("part-2015-12-01-1130.csv", [yellow_row("2015-12-01 11:30:00", -73.98, 40.75)])]
     )
-    q = start()
-    q.processAllAvailable()
-    q.stop()
-    new = seen[first_batches:]
-    # exactly the new file's batch(es); hour-11 window count grows to 4
+    q = run()
+    resumed_rows = sum(p["numInputRows"] for p in q.recentProgress)
+    return first, seen[len(first):], resumed_rows
+
+
+def test_checkpoint_recovery_no_reprocessing(spark, tmp_path):
+    """Stop → add file → restart from checkpoint: old files not re-counted,
+    new file processed exactly once (reference K6 semantics), on top of the
+    state restored from the checkpoint."""
+    first, new, resumed_rows = _resume_with_new_file(spark, tmp_path)
+    assert len(first) >= 1
     assert len(new) >= 1
-    assert all(bid > max(b for b, _ in seen[:first_batches]) for bid, _ in new)
+    assert all(bid > max(b for b, _ in first) for bid, _ in new)
+    assert resumed_rows == 1
+    # the resumed run emits only the 11:00-12:00 window (hour_of_day 12),
+    # counting all four of its rows, as a batch read of every file does:
+    # three of them were counted before the restart
+    batch = {
+        r["hour_of_day"]: r["cnt"]
+        for r in hourly_dropoff_counts(
+            normalize_trips(read_taxi_csv(spark, str(tmp_path / "taxi")))
+        ).collect()
+    }
+    assert batch[12] == 4
+    assert {h: c for _, rows in new for h, c in rows.items()} == {12: batch[12]}
+
+
+def test_checkpoint_manager_contract_and_upgrade(spark, tmp_path):
+    """The checkpoint file manager a local session resolves keeps the
+    FileContext manager's contract: a no-overwrite write over an existing
+    file fails and keeps the old bytes, an overwriting write replaces them
+    (and its checksum). A checkpoint written under the FileContext manager
+    resumes under the local default."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    managers = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = managers.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)), hadoop_conf
+    )
+    target = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "f"))
+    checksummed = target.getFileSystem(hadoop_conf)  # verifies .crc on read
+
+    def write(data: bytes, overwrite: bool) -> None:
+        out = manager.createAtomic(target, overwrite)
+        out.write(bytearray(data))
+        out.close()
+
+    def read() -> bytes:
+        stream = checksummed.open(target)
+        try:
+            return bytes(iter(stream.read, -1))
+        finally:
+            stream.close()
+
+    def class_names(obj):
+        c = obj.getClass()
+        while c is not None:
+            yield c.getName()
+            c = c.getSuperclass()
+
+    write(b"old", False)
+    with pytest.raises(Py4JJavaError) as err:
+        write(b"new", False)
+    assert "org.apache.hadoop.fs.FileAlreadyExistsException" in set(
+        class_names(err.value.java_exception)
+    )
+    assert read() == b"old"
+    write(b"newer", True)
+    assert read() == b"newer"
+    assert os.path.exists(tmp_path / ".f.crc")
+
+    # a query's checkpoint logs resolve their manager the same way, from
+    # the session's runtime conf
+    assert manager.getClass().getName() == LOCAL_CHECKPOINT_MANAGER
+    with _checkpoint_manager(spark, FILE_CONTEXT_MANAGER):
+        resolved = managers.CheckpointFileManager.create(
+            target, spark._jsparkSession.sessionState().newHadoopConf()
+        )
+        assert resolved.getClass().getName() == FILE_CONTEXT_MANAGER
+    first, new, resumed_rows = _resume_with_new_file(
+        spark, tmp_path / "query", FILE_CONTEXT_MANAGER
+    )
+    assert len(first) >= 1 and len(new) >= 1
+    assert resumed_rows == 1
+    assert {h: c for _, rows in new for h, c in rows.items()} == {12: 4}
 
 
 def test_word_counts_stream_reference_semantics(spark, tmp_path):
@@ -578,10 +685,19 @@ def test_trend_detection_batch_rule(spark):
         F.col("window_end").cast("timestamp").alias("window_end"),
         "cnt",
     )
-    got = detect_trends_in_batch(df).collect()
-    assert len(got) == 1
-    assert got[0]["headquarters"] == "citigroup"
-    assert got[0]["cnt"] == 12 and got[0]["prev_cnt"] == 3
+    # the rule reads its input as one partition, so the lag window adds no
+    # shuffle, whatever the input's partitioning; the only Exchange left is
+    # the input's own round-robin repartition
+    for counts, input_exchanges in ((df, []), (df.repartition(4), ["RoundRobinPartitioning"])):
+        trends = detect_trends_in_batch(counts)
+        got = trends.collect()
+        assert len(got) == 1
+        assert got[0]["headquarters"] == "citigroup"
+        assert got[0]["cnt"] == 12 and got[0]["prev_cnt"] == 3
+        final_plan = (
+            trends._jdf.queryExecution().executedPlan().toString().split("Initial Plan")[0]
+        )
+        assert re.findall(r"Exchange (\w+)", final_plan) == input_exchanges
 
 
 def test_trending_files_sink_shape(spark):
