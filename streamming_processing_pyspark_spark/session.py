@@ -28,19 +28,28 @@ Spark's default manager renames through Hadoop's ``FileContext``, which on
 ``file:`` asks for the link status of source and target; without the
 native Hadoop library each such call forks a ``readlink`` process, about
 88 forks per batch of the 60-file taxi drain. Under a ``local[...]``
-master the FileSystem-based manager is used instead. It is just as safe
-there: on ``file:`` both managers check that the target does not exist and
-then call the same local rename, so a no-overwrite write over an existing
-file still fails with ``FileAlreadyExistsException``. A write that may
-overwrite (state-store deltas and snapshots) is, to that manager, a plain
-``FileSystem.rename`` over the target. Spark's Hive jars register Hive's
-``ProxyLocalFileSystem`` for ``file:``, whose ``rename`` refuses an
-existing target, so the manager would silently keep the old file where
-the ``FileContext`` manager replaces it. Local masters therefore also pin
-``file:`` to Hadoop's own ``LocalFileSystem``; its rename replaces the
-target as the ``FileContext`` rename does. Hadoop's ``.crc`` side files and
-Spark's state-file checksums are unchanged. Cluster masters keep Spark's
-defaults, and ``extra_conf`` still overrides each of them.
+master the FileSystem-based manager is used instead. The safety argument
+covers ``file:`` checkpoint paths only: there both managers check that the
+target does not exist and then call the same local rename, so a
+no-overwrite write over an existing file still fails with
+``FileAlreadyExistsException``. On a remote store (``hdfs://``, ``s3a://``)
+that manager's overwriting rename returns false and is silently skipped,
+so remote checkpoint directories belong to cluster masters, which keep
+Spark's default. A write that may overwrite (state-store deltas and
+snapshots) is, to that manager, a plain ``FileSystem.rename`` over the
+target. Spark's Hive jars register Hive's ``ProxyLocalFileSystem`` for
+``file:``, whose ``rename`` refuses an existing target, so the manager
+would silently keep the old file where the ``FileContext`` manager
+replaces it. Local masters therefore also pin ``file:`` to Hadoop's own
+``LocalFileSystem``; its rename replaces the target as the ``FileContext``
+rename does. That pin only takes effect when the SparkContext starts, and
+Hadoop caches one ``file:`` FileSystem per JVM, so a session that
+``getOrCreate`` reuses may still resolve Hive's. :func:`get_spark`
+therefore sets the manager only after checking the live session's
+``file:`` FileSystem, and leaves Spark's default otherwise. Hadoop's
+``.crc`` side files and Spark's state-file checksums are unchanged.
+Cluster masters keep Spark's defaults, and ``extra_conf`` still overrides
+each of them.
 """
 
 from __future__ import annotations
@@ -128,10 +137,18 @@ def get_spark(
     if master is None:
         master = f"local[{DEFAULT_CPUS}]"
     state_store = state_store or os.environ.get("SPARK_GRAFT_STATE_STORE")
+    conf = session_conf(master, shuffle_partitions, extra_conf, state_store)
+    manager = conf.pop(CHECKPOINT_MANAGER_KEY, None)
     builder = SparkSession.builder.appName(app_name).master(master)
-    for k, v in session_conf(master, shuffle_partitions, extra_conf, state_store).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    if manager == LOCAL_CHECKPOINT_MANAGER and file_system_class(spark) != LOCAL_FILE_SYSTEM:
+        # a reused JVM kept another file: FileSystem, on which this manager
+        # would skip overwriting renames (module docstring)
+        manager = None
+    if manager:
+        spark.conf.set(CHECKPOINT_MANAGER_KEY, manager)
     if state_store:
         # getOrCreate may have returned an existing session whose builder
         # confs were ignored; the provider is a runtime conf, so set it on
@@ -150,7 +167,10 @@ def session_conf(
     extra_conf: dict[str, str] | None = None,
     state_store: str | None = None,
 ) -> dict[str, str]:
-    """The builder confs :func:`get_spark` applies for ``master``."""
+    """The confs :func:`get_spark` applies for ``master``. It sets the
+    checkpoint file manager on the live session, and the local default
+    only where that session's ``file:`` FileSystem is Hadoop's
+    ``LocalFileSystem``."""
     conf = {
         "spark.sql.shuffle.partitions": str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         "spark.sql.adaptive.enabled": "true",
@@ -165,7 +185,7 @@ def session_conf(
         # local mode workers inherit the driver env set above)
         "spark.executorEnv.PYTHONPATH": os.environ.get("PYTHONPATH", ""),
     }
-    if master == "local" or master.startswith("local["):
+    if is_local_master(master):
         # list files on the driver and rename checkpoint files without
         # forks: see the module docstring
         conf[LISTING_THRESHOLD_KEY] = LOCAL_LISTING_THRESHOLD
@@ -178,3 +198,15 @@ def session_conf(
     if extra_conf:
         conf.update(extra_conf)
     return conf
+
+
+def is_local_master(master: str) -> bool:
+    """Whether ``master`` runs driver and executors in one JVM."""
+    return master == "local" or master.startswith("local[")
+
+
+def file_system_class(spark: SparkSession) -> str:
+    """Class name of the ``file:`` FileSystem the live session resolves."""
+    path = spark._jvm.org.apache.hadoop.fs.Path("file:///")
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return path.getFileSystem(hadoop_conf).getClass().getName()

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.geo import classify_sql
+from ..session import is_local_master
 
 _MEMORY_SINK_SEQ = [0]
 
@@ -113,18 +114,25 @@ def detect_trends_in_batch(
     update-mode micro-batch; apply to the full aggregate (or use
     streaming/trend.py's stateful operator) for cross-batch detection.
 
-    ``counts`` is read as one partition before the ``lag`` window: a single
-    partition already satisfies the window's clustering, so no shuffle
-    stage runs. The stage that produces ``counts`` then runs as one task,
-    which suits its size — windowed counts are at most |keys| × |windows|
-    rows, a few dozen per micro-batch.
+    Under a local master ``counts`` is read as one partition before the
+    ``lag`` window: a single partition already satisfies the window's
+    clustering, so no shuffle stage runs. The coalesce is narrow, so the
+    stage that produces ``counts`` then runs as one task; in a
+    ``foreachBatch`` sink that is the stateful aggregate's stage, which
+    loads and commits every state-store partition in turn. On the taxi
+    drain (``local[4]``, at most |keys| × |windows| windowed counts) that
+    cost less CPU per row than the exchange did, measured with 4 and with
+    32 state partitions. A cluster would run all of them in one task on
+    one executor, away from their state stores, so cluster masters keep
+    the exchange.
     """
     from pyspark.sql import Window
 
+    if is_local_master(counts.sparkSession.sparkContext.master):
+        counts = counts.coalesce(1)
     w = Window.partitionBy(key_col).orderBy("window_start")
     return (
-        counts.coalesce(1)
-        .withColumn("prev_cnt", F.lag("cnt").over(w))
+        counts.withColumn("prev_cnt", F.lag("cnt").over(w))
         .withColumn("prev_start", F.lag("window_start").over(w))
         .where(
             (F.col("cnt") >= min_count)

@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 
 import pytest
 
@@ -147,4 +149,47 @@ def test_local_only_session_defaults(spark, tmp_path, key, local_value):
         manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
         assert manager.create(path, hadoop_conf).getClass().getName() == local_value
     if key == S.FILE_SYSTEM_KEY:
-        assert path.getFileSystem(hadoop_conf).getClass().getName() == local_value
+        assert S.file_system_class(spark) == local_value
+
+
+_REUSE_SCRIPT = r"""
+import tempfile
+
+from pyspark.sql import SparkSession
+
+from streamming_processing_pyspark_spark import session as S
+
+plain = (
+    SparkSession.builder.master("local[1]")
+    .appName("unpinned")
+    .config("spark.ui.enabled", "false")
+    .config("spark.driver.memory", "512m")
+    .getOrCreate()
+)
+spark = S.get_spark(master="local[1]")
+jvm = spark._jvm
+path = jvm.org.apache.hadoop.fs.Path(tempfile.mkdtemp())
+manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+print(spark._jsparkSession.equals(plain._jsparkSession))
+print(S.file_system_class(spark))
+print(manager.create(path, spark._jsparkSession.sessionState().newHadoopConf()).getClass().getName())
+"""
+
+
+def test_reused_unpinned_session_keeps_default_checkpoint_manager():
+    """``get_spark`` reusing a local session whose context started without
+    the ``file:`` pin keeps Spark's FileContext checkpoint manager: that
+    JVM's cached ``file:`` FileSystem is Hive's, whose rename would make
+    the FileSystem-based manager skip overwriting writes. Needs its own
+    JVM, since the shared test session started with the pin."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo + os.pathsep + os.environ.get("PYTHONPATH", ""))
+    proc = subprocess.run(
+        [sys.executable, "-c", _REUSE_SCRIPT],
+        capture_output=True, text=True, timeout=300, cwd=repo, env=env,
+    )
+    assert proc.returncode == 0, f"stderr tail: {proc.stderr[-3000:]}"
+    reused, file_system, manager = proc.stdout.split()[-3:]
+    assert reused == "True"
+    assert file_system != S.LOCAL_FILE_SYSTEM
+    assert manager.endswith("FileContextBasedCheckpointFileManager")

@@ -34,6 +34,7 @@ from streamming_processing_pyspark_spark.streaming.jobs import (
     write_geofence_files,
     write_hourly_files,
 )
+from streamming_processing_pyspark_spark.streaming import jobs as jobs_module
 from streamming_processing_pyspark_spark.session import (
     CHECKPOINT_MANAGER_KEY,
     LOCAL_CHECKPOINT_MANAGER,
@@ -668,7 +669,7 @@ def test_socket_word_count_live(spark):
         srv.close()
 
 
-def test_trend_detection_batch_rule(spark):
+def test_trend_detection_batch_rule(spark, monkeypatch):
     rows = [
         ("citigroup", "2015-12-01 10:00:00", "2015-12-01 10:10:00", 3),
         ("citigroup", "2015-12-01 10:10:00", "2015-12-01 10:20:00", 12),  # 12-3>=3 ✓
@@ -685,10 +686,8 @@ def test_trend_detection_batch_rule(spark):
         F.col("window_end").cast("timestamp").alias("window_end"),
         "cnt",
     )
-    # the rule reads its input as one partition, so the lag window adds no
-    # shuffle, whatever the input's partitioning; the only Exchange left is
-    # the input's own round-robin repartition
-    for counts, input_exchanges in ((df, []), (df.repartition(4), ["RoundRobinPartitioning"])):
+
+    def check(counts, exchanges):
         trends = detect_trends_in_batch(counts)
         got = trends.collect()
         assert len(got) == 1
@@ -697,7 +696,17 @@ def test_trend_detection_batch_rule(spark):
         final_plan = (
             trends._jdf.queryExecution().executedPlan().toString().split("Initial Plan")[0]
         )
-        assert re.findall(r"Exchange (\w+)", final_plan) == input_exchanges
+        assert re.findall(r"Exchange (\w+)", final_plan) == exchanges
+
+    # under the local test master the rule reads its input as one
+    # partition, so the lag window adds no shuffle, whatever the input's
+    # partitioning; the only Exchange left is the input's own round-robin
+    # repartition
+    check(df, [])
+    check(df.repartition(4), ["RoundRobinPartitioning"])
+    # a cluster master keeps the window's hash exchange
+    monkeypatch.setattr(jobs_module, "is_local_master", lambda master: False)
+    check(df.repartition(4), ["hashpartitioning", "RoundRobinPartitioning"])
 
 
 def test_trending_files_sink_shape(spark):
