@@ -549,9 +549,11 @@ def main() -> None:
     # task_sec is NOT core-count-invariant: AQE coalesces to a different
     # partition count and per-task overhead scales with the task count,
     # so compare it across the 32- and 8-core runs only as a rough
-    # indication of where compute went. Stages are attributed by
-    # arrival: between two fetches the only jobs are the current query's
-    # iterations. Fetch failures degrade to empty maps, never fail bench.
+    # indication of where compute went. Each fetch first drains the
+    # listener bus, so the status store holds every stage of the query
+    # that just finished, and the new stages since the previous fetch are
+    # exactly that query's. Fetch failures degrade to empty maps, never
+    # fail bench.
     import urllib.request
 
     ui_url = spark.sparkContext.uiWebUrl
@@ -562,6 +564,7 @@ def main() -> None:
         if not ui_url:
             return 0
         try:
+            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
             with urllib.request.urlopen(
                 f"{ui_url}/api/v1/applications/{app_id}/stages?status=COMPLETE",
                 timeout=10,

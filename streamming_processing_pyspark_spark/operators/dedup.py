@@ -49,6 +49,33 @@ from ..tables import local_df
 
 Tables = dict[str, DataFrame]
 
+
+def _overlap_counts(exact: DataFrame, approx: DataFrame, keys: list[str]) -> DataFrame:
+    """The shape every exact-vs-approximate contract check shares: one
+    full-outer join of the two key sets (each side computed once) and one
+    row of counts — ``n_exact`` and ``n_approx`` (rows per side),
+    ``n_hit`` (approximate rows also in the exact set) and ``n_outside``
+    (approximate rows missing from it). Each check then projects its own
+    flags from these, e.g. with :func:`_pct_ok`."""
+    j = exact.select(*keys, F.lit(1).alias("_in_exact")).join(
+        approx.select(*keys, F.lit(1).alias("_in_approx")), keys, "full_outer"
+    )
+    in_exact = F.col("_in_exact").isNotNull()
+    return j.agg(
+        F.count("_in_exact").alias("n_exact"),
+        F.count("_in_approx").alias("n_approx"),
+        F.count(F.when(in_exact, F.col("_in_approx"))).alias("n_hit"),
+        F.count(F.when(~in_exact, F.col("_in_approx"))).alias("n_outside"),
+    )
+
+
+def _pct_ok(part: str, whole: str, pct: int) -> F.Column:
+    """``100·part ≥ pct·whole`` over two count columns: true when
+    ``part`` reaches ``pct`` percent of ``whole`` (so also when both are
+    0)."""
+    return F.lit(100) * F.col(part) >= F.lit(pct) * F.col(whole)
+
+
 JACCARD_THRESHOLD = 0.3
 SHINGLE_WORDS = 3
 
@@ -992,34 +1019,19 @@ def incremental_ingest_check(t: Tables) -> DataFrame:
     (≥ MINHASH_RECALL_PCT%)."""
     is_batch_a = F.col("id_a") % INCR_BATCH_MOD == 0
     is_batch_b = F.col("id_b") % INCR_BATCH_MOD == 0
-    exact_cross = (
-        ngram_jaccard_pairs(t, max_shingle_df=None)
-        .where(is_batch_a != is_batch_b)
-        .select("id_a", "id_b", F.lit(1).alias("in_exact"))
+    exact_cross = ngram_jaccard_pairs(t, max_shingle_df=None).where(
+        is_batch_a != is_batch_b
     )
     # normalize incremental pairs to (min, max) to match the exact set's
     # id_a < id_b orientation
     inc = incremental_minhash_pairs(t).select(
         F.least("new_id", "old_id").alias("id_a"),
         F.greatest("new_id", "old_id").alias("id_b"),
-        F.lit(1).alias("in_inc"),
     )
-    j = exact_cross.join(inc, ["id_a", "id_b"], "full_outer")
-    return j.agg(
-        F.count("in_exact").alias("n_exact_cross"),
-        F.count(F.when(F.col("in_exact").isNotNull(), F.col("in_inc"))).alias(
-            "n_hit"
-        ),
-        F.count(F.when(F.col("in_exact").isNull(), F.col("in_inc"))).alias(
-            "n_outside"
-        ),
-    ).select(
-        "n_exact_cross",
+    return _overlap_counts(exact_cross, inc, ["id_a", "id_b"]).select(
+        F.col("n_exact").alias("n_exact_cross"),
         (F.col("n_outside") == 0).alias("subset_ok"),
-        (
-            F.lit(100) * F.col("n_hit")
-            >= F.lit(MINHASH_RECALL_PCT) * F.col("n_exact_cross")
-        ).alias("recall_ok"),
+        _pct_ok("n_hit", "n_exact", MINHASH_RECALL_PCT).alias("recall_ok"),
     )
 
 
@@ -1040,28 +1052,15 @@ def minhash_recall_check(t: Tables) -> DataFrame:
     contract is driver-verified as data — the same bound the local test
     pins, now hash-checked every rotation.
     """
-    # full-outer join, each side scanned ONCE: n_exact / intersection /
-    # lsh-only counts all come from one aggregation
-    exact = ngram_jaccard_pairs(t, max_shingle_df=None).select(
-        "id_a", "id_b", F.lit(1).alias("in_exact")
+    c = _overlap_counts(
+        ngram_jaccard_pairs(t, max_shingle_df=None),
+        minhash_lsh_pairs(t),
+        ["id_a", "id_b"],
     )
-    lsh = minhash_lsh_pairs(t).select("id_a", "id_b", F.lit(1).alias("in_lsh"))
-    j = exact.join(lsh, ["id_a", "id_b"], "full_outer")
-    return j.agg(
-        F.count("in_exact").alias("n_exact"),
-        F.count(F.when(F.col("in_exact").isNotNull(), F.col("in_lsh"))).alias(
-            "n_hit"
-        ),
-        F.count(F.when(F.col("in_exact").isNull(), F.col("in_lsh"))).alias(
-            "n_outside"
-        ),
-    ).select(
+    return c.select(
         "n_exact",
         (F.col("n_outside") == 0).alias("subset_ok"),
-        (
-            F.lit(100) * F.col("n_hit")
-            >= F.lit(MINHASH_RECALL_PCT) * F.col("n_exact")
-        ).alias("recall_ok"),
+        _pct_ok("n_hit", "n_exact", MINHASH_RECALL_PCT).alias("recall_ok"),
     )
 
 
@@ -1282,28 +1281,15 @@ def containment_recall_check(t: Tables) -> DataFrame:
     the banded route). The uncapped exact side deliberately bypasses
     AUTO_DF_CAP so the subset claim cannot be broken by cap-reduced
     ``common`` (see :func:`containment_pairs`'s cap-asymmetry note)."""
-    exact = containment_pairs(t, max_shingle_df=None).select(
-        "id_a", "id_b", F.lit(1).alias("in_exact")
+    c = _overlap_counts(
+        containment_pairs(t, max_shingle_df=None),
+        containment_pairs_banded(t),
+        ["id_a", "id_b"],
     )
-    banded = containment_pairs_banded(t).select(
-        "id_a", "id_b", F.lit(1).alias("in_banded")
-    )
-    j = exact.join(banded, ["id_a", "id_b"], "full_outer")
-    return j.agg(
-        F.count("in_exact").alias("n_exact"),
-        F.count(
-            F.when(F.col("in_exact").isNotNull(), F.col("in_banded"))
-        ).alias("n_hit"),
-        F.count(
-            F.when(F.col("in_exact").isNull(), F.col("in_banded"))
-        ).alias("n_outside"),
-    ).select(
+    return c.select(
         "n_exact",
         (F.col("n_outside") == 0).alias("subset_ok"),
-        (
-            F.lit(100) * F.col("n_hit")
-            >= F.lit(CONTAINMENT_RECALL_PCT) * F.col("n_exact")
-        ).alias("recall_ok"),
+        _pct_ok("n_hit", "n_exact", CONTAINMENT_RECALL_PCT).alias("recall_ok"),
     )
 
 

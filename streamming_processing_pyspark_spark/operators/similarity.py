@@ -1,26 +1,35 @@
-"""Similarity search over the ``embeddings`` table.
+"""Similarity search over the ``embeddings`` table: exact operators and
+the approximate indexes that scale them, each index built from shared
+cores.
 
-Two tiers, per the scale brief:
-
-- :func:`cosine_topk` — brute-force cosine top-k against a query vector.
-  The query vector is a 1-row broadcast; the scan is a single pass scored by
-  the Arrow-batched BLAS pandas UDF (functions.vectors.cosine_pudf), and the
-  top-k is ``TakeOrderedAndProject`` (per-partition heaps, no global sort).
-  This is the exact baseline an IVF/LSH path must match.
-- :func:`embedding_near_dup_pairs` — all pairs with cosine ≥ threshold.
-  Locally a broadcast self-join; at 100 TB the same query runs over
-  LSH-bucketed candidates (see :func:`lsh_bucketed_pairs`), which prunes the
-  O(n²) candidate space to per-bucket blocks.
-- :func:`lsh_bucketed_pairs` — random-hyperplane (SimHash) LSH: sign-bit
-  signatures from deterministic hyperplanes, banded into buckets; candidate
-  pairs are generated per bucket and *verified* with the exact cosine, so
-  output ⊆ the brute-force pairs (approximate recall, exact precision).
+- Exact baselines: :func:`cosine_topk` (one scan scored by the BLAS
+  pandas UDF, ``TakeOrderedAndProject`` top-k), and the blocked-matmul
+  harness :func:`_block_pair_groups` behind :func:`_all_pairs_at`,
+  :func:`knn_join_topk` and :func:`hard_negative_mining`.
+- Flat indexes (:func:`ivf_topk`, :func:`pq_topk`, :func:`ivfpq_topk`):
+  the deterministic quantizer sample (:func:`_quantizer_sample`), sample
+  k-means (:func:`_sample_kmeans`), PQ codebooks and ADC scoring
+  (:func:`_pq_codebooks`, :func:`_adc_table`, :func:`_adc_sum`,
+  :func:`_adc_shortlist`), and the exact re-rank against the unit query
+  vector (:func:`_unit_query_vec`, :func:`_rerank_exact`).
+- Two-level quantizer (:func:`_ann_topk_candidates`,
+  :func:`semantic_dedup_pairs`, :func:`incremental_semantic_pairs`):
+  distributed coarse routing (:func:`_coarse_route` over
+  :func:`_spherical_kmeans`), one grouped Python stage per coarse branch
+  (:func:`_branch_stage`) and the in-branch fine split
+  (:func:`_fine_cells`).
+- Contracts: every exact-vs-approximate ``*_check`` projects its flags
+  from one row of :func:`dedup._overlap_counts`; the flat indexes share
+  :func:`_topk_contract`.
+- LSH (:func:`lsh_bucketed_pairs`, :func:`lsh_query_topk`), whitening,
+  MMR and Matryoshka audits stand alone.
 """
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window
@@ -28,7 +37,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double, cosine_pudf
 from ..tables import broadcast_replacing, fan_out, local_df, persist_replacing
-from .dedup import INCR_BATCH_MOD
+from .dedup import INCR_BATCH_MOD, _overlap_counts, _pct_ok
 
 Tables = dict[str, DataFrame]
 
@@ -243,9 +252,6 @@ def _all_pairs_at(t: Tables, threshold: float) -> DataFrame:
     emb = t["embeddings"].select("vec_id", as_double("embedding").alias("vec"))
 
     def score_block_pair(key, a_pdf, b_pdf):
-        import numpy as np
-        import pandas as pd
-
         if not len(a_pdf) or not len(b_pdf):
             return pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []})
         a_ids = a_pdf["vec_id"].to_numpy()
@@ -312,8 +318,6 @@ def knn_join_topk(t: Tables) -> DataFrame:
     matmul stage is O(n·NB·K + ties), independent of pairwise count;
     executor memory stays two blocks per task.
     """
-    import numpy as np
-
     emb = t["embeddings"].select("vec_id", as_double("embedding").alias("vec"))
 
     def block_topk(key, a_pdf, b_pdf):
@@ -400,8 +404,6 @@ def hard_negative_mining(t: Tables) -> DataFrame:
     Output: ``vec_id``, ``label``, ``nbr_id``, ``nbr_label``,
     ``cos_sim`` (6 dp), ``rk`` (1..K).
     """
-    import numpy as np
-
     emb = t["embeddings"].select(
         "vec_id", as_double("embedding").alias("vec"), "label"
     )
@@ -491,24 +493,11 @@ def hardneg_recall_check(t: Tables) -> DataFrame:
     (rows-only): one row with the exact hard-negative row count
     (SQL-recomputable) and a recall flag — ≥ HARDNEG_RECALL_PCT% of
     exact (vec_id, nbr_id) memberships found by the IVF route."""
-    exact = hard_negative_mining(t).select(
-        "vec_id", "nbr_id", F.lit(1).alias("in_exact")
+    c = _overlap_counts(
+        hard_negative_mining(t), hard_negative_mining_ann(t), ["vec_id", "nbr_id"]
     )
-    ann = hard_negative_mining_ann(t).select(
-        "vec_id", "nbr_id", F.lit(1).alias("in_ann")
-    )
-    j = exact.join(ann, ["vec_id", "nbr_id"], "full_outer")
-    return j.agg(
-        F.count("in_exact").alias("n_exact"),
-        F.count(
-            F.when(F.col("in_exact").isNotNull(), F.col("in_ann"))
-        ).alias("n_hit"),
-    ).select(
-        "n_exact",
-        (
-            F.lit(100) * F.col("n_hit")
-            >= F.lit(HARDNEG_RECALL_PCT) * F.col("n_exact")
-        ).alias("recall_ok"),
+    return c.select(
+        "n_exact", _pct_ok("n_hit", "n_exact", HARDNEG_RECALL_PCT).alias("recall_ok")
     )
 
 
@@ -620,24 +609,11 @@ def bitext_ann_agreement_check(t: Tables) -> DataFrame:
     (rows-only): one row with the exact miner's row count
     (SQL-recomputable) and an agreement flag — ≥ BITEXT_AGREE_PCT% of
     anchors pick the SAME best partner as the exact miner."""
-    exact = bitext_margin_pairs(t).select(
-        "vec_id", "nbr_id", F.lit(1).alias("in_exact")
+    c = _overlap_counts(
+        bitext_margin_pairs(t), bitext_margin_pairs_ann(t), ["vec_id", "nbr_id"]
     )
-    ann = bitext_margin_pairs_ann(t).select(
-        "vec_id", "nbr_id", F.lit(1).alias("in_ann")
-    )
-    j = exact.join(ann, ["vec_id", "nbr_id"], "full_outer")
-    return j.agg(
-        F.count("in_exact").alias("n_exact"),
-        F.count(
-            F.when(F.col("in_exact").isNotNull(), F.col("in_ann"))
-        ).alias("n_agree"),
-    ).select(
-        "n_exact",
-        (
-            F.lit(100) * F.col("n_agree")
-            >= F.lit(BITEXT_AGREE_PCT) * F.col("n_exact")
-        ).alias("agree_ok"),
+    return c.select(
+        "n_exact", _pct_ok("n_hit", "n_exact", BITEXT_AGREE_PCT).alias("agree_ok")
     )
 
 
@@ -693,8 +669,6 @@ def lsh_query_topk(t: Tables, n_bits: int = LSH_QUERY_BITS) -> DataFrame:
     staticness and documents that), then ``TakeOrdered`` on the
     candidates. The query vector/bucket is the usual 1-row driver fetch.
     """
-    import math as _math
-
     emb = t["embeddings"].select(
         "vec_id", as_double("embedding").alias("e")
     )
@@ -715,7 +689,7 @@ def lsh_query_topk(t: Tables, n_bits: int = LSH_QUERY_BITS) -> DataFrame:
             acc = acc + a[i] * b[i]
         return acc
 
-    q_norm = _math.sqrt(py_dot(qvec, qvec))
+    q_norm = math.sqrt(py_dot(qvec, qvec))
     q_bucket = 0
     for i, pl in enumerate(planes):
         if py_dot(qvec, pl) >= 0.0:
@@ -845,8 +819,6 @@ def mmr_diverse_topk(t: Tables) -> DataFrame:
     ``maxsim_micro`` (redundancy vs the already-picked set at pick
     time; 0 for the first pick), ``score_micro``.
     """
-    import math as _math
-
     spark = t["embeddings"].sparkSession
     emb = t["embeddings"].select("vec_id", as_double("embedding").alias("e"))
     qrow = emb.where(F.col("vec_id") == QUERY_VEC_ID).collect()[0]
@@ -858,7 +830,7 @@ def mmr_diverse_topk(t: Tables) -> DataFrame:
             acc = acc + a[i] * b[i]
         return acc
 
-    q_norm = _math.sqrt(py_dot(qvec, qvec))
+    q_norm = math.sqrt(py_dot(qvec, qvec))
 
     def fold_dot(col, vals):
         return F.aggregate(
@@ -906,9 +878,9 @@ def mmr_diverse_topk(t: Tables) -> DataFrame:
             (
                 rank,
                 int(best),
-                _math.floor(1000000 * rel_b),
-                _math.floor(1000000 * ms_b),
-                _math.floor(1000000 * score),
+                math.floor(1000000 * rel_b),
+                math.floor(1000000 * ms_b),
+                math.floor(1000000 * score),
             )
         )
         for vid, (e_v, nr_v, _rel) in cands.items():
@@ -1018,8 +990,6 @@ def _emb_frame(t: Tables) -> DataFrame:
     reuses it through ``sameSemantics``), and the bench's per-iteration
     ``clearCache`` keeps timings honest. Guide §5: persist exactly the
     frame that is re-read, nothing else."""
-    from ..tables import persist_replacing
-
     return persist_replacing(
         fan_out(
             t["embeddings"].select(
@@ -1030,17 +1000,96 @@ def _emb_frame(t: Tables) -> DataFrame:
     )
 
 
-def _branch_parts(spark, k_coarse: int) -> int:
-    """Explicit exchange width for the per-branch Python stages (r12):
-    AQE's byte-based partition coalescing (64 MB advisory) sees only the
-    tiny candidate BYTES and serializes the CPU-per-row numpy branch
-    work into one task (measured: the whole branch top-k ran as a single
-    630 ms task at sf0.1 while 31 cores idled). Pin ~3 partitions per
-    coarse cell (hash spread over few distinct keys, guide §2.5) bounded
-    by the session shuffle width — scale-adaptive through k_coarse ∝
-    √(n/TARGET), no constant tuned to the local core count."""
-    width = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    return max(2, min(width, 3 * k_coarse))
+def _coarse_route(emb: DataFrame):
+    """Coarse level of the two-level spherical quantizer shared by
+    :func:`_ann_topk_candidates`, :func:`semantic_dedup_pairs` and
+    :func:`incremental_semantic_pairs`: ``k_total = max(SEMDEDUP_K,
+    n // SEMDEDUP_TARGET_CLUSTER)`` cells in all, routed through
+    ``k_coarse = ⌈√k_total⌉`` distributed k-means centroids.
+
+    ``emb`` must already sit in the ``similarity.kmeans_emb`` slot: the
+    sizing count is the first of several passes over it (k-means init,
+    every Lloyd round, the final assignment), and unpersisted each pass
+    was one more parquet scan + fan_out shuffle. Returns (assign_fn,
+    persisted emb, k_coarse) — see :func:`_spherical_kmeans`."""
+    k_total = max(SEMDEDUP_K, int(emb.count()) // SEMDEDUP_TARGET_CLUSTER)
+    k_coarse = max(SEMDEDUP_COARSE_MIN, math.isqrt(k_total - 1) + 1)
+    _, assign, emb = _spherical_kmeans(emb, k_coarse, SEMDEDUP_ITERS)
+    return assign, emb, k_coarse
+
+
+def _branch_stage(assigned: DataFrame, k_coarse: int, fn, schema: str) -> DataFrame:
+    """The per-branch Python stage of the two-level quantizer: ``fn``
+    runs once per coarse cell over the rows ``assigned`` routed there.
+
+    The exchange width is explicit (r12): AQE's byte-based partition
+    coalescing (64 MB advisory) sees only the tiny candidate BYTES and
+    serializes the CPU-per-row numpy branch work into one task
+    (measured: the whole branch top-k ran as a single 630 ms task at
+    sf0.1 while 31 cores idled). ~3 partitions per coarse cell (hash
+    spread over few distinct keys, guide §2.5), bounded by the session
+    shuffle width — scale-adaptive through k_coarse ∝ √(n/TARGET), no
+    constant tuned to the local core count."""
+    width = int(assigned.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    return (
+        assigned.repartition(max(2, min(width, 3 * k_coarse)), "cluster")
+        .groupBy("cluster")
+        .applyInPandas(fn, schema=schema)
+    )
+
+
+def _branch_arrays(pdf: pd.DataFrame):
+    """A branch's rows sorted by ``vec_id`` — the fine init (lowest
+    vec_ids) and float mean order must not depend on shuffle arrival
+    order — as (sorted pdf, ids, vector matrix, row norms)."""
+    pdf = pdf.sort_values("vec_id", kind="mergesort")
+    mat = np.array(pdf["vec"].tolist(), dtype="float64")
+    return pdf, pdf["vec_id"].to_numpy(), mat, np.linalg.norm(mat, axis=1)
+
+
+def _fine_cells(mat: np.ndarray, norms: np.ndarray) -> list[np.ndarray]:
+    """Fine level of the two-level quantizer, inside one branch task: the
+    row-index sets of ``k_fine`` local spherical k-means cells, each row
+    in its ``SEMDEDUP_PROBES`` nearest cells. Fine codebooks are built,
+    used and dropped here; they never reach the driver or a broadcast.
+
+    ``k_fine`` is sized on the REPLICATED membership (each row lands in
+    P cells), so realized cell size ≈ TARGET. When ``k_fine ≤ P`` the
+    split cannot prune — every row would enter every cell, pure P×
+    duplication of the branch work (measured 3× for zero pruning) — so
+    the branch is one cell. The fine level runs fewer Lloyd rounds than
+    the coarse one: its cells only need to be locality-plausible
+    (multi-probe covers the boundaries), and each round costs
+    n_b·k_fine·d."""
+    n_b = len(mat)
+    k_fine = max(1, n_b * SEMDEDUP_PROBES // SEMDEDUP_TARGET_CLUSTER)
+    if k_fine <= SEMDEDUP_PROBES:
+        return [np.arange(n_b)]
+    unit = mat / norms[:, None]
+    c = unit[:k_fine].copy()
+    for _ in range(SEMDEDUP_FINE_ITERS):
+        a = (unit @ c.T).argmax(axis=1)
+        for j in np.unique(a):
+            v = mat[a == j].sum(axis=0)
+            nv = np.linalg.norm(v)
+            if nv > 0:
+                c[j] = v / nv
+    p = min(SEMDEDUP_PROBES, k_fine)
+    # top-p via argpartition (O(k_fine) per row, not a full sort)
+    top = np.argpartition(-(unit @ c.T), p - 1, axis=1)[:, :p]
+    return [np.where((top == j).any(axis=1))[0] for j in range(k_fine)]
+
+
+def _cell_pairs(cols: list[str], parts: list) -> pd.DataFrame:
+    """One branch's output frame from its per-cell ``(ids, ids, cos_sim)``
+    array triples, deduplicated on the id pair (multi-probe puts a pair
+    in several cells); typed int64/int64/float64 when empty."""
+    if not parts:
+        empty = np.array([], "int64")
+        parts = [(empty, empty, np.array([], "float64"))]
+    return pd.DataFrame(
+        {c: np.concatenate(v) for c, v in zip(cols, zip(*parts))}
+    ).drop_duplicates(cols[:2])
 
 
 def _ann_topk_candidates(t: Tables, k: int, with_label: bool) -> DataFrame:
@@ -1048,9 +1097,9 @@ def _ann_topk_candidates(t: Tables, k: int, with_label: bool) -> DataFrame:
     quantizer cells only (VERDICT r9 §2) — the candidate source that
     replaces the exact all-pairs blocked matmul in the production graph
     ops. Same two-level spherical quantizer as
-    :func:`semantic_dedup_pairs` (coarse distributed route with
-    multi-probe, per-branch local fine k-means, built/used/dropped
-    inside the branch task), but each fine cell emits per-row TOP-K
+    :func:`semantic_dedup_pairs` (:func:`_coarse_route` with
+    multi-probe, then :func:`_fine_cells` inside each branch task), but
+    each fine cell emits per-row TOP-K
     candidates (ties at the k-th score included, exactly like
     :func:`knn_join_topk`'s block-local cut) instead of ≥-threshold
     pairs. The per-anchor global top-k over the deduped candidate union
@@ -1065,17 +1114,7 @@ def _ann_topk_candidates(t: Tables, k: int, with_label: bool) -> DataFrame:
     :func:`hardneg_recall_check`. ``with_label`` masks SAME-label
     candidates inside the cell (the hard-negative shape) instead of
     just self."""
-    import numpy as np
-
-    # persist BEFORE the sizing count (r11): the count is the first of
-    # 4+ passes over this frame (k-means init, every Lloyd round, the
-    # final assignment) — unpersisted it was one extra full parquet scan
-    # + fan_out shuffle per call. Same slot _spherical_kmeans uses, so
-    # its own persist_replacing call is a sameSemantics no-op.
-    emb = _emb_frame(t)
-    k_total = max(SEMDEDUP_K, int(emb.count()) // SEMDEDUP_TARGET_CLUSTER)
-    k_coarse = max(SEMDEDUP_COARSE_MIN, math.isqrt(k_total - 1) + 1)
-    _, assign, emb = _spherical_kmeans(emb, k_coarse, SEMDEDUP_ITERS)
+    assign, emb, k_coarse = _coarse_route(_emb_frame(t))
     assigned = assign(emb, probes=SEMDEDUP_PROBES)
     if with_label:
         assigned = assigned.join(
@@ -1091,34 +1130,10 @@ def _ann_topk_candidates(t: Tables, k: int, with_label: bool) -> DataFrame:
         cols = ["vec_id", "nbr_id", "cos_sim"]
 
     def topk_in_branch(pdf):
-        pdf = pdf.sort_values("vec_id", kind="mergesort")
-        mat = np.array(pdf["vec"].tolist(), dtype="float64")
-        ids = pdf["vec_id"].to_numpy()
+        pdf, ids, mat, norms = _branch_arrays(pdf)
         labs = pdf["label"].to_numpy() if with_label else None
-        norms = np.linalg.norm(mat, axis=1)
-        n_b = len(ids)
-        # fine-level sizing and probe logic identical to
-        # semantic_dedup_pairs.pairs_in_branch (see its comments)
-        k_fine = max(1, n_b * SEMDEDUP_PROBES // SEMDEDUP_TARGET_CLUSTER)
-        if k_fine <= SEMDEDUP_PROBES:
-            cells = [np.arange(n_b)]
-        else:
-            unit = mat / norms[:, None]
-            c = unit[:k_fine].copy()
-            for _ in range(SEMDEDUP_FINE_ITERS):
-                a = (unit @ c.T).argmax(axis=1)
-                for j in np.unique(a):
-                    v = mat[a == j].sum(axis=0)
-                    nv = np.linalg.norm(v)
-                    if nv > 0:
-                        c[j] = v / nv
-            p = min(SEMDEDUP_PROBES, k_fine)
-            top = np.argpartition(-(unit @ c.T), p - 1, axis=1)[:, :p]
-            cells = [
-                np.where((top == j).any(axis=1))[0] for j in range(k_fine)
-            ]
         frames = []
-        for idx in cells:
+        for idx in _fine_cells(mat, norms):
             if len(idx) < 2:
                 continue
             sub = mat[idx]
@@ -1152,13 +1167,7 @@ def _ann_topk_candidates(t: Tables, k: int, with_label: bool) -> DataFrame:
             return pd.DataFrame({c: [] for c in cols})
         return pd.concat(frames, ignore_index=True)[cols]
 
-    cands = (
-        assigned.repartition(
-            _branch_parts(emb.sparkSession, k_coarse), "cluster"
-        )
-        .groupBy("cluster")
-        .applyInPandas(topk_in_branch, schema=schema)
-    )
+    cands = _branch_stage(assigned, k_coarse, topk_in_branch, schema)
     # multi-probe emits the same candidate from several cells; the
     # grouped max is the deterministic dedup (scores agree up to the
     # BLAS class; max pins the survivor)
@@ -1192,37 +1201,17 @@ def ann_knn_recall_check(t: Tables) -> DataFrame:
     one row with the exact kNN row count (SQL-recomputable) and a
     recall flag — ≥ ANN_KNN_RECALL_PCT% of exact (vec_id, nbr_id) kNN
     memberships are found by the IVF route."""
-    exact = knn_join_topk(t).select(
-        "vec_id", "nbr_id", F.lit(1).alias("in_exact")
-    )
-    ann = ann_knn_topk(t).select(
-        "vec_id", "nbr_id", F.lit(1).alias("in_ann")
-    )
-    j = exact.join(ann, ["vec_id", "nbr_id"], "full_outer")
-    return j.agg(
-        F.count("in_exact").alias("n_exact"),
-        F.count(
-            F.when(F.col("in_exact").isNotNull(), F.col("in_ann"))
-        ).alias("n_hit"),
-    ).select(
-        "n_exact",
-        (
-            F.lit(100) * F.col("n_hit")
-            >= F.lit(ANN_KNN_RECALL_PCT) * F.col("n_exact")
-        ).alias("recall_ok"),
+    c = _overlap_counts(knn_join_topk(t), ann_knn_topk(t), ["vec_id", "nbr_id"])
+    return c.select(
+        "n_exact", _pct_ok("n_hit", "n_exact", ANN_KNN_RECALL_PCT).alias("recall_ok")
     )
 
 
-def _mutual_knn_edges(t: Tables) -> DataFrame:
-    """Undirected mutual-kNN graph (a < b; edge iff each is in the
-    other's top-``KNN_K``) — the bounded-degree similarity graph
-    downstream graph analytics run on. PRODUCTION build (VERDICT r9
-    §2): from :func:`ann_knn_topk`'s IVF-routed candidates, so the
-    corpus-sized stage is the linear cell-local top-k, not an all-pairs
-    matmul; mutuality is one intersect of the two directions (shuffle
-    of ≤ n·K id pairs). Edge agreement vs the exact build is
-    driver-checked data (:func:`knn_edge_agreement_check`)."""
-    knn = ann_knn_topk(t).select("vec_id", "nbr_id")
+def _mutual_edges(knn: DataFrame) -> DataFrame:
+    """Undirected mutual-kNN edges (a < b) of a (vec_id, nbr_id) kNN
+    frame: an edge iff each end is in the other's list — one intersect
+    of the two directions (shuffle of ≤ n·K id pairs)."""
+    knn = knn.select("vec_id", "nbr_id")
     fwd = knn.where(F.col("vec_id") < F.col("nbr_id")).select(
         F.col("vec_id").alias("a"), F.col("nbr_id").alias("b")
     )
@@ -1230,20 +1219,23 @@ def _mutual_knn_edges(t: Tables) -> DataFrame:
         F.col("nbr_id").alias("a"), F.col("vec_id").alias("b")
     )
     return fwd.intersect(rev)
+
+
+def _mutual_knn_edges(t: Tables) -> DataFrame:
+    """Mutual-kNN graph (degree bounded by ``KNN_K``) — the similarity
+    graph downstream graph analytics run on. PRODUCTION build (VERDICT
+    r9 §2): from :func:`ann_knn_topk`'s IVF-routed candidates, so the
+    corpus-sized stage is the linear cell-local top-k, not an all-pairs
+    matmul. Edge agreement vs the exact build is checked as data
+    (:func:`knn_edge_agreement_check`)."""
+    return _mutual_edges(ann_knn_topk(t))
 
 
 def _mutual_knn_edges_exact(t: Tables) -> DataFrame:
     """Exact-kNN mutual edge build — the check-priced baseline
     (:func:`knn_join_topk` all-pairs matmul) the agreement check
     compares the production ANN build against."""
-    knn = knn_join_topk(t).select("vec_id", "nbr_id")
-    fwd = knn.where(F.col("vec_id") < F.col("nbr_id")).select(
-        F.col("vec_id").alias("a"), F.col("nbr_id").alias("b")
-    )
-    rev = knn.where(F.col("vec_id") > F.col("nbr_id")).select(
-        F.col("nbr_id").alias("a"), F.col("vec_id").alias("b")
-    )
-    return fwd.intersect(rev)
+    return _mutual_edges(knn_join_topk(t))
 
 
 def knn_edge_agreement_check(t: Tables) -> DataFrame:
@@ -1258,33 +1250,16 @@ def knn_edge_agreement_check(t: Tables) -> DataFrame:
     Everything downstream of the edge list (triangles, label
     propagation) is degree-bounded linear either way; this check
     quantifies the one approximation the repoint introduced."""
-    exact = _mutual_knn_edges_exact(t).select(
-        "a", "b", F.lit(1).alias("in_exact")
-    )
-    ann = _mutual_knn_edges(t).select("a", "b", F.lit(1).alias("in_ann"))
-    j = exact.join(ann, ["a", "b"], "full_outer")
-    return j.agg(
-        F.count("in_exact").alias("n_exact_edges"),
-        F.count("in_ann").alias("n_ann_edges"),
-        F.count(
-            F.when(F.col("in_exact").isNotNull(), F.col("in_ann"))
-        ).alias("n_hit"),
-    ).select(
-        "n_exact_edges",
-        (
-            F.lit(100) * F.col("n_hit")
-            >= F.lit(KNN_EDGE_RECALL_PCT) * F.col("n_exact_edges")
-        ).alias("recall_ok"),
-        (
-            (
-                F.lit(100) * F.col("n_ann_edges")
-                >= F.lit(KNN_EDGE_RATIO_LO_PCT) * F.col("n_exact_edges")
-            )
-            & (
-                F.lit(100) * F.col("n_ann_edges")
-                <= F.lit(KNN_EDGE_RATIO_HI_PCT) * F.col("n_exact_edges")
-            )
-        ).alias("edge_ratio_ok"),
+    c = _overlap_counts(_mutual_knn_edges_exact(t), _mutual_knn_edges(t), ["a", "b"])
+    ratio_hi = F.lit(100) * F.col("n_approx") <= F.lit(
+        KNN_EDGE_RATIO_HI_PCT
+    ) * F.col("n_exact")
+    return c.select(
+        F.col("n_exact").alias("n_exact_edges"),
+        _pct_ok("n_hit", "n_exact", KNN_EDGE_RECALL_PCT).alias("recall_ok"),
+        (_pct_ok("n_approx", "n_exact", KNN_EDGE_RATIO_LO_PCT) & ratio_hi).alias(
+            "edge_ratio_ok"
+        ),
     )
 
 
@@ -1611,8 +1586,6 @@ def lsh_tuning_for(n_rows: int) -> tuple[int, int]:
     """(n_planes, n_bands) for a corpus of ``n_rows``: bits/band =
     ceil(log2(n/occupancy)) floored at the test-corpus default, bands
     widened by (bits−4)//2 to hold recall as buckets tighten."""
-    import math
-
     r = max(
         N_PLANES // N_BANDS,
         min(
@@ -1642,8 +1615,6 @@ def _multiprobe_band_keys(proj, n_bands: int, bits_per_band: int, n_probes: int)
     tested directly, shared by the pandas UDF in
     :func:`lsh_bucketed_pairs`.
     """
-    import numpy as np
-
     bits = (proj >= 0).astype("int64")
     weights = (1 << np.arange(bits_per_band, dtype="int64")).reshape(1, -1)
     eff = min(n_probes, bits_per_band)
@@ -1696,8 +1667,6 @@ def lsh_bucketed_pairs(
     same index size, and here the signature/index build is unchanged —
     only the explode width and one join side grow.
     """
-    import numpy as np
-
     # r11: persisted shared frame — the corpus-sized tuning count and the
     # signature pass both scan it (and unlike ivf/pq there is no
     # order-sensitive limit() here: band keys are a pure per-row
@@ -1822,26 +1791,13 @@ def lsh_theta_recall_check(t: Tables) -> DataFrame:
     collision probability for cos 0.4 is ~0.16/band, ~50% over 4 bands;
     the pin is set below the worst measured fixture).
     """
-    exact = _all_pairs_at(t, SEMDEDUP_THRESHOLD).select(
-        "id_a", "id_b", F.lit(1).alias("in_exact")
+    c = _overlap_counts(
+        _all_pairs_at(t, SEMDEDUP_THRESHOLD), lsh_pairs_at_theta(t), ["id_a", "id_b"]
     )
-    lsh = lsh_pairs_at_theta(t).select("id_a", "id_b", F.lit(1).alias("in_lsh"))
-    j = exact.join(lsh, ["id_a", "id_b"], "full_outer")
-    return j.agg(
-        F.count("in_exact").alias("n_exact"),
-        F.count(F.when(F.col("in_exact").isNull(), F.col("in_lsh"))).alias(
-            "_outside"
-        ),
-        F.count(F.when(F.col("in_exact").isNotNull(), F.col("in_lsh"))).alias(
-            "_overlap"
-        ),
-    ).select(
+    return c.select(
         "n_exact",
-        (F.col("_outside") == 0).alias("subset_ok"),
-        (
-            F.lit(100) * F.col("_overlap")
-            >= F.lit(LSH_THETA_RECALL_PCT) * F.col("n_exact")
-        ).alias("recall_ok"),
+        (F.col("n_outside") == 0).alias("subset_ok"),
+        _pct_ok("n_hit", "n_exact", LSH_THETA_RECALL_PCT).alias("recall_ok"),
     )
 
 
@@ -1883,28 +1839,13 @@ def lsh_multiprobe_recall_check(t: Tables) -> DataFrame:
     exact-cosine verified), and a recall floor strictly above the
     single-probe theory value (~50% at cos 0.4), so a regression that
     silently drops the probe keys trips the check."""
-    exact = _all_pairs_at(t, SEMDEDUP_THRESHOLD).select(
-        "id_a", "id_b", F.lit(1).alias("in_exact")
+    c = _overlap_counts(
+        _all_pairs_at(t, SEMDEDUP_THRESHOLD), lsh_multiprobe_pairs(t), ["id_a", "id_b"]
     )
-    mp = lsh_multiprobe_pairs(t).select(
-        "id_a", "id_b", F.lit(1).alias("in_lsh")
-    )
-    j = exact.join(mp, ["id_a", "id_b"], "full_outer")
-    return j.agg(
-        F.count("in_exact").alias("n_exact"),
-        F.count(F.when(F.col("in_exact").isNull(), F.col("in_lsh"))).alias(
-            "_outside"
-        ),
-        F.count(F.when(F.col("in_exact").isNotNull(), F.col("in_lsh"))).alias(
-            "_overlap"
-        ),
-    ).select(
+    return c.select(
         "n_exact",
-        (F.col("_outside") == 0).alias("subset_ok"),
-        (
-            F.lit(100) * F.col("_overlap")
-            >= F.lit(LSH_MULTIPROBE_RECALL_PCT) * F.col("n_exact")
-        ).alias("recall_ok"),
+        (F.col("n_outside") == 0).alias("subset_ok"),
+        _pct_ok("n_hit", "n_exact", LSH_MULTIPROBE_RECALL_PCT).alias("recall_ok"),
     )
 
 
@@ -1954,80 +1895,34 @@ def incremental_semantic_pairs(t: Tables) -> DataFrame:
     :func:`incremental_semantic_check`. Float k-means isn't
     SQL-replayable → rows-only; the check is the hash-green contract.
     """
-    import math
-
-    import numpy as np
-
-    from ..tables import persist_replacing
-
     emb = fan_out(
         t["embeddings"].select("vec_id", as_double("embedding").alias("vec"))
     )
-    # persist the corpus side BEFORE the sizing count (r11): the count,
-    # the k-means init, every Lloyd round and the home assignment all
-    # re-read it — same slot _spherical_kmeans uses. The batch side is
-    # read once (its one assignment pass), as the ingest contract says.
+    # the corpus side sits in the k-means slot (see _coarse_route); the
+    # batch side is read once (its one assignment pass), as the ingest
+    # contract says
     corpus = persist_replacing(
         emb.where(F.col("vec_id") % INCR_BATCH_MOD != 0),
         "similarity.kmeans_emb",
     )
     batch = emb.where(F.col("vec_id") % INCR_BATCH_MOD == 0)
-    k_total = max(
-        SEMDEDUP_K, int(corpus.count()) // SEMDEDUP_TARGET_CLUSTER
-    )
-    k_coarse = max(SEMDEDUP_COARSE_MIN, math.isqrt(k_total - 1) + 1)
-    _, assign, corpus = _spherical_kmeans(corpus, k_coarse, SEMDEDUP_ITERS)
+    assign, corpus, k_coarse = _coarse_route(corpus)
     c_assigned = assign(corpus, probes=1).withColumn("is_new", F.lit(False))
     b_assigned = assign(batch, probes=SEMDEDUP_PROBES).withColumn(
         "is_new", F.lit(True)
     )
-
-    empty = pd.DataFrame(
-        {
-            "new_id": np.array([], dtype="int64"),
-            "old_id": np.array([], dtype="int64"),
-            "cos_sim": np.array([], dtype="float64"),
-        }
-    )
+    cols = ["new_id", "old_id", "cos_sim"]
 
     def cross_in_branch(pdf):
-        # sort: fine init / float means must not depend on shuffle
-        # arrival order (same determinism contract as pairs_in_branch)
-        pdf = pdf.sort_values("vec_id", kind="mergesort")
+        pdf, ids, mat, norms = _branch_arrays(pdf)
         is_new = pdf["is_new"].to_numpy()
         if is_new.all() or not is_new.any():
-            return empty
-        mat = np.array(pdf["vec"].tolist(), dtype="float64")
-        ids = pdf["vec_id"].to_numpy()
-        norms = np.linalg.norm(mat, axis=1)
-        n_b = len(ids)
-        # fine level inside the branch, identical sizing/probe logic to
-        # semantic_dedup_pairs.pairs_in_branch: without it the cross
-        # matmul is |batch ∩ branch| × |branch| and the branch is
-        # √(n·TARGET) wide at corpus scale — the fine split keeps
-        # per-cell work TARGET-bounded so per-drop cost tracks the batch
-        k_fine = max(1, n_b * SEMDEDUP_PROBES // SEMDEDUP_TARGET_CLUSTER)
-        if k_fine <= SEMDEDUP_PROBES:
-            cells = [np.arange(n_b)]
-        else:
-            unit = mat / norms[:, None]
-            c = unit[:k_fine].copy()
-            for _ in range(SEMDEDUP_FINE_ITERS):
-                a = (unit @ c.T).argmax(axis=1)
-                for j in np.unique(a):
-                    v = mat[a == j].sum(axis=0)
-                    nv = np.linalg.norm(v)
-                    if nv > 0:
-                        c[j] = v / nv
-            p = min(SEMDEDUP_PROBES, k_fine)
-            top = np.argpartition(-(unit @ c.T), p - 1, axis=1)[:, :p]
-            cells = [
-                np.where((top == j).any(axis=1))[0] for j in range(k_fine)
-            ]
-        out_n: list = []
-        out_o: list = []
-        out_s: list = []
-        for idx in cells:
+            return _cell_pairs(cols, [])
+        # the fine split keeps per-cell work TARGET-bounded: without it
+        # the cross matmul is |batch ∩ branch| × |branch|, and the branch
+        # is √(n·TARGET) wide at corpus scale
+        parts = []
+        for idx in _fine_cells(mat, norms):
             ni = idx[is_new[idx]]
             oi = idx[~is_new[idx]]
             if not len(ni) or not len(oi):
@@ -2039,29 +1934,15 @@ def incremental_semantic_pairs(t: Tables) -> DataFrame:
                 (mat[ni] @ mat[oi].T) / np.outer(norms[ni], norms[oi]), 6
             )
             ia, ib = np.where(sims >= SEMDEDUP_THRESHOLD)
-            out_n.append(ids[ni[ia]])
-            out_o.append(ids[oi[ib]])
-            out_s.append(sims[ia, ib])
-        if not out_n:
-            return empty
-        return pd.DataFrame(
-            {
-                "new_id": np.concatenate(out_n),
-                "old_id": np.concatenate(out_o),
-                "cos_sim": np.concatenate(out_s),
-            }
-        ).drop_duplicates(["new_id", "old_id"])
+            parts.append((ids[ni[ia]], ids[oi[ib]], sims[ia, ib]))
+        return _cell_pairs(cols, parts)
 
-    return (
-        c_assigned.unionByName(b_assigned)
-        .repartition(_branch_parts(emb.sparkSession, k_coarse), "cluster")
-        .groupBy("cluster")
-        .applyInPandas(
-            cross_in_branch,
-            schema="new_id bigint, old_id bigint, cos_sim double",
-        )
-        .dropDuplicates(["new_id", "old_id"])
-    )
+    return _branch_stage(
+        c_assigned.unionByName(b_assigned),
+        k_coarse,
+        cross_in_branch,
+        "new_id bigint, old_id bigint, cos_sim double",
+    ).dropDuplicates(["new_id", "old_id"])
 
 
 def incremental_semantic_check(t: Tables) -> DataFrame:
@@ -2074,32 +1955,15 @@ def incremental_semantic_check(t: Tables) -> DataFrame:
     the corpus-index probe)."""
     is_batch_a = F.col("id_a") % INCR_BATCH_MOD == 0
     is_batch_b = F.col("id_b") % INCR_BATCH_MOD == 0
-    exact = (
-        _all_pairs_at(t, SEMDEDUP_THRESHOLD)
-        .where(is_batch_a != is_batch_b)
-        .select("id_a", "id_b", F.lit(1).alias("in_exact"))
-    )
+    exact = _all_pairs_at(t, SEMDEDUP_THRESHOLD).where(is_batch_a != is_batch_b)
     inc = incremental_semantic_pairs(t).select(
         F.least("new_id", "old_id").alias("id_a"),
         F.greatest("new_id", "old_id").alias("id_b"),
-        F.lit(1).alias("in_inc"),
     )
-    j = exact.join(inc, ["id_a", "id_b"], "full_outer")
-    return j.agg(
-        F.count("in_exact").alias("n_exact_cross"),
-        F.count(
-            F.when(F.col("in_exact").isNotNull(), F.col("in_inc"))
-        ).alias("_hit"),
-        F.count(F.when(F.col("in_exact").isNull(), F.col("in_inc"))).alias(
-            "_outside"
-        ),
-    ).select(
-        "n_exact_cross",
-        (F.col("_outside") == 0).alias("subset_ok"),
-        (
-            F.lit(100) * F.col("_hit")
-            >= F.lit(INCR_SEM_RECALL_PCT) * F.col("n_exact_cross")
-        ).alias("recall_ok"),
+    return _overlap_counts(exact, inc, ["id_a", "id_b"]).select(
+        F.col("n_exact").alias("n_exact_cross"),
+        (F.col("n_outside") == 0).alias("subset_ok"),
+        _pct_ok("n_hit", "n_exact", INCR_SEM_RECALL_PCT).alias("recall_ok"),
     )
 
 
@@ -2113,6 +1977,149 @@ IVF_PROBE = 6
 IVF_KMEANS_ITERS = 5
 
 
+def _quantizer_sample(emb: DataFrame, n: int) -> np.ndarray:
+    """The bounded quantizer training sample of the flat indexes: the
+    first ``n`` rows with ``vec_id % 7 == 0`` in ``vec_id`` order,
+    L2-normalized. The order pins the sample, so reading it through the
+    shared persisted frame (:func:`_emb_frame`) cannot change which rows
+    train the quantizer: a bare ``limit()`` would follow scan or cache
+    block arrival order."""
+    sample = np.array(
+        emb.where(F.col("vec_id") % 7 == 0).orderBy("vec_id")
+        .limit(n)
+        .toPandas()["vec"].tolist(),
+        dtype="float64",
+    )
+    sample /= np.linalg.norm(sample, axis=1, keepdims=True)
+    return sample
+
+
+def _sample_kmeans(sample: np.ndarray, k: int) -> np.ndarray:
+    """Driver-side spherical k-means on the unit sample rows: ``k`` unit
+    centroids, initialized to the first ``k`` rows (no RNG)."""
+    cents = sample[:k].copy()
+    for _ in range(IVF_KMEANS_ITERS):
+        assign = (sample @ cents.T).argmax(axis=1)
+        for c in range(k):
+            members = sample[assign == c]
+            if len(members):
+                v = members.mean(axis=0)
+                n = np.linalg.norm(v)
+                if n > 0:
+                    cents[c] = v / n
+    return cents
+
+
+def _pq_codebooks(x: np.ndarray) -> np.ndarray:
+    """``PQ_M × PQ_K × dsub`` product-quantizer codebooks: one Euclidean
+    k-means per ``dsub``-wide subspace of the training rows ``x``."""
+    dsub = x.shape[1] // PQ_M
+    books = np.empty((PQ_M, PQ_K, dsub))
+    for m in range(PQ_M):
+        sub = x[:, m * dsub : (m + 1) * dsub]
+        cents = sub[:PQ_K].copy()
+        for _ in range(PQ_KMEANS_ITERS):
+            d2 = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
+            assign = d2.argmin(axis=1)
+            for c in range(PQ_K):
+                members = sub[assign == c]
+                if len(members):
+                    cents[c] = members.mean(axis=0)
+        books[m] = cents
+    return books
+
+
+def _adc_table(books: np.ndarray, qvec: np.ndarray) -> np.ndarray:
+    """ADC lookup table ``table[m][k] = q_m · c_mk``: with unit database
+    vectors, ``Σ_m table[m][code_m]`` approximates the cosine."""
+    dsub = books.shape[2]
+    return np.array(
+        [books[m] @ qvec[m * dsub : (m + 1) * dsub] for m in range(PQ_M)]
+    )
+
+
+def _adc_sum(x: np.ndarray, books: np.ndarray, table: np.ndarray, score):
+    """Encode the rows ``x`` against ``books`` and add each subspace's
+    table entry to ``score`` in place, subspace by subspace."""
+    dsub = books.shape[2]
+    for m in range(PQ_M):
+        sub = x[:, m * dsub : (m + 1) * dsub]
+        d2 = ((sub[:, None, :] - books[m][None, :, :]) ** 2).sum(axis=2)
+        score += table[m][d2.argmin(axis=1)]
+    return score
+
+
+def _unit_query_vec(emb: DataFrame):
+    """The L2-normalized query vector (``vec_id == QUERY_VEC_ID``), or
+    None when the table has no such row."""
+    rows = emb.where(F.col("vec_id") == QUERY_VEC_ID).toPandas()["vec"].tolist()
+    if not rows:
+        return None
+    qvec = np.array(rows, dtype="float64")[0]
+    return qvec / np.linalg.norm(qvec)
+
+
+def _probe_buckets(cents: np.ndarray, qvec: np.ndarray, n_probe: int) -> list[int]:
+    """The ``n_probe`` coarse buckets nearest the unit query vector."""
+    return [int(b) for b in np.argsort(-(cents @ qvec))[:n_probe]]
+
+
+def _adc_shortlist(emb: DataFrame, adc_scores, frac: int) -> DataFrame:
+    """Ids of the ADC top-``max(PQ_SHORTLIST, n // frac)`` non-query rows,
+    scored by the ``adc_scores`` mapInPandas function."""
+    shortlist_n = max(PQ_SHORTLIST, int(emb.count()) // frac)
+    return (
+        emb.mapInPandas(adc_scores, schema="vec_id bigint, adc double")
+        .where(F.col("vec_id") != QUERY_VEC_ID)
+        .orderBy(F.col("adc").desc(), F.col("vec_id"))
+        .limit(shortlist_n)
+        .select("vec_id")
+    )
+
+
+def _rerank_exact(emb: DataFrame, cand_ids: DataFrame | None, qvec) -> DataFrame:
+    """Exact tail of the flat indexes: the top-``TOPK`` candidate rows by
+    rounded cosine to the unit query vector. Without a query vector
+    (``qvec`` None) the result is empty, with the same schema."""
+    if qvec is None:
+        cand_ids, q = emb.where(F.lit(False)).select("vec_id"), F.col("vec")
+    else:
+        q = F.array(*[F.lit(float(x)) for x in qvec])
+    return (
+        emb.join(cand_ids, "vec_id", "left_semi")
+        .where(F.col("vec_id") != QUERY_VEC_ID)
+        .select(
+            "vec_id",
+            F.round(cosine_pudf(F.col("vec"), q), 6).alias("cos_sim"),
+        )
+        .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
+        .limit(TOPK)
+    )
+
+
+def _topk_contract(t: Tables, approx, pct: int) -> DataFrame:
+    """DuckDB-checkable contract of an approximate top-k op ``approx``
+    (itself rows-only): one row with the exact top-k size, recall vs
+    :func:`cosine_topk` ≥ ``pct``%, and exact score agreement on the
+    overlap. The oracle expects both flags TRUE."""
+    exact = cosine_topk(t).select("vec_id", "cos_sim")
+    ap = approx(t).select("vec_id", F.col("cos_sim").alias("ap_sim"))
+    j = exact.join(ap, "vec_id", "full_outer")
+    return j.agg(
+        F.count("cos_sim").alias("n_exact"),
+        F.count(F.when(F.col("cos_sim").isNotNull(), F.col("ap_sim"))).alias(
+            "n_overlap"
+        ),
+        F.coalesce(
+            F.sum((F.col("ap_sim") != F.col("cos_sim")).cast("long")), F.lit(0)
+        ).alias("n_score_mismatch"),
+    ).select(
+        "n_exact",
+        _pct_ok("n_overlap", "n_exact", pct).alias("recall_ok"),
+        (F.col("n_score_mismatch") == 0).alias("precision_ok"),
+    )
+
+
 def ivf_topk(
     t: Tables, n_centroids: int = IVF_CENTROIDS, n_probe: int = IVF_PROBE
 ) -> DataFrame:
@@ -2124,50 +2131,19 @@ def ivf_topk(
     sample, deterministic seeds), assignment is a map-only matmul per Arrow
     batch, and each query scans ~n_probe/n_centroids of the data. Recall is
     approximate; precision is exact (real cosines on probed rows).
-    Rows-only driver check; recall vs brute force pinned in tests.
+    Rows-only output; the quality contract is :func:`ivf_recall_check`.
     """
-    import numpy as np
-
-    # r12 (VERDICT r11 §4): the quantizer sample is DETERMINISTIC now —
-    # orderBy(vec_id) before the limit() — so it no longer depends on
-    # scan/cache block arrival order, which is what had blocked reading
-    # through the shared persisted frame (r11: a bare limit() through the
-    # cache returned different rows and retrained the quantizer). With
-    # the order pinned, the op reads _emb_frame like the rest of the
-    # vector-index family: one cached scan feeds the sample, the query
-    # probe, the assignment pass and the re-rank. One declared rows-only
-    # output change this round, receipts regenerated; recall checks
-    # stay green (OPTIMIZATION_r12.md §ivf/pq).
     emb = _emb_frame(t)
-    spark = emb.sparkSession
-
-    # deterministic sample → k-means quantizer (offline-trainable at scale)
-    sample = np.array(
-        emb.where(F.col("vec_id") % 7 == 0).orderBy("vec_id")
-        .limit(n_centroids * 20)
-        .toPandas()["vec"].tolist(),
-        dtype="float64",
-    )
-    sample /= np.linalg.norm(sample, axis=1, keepdims=True)
-    cents = sample[:n_centroids].copy()
-    for _ in range(IVF_KMEANS_ITERS):
-        assign = (sample @ cents.T).argmax(axis=1)
-        for c in range(n_centroids):
-            members = sample[assign == c]
-            if len(members):
-                v = members.mean(axis=0)
-                n = np.linalg.norm(v)
-                if n > 0:
-                    cents[c] = v / n
-    b_cents = spark.sparkContext.broadcast(cents)
+    cents = _sample_kmeans(_quantizer_sample(emb, n_centroids * 20), n_centroids)
+    qvec = _unit_query_vec(emb)
+    if qvec is None:
+        return _rerank_exact(emb, None, None)
+    b_cents = emb.sparkSession.sparkContext.broadcast(cents)
 
     def assign_buckets(batches):
-        import pandas as pd
-
         cc = b_cents.value
         for pdf in batches:
-            mat = np.array(pdf["vec"].tolist(), dtype="float64")
-            mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+            mat = _unit_rows(np.array(pdf["vec"].tolist(), dtype="float64"))
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"],
@@ -2176,32 +2152,13 @@ def ivf_topk(
             )
 
     buckets = emb.mapInPandas(assign_buckets, schema="vec_id bigint, bucket int")
-
-    qvec = np.array(
-        emb.where(F.col("vec_id") == QUERY_VEC_ID).toPandas()["vec"].tolist(),
-        dtype="float64",
-    )[0]
-    qvec = qvec / np.linalg.norm(qvec)
-    probe = [int(b) for b in np.argsort(-(cents @ qvec))[:n_probe]]
-
-    probed = emb.join(
-        buckets.where(F.col("bucket").isin(probe)).select("vec_id"), "vec_id", "left_semi"
-    )
-    # query side already L2-normalized → cosine == dot/|vec|; score with
-    # the BLAS pandas UDF against the constant query array
-    qlit = F.array(*[F.lit(float(x)) for x in qvec])
-    return (
-        probed.where(F.col("vec_id") != QUERY_VEC_ID)
-        .select(
-            "vec_id",
-            F.round(cosine_pudf(F.col("vec"), qlit), 6).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-        .limit(TOPK)
+    probe = _probe_buckets(cents, qvec, n_probe)
+    return _rerank_exact(
+        emb, buckets.where(F.col("bucket").isin(probe)).select("vec_id"), qvec
     )
 
 
-#: recall bound the driver-checked IVF claim asserts (percent).
+#: recall bound the IVF contract check asserts (percent).
 #: r12 (VERDICT r10 §5 carried): measured 80/90/90 at sf0.001/0.01/0.1
 #: with the deterministic quantizer sample — floor raised 60 → 75 (worst
 #: band minus 5 pts slack; the sample is order-pinned now, so per-SF
@@ -2210,35 +2167,9 @@ IVF_RECALL_PCT = 75
 
 
 def ivf_recall_check(t: Tables) -> DataFrame:
-    """DuckDB-checkable claim about :func:`ivf_topk` (itself rows-only —
-    the quantizer isn't reproducible in SQL): one row stating the exact
-    top-k size, that IVF recall vs the brute-force top-k is ≥
-    IVF_RECALL_PCT%, and that every IVF score for an overlapping id equals
-    the brute-force score exactly (precision is exact — real cosines on
-    probed rows). The oracle expects both flags TRUE, so the approximate
-    index's quality contract is driver-verified as data.
-    """
-    # full-outer join, each side computed ONCE: exact-count / overlap /
-    # score-agreement all come from one aggregation
-    exact = cosine_topk(t).select("vec_id", "cos_sim")
-    ivf = ivf_topk(t).select("vec_id", F.col("cos_sim").alias("ivf_sim"))
-    j = exact.join(ivf, "vec_id", "full_outer")
-    return j.agg(
-        F.count("cos_sim").alias("n_exact"),
-        F.count(F.when(F.col("cos_sim").isNotNull(), F.col("ivf_sim"))).alias(
-            "n_overlap"
-        ),
-        F.coalesce(
-            F.sum((F.col("ivf_sim") != F.col("cos_sim")).cast("long")), F.lit(0)
-        ).alias("n_score_mismatch"),
-    ).select(
-        "n_exact",
-        (
-            F.lit(100) * F.col("n_overlap")
-            >= F.lit(IVF_RECALL_PCT) * F.col("n_exact")
-        ).alias("recall_ok"),
-        (F.col("n_score_mismatch") == 0).alias("precision_ok"),
-    )
+    """Contract of :func:`ivf_topk` (see :func:`_topk_contract`): recall
+    ≥ IVF_RECALL_PCT% and exact scores on probed rows."""
+    return _topk_contract(t, ivf_topk, IVF_RECALL_PCT)
 
 
 def lsh_subset_check(t: Tables) -> DataFrame:
@@ -2249,17 +2180,10 @@ def lsh_subset_check(t: Tables) -> DataFrame:
     precision; recall is the approximate axis and stays test-pinned). The
     oracle expects the flag TRUE.
     """
-    exact = embedding_near_dup_pairs(t).select(
-        "id_a", "id_b", F.lit(1).alias("in_exact")
+    c = _overlap_counts(
+        embedding_near_dup_pairs(t), lsh_bucketed_pairs(t), ["id_a", "id_b"]
     )
-    lsh = lsh_bucketed_pairs(t).select("id_a", "id_b", F.lit(1).alias("in_lsh"))
-    j = exact.join(lsh, ["id_a", "id_b"], "full_outer")
-    return j.agg(
-        F.count("in_exact").alias("n_exact"),
-        F.count(F.when(F.col("in_exact").isNull(), F.col("in_lsh"))).alias(
-            "n_outside"
-        ),
-    ).select("n_exact", (F.col("n_outside") == 0).alias("subset_ok"))
+    return c.select("n_exact", (F.col("n_outside") == 0).alias("subset_ok"))
 
 
 #: SemDeDup clustering/pairing parameters
@@ -2304,8 +2228,6 @@ KMEANS_TOL = 1e-4
 KMEANS_DRIVER_REDUCE_MAX_PARTS = 64
 
 def _unit_rows(m):
-    import numpy as np
-
     return m / np.linalg.norm(m, axis=1, keepdims=True)
 
 
@@ -2314,8 +2236,6 @@ def _kmeans_assign(batches, cents, probes: int = 1):
     cluster) for the ``probes`` nearest unit centroids ``cents``. A 0-row
     batch is skipped: its vector matrix is 1-D and has no dimension axis
     to normalize over."""
-    import numpy as np
-
     for pdf in batches:
         if pdf.empty:
             continue
@@ -2370,10 +2290,6 @@ def _spherical_kmeans(emb: DataFrame, k: int, iters: int, tol: float = KMEANS_TO
     one row per (vector, probed cluster), P = 1 giving the plain hard
     assignment.
     """
-    import numpy as np
-
-    from ..tables import persist_replacing
-
     emb = persist_replacing(emb, "similarity.kmeans_emb")
     spark = emb.sparkSession
 
@@ -2553,56 +2469,13 @@ def semantic_dedup_pairs(t: Tables) -> DataFrame:
     don't depend on shuffle arrival order. Rows-only driver check (float
     kmeans isn't SQL-replayable); semdedup_check is the hard contract.
     """
-    import math
-
-    import numpy as np
-
-    # persist BEFORE the sizing count — see _ann_topk_candidates (r11)
-    emb = _emb_frame(t)
-    k_total = max(SEMDEDUP_K, int(emb.count()) // SEMDEDUP_TARGET_CLUSTER)
-    k_coarse = max(SEMDEDUP_COARSE_MIN, math.isqrt(k_total - 1) + 1)
-    _, assign, emb = _spherical_kmeans(emb, k_coarse, SEMDEDUP_ITERS)
+    assign, emb, k_coarse = _coarse_route(_emb_frame(t))
+    cols = ["id_a", "id_b", "cos_sim"]
 
     def pairs_in_branch(pdf):
-        # sort: fine init (lowest vec_ids) and float mean order must not
-        # depend on shuffle arrival order
-        pdf = pdf.sort_values("vec_id", kind="mergesort")
-        mat = np.array(pdf["vec"].tolist(), dtype="float64")
-        ids = pdf["vec_id"].to_numpy()
-        norms = np.linalg.norm(mat, axis=1)
-        n_b = len(ids)
-        # size the fine level on the REPLICATED membership (each member
-        # lands in p fine cells), so realized cell size ≈ TARGET; and
-        # skip the fine level entirely when it cannot prune (k_fine ≤ p
-        # would put every member in every cell — pure p× duplication of
-        # the branch all-pairs, measured 3× the work for zero pruning)
-        k_fine = max(1, n_b * SEMDEDUP_PROBES // SEMDEDUP_TARGET_CLUSTER)
-        if k_fine <= SEMDEDUP_PROBES:
-            cells = [np.arange(n_b)]
-        else:
-            unit = mat / norms[:, None]
-            c = unit[:k_fine].copy()
-            # fewer Lloyd rounds than the coarse level: the fine cells
-            # only need to be locality-plausible (multi-probe covers the
-            # boundaries), and each round costs n_b·k_fine·d — at larger
-            # branches that rivals the pairwise block itself
-            for _ in range(SEMDEDUP_FINE_ITERS):
-                a = (unit @ c.T).argmax(axis=1)
-                for j in np.unique(a):
-                    v = mat[a == j].sum(axis=0)
-                    nv = np.linalg.norm(v)
-                    if nv > 0:
-                        c[j] = v / nv
-            p = min(SEMDEDUP_PROBES, k_fine)
-            # top-p via argpartition (O(k_fine) per row, not a full sort)
-            top = np.argpartition(-(unit @ c.T), p - 1, axis=1)[:, :p]
-            cells = [
-                np.where((top == j).any(axis=1))[0] for j in range(k_fine)
-            ]
-        out_a: list = []
-        out_b: list = []
-        out_s: list = []
-        for idx in cells:
+        _, ids, mat, norms = _branch_arrays(pdf)
+        parts = []
+        for idx in _fine_cells(mat, norms):
             if len(idx) < 2:
                 continue
             sub = mat[idx]
@@ -2615,34 +2488,15 @@ def semantic_dedup_pairs(t: Tables) -> DataFrame:
             )
             ia, ib = np.where(np.triu(sims >= SEMDEDUP_THRESHOLD, k=1))
             gi, gj = ids[idx[ia]], ids[idx[ib]]
-            out_a.append(np.minimum(gi, gj))
-            out_b.append(np.maximum(gi, gj))
-            out_s.append(sims[ia, ib])
-        if not out_a:
-            return pd.DataFrame(
-                {
-                    "id_a": np.array([], dtype="int64"),
-                    "id_b": np.array([], dtype="int64"),
-                    "cos_sim": np.array([], dtype="float64"),
-                }
-            )
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "cos_sim": np.concatenate(out_s),
-            }
-        ).drop_duplicates(["id_a", "id_b"])
+            parts.append((np.minimum(gi, gj), np.maximum(gi, gj), sims[ia, ib]))
+        return _cell_pairs(cols, parts)
 
-    return (
-        assign(emb, probes=SEMDEDUP_PROBES)
-        .repartition(_branch_parts(emb.sparkSession, k_coarse), "cluster")
-        .groupBy("cluster")
-        .applyInPandas(
-            pairs_in_branch, schema="id_a bigint, id_b bigint, cos_sim double"
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    return _branch_stage(
+        assign(emb, probes=SEMDEDUP_PROBES),
+        k_coarse,
+        pairs_in_branch,
+        "id_a bigint, id_b bigint, cos_sim double",
+    ).dropDuplicates(["id_a", "id_b"])
 
 
 def semdedup_check(t: Tables) -> DataFrame:
@@ -2650,17 +2504,10 @@ def semdedup_check(t: Tables) -> DataFrame:
     the EXACT global >=-threshold pair count (oracle-computable in DuckDB)
     and the claim that every SemDeDup pair is one of them (exact
     precision). The oracle recomputes n_exact and expects subset_ok TRUE."""
-    exact = _all_pairs_at(t, SEMDEDUP_THRESHOLD).select(
-        "id_a", "id_b", F.lit(1).alias("in_exact")
+    c = _overlap_counts(
+        _all_pairs_at(t, SEMDEDUP_THRESHOLD), semantic_dedup_pairs(t), ["id_a", "id_b"]
     )
-    sd = semantic_dedup_pairs(t).select("id_a", "id_b", F.lit(1).alias("in_sd"))
-    j = exact.join(sd, ["id_a", "id_b"], "full_outer")
-    return j.agg(
-        F.count("in_exact").alias("n_exact"),
-        F.count(F.when(F.col("in_exact").isNull(), F.col("in_sd"))).alias(
-            "n_outside"
-        ),
-    ).select("n_exact", (F.col("n_outside") == 0).alias("subset_ok"))
+    return c.select("n_exact", (F.col("n_outside") == 0).alias("subset_ok"))
 
 
 def label_centroid_sim(t: Tables) -> DataFrame:
@@ -2675,8 +2522,6 @@ def label_centroid_sim(t: Tables) -> DataFrame:
     emb = t["embeddings"].select("vec_id", "label", as_double("embedding").alias("vec"))
 
     def centroid(pdf):
-        import numpy as np
-
         mat = np.array(pdf["vec"].tolist(), dtype="float64")
         return pd.DataFrame(
             {"label": [pdf["label"].iloc[0]], "centroid": [mat.mean(axis=0).tolist()]}
@@ -2741,119 +2586,33 @@ def pq_topk(t: Tables) -> DataFrame:
     exact. Rows-only driver check; the quality contract is
     :func:`pq_recall_check`.
     """
-    import numpy as np
-
-    # r12 (VERDICT r11 §4): the quantizer sample is DETERMINISTIC now —
-    # orderBy(vec_id) before the limit() — so it no longer depends on
-    # scan/cache block arrival order, which is what had blocked reading
-    # through the shared persisted frame (r11: a bare limit() through the
-    # cache returned different rows and retrained the quantizer). With
-    # the order pinned, the op reads _emb_frame like the rest of the
-    # vector-index family: one cached scan feeds the sample, the query
-    # probe, the assignment pass and the re-rank. One declared rows-only
-    # output change this round, receipts regenerated; recall checks
-    # stay green (OPTIMIZATION_r12.md §ivf/pq).
     emb = _emb_frame(t)
-    spark = emb.sparkSession
-
-    # deterministic bounded sample -> per-subspace k-means codebooks
-    sample = np.array(
-        emb.where(F.col("vec_id") % 7 == 0).orderBy("vec_id")
-        .limit(PQ_K * 20)
-        .toPandas()["vec"].tolist(),
-        dtype="float64",
+    books = _pq_codebooks(_quantizer_sample(emb, PQ_K * 20))
+    qvec = _unit_query_vec(emb)
+    if qvec is None:
+        return _rerank_exact(emb, None, None)
+    b_model = emb.sparkSession.sparkContext.broadcast(
+        (books, _adc_table(books, qvec))
     )
-    sample /= np.linalg.norm(sample, axis=1, keepdims=True)
-    dim = sample.shape[1]
-    dsub = dim // PQ_M
-    books = np.empty((PQ_M, PQ_K, dsub))
-    for m in range(PQ_M):
-        sub = sample[:, m * dsub : (m + 1) * dsub]
-        cents = sub[:PQ_K].copy()
-        for _ in range(PQ_KMEANS_ITERS):
-            d2 = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for c in range(PQ_K):
-                members = sub[assign == c]
-                if len(members):
-                    cents[c] = members.mean(axis=0)
-        books[m] = cents
-    b_books = spark.sparkContext.broadcast(books)
-
-    qvec = np.array(
-        emb.where(F.col("vec_id") == QUERY_VEC_ID).toPandas()["vec"].tolist(),
-        dtype="float64",
-    )[0]
-    qvec = qvec / np.linalg.norm(qvec)
-    # ADC lookup table: adc[m][k] = q_m . c_mk  (db vectors are
-    # L2-normalized before encoding, so sum_m adc[m][code_m] ~ cosine)
-    adc = np.array(
-        [books[m] @ qvec[m * dsub : (m + 1) * dsub] for m in range(PQ_M)]
-    )
-    b_adc = spark.sparkContext.broadcast(adc)
 
     def adc_scores(batches):
         # encode + score in one pass: codes never materialize outside the
         # executor (at scale the codes table would be written once offline
         # and only this scoring scan runs per query)
-        bb, tt = b_books.value, b_adc.value
+        bb, tt = b_model.value
         for pdf in batches:
-            mat = np.array(pdf["vec"].tolist(), dtype="float64")
-            mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-            score = np.zeros(len(mat))
-            for m in range(PQ_M):
-                sub = mat[:, m * dsub : (m + 1) * dsub]
-                d2 = ((sub[:, None, :] - bb[m][None, :, :]) ** 2).sum(axis=2)
-                score += tt[m][d2.argmin(axis=1)]
+            mat = _unit_rows(np.array(pdf["vec"].tolist(), dtype="float64"))
+            score = _adc_sum(mat, bb, tt, np.zeros(len(mat)))
             yield pd.DataFrame({"vec_id": pdf["vec_id"], "adc": score})
 
-    shortlist_n = max(PQ_SHORTLIST, int(emb.count()) // PQ_SHORTLIST_FRAC)
-    shortlist = (
-        emb.mapInPandas(adc_scores, schema="vec_id bigint, adc double")
-        .where(F.col("vec_id") != QUERY_VEC_ID)
-        .orderBy(F.col("adc").desc(), F.col("vec_id"))
-        .limit(shortlist_n)
-        .select("vec_id")
-    )
-    qlit = F.array(*[F.lit(float(x)) for x in qvec])
-    return (
-        emb.join(shortlist, "vec_id", "left_semi")
-        .select(
-            "vec_id",
-            F.round(cosine_pudf(F.col("vec"), qlit), 6).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-        .limit(TOPK)
-    )
+    shortlist = _adc_shortlist(emb, adc_scores, PQ_SHORTLIST_FRAC)
+    return _rerank_exact(emb, shortlist, qvec)
 
 
 def pq_recall_check(t: Tables) -> DataFrame:
-    """DuckDB-checkable claim about :func:`pq_topk` (itself rows-only —
-    k-means codebooks aren't SQL-reproducible): one row stating the exact
-    top-k size, that PQ recall vs the brute-force top-k is ≥
-    PQ_RECALL_PCT%, and that every PQ score for an overlapping id equals
-    the brute-force score exactly (re-rank computes real cosines). The
-    oracle expects both flags TRUE.
-    """
-    exact = cosine_topk(t).select("vec_id", "cos_sim")
-    pq = pq_topk(t).select("vec_id", F.col("cos_sim").alias("pq_sim"))
-    j = exact.join(pq, "vec_id", "full_outer")
-    return j.agg(
-        F.count("cos_sim").alias("n_exact"),
-        F.count(F.when(F.col("cos_sim").isNotNull(), F.col("pq_sim"))).alias(
-            "n_overlap"
-        ),
-        F.coalesce(
-            F.sum((F.col("pq_sim") != F.col("cos_sim")).cast("long")), F.lit(0)
-        ).alias("n_score_mismatch"),
-    ).select(
-        "n_exact",
-        (
-            F.lit(100) * F.col("n_overlap")
-            >= F.lit(PQ_RECALL_PCT) * F.col("n_exact")
-        ).alias("recall_ok"),
-        (F.col("n_score_mismatch") == 0).alias("precision_ok"),
-    )
+    """Contract of :func:`pq_topk` (see :func:`_topk_contract`): recall
+    ≥ PQ_RECALL_PCT% and exact re-ranked scores."""
+    return _topk_contract(t, pq_topk, PQ_RECALL_PCT)
 
 
 #: IVFPQ: recall floor the driver-checked claim asserts (percent). Lower
@@ -2897,137 +2656,45 @@ def ivfpq_topk(
     returned scores exact (shortlist re-ranked with real cosines).
     Rows-only driver check; the contract is :func:`ivfpq_recall_check`.
     """
-    import numpy as np
-
-    # r12 (VERDICT r11 §4): the quantizer sample is DETERMINISTIC now —
-    # orderBy(vec_id) before the limit() — so it no longer depends on
-    # scan/cache block arrival order, which is what had blocked reading
-    # through the shared persisted frame (r11: a bare limit() through the
-    # cache returned different rows and retrained the quantizer). With
-    # the order pinned, the op reads _emb_frame like the rest of the
-    # vector-index family: one cached scan feeds the sample, the query
-    # probe, the assignment pass and the re-rank. One declared rows-only
-    # output change this round, receipts regenerated; recall checks
-    # stay green (OPTIMIZATION_r12.md §ivf/pq).
     emb = _emb_frame(t)
-    spark = emb.sparkSession
-
-    sample = np.array(
-        emb.where(F.col("vec_id") % 7 == 0).orderBy("vec_id")
-        .limit(n_centroids * 20)
-        .toPandas()["vec"].tolist(),
-        dtype="float64",
-    )
-    sample /= np.linalg.norm(sample, axis=1, keepdims=True)
-    dim = sample.shape[1]
-    dsub = dim // PQ_M
-
-    # coarse quantizer: deterministic sample k-means (ivf_topk's harness)
-    cents = sample[:n_centroids].copy()
-    for _ in range(IVF_KMEANS_ITERS):
-        assign = (sample @ cents.T).argmax(axis=1)
-        for c in range(n_centroids):
-            members = sample[assign == c]
-            if len(members):
-                v = members.mean(axis=0)
-                nv = np.linalg.norm(v)
-                if nv > 0:
-                    cents[c] = v / nv
-
-    # shared residual codebooks: train per subspace on sample residuals
-    resid = sample - cents[(sample @ cents.T).argmax(axis=1)]
-    books = np.empty((PQ_M, PQ_K, dsub))
-    for m in range(PQ_M):
-        sub = resid[:, m * dsub : (m + 1) * dsub]
-        bc = sub[:PQ_K].copy()
-        for _ in range(PQ_KMEANS_ITERS):
-            d2 = ((sub[:, None, :] - bc[None, :, :]) ** 2).sum(axis=2)
-            a = d2.argmin(axis=1)
-            for c in range(PQ_K):
-                members = sub[a == c]
-                if len(members):
-                    bc[c] = members.mean(axis=0)
-        books[m] = bc
-
-    qvec = np.array(
-        emb.where(F.col("vec_id") == QUERY_VEC_ID).toPandas()["vec"].tolist(),
-        dtype="float64",
-    )[0]
-    qvec = qvec / np.linalg.norm(qvec)
-    probe = np.argsort(-(cents @ qvec))[:n_probe]
-    offsets = cents @ qvec  # q·c_b per bucket
-    adc = np.array(
-        [books[m] @ qvec[m * dsub : (m + 1) * dsub] for m in range(PQ_M)]
-    )
-    b_model = spark.sparkContext.broadcast(
-        (cents, books, set(int(b) for b in probe), offsets, adc)
+    sample = _quantizer_sample(emb, n_centroids * 20)
+    cents = _sample_kmeans(sample, n_centroids)
+    books = _pq_codebooks(sample - cents[(sample @ cents.T).argmax(axis=1)])
+    qvec = _unit_query_vec(emb)
+    if qvec is None:
+        return _rerank_exact(emb, None, None)
+    b_model = emb.sparkSession.sparkContext.broadcast(
+        (
+            cents,
+            books,
+            set(_probe_buckets(cents, qvec, n_probe)),
+            cents @ qvec,  # q·c_b per bucket
+            _adc_table(books, qvec),
+        )
     )
 
     def adc_probed(batches):
         cc, bb, probed, off, tt = b_model.value
         for pdf in batches:
-            mat = np.array(pdf["vec"].tolist(), dtype="float64")
-            mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+            mat = _unit_rows(np.array(pdf["vec"].tolist(), dtype="float64"))
             bucket = (mat @ cc.T).argmax(axis=1)
             keep = np.isin(bucket, list(probed))
             if not keep.any():
                 continue
             mat, bucket = mat[keep], bucket[keep]
-            resid = mat - cc[bucket]
-            score = off[bucket].copy()
-            for m in range(PQ_M):
-                sub = resid[:, m * dsub : (m + 1) * dsub]
-                d2 = ((sub[:, None, :] - bb[m][None, :, :]) ** 2).sum(axis=2)
-                score += tt[m][d2.argmin(axis=1)]
+            score = _adc_sum(mat - cc[bucket], bb, tt, off[bucket].copy())
             yield pd.DataFrame(
                 {"vec_id": pdf["vec_id"].to_numpy()[keep], "adc": score}
             )
 
-    shortlist_n = max(PQ_SHORTLIST, int(emb.count()) // IVFPQ_SHORTLIST_FRAC)
-    shortlist = (
-        emb.mapInPandas(adc_probed, schema="vec_id bigint, adc double")
-        .where(F.col("vec_id") != QUERY_VEC_ID)
-        .orderBy(F.col("adc").desc(), F.col("vec_id"))
-        .limit(shortlist_n)
-        .select("vec_id")
-    )
-    qlit = F.array(*[F.lit(float(x)) for x in qvec])
-    return (
-        emb.join(shortlist, "vec_id", "left_semi")
-        .select(
-            "vec_id",
-            F.round(cosine_pudf(F.col("vec"), qlit), 6).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-        .limit(TOPK)
-    )
+    shortlist = _adc_shortlist(emb, adc_probed, IVFPQ_SHORTLIST_FRAC)
+    return _rerank_exact(emb, shortlist, qvec)
 
 
 def ivfpq_recall_check(t: Tables) -> DataFrame:
-    """DuckDB-checkable claim about :func:`ivfpq_topk` (itself rows-only):
-    exact top-k size, recall ≥ IVFPQ_RECALL_PCT% vs brute force, and
-    exact score agreement on the overlap (re-rank computes real
-    cosines). The oracle expects both flags TRUE."""
-    exact = cosine_topk(t).select("vec_id", "cos_sim")
-    ap = ivfpq_topk(t).select("vec_id", F.col("cos_sim").alias("ivfpq_sim"))
-    j = exact.join(ap, "vec_id", "full_outer")
-    return j.agg(
-        F.count("cos_sim").alias("n_exact"),
-        F.count(
-            F.when(F.col("cos_sim").isNotNull(), F.col("ivfpq_sim"))
-        ).alias("n_overlap"),
-        F.coalesce(
-            F.sum((F.col("ivfpq_sim") != F.col("cos_sim")).cast("long")),
-            F.lit(0),
-        ).alias("n_score_mismatch"),
-    ).select(
-        "n_exact",
-        (
-            F.lit(100) * F.col("n_overlap")
-            >= F.lit(IVFPQ_RECALL_PCT) * F.col("n_exact")
-        ).alias("recall_ok"),
-        (F.col("n_score_mismatch") == 0).alias("precision_ok"),
-    )
+    """Contract of :func:`ivfpq_topk` (see :func:`_topk_contract`): recall
+    ≥ IVFPQ_RECALL_PCT% and exact re-ranked scores."""
+    return _topk_contract(t, ivfpq_topk, IVFPQ_RECALL_PCT)
 
 
 #: whitening audit tolerances (on the whitened sample covariance)
@@ -3058,8 +2725,6 @@ def _collect_moment_partials(parts: DataFrame):
     the SAME numpy ops in the SAME (rid, pid) order — bit-identical
     moments, one Python stage + one job fewer per pass; the executor
     pre-reduction stays the >threshold path (the cluster-scale shape)."""
-    import numpy as np
-
     try:
         n_parts = parts.rdd.getNumPartitions()
     except Exception:
@@ -3123,7 +2788,6 @@ def _collect_moment_partials(parts: DataFrame):
 def _moment_partials(emb: DataFrame) -> DataFrame:
     """One map-only pass: each partition emits its (count, sum, Mᵀ·M)
     partial — d²+d+1 numbers, the map-side-combine shape."""
-    import numpy as np
 
     def partial_moments(batches):
         from pyspark import TaskContext
@@ -3168,8 +2832,6 @@ def _whitening_model(emb: DataFrame):
     This is the driver-fixpoint pattern (BPE/DoReMi/k-center) applied
     to second moments.
     """
-    import numpy as np
-
     n, s, g = _collect_moment_partials(_moment_partials(emb))
     d = len(s)
     mean = s / n
@@ -3190,8 +2852,6 @@ def _whitened_vectors(t: Tables) -> DataFrame:
     (the r8 red row), so the registered surface is the scalar
     :func:`embedding_whiten_audit` projection plus
     :func:`whiten_check`'s identity-covariance contract."""
-    import numpy as np
-
     # r11: persisted shared frame — the model moment pass and the
     # transform pass both scan it; see _emb_frame
     emb = _emb_frame(t)
@@ -3255,8 +2915,6 @@ def whiten_check(t: Tables) -> DataFrame:
     exactly), same per-partition batch accumulation, one Python worker
     round-trip instead of two. The transform itself still ships
     standalone as :func:`_whitened_vectors` for the audit query."""
-    import numpy as np
-
     emb = _emb_frame(t)
     mean, zca, _ = _whitening_model(emb)
     b = emb.sparkSession.sparkContext.broadcast((mean, zca))
@@ -3657,8 +3315,6 @@ def matryoshka_fidelity_report(t: Tables) -> DataFrame:
     top-k is a TakeOrdered (no global sort), and the report is
     |dims| rows. Integer micros end-to-end (floor(x+0.5) — identical
     IEEE semantics in Spark and DuckDB), so the oracle hash-matches."""
-    from ..tables import persist_replacing
-
     emb = fan_out(
         t["embeddings"].select("vec_id", as_double("embedding").alias("v"))
     )

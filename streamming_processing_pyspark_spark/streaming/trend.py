@@ -40,6 +40,42 @@ STATE_SCHEMA = T.StructType(
 )
 
 
+def _bucket_counts(windows: dict, pdf_iter: Iterator, window_seconds: int) -> None:
+    """Add every row's ``ts`` (ns) window bucket to the per-window counts
+    ``windows`` (window start in epoch seconds → count)."""
+    for pdf in pdf_iter:
+        secs = (pdf["ts"].astype("int64") // 1_000_000_000).to_numpy()
+        for s in secs:
+            w = int(s // window_seconds * window_seconds)
+            windows[w] = windows.get(w, 0) + 1
+
+
+def _trend_core(windows: dict, emitted_set: set, window_seconds: int,
+                min_count: int, retention_windows: int):
+    """The trend rule and its state eviction, shared by both stateful
+    APIs. A window trends when it has ≥ ``min_count`` rows and at least
+    twice its predecessor's count; each trending window is emitted once
+    (``emitted_set``). Windows older than ``retention_windows`` behind the
+    newest are evicted. Returns (rows (w, cnt, prev_cnt), windows,
+    emitted_set)."""
+    out = []
+    for w, c in sorted(windows.items()):
+        prev = windows.get(w - window_seconds)
+        if (
+            prev is not None
+            and w not in emitted_set
+            and c >= min_count
+            and c - prev >= prev
+        ):
+            emitted_set.add(w)
+            out.append((w, c, prev))
+    if windows:
+        horizon = max(windows) - retention_windows * window_seconds
+        windows = {w: c for w, c in windows.items() if w >= horizon}
+        emitted_set = {w for w in emitted_set if w >= horizon}
+    return out, windows, emitted_set
+
+
 def make_trend_fn(
     window_seconds: int = 600, min_count: int = 10, retention_windows: int = 1000
 ):
@@ -52,34 +88,18 @@ def make_trend_fn(
             emitted_set = set(emitted)
         else:
             windows, emitted_set = {}, set()
-
-        for pdf in pdf_iter:
-            secs = (pdf["ts"].astype("int64") // 1_000_000_000).to_numpy()
-            for s in secs:
-                w = int(s // window_seconds * window_seconds)
-                windows[w] = windows.get(w, 0) + 1
-
-        out = []
-        for w, c in sorted(windows.items()):
-            prev = windows.get(w - window_seconds)
-            if (
-                prev is not None
-                and w not in emitted_set
-                and c >= min_count
-                and c - prev >= prev
-            ):
-                emitted_set.add(w)
-                out.append((key[0], w, c, prev))
-
-        if windows:
-            horizon = max(windows) - retention_windows * window_seconds
-            windows = {w: c for w, c in windows.items() if w >= horizon}
-            emitted_set = {w for w in emitted_set if w >= horizon}
+        _bucket_counts(windows, pdf_iter, window_seconds)
+        out, windows, emitted_set = _trend_core(
+            windows, emitted_set, window_seconds, min_count, retention_windows
+        )
         state.update(
             (list(windows), [windows[w] for w in windows], list(emitted_set))
         )
         if out:
-            yield pd.DataFrame(out, columns=["key", "window_start", "cnt", "prev_cnt"])
+            yield pd.DataFrame(
+                [(key[0], w, c, p) for (w, c, p) in out],
+                columns=["key", "window_start", "cnt", "prev_cnt"],
+            )
 
     return fn
 
@@ -115,27 +135,6 @@ def trending_stateful(
 
 class StatefulApiUnavailable(RuntimeError):
     """transformWithState's Python-side dependencies are missing."""
-
-
-def _trend_core(windows: dict, emitted_set: set, window_seconds: int,
-                min_count: int, retention_windows: int):
-    """Shared detection + eviction logic for both stateful APIs."""
-    out = []
-    for w, c in sorted(windows.items()):
-        prev = windows.get(w - window_seconds)
-        if (
-            prev is not None
-            and w not in emitted_set
-            and c >= min_count
-            and c - prev >= prev
-        ):
-            emitted_set.add(w)
-            out.append((w, c, prev))
-    if windows:
-        horizon = max(windows) - retention_windows * window_seconds
-        windows = {w: c for w, c in windows.items() if w >= horizon}
-        emitted_set = {w for w in emitted_set if w >= horizon}
-    return out, windows, emitted_set
 
 
 def trending_stateful_tws(
@@ -187,11 +186,7 @@ def trending_stateful_tws(
                 emitted_set = set(got[2])
             else:
                 windows, emitted_set = {}, set()
-            for pdf in rows:
-                secs = (pdf["ts"].astype("int64") // 1_000_000_000).to_numpy()
-                for s in secs:
-                    w = int(s // window_seconds * window_seconds)
-                    windows[w] = windows.get(w, 0) + 1
+            _bucket_counts(windows, rows, window_seconds)
             out, windows, emitted_set = _trend_core(
                 windows, emitted_set, window_seconds, min_count, retention_windows
             )

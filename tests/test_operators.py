@@ -143,36 +143,74 @@ def test_blocked_matmul_partial_consumption(spark):
     assert similarity.knn_join_topk(t).select("vec_id").count() > 0
 
 
-def test_ivf_topk_recall(spark):
-    """IVF probes 6/16 buckets; recall vs brute force stays high and every
-    returned cosine is a true cosine (exact precision)."""
-    t = load_tables(spark, SF_DIR)
-    exact = [r["vec_id"] for r in similarity.cosine_topk(t).collect()]
-    ivf = similarity.ivf_topk(t).collect()
-    approx = [r["vec_id"] for r in ivf]
-    assert len(set(exact) & set(approx)) / len(exact) >= 0.6
-    # exact precision: IVF cosines must agree with the brute-force values
-    brute = {
-        r["vec_id"]: r["cos_sim"] for r in similarity.cosine_topk(t).collect()
-    }
-    for r in ivf:
-        if r["vec_id"] in brute:
-            assert r["cos_sim"] == brute[r["vec_id"]]
+_FLAT_INDEXES = pytest.mark.parametrize(
+    "op, check, floor",
+    [
+        ("ivf_topk", "ivf_recall_check", "IVF_RECALL_PCT"),
+        ("pq_topk", "pq_recall_check", "PQ_RECALL_PCT"),
+        ("ivfpq_topk", "ivfpq_recall_check", "IVFPQ_RECALL_PCT"),
+    ],
+    ids=["ivf_topk", "pq_topk", "ivfpq_topk"],
+)
 
 
-def test_pq_topk_recall(spark):
-    """PQ ADC shortlist + exact re-rank: recall vs brute force stays high
-    and every returned cosine is a true cosine (re-rank precision)."""
+@_FLAT_INDEXES
+def test_flat_index_contract(spark, op, check, floor):
+    """Each flat index (IVF, PQ, IVFPQ) returns TOPK rows, its overlap
+    with the brute-force top-k clears the op's own recall floor, every
+    overlapping score is the exact cosine (re-rank precision), and its
+    registered contract check reports the same."""
     t = load_tables(spark, SF_DIR)
-    exact = {
-        r["vec_id"]: r["cos_sim"] for r in similarity.cosine_topk(t).collect()
-    }
-    pq = similarity.pq_topk(t).collect()
-    approx = [r["vec_id"] for r in pq]
-    assert len(set(exact) & set(approx)) / len(exact) >= 0.6
-    for r in pq:
-        if r["vec_id"] in exact:
-            assert r["cos_sim"] == exact[r["vec_id"]]
+    exact = {r["vec_id"]: r["cos_sim"] for r in similarity.cosine_topk(t).collect()}
+    ap = {r["vec_id"]: r["cos_sim"] for r in getattr(similarity, op)(t).collect()}
+    assert len(ap) == similarity.TOPK
+    overlap = set(exact) & set(ap)
+    assert 100 * len(overlap) >= getattr(similarity, floor) * len(exact)
+    for v in overlap:
+        assert ap[v] == exact[v]
+    row = getattr(similarity, check)(t).first()
+    assert row["n_exact"] == len(exact)
+    assert row["recall_ok"] and row["precision_ok"]
+
+
+@_FLAT_INDEXES
+def test_flat_index_without_query_vector(spark, op, check, floor):
+    """Without the query vector in the table a flat index returns 0 rows
+    with its usual schema, as the exact cosine_topk does, and its
+    contract holds vacuously."""
+    t = load_tables(spark, SF_DIR)
+    no_query = dict(t, embeddings=t["embeddings"].where("vec_id != 0"))
+    out = getattr(similarity, op)(no_query)
+    assert out.count() == 0
+    assert out.schema == getattr(similarity, op)(t).schema
+    row = getattr(similarity, check)(no_query).first()
+    assert row["n_exact"] == 0
+    assert row["recall_ok"] and row["precision_ok"]
+
+
+def test_fine_cells_split():
+    """The in-branch fine split: one all-rows cell while it cannot prune,
+    otherwise every row in exactly min(P, k_fine) cells, and the same
+    cells on a repeat call."""
+    import numpy as np
+
+    p, target = similarity.SEMDEDUP_PROBES, similarity.SEMDEDUP_TARGET_CLUSTER
+    rng = np.random.default_rng(7)
+    small = rng.normal(size=(target, 8))  # k_fine = p: no pruning
+    cells = similarity._fine_cells(small, np.linalg.norm(small, axis=1))
+    assert len(cells) == 1
+    assert np.array_equal(cells[0], np.arange(target))
+    big = rng.normal(size=(3 * target, 8))
+    norms = np.linalg.norm(big, axis=1)
+    k_fine = len(big) * p // target
+    cells = similarity._fine_cells(big, norms)
+    assert len(cells) == k_fine > p
+    membership = np.zeros(len(big), dtype=int)
+    for idx in cells:
+        membership[idx] += 1
+    assert (membership == min(p, k_fine)).all()
+    again = similarity._fine_cells(big, norms)
+    assert all(np.array_equal(a, b) for a, b in zip(cells, again, strict=True))
 
 
 def test_approx_aggregates_tolerance(spark):
@@ -2349,22 +2387,6 @@ def test_lsh_theta_pairs_nonvacuous_subset_recall(spark):
     row = similarity.lsh_theta_recall_check(t).first()
     assert row["subset_ok"] and row["recall_ok"]
     assert row["n_exact"] == len(exact)
-
-
-def test_ivfpq_recall_and_exact_scores(spark):
-    """IVFADC composition: overlap with brute-force top-k must clear the
-    pinned floor and every returned score must be the exact cosine
-    (re-rank contract)."""
-    t = load_tables(spark, SF_DIR)
-    exact = {r["vec_id"]: r["cos_sim"] for r in similarity.cosine_topk(t).collect()}
-    ap = {r["vec_id"]: r["cos_sim"] for r in similarity.ivfpq_topk(t).collect()}
-    assert len(ap) == similarity.TOPK
-    overlap = set(exact) & set(ap)
-    assert 100 * len(overlap) >= similarity.IVFPQ_RECALL_PCT * len(exact)
-    for v in overlap:
-        assert ap[v] == exact[v]
-    row = similarity.ivfpq_recall_check(t).first()
-    assert row["recall_ok"] and row["precision_ok"]
 
 
 def test_whitening_identity_covariance(spark):

@@ -709,6 +709,40 @@ def test_trend_detection_batch_rule(spark, monkeypatch):
     check(df.repartition(4), ["hashpartitioning", "RoundRobinPartitioning"])
 
 
+def test_trend_core_rule_emission_and_eviction():
+    """The stateful trend rule on its own: a window trends at ≥ min_count
+    rows and ≥ 2× its predecessor, emits at most once across calls that
+    share state, and windows older than retention_windows are evicted."""
+    from streamming_processing_pyspark_spark.streaming.trend import _trend_core
+
+    w = 600
+    windows = {
+        0: 2,  # no predecessor ✗
+        w: 9,  # 9 ≥ 2·2 but 9 < min_count ✗
+        2 * w: 20,  # 20 ≥ 10 and 20 ≥ 2·9 ✓
+        3 * w: 39,  # 39 < 2·20 ✗
+        4 * w: 78,  # exactly 2·39 ✓
+    }
+    out, windows, emitted = _trend_core(windows, set(), w, 10, 1000)
+    assert out == [(2 * w, 20, 9), (4 * w, 78, 39)]
+    assert emitted == {2 * w, 4 * w}
+
+    # second call on the same state: still-trending windows stay quiet
+    windows[2 * w] += 1
+    windows[5 * w] = 200
+    out, windows, emitted = _trend_core(windows, emitted, w, 10, 1000)
+    assert out == [(5 * w, 200, 78)]
+
+    # eviction: with 2 windows of retention behind the newest (10w), only
+    # windows ≥ 8w survive, and the emitted marks go with them
+    windows[8 * w] = 3
+    windows[10 * w] = 1
+    out, windows, emitted = _trend_core(windows, emitted, w, 10, 2)
+    assert out == []
+    assert windows == {8 * w: 3, 10 * w: 1}
+    assert emitted == set()
+
+
 def test_trending_files_sink_shape(spark):
     """Task4 sink naming/format: part-{sec_of_day*100} with
     (hq, (count, sec, prevCount)) (reference Task4.py:136-142)."""
