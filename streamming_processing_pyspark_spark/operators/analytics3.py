@@ -126,16 +126,22 @@ def seasonality_profile(t: Tables) -> DataFrame:
     Spark's ``dayofweek`` (1 = Sunday … 7 = Saturday; the oracle maps
     DuckDB's 0-based DOW with ``+ 1``).
     """
-    cells = (
-        t["events"]
-        .groupBy(
-            F.dayofweek("ts").alias("dow"), F.hour("ts").alias("hod")
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(_cents()).alias("sum_value_cents"),
-        )
+    return seasonality_shares(seasonality_cells(t["events"]))
+
+
+def seasonality_cells(events: DataFrame) -> DataFrame:
+    """``(dow, hod, n_events, sum_value_cents)``: the ≤168 hour-of-week
+    cells — a plain aggregation, so the streaming twin runs it as is."""
+    return events.groupBy(
+        F.dayofweek("ts").alias("dow"), F.hour("ts").alias("hod")
+    ).agg(
+        F.count("*").alias("n_events"),
+        F.sum(_cents()).alias("sum_value_cents"),
     )
+
+
+def seasonality_shares(cells: DataFrame) -> DataFrame:
+    """Mean value and traffic share per cell of :func:`seasonality_cells`."""
     w_all = Window.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
@@ -161,11 +167,19 @@ def burst_users_audit(t: Tables) -> DataFrame:
     shuffle). Output is the flagged users only, so nothing row-sized
     leaves the aggregation chain.
     """
-    pm = (
-        t["events"]
-        .groupBy("user_id", F.date_trunc("minute", "ts").alias("m"))
-        .agg(F.count("*").alias("c"))
-    )
+    return burst_rollup(user_minute_counts(t["events"]))
+
+
+def user_minute_counts(events: DataFrame) -> DataFrame:
+    """``(user_id, m, c)``: events per user per clock minute — a plain
+    aggregation, so the streaming twin runs it as is."""
+    return events.groupBy(
+        "user_id", F.date_trunc("minute", "ts").alias("m")
+    ).agg(F.count("*").alias("c"))
+
+
+def burst_rollup(pm: DataFrame) -> DataFrame:
+    """Per-user rollup of :func:`user_minute_counts`, flagged users only."""
     return (
         pm.groupBy("user_id")
         .agg(

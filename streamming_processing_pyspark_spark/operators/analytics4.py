@@ -188,7 +188,14 @@ def context_fit_report(t: Tables) -> DataFrame:
     extra scan, and the aggregation map-combines to |sizes| rows per
     task before the shuffle).
     """
-    tok = t["documents"].select(token_count("text").cast("long").alias("n_tok"))
+    return context_fit_cells(t["documents"])
+
+
+def context_fit_cells(documents: DataFrame) -> DataFrame:
+    """The whole :func:`context_fit_report` aggregate over a documents
+    frame. Every output is an aggregate over the |CONTEXT_SIZES| cells, so
+    the streaming twin runs it as is."""
+    tok = documents.select(token_count("text").cast("long").alias("n_tok"))
     sized = tok.select(
         "n_tok",
         F.explode(

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .windowed import hourly_counts
+
 # Consecutive-event ordering: (ts, event_id) — event_id breaks timestamp
 # ties deterministically (both engines sort identically on the pair).
 _BY_TIME = ["ts", "event_id"]
@@ -224,13 +226,7 @@ def hourly_count_anomalies(tables: dict[str, DataFrame]) -> DataFrame:
     """
     from ..tables import persist_replacing
 
-    ev = tables["events"]
-    hourly = persist_replacing(
-        ev.groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "cnt"),
-        "zscore_hourly",
-    )
+    hourly = persist_replacing(hourly_counts(tables["events"]), "zscore_hourly")
     global_stats = hourly.agg(
         F.count("*").alias("n"),
         F.sum("cnt").alias("total"),
@@ -268,13 +264,7 @@ def hourly_count_anomalies_mad(tables: dict[str, DataFrame]) -> DataFrame:
     """
     from ..tables import persist_replacing
 
-    ev = tables["events"]
-    hourly = persist_replacing(
-        ev.groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "cnt"),
-        "mad_hourly",
-    )
+    hourly = persist_replacing(hourly_counts(tables["events"]), "mad_hourly")
     med = hourly.agg(
         (2 * F.expr("percentile(cnt, 0.5)")).cast("long").alias("med2")
     )

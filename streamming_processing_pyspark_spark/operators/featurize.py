@@ -114,15 +114,20 @@ def woe_value_bins(t: Tables) -> DataFrame:
     with add-one smoothing inside the rate ratio. NULL ``value`` forms
     its own bucket (missingness is usually the most predictive bin).
     """
-    ev = t["events"].select(
+    return woe_iv_projection(woe_cells(t["events"]))
+
+
+def woe_cells(events: DataFrame) -> DataFrame:
+    """``(bucket, n_good, n_bad)``: target and non-target rows per value
+    bucket — conditional sums, so the streaming twin runs it as is."""
+    ev = events.select(
         F.floor(F.col("value") / WOE_BUCKET).cast("long").alias("bucket"),
         F.when(F.col("event_type") == TARGET_TYPE, 1).otherwise(0).alias("g"),
     )
-    cells = ev.groupBy("bucket").agg(
+    return ev.groupBy("bucket").agg(
         F.sum("g").alias("n_good"),
         F.sum(1 - F.col("g")).alias("n_bad"),
     )
-    return woe_iv_projection(cells)
 
 
 def target_encode_oof(t: Tables) -> DataFrame:
@@ -184,14 +189,17 @@ def mutual_info_type_bucket(t: Tables) -> DataFrame:
     Output per type: ``event_type``, ``n_type_rows``, ``n_cells``,
     ``mi_part_micro`` (Σ floor(1e6·term), negative terms allowed).
     """
-    ev = t["events"].select(
+    return mi_projection(mi_cells(t["events"]))
+
+
+def mi_cells(events: DataFrame) -> DataFrame:
+    """``(bucket, event_type, n_ij)``: the value-bucket × type contingency
+    counts — a plain count, so the streaming twin runs it as is."""
+    ev = events.select(
         F.floor(F.col("value") / WOE_BUCKET).cast("long").alias("bucket"),
         "event_type",
     )
-    cells = ev.groupBy("bucket", "event_type").agg(
-        F.count("*").alias("n_ij")
-    )
-    return mi_projection(cells)
+    return ev.groupBy("bucket", "event_type").agg(F.count("*").alias("n_ij"))
 
 
 def mi_projection(cells: DataFrame) -> DataFrame:

@@ -131,7 +131,7 @@ def streaming_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals the batch form reports. State cost: none; metric cost: one
     row per batch in query progress."""
     from ..sources.streams import stream_parquet_table
-    from ..streaming.jobs import run_to_memory
+    from ..streaming.jobs import run_to_memory, sink_frame
 
     docs = stream_parquet_table(spark, sf_dir, "documents")
     gated = gated_pass(docs, "ingest").select("doc_id")
@@ -141,8 +141,7 @@ def streaming_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         for p in q.recentProgress
         if "ingest" in (p.observedMetrics or {})
     ]
-    q.stop()
-    n_pass = spark.table(table).count()
+    n_pass = sink_frame(spark, q, table).count()
     return fold_batch_metrics(rows, n_pass, spark)
 
 

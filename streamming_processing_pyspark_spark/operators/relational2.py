@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..streaming.jobs import sessionize_stream
 from ..tables import local_df
 
 Tables = dict[str, DataFrame]
@@ -268,19 +269,10 @@ def session_window_counts(t: Tables) -> DataFrame:
 
     ``F.session_window`` works in batch and streaming alike; the oracle
     reproduces the merge rule with a lag/cumsum sessionizer (new session
-    when the gap is ≥ the timeout).
+    when the gap is ≥ the timeout). The streaming twin runs the same
+    ``sessionize_stream`` over the events stream.
     """
-    return (
-        t["events"]
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
+    return sessionize_stream(t["events"])
 
 
 def analytic_functions_showcase(t: Tables) -> DataFrame:

@@ -14,6 +14,15 @@ classification):
 - geofence classification (reference ``Task3.py:57-83`` — U1) via the pure-SQL
   ray-cast in :mod:`..functions.geo` — no Python round-trip.
 
+Two builders carry all of it. :func:`window_counts` is the one windowed
+count (tumbling, or sliding with ``slide``); the window queries here, the
+anomaly detectors in ``events_analytics`` and the streaming twins in
+``registry`` all call it. :func:`lag_trends` is the one ``lag()`` trend
+rule; :func:`trending` and the taxi drain's
+``streaming.jobs.detect_trends_in_batch`` both call it and pick their own
+output columns. Only :func:`trending_selfjoin`, the reference-shaped form
+that tests compare against, spells the rule a second way.
+
 Scale posture: every aggregation here is a single hash-shuffle on the group
 keys with map-side partial aggregation (Catalyst plans partial+final
 HashAggregate automatically); the trend rewrite replaces a join with a
@@ -39,31 +48,33 @@ LON_SQL = "(-74.0150 + (value % 6.0) / 1000.0)"
 LAT_SQL = "(40.7130 + CAST(user_id % 95 AS DOUBLE) / 10000.0)"
 
 
+def window_counts(
+    df: DataFrame, duration: str, *keys: str, slide: str | None = None
+) -> DataFrame:
+    """``window_start, *keys, cnt``: rows per event-time window of ``ts``,
+    per key. ``slide=None`` is the tumbling window (``F.window`` with no
+    slide); a slide gives overlapping windows. Batch and streaming
+    queries share this one builder, so a twin runs the same aggregation."""
+    return (
+        df.groupBy(F.window("ts", duration, slide).alias("w"), *keys)
+        .agg(F.count("*").alias("cnt"))
+        .select(F.col("w.start").alias("window_start"), *keys, "cnt")
+    )
+
+
 def hourly_counts(events: DataFrame) -> DataFrame:
     """Trips per 1-hour tumbling event-time window (reference Task2.py:44-51)."""
-    return (
-        events.groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "cnt")
-    )
+    return window_counts(events, "1 hour")
 
 
 def hourly_counts_by_key(events: DataFrame) -> DataFrame:
     """Per-key hourly windowed counts (reference Task3.py:84-89)."""
-    return (
-        events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "cnt")
-    )
+    return window_counts(events, "1 hour", "event_type")
 
 
 def counts_10min_by_key(events: DataFrame) -> DataFrame:
     """Per-key 10-minute windowed counts (reference Task4.py:110-115)."""
-    return (
-        events.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "cnt")
-    )
+    return window_counts(events, "10 minutes", "event_type")
 
 
 def sliding_hourly_counts(events: DataFrame) -> DataFrame:
@@ -75,13 +86,7 @@ def sliding_hourly_counts(events: DataFrame) -> DataFrame:
     as a streaming aggregation. The oracle reproduces the expansion with
     a 0..3 offset cross join off the 15-minute bucket.
     """
-    return (
-        events.groupBy(
-            F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type"
-        )
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "cnt")
-    )
+    return window_counts(events, "1 hour", "event_type", slide="15 minutes")
 
 
 def hour_of_day_counts(events: DataFrame) -> DataFrame:
@@ -101,11 +106,29 @@ TREND_WINDOW_SECONDS = 6 * 3600
 TREND_MIN_COUNT = 10
 
 
-def _windowed_key_counts(events: DataFrame, duration: str) -> DataFrame:
+def lag_trends(
+    counts: DataFrame, key: str, window_seconds: int, min_count: int
+) -> DataFrame:
+    """The trend rule over a ``window_start, key, cnt`` frame, with
+    ``prev_cnt`` added: keep a window whose count is ≥ ``min_count`` and
+    at least twice that of the same key's window exactly
+    ``window_seconds`` earlier. ``lag()`` over the aggregated frame stands
+    in for the reference's self-join; callers choose their own columns."""
+    w = Window.partitionBy(key).orderBy("window_start")
     return (
-        events.groupBy(F.window("ts", duration).alias("w"), "event_type")
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "cnt")
+        counts.withColumn("prev_cnt", F.lag("cnt").over(w))
+        .withColumn("prev_start", F.lag("window_start").over(w))
+        .where(
+            (F.col("cnt") >= min_count)
+            & F.col("prev_cnt").isNotNull()
+            # adjacency: previous row must be exactly one window earlier
+            # (mirrors the self-join's ts - ts' == window equi-condition)
+            & (
+                F.col("window_start").cast("long") - F.col("prev_start").cast("long")
+                == window_seconds
+            )
+            & (F.col("cnt") - F.col("prev_cnt") >= F.col("prev_cnt"))
+        )
     )
 
 
@@ -118,24 +141,10 @@ def trending(events: DataFrame) -> DataFrame:
     shuffle is the aggregation itself; the lag is a cheap second shuffle of
     the already-reduced data.
     """
-    counts = _windowed_key_counts(events, TREND_WINDOW)
-    w = Window.partitionBy("event_type").orderBy("window_start")
-    return (
-        counts.withColumn("prev_cnt", F.lag("cnt").over(w))
-        .withColumn("prev_start", F.lag("window_start").over(w))
-        .where(
-            (F.col("cnt") >= TREND_MIN_COUNT)
-            & F.col("prev_cnt").isNotNull()
-            # adjacency: previous row must be exactly one window earlier
-            # (mirrors the self-join's ts - ts' == window equi-condition)
-            & (
-                F.col("window_start").cast("long") - F.col("prev_start").cast("long")
-                == TREND_WINDOW_SECONDS
-            )
-            & (F.col("cnt") - F.col("prev_cnt") >= F.col("prev_cnt"))
-        )
-        .select("event_type", "window_start", "cnt", "prev_cnt")
-    )
+    counts = window_counts(events, TREND_WINDOW, "event_type")
+    return lag_trends(
+        counts, "event_type", TREND_WINDOW_SECONDS, TREND_MIN_COUNT
+    ).select("event_type", "window_start", "cnt", "prev_cnt")
 
 
 def trending_selfjoin(events: DataFrame) -> DataFrame:
@@ -146,7 +155,7 @@ def trending_selfjoin(events: DataFrame) -> DataFrame:
     the count comparisons are theta residuals). Result is identical to
     :func:`trending`; tests assert it.
     """
-    counts = _windowed_key_counts(events, TREND_WINDOW)
+    counts = window_counts(events, TREND_WINDOW, "event_type")
     cur, prev = counts.alias("cur"), counts.alias("prev")
     return (
         cur.join(
@@ -332,11 +341,8 @@ def geofence_hourly_counts(events: DataFrame) -> DataFrame:
     # (two evaluations per row); post-agg it runs once per row and the
     # filter touches only the tiny aggregated frame. (Streaming variant
     # keeps the pre-agg filter instead — there it bounds state size.)
-    return (
-        pts.groupBy(F.window("ts", "1 hour").alias("w"), "headquarters")
-        .agg(F.count("*").alias("cnt"))
-        .where(F.col("headquarters") != "none")
-        .select(F.col("w.start").alias("window_start"), "headquarters", "cnt")
+    return window_counts(pts, "1 hour", "headquarters").where(
+        F.col("headquarters") != "none"
     )
 
 

@@ -5,6 +5,28 @@ Merges every operator module's ``QUERIES`` (Spark implementations) and
 ``__spark_entry__.py`` exposes. Queries without an oracle entry are
 non-SQL-expressible by design (xxhash64-based MinHash/SimHash, approximate
 LSH) and get the driver's rows-only check.
+
+The ``streaming_*`` twins run their batch operator's own code as a
+Structured Streaming query: the operator's streaming-legal cells (a
+windowed count from ``windowed.window_counts``, ``featurize.woe_cells``,
+``analytics3.seasonality_cells`` …) go over the file stream, ``drained``
+runs the query to a memory sink and returns its rows, and the batch
+operator's projection (``woe_iv_projection``, ``seasonality_shares`` …)
+finishes on the drained cells. So a twin and its batch query cannot drift,
+and most twins share the batch oracle verbatim. Three twins keep their own
+aggregation, each for one reason:
+
+- ``streaming_geofence_hourly`` filters out ``'none'`` before the
+  aggregation, which bounds its state; the batch query filters after it,
+  where the filter is cheaper.
+- ``streaming_dataset_card`` keeps (source, lang, md5) cells, because the
+  batch card's DISTINCT aggregates are not streaming-legal.
+- ``streaming_order_backlog`` keeps (priority, date) cells, because its
+  as-of cutoff (the max order date) needs the whole input.
+
+The rest (stream-static enrichment, watermarked dedup, the interval joins,
+the winnowing index) have no batch query with the same output; they are
+streaming queries in their own right and still end in ``drained``.
 """
 
 from __future__ import annotations
@@ -53,7 +75,8 @@ from .operators import (
     udtf,
     windowed,
 )
-from .operators.windowed import LAT_SQL, LON_SQL
+from .sources.streams import stream_events, stream_parquet_table
+from .streaming.jobs import drained, run_available_now, sessionize_stream, sink_frame
 from .tables import load_table, load_tables
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -63,18 +86,7 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """hourly_counts executed as a REAL Structured Streaming query (file
     stream → stateful window agg → memory sink), proving stream/batch
     parity through the driver's oracle gate."""
-    from .sources.streams import stream_events
-    from .streaming.jobs import run_to_memory
-
-    ev = stream_events(spark, sf_dir)
-    agg = (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "cnt")
-    )
-    q, table = run_to_memory(agg, "complete")
-    q.stop()
-    return spark.table(table)
+    return drained(windowed.hourly_counts(stream_events(spark, sf_dir)), "complete")
 
 
 #: Watermark delay for the append-mode streaming template.
@@ -93,18 +105,8 @@ def streaming_hourly_counts_append(spark: SparkSession, sf_dir: str) -> DataFram
     which is exactly the WHERE clause of the oracle — the final windows
     the watermark is still holding open at end-of-input are (correctly)
     absent from the output."""
-    from .sources.streams import stream_events
-    from .streaming.jobs import run_to_memory
-
     ev = stream_events(spark, sf_dir).withWatermark("ts", APPEND_WATERMARK_DELAY)
-    agg = (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "cnt")
-    )
-    q, table = run_to_memory(agg, "append")
-    q.stop()
-    return spark.table(table)
+    return drained(windowed.hourly_counts(ev), "append")
 
 
 def streaming_available_now_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -115,82 +117,38 @@ def streaming_available_now_counts(spark: SparkSession, sf_dir: str) -> DataFram
     Same aggregation and oracle as ``streaming_hourly_counts``; what this
     row proves is that the engine's queries run unchanged under the
     batch-drain trigger production schedulers use."""
-    from .sources.streams import stream_events
-    from .streaming.jobs import run_available_now
-
-    ev = stream_events(spark, sf_dir)
-    agg = (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "cnt")
-    )
-    q, table = run_available_now(agg, "complete")
-    q.stop()
-    return spark.table(table)
+    agg = windowed.hourly_counts(stream_events(spark, sf_dir))
+    return sink_frame(spark, *run_available_now(agg, "complete"))
 
 
 def streaming_geofence_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """geofence_hourly_counts as a streaming query (classify → window agg)."""
-    from .sources.streams import stream_events
-    from .streaming.jobs import run_to_memory
-
-    ev = stream_events(spark, sf_dir)
-    pts = ev.withColumn("lon", F.expr(LON_SQL)).withColumn("lat", F.expr(LAT_SQL))
-    agg = (
-        pts.withColumn("headquarters", F.expr(classify_sql("lon", "lat")))
-        .where(F.col("headquarters") != "none")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "headquarters")
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "headquarters", "cnt")
+    pts = windowed.with_coordinates(stream_events(spark, sf_dir))
+    classified = pts.withColumn(
+        "headquarters", F.expr(classify_sql("lon", "lat"))
+    ).where(F.col("headquarters") != "none")
+    return drained(
+        windowed.window_counts(classified, "1 hour", "headquarters"), "complete"
     )
-    q, table = run_to_memory(agg, "complete")
-    q.stop()
-    return spark.table(table)
 
 
 def streaming_counts_10min_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """counts_10min_by_key (Task4's aggregation grain) as a streaming query."""
-    from .sources.streams import stream_events
-    from .streaming.jobs import run_to_memory
-
-    ev = stream_events(spark, sf_dir)
-    agg = (
-        ev.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "cnt")
-    )
-    q, table = run_to_memory(agg, "complete")
-    q.stop()
-    return spark.table(table)
+    agg = windowed.counts_10min_by_key(stream_events(spark, sf_dir))
+    return drained(agg, "complete")
 
 
 def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sliding_hourly_counts as a streaming query: overlapping-window
     stateful aggregation (each event updates 4 window states)."""
-    from .sources.streams import stream_events
-    from .streaming.jobs import run_to_memory
-
-    ev = stream_events(spark, sf_dir)
-    agg = (
-        ev.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "cnt")
-    )
-    q, table = run_to_memory(agg, "complete")
-    q.stop()
-    return spark.table(table)
+    agg = windowed.sliding_hourly_counts(stream_events(spark, sf_dir))
+    return drained(agg, "complete")
 
 
 def streaming_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """session_window_counts as a REAL streaming query: stateful session
     windows (merging state across micro-batches) drained in complete mode."""
-    from .sources.streams import stream_events
-    from .streaming.jobs import run_to_memory, sessionize_stream
-
-    sess = sessionize_stream(stream_events(spark, sf_dir))
-    q, table = run_to_memory(sess, "complete")
-    q.stop()
-    return spark.table(table)
+    return drained(sessionize_stream(stream_events(spark, sf_dir)), "complete")
 
 
 def streaming_trending_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -199,24 +157,52 @@ def streaming_trending_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     (key, window); at sf the events table is one parquet file → one
     micro-batch, so the final emitted set equals batch ``trending``
     semantics and shares its oracle."""
-    from .operators.windowed import TREND_MIN_COUNT, TREND_WINDOW_SECONDS
-    from .sources.streams import stream_events
-    from .streaming.jobs import run_to_memory
     from .streaming.trend import trending_stateful
 
-    ev = stream_events(spark, sf_dir)
     out = trending_stateful(
-        ev,
+        stream_events(spark, sf_dir),
         key_col="event_type",
         ts_col="ts",
-        window_seconds=TREND_WINDOW_SECONDS,
-        min_count=TREND_MIN_COUNT,
+        window_seconds=windowed.TREND_WINDOW_SECONDS,
+        min_count=windowed.TREND_MIN_COUNT,
     )
-    q, table = run_to_memory(out, "append")
-    q.stop()
-    return spark.table(table).select(
+    return drained(out, "append").select(
         F.col("key").alias("event_type"), "window_start", "cnt", "prev_cnt"
     )
+
+
+def _view_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Each view event joined (``how``) to the same user's purchase events
+    within the following 10 minutes, both sides under a 1-hour watermark,
+    drained in append mode."""
+
+    def side(event_type: str) -> DataFrame:
+        ts = f"{event_type}_ts"
+        return (
+            stream_events(spark, sf_dir)
+            .where(F.col("event_type") == event_type)
+            .select(
+                F.col("event_id").alias(f"{event_type}_id"),
+                F.col("user_id").alias(f"{event_type}_user"),
+                F.col("ts").alias(ts),
+            )
+            .withWatermark(ts, "1 hour")
+        )
+
+    joined = side("view").join(
+        side("purchase"),
+        (F.col("view_user") == F.col("purchase_user"))
+        & (F.col("purchase_ts") >= F.col("view_ts"))
+        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 10 MINUTES")),
+        how,
+    ).select(
+        "view_id",
+        "purchase_id",
+        F.col("view_user").alias("user_id"),
+        "view_ts",
+        "purchase_ts",
+    )
+    return drained(joined, "append")
 
 
 def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -225,44 +211,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join → every match emits exactly once; at sf the single-file source
     makes one micro-batch, so the drained result is the complete join and
     the plain-SQL oracle applies."""
-    from .sources.streams import stream_events
-    from .streaming.jobs import run_to_memory
-
-    views = (
-        stream_events(spark, sf_dir)
-        .where(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "1 hour")
-    )
-    purchases = (
-        stream_events(spark, sf_dir)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = views.join(
-        purchases,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("view_ts"))
-        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 10 MINUTES")),
-    ).select(
-        "view_id",
-        "purchase_id",
-        F.col("v_user").alias("user_id"),
-        "view_ts",
-        "purchase_ts",
-    )
-    q, table = run_to_memory(joined, "append")
-    q.stop()
-    return spark.table(table)
+    return _view_purchase_join(spark, sf_dir, "inner")
 
 
 def streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -281,45 +230,7 @@ def streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame
     1 h). Rows the watermark still holds open at end-of-input are
     (correctly) absent, and the oracle applies the identical cutoff.
     """
-    from .sources.streams import stream_events
-    from .streaming.jobs import run_to_memory
-
-    views = (
-        stream_events(spark, sf_dir)
-        .where(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "1 hour")
-    )
-    purchases = (
-        stream_events(spark, sf_dir)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = views.join(
-        purchases,
-        (F.col("v_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("view_ts"))
-        & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 10 MINUTES")),
-        "leftOuter",
-    ).select(
-        "view_id",
-        "purchase_id",
-        F.col("v_user").alias("user_id"),
-        "view_ts",
-        "purchase_ts",
-    )
-    q, table = run_to_memory(joined, "append")
-    q.stop()
-    return spark.table(table)
+    return _view_purchase_join(spark, sf_dir, "leftOuter")
 
 
 def streaming_union_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -336,15 +247,9 @@ def streaming_union_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly one row per original event and the plain-SQL oracle applies
     (bounded-state eviction semantics pinned in
     tests/test_streaming.py::test_union_dedup_state_eviction)."""
-    from .sources.streams import stream_events
-    from .streaming.jobs import run_to_memory
-
     ev = stream_events(spark, sf_dir).select("event_id", "user_id", "event_type", "ts")
     doubled = ev.unionAll(ev).withWatermark("ts", "1 hour")
-    deduped = doubled.dropDuplicatesWithinWatermark(["event_id"])
-    q, table = run_to_memory(deduped, "append")
-    q.stop()
-    return spark.table(table)
+    return drained(doubled.dropDuplicatesWithinWatermark(["event_id"]), "append")
 
 
 def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -354,60 +259,29 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     side is re-resolved each batch (picks up dim updates on real
     deployments) and broadcasts, so the stream side never shuffles for the
     join; only the final count aggregation keeps state."""
-    from .sources.streams import stream_events
-    from .streaming.jobs import run_to_memory
-
-    ev = stream_events(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_nationkey"
     )
     nat = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("c_nationkey"), F.col("n_name").alias("nation")
     )
-    enriched = ev.join(F.broadcast(cust), "user_id").join(
+    enriched = stream_events(spark, sf_dir).join(F.broadcast(cust), "user_id").join(
         F.broadcast(nat), "c_nationkey"
     )
-    agg = (
-        enriched.groupBy("nation", "event_type")
-        .agg(F.count("*").alias("cnt"))
-    )
-    q, table = run_to_memory(agg, "complete")
-    q.stop()
-    return spark.table(table)
+    agg = enriched.groupBy("nation", "event_type").agg(F.count("*").alias("cnt"))
+    return drained(agg, "complete")
 
 
 def streaming_woe_value_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """featurize.woe_value_bins computed BY a stream: the bucketed
-    good/bad counts are a streaming-legal aggregation (conditional sums,
-    no distinct), maintained in complete mode; the WOE/IV arithmetic —
+    good/bad counts (``featurize.woe_cells`` — conditional sums, no
+    distinct) are maintained in complete mode; the WOE/IV arithmetic —
     including the one quarantined ln per bucket — runs on the drained
     |buckets|-row memory table, so the supervised-binning feature
     sidecar can be kept warm by the ingest stream itself. Shares
-    woe_value_bins' oracle verbatim AND its post-aggregation arithmetic
-    (``featurize.woe_iv_projection`` — one copy, so stream and batch
-    cannot drift)."""
-    from .operators.featurize import (
-        TARGET_TYPE,
-        WOE_BUCKET,
-        woe_iv_projection,
-    )
-    from .sources.streams import stream_events
-    from .streaming.jobs import run_to_memory
-
-    ev = stream_events(spark, sf_dir)
-    cells = (
-        ev.select(
-            F.floor(F.col("value") / WOE_BUCKET).cast("long").alias("bucket"),
-            F.when(F.col("event_type") == TARGET_TYPE, 1)
-            .otherwise(0)
-            .alias("g"),
-        )
-        .groupBy("bucket")
-        .agg(F.sum("g").alias("n_good"), F.sum(1 - F.col("g")).alias("n_bad"))
-    )
-    q, table = run_to_memory(cells, "complete")
-    q.stop()
-    return woe_iv_projection(spark.table(table))
+    woe_value_bins' oracle verbatim."""
+    cells = drained(featurize.woe_cells(stream_events(spark, sf_dir)), "complete")
+    return featurize.woe_iv_projection(cells)
 
 
 def streaming_cms_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -419,14 +293,8 @@ def streaming_cms_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     data flows — and because the hashes are the SQL-portable affine fold,
     the drained cells hash-match the same DuckDB oracle as the batch
     sketch."""
-    from .operators.sketches import cms_cells_from
-    from .sources.streams import stream_parquet_table
-    from .streaming.jobs import run_to_memory
-
     docs = stream_parquet_table(spark, sf_dir, "documents")
-    q, table = run_to_memory(cms_cells_from(docs), "complete")
-    q.stop()
-    return spark.table(table)
+    return drained(sketches.cms_cells_from(docs), "complete")
 
 
 def streaming_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -438,14 +306,10 @@ def streaming_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SAME DuckDB replay as the batch sketch inside
     ``sketches.kmv_type_overlap`` — the merge is associative+commutative,
     so batch slicing can't change the result."""
-    from .operators.sketches import kmv_sketch_stream, latest_kmv_emission
-    from .sources.streams import stream_parquet_table
-    from .streaming.jobs import run_to_memory
-
     ev = stream_parquet_table(spark, sf_dir, "events")
-    q, table = run_to_memory(kmv_sketch_stream(ev), "append")
-    q.stop()
-    return latest_kmv_emission(spark.table(table))
+    return sketches.latest_kmv_emission(
+        drained(sketches.kmv_sketch_stream(ev), "append")
+    )
 
 
 def streaming_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -458,9 +322,6 @@ def streaming_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of the corpus. Shares dataset_card_rollup's oracle verbatim:
     the datasheet a training run reads can be kept warm incrementally
     instead of recomputed per batch."""
-    from .sources.streams import stream_parquet_table
-    from .streaming.jobs import run_to_memory
-
     docs = stream_parquet_table(spark, sf_dir, "documents")
     tok = F.size(F.split(F.trim("text"), r"\s+"))
     cells = docs.groupBy(
@@ -471,10 +332,7 @@ def streaming_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(tok.cast("long")).alias("toks"),
         F.max("n_chars").alias("mx"),
     )
-    q, table = run_to_memory(cells, "complete")
-    q.stop()
-    drained = spark.table(table)
-    return drained.groupBy("source").agg(
+    return drained(cells, "complete").groupBy("source").agg(
         F.sum("n").alias("n_docs"),
         F.sum("chars").alias("total_chars"),
         F.sum("toks").alias("total_tokens"),
@@ -487,28 +345,13 @@ def streaming_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def streaming_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     """featurize.mutual_info_type_bucket maintained BY the event stream:
-    the (bucket, type) contingency counts are a plain streaming
-    aggregation held in complete mode; margins and the quarantined
-    per-cell ln terms run on the drained ≤ buckets×types cells via the
-    SAME ``featurize.mi_projection`` as the batch operator (one copy of
-    the arithmetic), sharing its oracle verbatim — feature-relevance
+    the (bucket, type) contingency counts (``featurize.mi_cells``) are a
+    plain streaming aggregation held in complete mode; margins and the
+    quarantined per-cell ln terms run on the drained ≤ buckets×types
+    cells, sharing the batch oracle verbatim — feature-relevance
     telemetry that stays warm as events arrive."""
-    from .operators.featurize import WOE_BUCKET, mi_projection
-    from .sources.streams import stream_events
-    from .streaming.jobs import run_to_memory
-
-    ev = stream_events(spark, sf_dir)
-    cells = (
-        ev.select(
-            F.floor(F.col("value") / WOE_BUCKET).cast("long").alias("bucket"),
-            "event_type",
-        )
-        .groupBy("bucket", "event_type")
-        .agg(F.count("*").alias("n_ij"))
-    )
-    q, table = run_to_memory(cells, "complete")
-    q.stop()
-    return mi_projection(spark.table(table))
+    cells = drained(featurize.mi_cells(stream_events(spark, sf_dir)), "complete")
+    return featurize.mi_projection(cells)
 
 
 def streaming_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -518,35 +361,8 @@ def streaming_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame
     grow), and the share/avg arithmetic runs on the drained cell frame.
     Shares the batch oracle verbatim — the capacity-planning baseline
     stays warm instead of being recomputed per report."""
-    from pyspark.sql import Window
-
-    from .sources.streams import stream_events
-    from .streaming.jobs import run_to_memory
-
-    ev = stream_events(spark, sf_dir)
-    cells = ev.groupBy(
-        F.dayofweek("ts").alias("dow"), F.hour("ts").alias("hod")
-    ).agg(
-        F.count("*").alias("n_events"),
-        F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias(
-            "sum_value_cents"
-        ),
-    )
-    q, table = run_to_memory(cells, "complete")
-    q.stop()
-    w_all = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return (
-        spark.table(table)
-        .withColumn("total", F.sum("n_events").over(w_all))
-        .select(
-            "dow",
-            "hod",
-            "n_events",
-            "sum_value_cents",
-            F.expr("sum_value_cents DIV n_events").alias("avg_value_cents"),
-            F.expr("10000 * n_events DIV total").alias("share_bp"),
-        )
-    )
+    cells = analytics3.seasonality_cells(stream_events(spark, sf_dir))
+    return analytics3.seasonality_shares(drained(cells, "complete"))
 
 
 def streaming_burst_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -558,26 +374,8 @@ def streaming_burst_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the drained cells. Shares burst_users_audit's oracle verbatim —
     the abuse-triage feed stays warm as events arrive instead of being
     recomputed per report."""
-    from .operators.analytics3 import BURST_PER_MINUTE
-    from .sources.streams import stream_events
-    from .streaming.jobs import run_to_memory
-
-    ev = stream_events(spark, sf_dir)
-    cells = ev.groupBy(
-        "user_id", F.window("ts", "1 minute").alias("w")
-    ).agg(F.count("*").alias("c"))
-    q, table = run_to_memory(cells, "complete")
-    q.stop()
-    return (
-        spark.table(table)
-        .groupBy("user_id")
-        .agg(
-            F.max("c").alias("max_events_per_minute"),
-            F.count("*").alias("n_active_minutes"),
-            F.sum("c").alias("n_events"),
-        )
-        .where(F.col("max_events_per_minute") >= BURST_PER_MINUTE)
-    )
+    cells = analytics3.user_minute_counts(stream_events(spark, sf_dir))
+    return analytics3.burst_rollup(drained(cells, "complete"))
 
 
 def streaming_context_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -585,43 +383,11 @@ def streaming_context_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream: the per-doc token count fans out to the |CONTEXT_SIZES|
     candidate lengths map-side and the per-length cells are a plain
     streaming aggregation in complete mode (state is |sizes| rows by
-    construction — it cannot grow); the share arithmetic runs on the
-    drained cell frame. Shares the batch oracle verbatim — the
-    sequence-length planning table stays warm as the corpus ingests."""
-    from .operators.analytics4 import CONTEXT_SIZES
-    from .functions.text import token_count
-    from .sources.streams import stream_parquet_table
-    from .streaming.jobs import run_to_memory
-
+    construction — it cannot grow). Shares the batch oracle verbatim —
+    the sequence-length planning table stays warm as the corpus
+    ingests."""
     docs = stream_parquet_table(spark, sf_dir, "documents")
-    sized = docs.select(
-        token_count("text").cast("long").alias("n_tok"),
-        F.explode(
-            F.array(*[F.lit(s).cast("long") for s in CONTEXT_SIZES])
-        ).alias("ctx"),
-    )
-    cells = sized.groupBy("ctx").agg(
-        F.count("*").alias("n_docs"),
-        F.sum((F.col("n_tok") <= F.col("ctx")).cast("long")).alias("n_fit"),
-        F.sum((F.col("n_tok") > F.col("ctx")).cast("long")).alias(
-            "n_truncated"
-        ),
-        F.sum(F.least("n_tok", "ctx")).alias("tokens_kept"),
-        F.sum(
-            F.greatest(F.col("n_tok") - F.col("ctx"), F.lit(0).cast("long"))
-        ).alias("tokens_lost"),
-    )
-    q, table = run_to_memory(cells, "complete")
-    q.stop()
-    return spark.table(table).select(
-        "ctx",
-        "n_docs",
-        "n_fit",
-        "n_truncated",
-        "tokens_kept",
-        "tokens_lost",
-        F.expr("10000 * n_fit DIV n_docs").alias("fit_bp"),
-    )
+    return drained(analytics4.context_fit_cells(docs), "complete")
 
 
 def streaming_winnow_hot_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -634,15 +400,11 @@ def streaming_winnow_hot_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster via SPARK_GRAFT_STATE_STORE); the boilerplate band filter
     (2..WINNOW_MAX_DF) runs on the drained frame. Shares the batch
     winnowing CTE as its oracle."""
-    from .operators.analytics5 import WINNOW_MAX_DF, _fp_batches
-    from .sources.streams import stream_parquet_table
-    from .streaming.jobs import run_to_memory
-
     docs = stream_parquet_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
     fps = docs.mapInPandas(
-        _fp_batches,
+        analytics5._fp_batches,
         schema="doc_id bigint, source string, n_kgrams int,"
         " sel array<string>, selpos array<int>",
     )
@@ -651,10 +413,8 @@ def streaming_winnow_hot_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("h")
         .agg(F.count("*").alias("n_docs"))
     )
-    q, table = run_to_memory(cells, "complete")
-    q.stop()
-    return spark.table(table).where(
-        (F.col("n_docs") >= 2) & (F.col("n_docs") <= WINNOW_MAX_DF)
+    return drained(cells, "complete").where(
+        (F.col("n_docs") >= 2) & (F.col("n_docs") <= analytics5.WINNOW_MAX_DF)
     )
 
 
@@ -667,10 +427,6 @@ def streaming_order_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketing run on the drained cell frame. Shares the batch oracle
     verbatim — the fulfillment-ops backlog table stays warm as orders
     ingest."""
-    from .operators.analytics5 import BACKLOG_DAY_BUCKETS
-    from .sources.streams import stream_parquet_table
-    from .streaming.jobs import run_to_memory
-
     orders = stream_parquet_table(spark, sf_dir, "orders")
     is_open = F.col("o_orderstatus").isin("O", "P")
     cells = orders.groupBy("o_orderpriority", "o_orderdate").agg(
@@ -681,17 +437,15 @@ def streaming_order_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.lit(0))
         ).alias("open_cents"),
     )
-    q, table = run_to_memory(cells, "complete")
-    q.stop()
-    drained = spark.table(table)
-    cutoff = drained.agg(F.max("o_orderdate").alias("cutoff"))
+    cells = drained(cells, "complete")
+    cutoff = cells.agg(F.max("o_orderdate").alias("cutoff"))
     bucket = F.lit(0)
-    for ub in reversed(BACKLOG_DAY_BUCKETS):
+    for ub in reversed(analytics5.BACKLOG_DAY_BUCKETS):
         bucket = F.when(F.col("age_days") <= F.lit(ub), F.lit(ub)).otherwise(
             bucket
         )
     return (
-        drained.where(F.col("n_open") > 0)
+        cells.where(F.col("n_open") > 0)
         .crossJoin(F.broadcast(cutoff))
         .select(
             "o_orderpriority",

@@ -21,11 +21,12 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.geo import classify_sql
+from ..operators.windowed import lag_trends
 from ..session import is_local_master
 
 _MEMORY_SINK_SEQ = [0]
@@ -126,24 +127,10 @@ def detect_trends_in_batch(
     one executor, away from their state stores, so cluster masters keep
     the exchange.
     """
-    from pyspark.sql import Window
-
     if is_local_master(counts.sparkSession.sparkContext.master):
         counts = counts.coalesce(1)
-    w = Window.partitionBy(key_col).orderBy("window_start")
-    return (
-        counts.withColumn("prev_cnt", F.lag("cnt").over(w))
-        .withColumn("prev_start", F.lag("window_start").over(w))
-        .where(
-            (F.col("cnt") >= min_count)
-            & F.col("prev_cnt").isNotNull()
-            & (
-                F.col("window_start").cast("long") - F.col("prev_start").cast("long")
-                == window_seconds
-            )
-            & (F.col("cnt") - F.col("prev_cnt") >= F.col("prev_cnt"))
-        )
-        .select(key_col, "window_start", "window_end", "cnt", "prev_cnt")
+    return lag_trends(counts, key_col, window_seconds, min_count).select(
+        key_col, "window_start", "window_end", "cnt", "prev_cnt"
     )
 
 
@@ -152,10 +139,15 @@ def detect_trends_in_batch(
 # ---------------------------------------------------------------------------
 
 
+def _hour_stamp(hour_of_day: int) -> int:
+    """The reference's file-name number for an hourly window:
+    hour·360000, with hour 0 (a window ending at midnight) named 24."""
+    return (24 if hour_of_day == 0 else hour_of_day) * 360000
+
+
 def hourly_file_name(hour_of_day: int) -> str:
     """Reference Task2.py:60 naming: output-{hour*360000}, hour 0 → 24."""
-    h = 24 if hour_of_day == 0 else hour_of_day
-    return f"output-{h * 360000}"
+    return f"output-{_hour_stamp(hour_of_day)}"
 
 
 def write_hourly_files(batch_df: DataFrame, out_dir: str) -> None:
@@ -199,8 +191,7 @@ def write_geofence_files(
                 f"missing: {sorted(missing)}"
             )
         for hour, _hq, _cnt in rows:
-            h = 24 if hour == 0 else hour
-            with open(os.path.join(out_dir, f"output3-{h * 360000}"), "w") as f:
+            with open(os.path.join(out_dir, f"output3-{_hour_stamp(hour)}"), "w") as f:
                 f.write(
                     f"('citigroup', {first['citigroup']})\n"
                     f"('goldman', {first['goldman']})"
@@ -210,8 +201,7 @@ def write_geofence_files(
     for hour, hq, cnt in rows:
         by_hour.setdefault(hour, {})[hq] = cnt
     for hour, counts in by_hour.items():
-        h = 24 if hour == 0 else hour
-        with open(os.path.join(out_dir, f"output3-{h * 360000}"), "w") as f:
+        with open(os.path.join(out_dir, f"output3-{_hour_stamp(hour)}"), "w") as f:
             for hq in ("citigroup", "goldman"):
                 f.write(f"('{hq}', {counts.get(hq, 0)})\n")
 
@@ -284,6 +274,24 @@ def run_available_now(
     )
     q.awaitTermination()
     return q, table
+
+
+def sink_frame(spark: SparkSession, q: StreamingQuery, table: str) -> DataFrame:
+    """Stop ``q`` and return its memory sink ``table`` as a frame.
+
+    The sink's temp view is dropped once the frame is resolved: the frame
+    still reads the sink's rows, but the session no longer pins them, so
+    they go when the caller lets go of the frame."""
+    q.stop()
+    out = spark.table(table)
+    spark.catalog.dropTempView(table)
+    return out
+
+
+def drained(df: DataFrame, output_mode: str) -> DataFrame:
+    """Drain the streaming ``df`` into a memory sink and return the rows it
+    wrote (:func:`run_to_memory` then :func:`sink_frame`)."""
+    return sink_frame(df.sparkSession, *run_to_memory(df, output_mode))
 
 
 def run_foreach_batch(

@@ -52,8 +52,8 @@ def _bucket_counts(windows: dict, pdf_iter: Iterator, window_seconds: int) -> No
 
 def _trend_core(windows: dict, emitted_set: set, window_seconds: int,
                 min_count: int, retention_windows: int):
-    """The trend rule and its state eviction, shared by both stateful
-    APIs. A window trends when it has ≥ ``min_count`` rows and at least
+    """The trend rule and its state eviction (run by :func:`_trend_step`
+    for both stateful APIs). A window trends when it has ≥ ``min_count`` rows and at least
     twice its predecessor's count; each trending window is emitted once
     (``emitted_set``). Windows older than ``retention_windows`` behind the
     newest are evicted. Returns (rows (w, cnt, prev_cnt), windows,
@@ -76,30 +76,45 @@ def _trend_core(windows: dict, emitted_set: set, window_seconds: int,
     return out, windows, emitted_set
 
 
+def _trend_step(key, prior, rows: Iterator, window_seconds: int,
+                min_count: int, retention_windows: int):
+    """One state update, shared by both stateful APIs: decode the stored
+    ``(starts, counts, emitted)`` tuple ``prior`` (``None`` for a new
+    key), add ``rows``' window buckets, apply :func:`_trend_core`, and
+    encode the state again. Returns (state tuple, pandas output frame —
+    ``None`` when nothing trends)."""
+    import pandas as pd
+
+    if prior is not None:
+        starts, counts, emitted = prior
+        windows, emitted_set = dict(zip(starts, counts)), set(emitted)
+    else:
+        windows, emitted_set = {}, set()
+    _bucket_counts(windows, rows, window_seconds)
+    out, windows, emitted_set = _trend_core(
+        windows, emitted_set, window_seconds, min_count, retention_windows
+    )
+    state = (list(windows), [windows[w] for w in windows], list(emitted_set))
+    frame = None
+    if out:
+        frame = pd.DataFrame(
+            [(key[0], w, c, p) for (w, c, p) in out],
+            columns=["key", "window_start", "cnt", "prev_cnt"],
+        )
+    return state, frame
+
+
 def make_trend_fn(
     window_seconds: int = 600, min_count: int = 10, retention_windows: int = 1000
 ):
     def fn(key, pdf_iter: Iterator, state) -> Iterator:
-        import pandas as pd
-
-        if state.exists:
-            starts, counts, emitted = state.get
-            windows = dict(zip(starts, counts))
-            emitted_set = set(emitted)
-        else:
-            windows, emitted_set = {}, set()
-        _bucket_counts(windows, pdf_iter, window_seconds)
-        out, windows, emitted_set = _trend_core(
-            windows, emitted_set, window_seconds, min_count, retention_windows
+        new_state, frame = _trend_step(
+            key, state.get if state.exists else None, pdf_iter,
+            window_seconds, min_count, retention_windows,
         )
-        state.update(
-            (list(windows), [windows[w] for w in windows], list(emitted_set))
-        )
-        if out:
-            yield pd.DataFrame(
-                [(key[0], w, c, p) for (w, c, p) in out],
-                columns=["key", "window_start", "cnt", "prev_cnt"],
-            )
+        state.update(new_state)
+        if frame is not None:
+            yield frame
 
     return fn
 
@@ -151,7 +166,7 @@ def trending_stateful_tws(
     Same semantics, modern machinery: state lives in named ValueState on a
     StatefulProcessor handle (composable with timers/TTL; RocksDB-backed on
     a cluster), instead of a single implicit GroupState tuple. Both
-    variants share ``_trend_core``; a test asserts identical output.
+    variants share ``_trend_step``; a test asserts identical output.
 
     Requires ``protobuf`` (the TWS state-server protocol) and the RocksDB
     state store provider; fails fast with an actionable error when the
@@ -178,26 +193,13 @@ def trending_stateful_tws(
             self._state = handle.getValueState("trend", STATE_SCHEMA)
 
         def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            if self._state.exists():
-                got = self._state.get()
-                windows = dict(zip(got[0], got[1]))
-                emitted_set = set(got[2])
-            else:
-                windows, emitted_set = {}, set()
-            _bucket_counts(windows, rows, window_seconds)
-            out, windows, emitted_set = _trend_core(
-                windows, emitted_set, window_seconds, min_count, retention_windows
+            new_state, frame = _trend_step(
+                key, self._state.get() if self._state.exists() else None, rows,
+                window_seconds, min_count, retention_windows,
             )
-            self._state.update(
-                (list(windows), [windows[w] for w in windows], list(emitted_set))
-            )
-            if out:
-                yield pd.DataFrame(
-                    [(key[0], w, c, p) for (w, c, p) in out],
-                    columns=["key", "window_start", "cnt", "prev_cnt"],
-                )
+            self._state.update(new_state)
+            if frame is not None:
+                yield frame
 
         def close(self) -> None:
             pass

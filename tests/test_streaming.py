@@ -712,8 +712,14 @@ def test_trend_detection_batch_rule(spark, monkeypatch):
 def test_trend_core_rule_emission_and_eviction():
     """The stateful trend rule on its own: a window trends at ≥ min_count
     rows and ≥ 2× its predecessor, emits at most once across calls that
-    share state, and windows older than retention_windows are evicted."""
-    from streamming_processing_pyspark_spark.streaming.trend import _trend_core
+    share state, and windows older than retention_windows are evicted —
+    also through ``_trend_step``'s encoded-state round trip."""
+    import pandas as pd
+
+    from streamming_processing_pyspark_spark.streaming.trend import (
+        _trend_core,
+        _trend_step,
+    )
 
     w = 600
     windows = {
@@ -741,6 +747,34 @@ def test_trend_core_rule_emission_and_eviction():
     assert out == []
     assert windows == {8 * w: 3, 10 * w: 1}
     assert emitted == set()
+
+    # the same windows through ``_trend_step``, the state update both
+    # stateful APIs run: rows are bucketed into the decoded state, the rule
+    # applies, and the encoded state fed back on the next call carries the
+    # counts and emitted marks across micro-batches
+    def rows(counts):
+        secs = [k * w + 1 for k, n in counts.items() for _ in range(n)]
+        return iter([pd.DataFrame({"ts": pd.to_datetime(secs, unit="s")})])
+
+    state, frame = _trend_step(
+        ("k",), None, rows({0: 2, 1: 9, 2: 20, 3: 39, 4: 78}), w, 10, 1000
+    )
+    assert frame.values.tolist() == [["k", 2 * w, 20, 9], ["k", 4 * w, 78, 39]]
+    starts, counts, emitted = state
+    assert dict(zip(starts, counts)) == {0: 2, w: 9, 2 * w: 20, 3 * w: 39, 4 * w: 78}
+    assert sorted(emitted) == [2 * w, 4 * w]
+
+    # the round-tripped state keeps emitted windows quiet and still
+    # supplies the predecessor count for a window first seen now
+    state, frame = _trend_step(("k",), state, rows({2: 1, 5: 200}), w, 10, 1000)
+    assert frame.values.tolist() == [["k", 5 * w, 200, 78]]
+    assert dict(zip(state[0], state[1]))[2 * w] == 21
+
+    # eviction travels through the encoded state too
+    state, frame = _trend_step(("k",), state, rows({8: 3, 10: 1}), w, 10, 2)
+    assert frame is None
+    assert dict(zip(state[0], state[1])) == {8 * w: 3, 10 * w: 1}
+    assert state[2] == []
 
 
 def test_trending_files_sink_shape(spark):
@@ -1363,3 +1397,32 @@ def test_streaming_observed_metrics_multibatch(spark, tmp_path):
 
     batch = observability.observed_gate_metrics({"documents": docs}).collect()[0]
     assert folded.asDict() == batch.asDict()
+
+
+def test_drained_twins_release_their_sink_views(spark):
+    """A streaming twin returns its drained rows without leaving its
+    ``stream_sink_*`` memory-sink view behind (the view would pin every
+    output row in the driver for the life of the session). One twin per
+    runner shape, each run twice; the returned frames still read their
+    rows after the view is gone."""
+    from streamming_processing_pyspark_spark import registry
+    from streamming_processing_pyspark_spark.operators import observability
+
+    def sink_views():
+        return {
+            t.name
+            for t in spark.catalog.listTables()
+            if t.name.startswith("stream_sink_")
+        }
+
+    before = sink_views()
+    twins = [
+        registry.streaming_hourly_counts,  # drained, complete mode
+        registry.streaming_union_dedup,  # drained, append mode
+        registry.streaming_available_now_counts,  # Trigger.AvailableNow
+        observability.streaming_observed_metrics,  # observed metrics
+    ]
+    for twin in twins:
+        for _ in range(2):
+            assert twin(spark, SF_DIR).count() > 0
+    assert sink_views() - before == set()

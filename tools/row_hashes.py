@@ -14,6 +14,14 @@ JSON object {query: hash}.
 reports the second run's hash: comparing a --hot map against a default
 (cold, cache cleared per query) map proves cache-independence of outputs
 (VERDICT r11 §3/§4 evidence).
+
+--compare A B reads two saved maps and prints one line per query whose
+hash differs or that only one map has; it exits 1 on any difference and
+0 when the maps are identical (no Spark session is started):
+
+    python tools/row_hashes.py --all > before.json   # on the parent tree
+    python tools/row_hashes.py --all > after.json    # on the change
+    python tools/row_hashes.py --compare before.json after.json
 """
 
 from __future__ import annotations
@@ -44,8 +52,26 @@ def query_hash(df) -> str:
     return h.hexdigest()
 
 
+def compare(path_a: str, path_b: str) -> int:
+    """Print the queries whose hashes differ between two saved maps."""
+    with open(path_a) as f:
+        a = json.load(f)
+    with open(path_b) as f:
+        b = json.load(f)
+    diff = sorted(n for n in a.keys() | b.keys() if a.get(n) != b.get(n))
+    for name in diff:
+        print(f"{name}: {a.get(name, '<absent>')} != {b.get(name, '<absent>')}")
+    print(f"{len(diff)} of {len(a.keys() | b.keys())} queries differ", file=sys.stderr)
+    return 1 if diff else 0
+
+
 def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
+    if "--compare" in sys.argv:
+        if len(args) != 2:
+            print("usage: row_hashes.py --compare A.json B.json", file=sys.stderr)
+            return 2
+        return compare(*args)
     hot = "--hot" in sys.argv
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     spark = get_spark(app_name="row_hashes")
