@@ -39,7 +39,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import (
-    JACCARD_THRESHOLD,
     _banded,
     _shingles,
     _signatures_from_shingles,
@@ -95,13 +94,7 @@ def ingest_batch(batch_df: DataFrame, corpus_dir: str) -> None:
         old_ids = cands.select(F.col("old_id").alias("doc_id")).distinct()
         o_sh = _shingles(corpus.join(old_ids, "doc_id"))
         near_ids = (
-            _verify_jaccard(
-                cands,
-                b_sh.unionAll(o_sh),
-                "new_id",
-                "old_id",
-            )
-            .where(F.col("jaccard") >= JACCARD_THRESHOLD)
+            _verify_jaccard(cands, b_sh.unionAll(o_sh), "new_id", "old_id")
             .select(F.col("new_id").alias("doc_id"))
             .distinct()
         )

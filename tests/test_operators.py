@@ -2580,6 +2580,83 @@ def test_simhash_degenerate_fingerprints_excluded(spark):
     assert chk["n_excluded"] == 50
 
 
+def test_shingles_skip_batches_without_documents(spark):
+    """A batch whose documents all have fewer than SHINGLE_WORDS tokens
+    keeps no document; the shingler must emit nothing for it instead of
+    an untyped empty frame that Arrow rejects — so every shingle op runs
+    on such a corpus (here: all-short, and short beside long)."""
+    schema = "doc_id long, text string"
+    short = {"documents": spark.createDataFrame([(2, "x")], schema)}
+    assert dedup._shingles(short["documents"]).count() == 0
+    assert dedup.ngram_jaccard_pairs(short).count() == 0
+    assert dedup.minhash_lsh_pairs(short).count() == 0
+    mixed = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, "x")], schema
+    )
+    got = {
+        r["doc_id"]: list(r["shingles"])
+        for r in dedup._shingles(mixed).collect()
+    }
+    assert got == {1: ["alpha beta gamma", "beta gamma delta"]}
+
+
+def test_null_text_is_token_less(spark):
+    """NULL text has no tokens: no shingles, a NULL fingerprint, and the
+    simhash band check counts it in n_excluded exactly as its DuckDB
+    oracle does."""
+    import duckdb
+    import pandas as pd
+
+    rows = [
+        (1, "alpha beta gamma delta"),
+        (2, None),
+        (3, "alpha beta gamma delta"),
+        (4, "  "),
+    ]
+    t = {"documents": spark.createDataFrame(rows, "doc_id long, text string")}
+    assert sorted(
+        r["doc_id"] for r in dedup._shingles(t["documents"]).collect()
+    ) == [1, 3]
+    fps = {r["doc_id"]: r["simhash"] for r in dedup.simhash_fingerprints(t).collect()}
+    assert fps[2] is None and fps[4] is None and fps[1] is not None
+    assert {
+        (r["id_a"], r["id_b"]) for r in dedup.ngram_jaccard_pairs(t).collect()
+    } == {(1, 3)}
+    chk = dedup.simhash_band_check(t).first().asDict()
+    assert chk == {
+        "n_docs": 4, "n_excluded": 2, "complete_ok": True, "subset_ok": True
+    }
+    con = duckdb.connect()
+    con.register(
+        "documents", pd.DataFrame(rows, columns=["doc_id", "text"])
+    )
+    oracle = con.execute(dedup.ORACLES["simhash_band_check"]).df()
+    assert oracle.to_dict("records") == [chk]
+
+
+@pytest.mark.parametrize("cap", [5, None])
+def test_posting_pairs_cap_boundary(spark, cap):
+    """_posting_pairs keeps lists with 2 ≤ k ≤ cap: k = 1 → no pair,
+    k = 2 → one, k = cap → C(cap, 2), k = cap + 1 → dropped — unless the
+    cap is None, which keeps every k ≥ 2. Pairs are ordered (x before y
+    in the sorted list)."""
+    # list k holds doc ids 100·k … 100·k + k − 1, so a pair names its list
+    ks = [1, 2, 5, 6]
+    keyed = spark.createDataFrame(
+        [(k, 100 * k + i) for k in ks for i in range(k)],
+        "key int, doc_id long",
+    )
+    pairs = dedup._posting_pairs(
+        dedup._posting(keyed, "doc_id", "key"), "x AS id_a, y AS id_b", cap
+    ).collect()
+    assert all(r["id_a"] // 100 == r["id_b"] // 100 for r in pairs)
+    assert all(r["id_a"] < r["id_b"] for r in pairs)
+    per_list = {k: 0 for k in ks}
+    for r in pairs:
+        per_list[r["id_a"] // 100] += 1
+    assert per_list == {1: 0, 2: 1, 5: 10, 6: 0 if cap is not None else 15}
+
+
 def test_sorted_neighborhood_range_form_equals_global_window(spark):
     """VERDICT r9 §7: the range-partitioned form (per-prefix windows + a
     boundary strip) must emit EXACTLY the single-global-window pair set —
