@@ -33,7 +33,7 @@ from streamming_processing_pyspark_spark.registry import build_queries
 from streamming_processing_pyspark_spark.session import get_spark
 from streamming_processing_pyspark_spark.tables import (
     DEFAULT_SF_DIR,
-    clear_persist_slots,
+    clear_all,
     load_table,
 )
 from streamming_processing_pyspark_spark.taxi_datagen import generate_taxi_day
@@ -525,11 +525,8 @@ def main() -> None:
         # benchmark hygiene: release every shared intermediate so later
         # queries aren't measured under another query's storage/GC
         # pressure and iterations 2..N measure the work, not a slot
-        # lookup. localCheckpoint RDDs are freed by the ContextCleaner
-        # when their Python references die, so collect those too.
-        clear_persist_slots()
-        spark.catalog.clearCache()
-        gc.collect()
+        # lookup.
+        clear_all(spark)
         return elapsed
 
     timings: dict[str, float] = {}

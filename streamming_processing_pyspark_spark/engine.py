@@ -82,22 +82,26 @@ class Engine:
         self, taxi_path: str, out_dir: str, checkpoint_dir: str | None = None
     ):
         """Task2 end-to-end: stream → hourly windows → reference-named files."""
-        agg = jobs.hourly_dropoff_counts(self.taxi_trips_stream(taxi_path))
-        return jobs.run_foreach_batch(
-            agg,
-            lambda df, _id: jobs.write_hourly_files(df, out_dir),
-            "update",
-            checkpoint_dir,
+        return self._stream_to_files(
+            jobs.hourly_dropoff_counts, jobs.write_hourly_files,
+            taxi_path, out_dir, checkpoint_dir,
         )
 
     def stream_geofence_to_files(
         self, taxi_path: str, out_dir: str, checkpoint_dir: str | None = None
     ):
         """Task3 end-to-end with per-window-correct contents."""
-        agg = jobs.geofence_hourly(self.taxi_trips_stream(taxi_path))
+        return self._stream_to_files(
+            jobs.geofence_hourly, jobs.write_geofence_files,
+            taxi_path, out_dir, checkpoint_dir,
+        )
+
+    def _stream_to_files(self, aggregate, write, taxi_path, out_dir, checkpoint_dir):
+        """Stream ``taxi_path`` through ``aggregate`` and ``write`` each
+        update-mode batch into ``out_dir``."""
         return jobs.run_foreach_batch(
-            agg,
-            lambda df, _id: jobs.write_geofence_files(df, out_dir),
+            aggregate(self.taxi_trips_stream(taxi_path)),
+            lambda df, _id: write(df, out_dir),
             "update",
             checkpoint_dir,
         )

@@ -89,6 +89,15 @@ def classify_sql(x_expr: str, y_expr: str, polygons: dict[str, Polygon] | None =
     return f"(CASE {whens} ELSE 'none' END)"
 
 
+def with_headquarters(df, x_col: str, y_col: str):
+    """``df`` plus ``headquarters``: the :func:`classify_sql` geofence of
+    each (``x_col``, ``y_col``) point, as a codegen'd Catalyst expression
+    (no Python round-trip; contrast reference Task3.py:57-83)."""
+    from pyspark.sql import functions as F
+
+    return df.withColumn("headquarters", F.expr(classify_sql(x_col, y_col)))
+
+
 def _raycast_numpy(xs, ys, polygon: Polygon):
     """Vectorized even-odd ray-cast; same semantics as point_in_polygon_sql."""
     import numpy as np

@@ -37,7 +37,15 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double, cosine_pudf
 from ..tables import broadcast_replacing, fan_out, local_df, persist_replacing
-from .dedup import INCR_BATCH_MOD, _overlap_counts, _pct_ok
+from .dedup import (
+    _ID_PAIR,
+    BAND_BUCKET_CAP,
+    INCR_BATCH_MOD,
+    _overlap_counts,
+    _pct_ok,
+    _posting,
+    _posting_pairs,
+)
 
 Tables = dict[str, DataFrame]
 
@@ -1698,25 +1706,26 @@ def lsh_bucketed_pairs(
         )
         return pd.Series(list(packed))
 
-    # checkpoint before the self-join so the BLAS signature pass runs once,
-    # not once per join side (the per-side rename precedes the exchange,
-    # so ReuseExchange can't deduplicate the branches)
+    # Both branches bound a hot bucket as dedup's band joins do: a bucket
+    # with more than BAND_BUCKET_CAP base rows yields no candidates, so one
+    # degenerate key (e.g. many identical vectors) costs a task at most
+    # C(cap, 2) pairs instead of C(bucket, 2).
     exploded = emb.select(
         "vec_id", F.posexplode(band_keys("vec")).alias("pos", "band_key")
     )
     if kpb == 1:
         banded = exploded.select(
             "vec_id", F.col("pos").alias("band_id"), "band_key"
-        ).localCheckpoint()
-        a = banded.select(F.col("vec_id").alias("id_a"), "band_id", "band_key")
-        b = banded.select(F.col("vec_id").alias("id_b"), "band_id", "band_key")
-        cands = (
-            a.join(b, ["band_id", "band_key"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .dropDuplicates(["id_a", "id_b"])
         )
+        cands = _posting_pairs(
+            _posting(banded, "vec_id", "band_id", "band_key"),
+            _ID_PAIR,
+            BAND_BUCKET_CAP,
+        ).dropDuplicates(["id_a", "id_b"])
     else:
+        # checkpoint before the self-join so the BLAS signature pass runs
+        # once, not once per join side (the per-side rename precedes the
+        # exchange, so ReuseExchange can't deduplicate the branches)
         banded = exploded.select(
             "vec_id",
             F.floor(F.col("pos") / kpb).cast("int").alias("band_id"),
@@ -1728,8 +1737,13 @@ def lsh_bucketed_pairs(
         # collide when either side flips its differing bit (the pair shows
         # up as (x-probe, y-base) or (y-probe, x-base)); joining probes to
         # probes would admit Hamming-2 noise without a recall argument
-        b = banded.where("is_base").select(
-            F.col("vec_id").alias("id_b"), "band_id", "band_key"
+        bucket = Window.partitionBy("band_id", "band_key")
+        b = (
+            banded.where("is_base")
+            .select(F.col("vec_id").alias("id_b"), "band_id", "band_key")
+            .withColumn("n_base", F.count("*").over(bucket))
+            .where(F.col("n_base") <= BAND_BUCKET_CAP)
+            .drop("n_base")
         )
         cands = (
             a.join(b, ["band_id", "band_key"])
@@ -1747,9 +1761,10 @@ def lsh_bucketed_pairs(
     emb_b = t["embeddings"].select(
         F.col("vec_id").alias("id_b"), as_double("embedding").alias("vec_b")
     )
+    # the embeddings sides lead the USING joins, so id_a/id_b take their
+    # (nullable) column type whichever branch built the candidates
     return (
-        cands.join(emb_a, "id_a")
-        .join(emb_b, "id_b")
+        emb_b.join(emb_a.join(cands, "id_a"), "id_b")
         .select(
             "id_a",
             "id_b",

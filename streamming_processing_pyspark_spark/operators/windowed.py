@@ -14,14 +14,17 @@ classification):
 - geofence classification (reference ``Task3.py:57-83`` — U1) via the pure-SQL
   ray-cast in :mod:`..functions.geo` — no Python round-trip.
 
-Two builders carry all of it. :func:`window_counts` is the one windowed
-count (tumbling, or sliding with ``slide``); the window queries here, the
-anomaly detectors in ``events_analytics`` and the streaming twins in
-``registry`` all call it. :func:`lag_trends` is the one ``lag()`` trend
-rule; :func:`trending` and the taxi drain's
-``streaming.jobs.detect_trends_in_batch`` both call it and pick their own
-output columns. Only :func:`trending_selfjoin`, the reference-shaped form
-that tests compare against, spells the rule a second way.
+Three builders carry all of it, for events and taxi trips alike.
+:func:`window_counts` is the one windowed count (tumbling, or sliding with
+``slide``, over any time column); the window queries here, the anomaly
+detectors in ``events_analytics``, the streaming twins in ``registry`` and
+the taxi Task2/3/4 jobs in ``streaming.jobs`` all call it.
+:func:`lag_trends` is the one ``lag()`` trend rule; :func:`trending` and
+the taxi drain's ``streaming.jobs.detect_trends_in_batch`` both call it
+and pick their own output columns. ``functions.geo.with_headquarters`` is
+the one geofence column. Only :func:`trending_selfjoin`, the
+reference-shaped form that tests compare against, spells the trend rule a
+second way.
 
 Scale posture: every aggregation here is a single hash-shuffle on the group
 keys with map-side partial aggregation (Catalyst plans partial+final
@@ -35,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.geo import classify_sql
+from ..functions.geo import classify_sql, with_headquarters
 
 # Deterministic synthetic coordinates derived from events columns, spanning
 # both reference geofences (goldman lon≈-74.0144..-74.0138 lat≈40.7139..40.7152,
@@ -49,14 +52,22 @@ LAT_SQL = "(40.7130 + CAST(user_id % 95 AS DOUBLE) / 10000.0)"
 
 
 def window_counts(
-    df: DataFrame, duration: str, *keys: str, slide: str | None = None
+    df: DataFrame,
+    duration: str,
+    *keys: str,
+    slide: str | None = None,
+    ts_col: str = "ts",
 ) -> DataFrame:
-    """``window_start, *keys, cnt``: rows per event-time window of ``ts``,
-    per key. ``slide=None`` is the tumbling window (``F.window`` with no
-    slide); a slide gives overlapping windows. Batch and streaming
-    queries share this one builder, so a twin runs the same aggregation."""
+    """``window_start, *keys, cnt``: rows per event-time window of
+    ``ts_col``, per key. ``slide=None`` is the tumbling window
+    (``F.window`` with no slide); a slide gives overlapping windows. Batch
+    and streaming queries share this one builder, so a twin runs the same
+    aggregation.
+
+    On a stream the state store keys on ``window.{start,end}, *keys`` and
+    holds ``count``: neither the ``w`` alias nor ``cnt`` reaches it."""
     return (
-        df.groupBy(F.window("ts", duration, slide).alias("w"), *keys)
+        df.groupBy(F.window(ts_col, duration, slide).alias("w"), *keys)
         .agg(F.count("*").alias("cnt"))
         .select(F.col("w.start").alias("window_start"), *keys, "cnt")
     )
@@ -314,6 +325,11 @@ def with_coordinates(events: DataFrame) -> DataFrame:
     return events.withColumn("lon", F.expr(LON_SQL)).withColumn("lat", F.expr(LAT_SQL))
 
 
+def geofenced_events(events: DataFrame) -> DataFrame:
+    """``events`` with its synthetic (lon, lat) and their ``headquarters``."""
+    return with_headquarters(with_coordinates(events), "lon", "lat")
+
+
 def geofence_counts(events: DataFrame) -> DataFrame:
     """Counts per geofence (reference Task3 semantics, per-window bug fixed).
 
@@ -322,8 +338,7 @@ def geofence_counts(events: DataFrame) -> DataFrame:
     workers in the hot path (contrast reference Task3.py:57-83).
     """
     return (
-        with_coordinates(events)
-        .withColumn("headquarters", F.expr(classify_sql("lon", "lat")))
+        geofenced_events(events)
         .groupBy("headquarters")
         .agg(F.count("*").alias("cnt"))
     )
@@ -333,9 +348,7 @@ def geofence_hourly_counts(events: DataFrame) -> DataFrame:
     """Per-geofence hourly windowed counts — the full Task3 pipeline
     (classify → window → count), with per-window-correct contents
     (fixes reference Task3.py:102-103, SURVEY.md §5.3)."""
-    pts = with_coordinates(events).withColumn(
-        "headquarters", F.expr(classify_sql("lon", "lat"))
-    )
+    pts = geofenced_events(events)
     # filter 'none' AFTER the aggregation: a pre-agg filter makes Catalyst
     # inline the whole classify CASE into the scan filter AND the group key
     # (two evaluations per row); post-agg it runs once per row and the

@@ -37,7 +37,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
 
-from .functions.geo import classify_sql
 from .operators import (
     analytics2,
     analytics3,
@@ -123,10 +122,9 @@ def streaming_available_now_counts(spark: SparkSession, sf_dir: str) -> DataFram
 
 def streaming_geofence_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """geofence_hourly_counts as a streaming query (classify → window agg)."""
-    pts = windowed.with_coordinates(stream_events(spark, sf_dir))
-    classified = pts.withColumn(
-        "headquarters", F.expr(classify_sql("lon", "lat"))
-    ).where(F.col("headquarters") != "none")
+    classified = windowed.geofenced_events(stream_events(spark, sf_dir)).where(
+        F.col("headquarters") != "none"
+    )
     return drained(
         windowed.window_counts(classified, "1 hour", "headquarters"), "complete"
     )

@@ -10,37 +10,28 @@ comparable row-for-row.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..tables import _normalize_ts, load_table, table_path
+from ..tables import _normalize_ts, load_table, raw_events
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events as a file stream (one-file directory; real deployments point
     this at an arriving-files directory or Kafka)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-    df = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        # file sources stream over directories; select just the events file
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    return _normalize_ts(df)
+    return stream_parquet_table(spark, sf_dir, "events")
 
 
 def stream_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Generic file-stream over any testdata table."""
-    if name == "events":
-        return stream_events(spark, sf_dir)
-    schema = load_table(spark, sf_dir, name).schema
-    return (
-        spark.readStream.schema(schema)
+    """Generic file-stream over any testdata table; events are read raw
+    and normalized as the batch loader does."""
+    events = name == "events"
+    batch = raw_events(spark, sf_dir) if events else load_table(spark, sf_dir, name)
+    df = (
+        spark.readStream.schema(batch.schema)
+        # file sources stream over directories; select just the table's file
         .option("pathGlobFilter", f"{name}.parquet")
         .parquet(sf_dir)
     )
+    return _normalize_ts(df) if events else df
 
 
 def socket_lines(spark: SparkSession, host: str = "localhost", port: int = 10002) -> DataFrame:

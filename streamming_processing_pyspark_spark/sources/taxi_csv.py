@@ -52,18 +52,22 @@ UNION_SCHEMA = T.StructType(
 )
 
 
-def read_taxi_csv(spark: SparkSession, path: str) -> DataFrame:
-    """Batch read of a ragged taxi CSV directory under the union schema.
-
-    PERMISSIVE mode is explicit — null-padding/null-coercion is load-bearing
-    (SURVEY.md §1.3 "implication").
-    """
+def _union_csv(reader, path: str) -> DataFrame:
+    """``path`` read by ``reader`` (batch or stream) under the ingest
+    contract: headerless, union schema, PERMISSIVE mode — explicit, since
+    null-padding/null-coercion is load-bearing (SURVEY.md §1.3
+    "implication")."""
     return (
-        spark.read.schema(UNION_SCHEMA)
+        reader.schema(UNION_SCHEMA)
         .option("header", "false")
         .option("mode", "PERMISSIVE")
         .csv(path)
     )
+
+
+def read_taxi_csv(spark: SparkSession, path: str) -> DataFrame:
+    """Batch read of a ragged taxi CSV directory under the union schema."""
+    return _union_csv(spark.read, path)
 
 
 def stream_taxi_csv(
@@ -76,12 +80,8 @@ def stream_taxi_csv(
     downstream logic must be file-order-independent (the determinism
     property the reference lacked, SURVEY.md §5.2).
     """
-    return (
-        spark.readStream.schema(UNION_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("header", "false")
-        .option("mode", "PERMISSIVE")
-        .csv(path)
+    return _union_csv(
+        spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger), path
     )
 
 

@@ -44,6 +44,7 @@ from ..operators.dedup import (
     _signatures_from_shingles,
     _verify_jaccard,
 )
+from .jobs import run_foreach_batch
 
 
 def _docs_dir(corpus_dir: str) -> str:
@@ -113,9 +114,9 @@ def run_streaming_ingest_dedup(
 ):
     """Drive the ingest loop over a streaming documents frame
     (``doc_id``, ``text``). Returns the StreamingQuery."""
-    writer = doc_stream.writeStream.foreachBatch(
-        lambda df, _id: ingest_batch(df, corpus_dir)
-    ).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return run_foreach_batch(
+        doc_stream,
+        lambda df, _id: ingest_batch(df, corpus_dir),
+        "append",
+        checkpoint_dir,
+    )

@@ -3,8 +3,13 @@ rebuilt on Structured Streaming with explicit watermarks and deterministic,
 per-window-correct sinks.
 
 Every job is a *transformation* on a streaming DataFrame (testable against
-any source) plus small sink helpers. Differences from the reference, all
-deliberate (SURVEY.md §5.3, §7):
+any source) plus small sink helpers. The Task2/3/4 builders add no
+aggregation of their own: they run ``operators.windowed.window_counts``
+over ``dropoff_ts`` and classify with ``functions.geo.with_headquarters``,
+as the batch window queries do, and only pick their output columns. The
+file sinks share one writer, the memory-sink runners one writer setup.
+
+Differences from the reference, all deliberate (SURVEY.md §5.3, §7):
 
 - watermarks are available on every aggregation (the reference had none —
   unbounded state; fine for one bounded day, wrong at 100 TB);
@@ -25,68 +30,59 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..functions.geo import classify_sql
-from ..operators.windowed import lag_trends
+from ..functions.geo import with_headquarters
+from ..operators.windowed import lag_trends, window_counts
 from ..session import is_local_master
 
 _MEMORY_SINK_SEQ = [0]
 
 
-def hourly_dropoff_counts(trips: DataFrame, watermark: str | None = None) -> DataFrame:
-    """Task2: trips per 1-hour event-time window (reference Task2.py:44-51)."""
+def _trip_counts(
+    trips: DataFrame, watermark: str | None, duration: str, *keys: str
+) -> DataFrame:
+    """:func:`window_counts` over drop-off time, optionally watermarked."""
     if watermark:
         trips = trips.withWatermark("dropoff_ts", watermark)
-    return (
-        trips.groupBy(F.window("dropoff_ts", "1 hour").alias("w"))
-        .count()
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.hour("w.end").alias("hour_of_day"),
-            F.col("count").alias("cnt"),
-        )
+    return window_counts(trips, duration, *keys, ts_col="dropoff_ts")
+
+
+def _window_end(duration: str):
+    return F.col("window_start") + F.expr(f"INTERVAL {duration}")
+
+
+def _hour_of_day():
+    """``hour(window.end)`` of an hourly window, the reference's file key
+    (a window ending at midnight is hour 0)."""
+    return F.hour(_window_end("1 hour")).alias("hour_of_day")
+
+
+def hourly_dropoff_counts(trips: DataFrame, watermark: str | None = None) -> DataFrame:
+    """Task2: trips per 1-hour event-time window (reference Task2.py:44-51)."""
+    return _trip_counts(trips, watermark, "1 hour").select(
+        "window_start", _hour_of_day(), "cnt"
     )
 
 
 def geofence_hourly(trips: DataFrame, watermark: str | None = None) -> DataFrame:
     """Task3: per-geofence hourly counts; classification is the codegen'd
     ray-cast expression (no Python round-trip; contrast Task3.py:57-83)."""
-    classified = trips.withColumn(
-        "headquarters", F.expr(classify_sql("dropoff_lon", "dropoff_lat"))
-    ).where(F.col("headquarters") != "none")
-    if watermark:
-        classified = classified.withWatermark("dropoff_ts", watermark)
-    return (
-        classified.groupBy(
-            F.window("dropoff_ts", "1 hour").alias("w"), "headquarters"
-        )
-        .count()
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.hour("w.end").alias("hour_of_day"),
-            "headquarters",
-            F.col("count").alias("cnt"),
-        )
+    classified = with_headquarters(trips, "dropoff_lon", "dropoff_lat").where(
+        F.col("headquarters") != "none"
+    )
+    return _trip_counts(classified, watermark, "1 hour", "headquarters").select(
+        "window_start", _hour_of_day(), "headquarters", "cnt"
     )
 
 
 def geofence_10min_counts(trips: DataFrame, watermark: str | None = None) -> DataFrame:
     """Task4 aggregation stage: per-geofence 10-minute windowed counts."""
-    classified = trips.withColumn(
-        "headquarters", F.expr(classify_sql("dropoff_lon", "dropoff_lat"))
-    )
-    if watermark:
-        classified = classified.withWatermark("dropoff_ts", watermark)
-    return (
-        classified.groupBy(
-            F.window("dropoff_ts", "10 minutes").alias("w"), "headquarters"
-        )
-        .count()
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "headquarters",
-            F.col("count").alias("cnt"),
-        )
+    classified = with_headquarters(trips, "dropoff_lon", "dropoff_lat")
+    counts = _trip_counts(classified, watermark, "10 minutes", "headquarters")
+    return counts.select(
+        "window_start",
+        _window_end("10 minutes").alias("window_end"),
+        "headquarters",
+        "cnt",
     )
 
 
@@ -150,16 +146,23 @@ def hourly_file_name(hour_of_day: int) -> str:
     return f"output-{_hour_stamp(hour_of_day)}"
 
 
+def _write_files(out_dir: str, files) -> None:
+    """Write each ``(name, text)`` of ``files`` into ``out_dir`` (made if
+    missing), overwriting: a re-emitted window rewrites its own file."""
+    os.makedirs(out_dir, exist_ok=True)
+    for name, text in files:
+        with open(os.path.join(out_dir, name), "w") as f:
+            f.write(text)
+
+
 def write_hourly_files(batch_df: DataFrame, out_dir: str) -> None:
     """Task2 sink: one file per updated hourly window with its total count.
 
     One collect() for the whole (tiny, aggregated) batch — not a
     distributed job per row (contrast reference Task2.py:57-62).
     """
-    os.makedirs(out_dir, exist_ok=True)
-    for row in batch_df.select("hour_of_day", "cnt").collect():
-        with open(os.path.join(out_dir, hourly_file_name(row[0])), "w") as f:
-            f.write(f"{row[1]}\n")
+    rows = batch_df.select("hour_of_day", "cnt").collect()
+    _write_files(out_dir, [(hourly_file_name(h), f"{cnt}\n") for h, cnt in rows])
 
 
 def write_geofence_files(
@@ -175,7 +178,6 @@ def write_geofence_files(
     trailing newline). Off by default — the fixed per-window contents are
     what a user actually wants.
     """
-    os.makedirs(out_dir, exist_ok=True)
     rows = batch_df.select("hour_of_day", "headquarters", "cnt").collect()
     if reference_compat:
         first: dict[str, int] = {}
@@ -190,26 +192,34 @@ def write_geofence_files(
                 f"batch (reference Task3.py:102-103 crashes otherwise); "
                 f"missing: {sorted(missing)}"
             )
-        for hour, _hq, _cnt in rows:
-            with open(os.path.join(out_dir, f"output3-{_hour_stamp(hour)}"), "w") as f:
-                f.write(
-                    f"('citigroup', {first['citigroup']})\n"
-                    f"('goldman', {first['goldman']})"
-                )
-        return
-    by_hour: dict[int, dict[str, int]] = {}
-    for hour, hq, cnt in rows:
-        by_hour.setdefault(hour, {})[hq] = cnt
-    for hour, counts in by_hour.items():
-        with open(os.path.join(out_dir, f"output3-{_hour_stamp(hour)}"), "w") as f:
-            for hq in ("citigroup", "goldman"):
-                f.write(f"('{hq}', {counts.get(hq, 0)})\n")
+        files = [
+            (
+                f"output3-{_hour_stamp(hour)}",
+                f"('citigroup', {first['citigroup']})\n"
+                f"('goldman', {first['goldman']})",
+            )
+            for hour, _hq, _cnt in rows
+        ]
+    else:
+        by_hour: dict[int, dict[str, int]] = {}
+        for hour, hq, cnt in rows:
+            by_hour.setdefault(hour, {})[hq] = cnt
+        files = [
+            (
+                f"output3-{_hour_stamp(hour)}",
+                "".join(
+                    f"('{hq}', {counts.get(hq, 0)})\n"
+                    for hq in ("citigroup", "goldman")
+                ),
+            )
+            for hour, counts in by_hour.items()
+        ]
+    _write_files(out_dir, files)
 
 
 def write_trending_files(trends_df: DataFrame, out_dir: str) -> None:
     """Task4 sink: part-{sec_of_day*100} with (hq, (count, sec, prevCount))
     (reference Task4.py:136-142 shape)."""
-    os.makedirs(out_dir, exist_ok=True)
     rows = trends_df.select(
         "headquarters",
         "cnt",
@@ -218,14 +228,27 @@ def write_trending_files(trends_df: DataFrame, out_dir: str) -> None:
         ).alias("sec_of_day"),
         "prev_cnt",
     ).collect()
-    for hq, cnt, sec, prev in rows:
-        with open(os.path.join(out_dir, f"part-{sec * 100}"), "w") as f:
-            f.write(f"({hq}, ({cnt}, {sec}, {prev}))\n")
+    _write_files(
+        out_dir,
+        [
+            (f"part-{sec * 100}", f"({hq}, ({cnt}, {sec}, {prev}))\n")
+            for hq, cnt, sec, prev in rows
+        ],
+    )
 
 
 # ---------------------------------------------------------------------------
 # Query runners
 # ---------------------------------------------------------------------------
+
+
+def _memory_writer(df: DataFrame, output_mode: str, name: str | None):
+    """The memory-sink writer of ``df`` and its table name (``name``, or a
+    fresh ``stream_sink_<n>``)."""
+    _MEMORY_SINK_SEQ[0] += 1
+    table = name or f"stream_sink_{_MEMORY_SINK_SEQ[0]}"
+    writer = df.writeStream.format("memory").queryName(table).outputMode(output_mode)
+    return writer, table
 
 
 def run_to_memory(
@@ -236,14 +259,8 @@ def run_to_memory(
     The local smoke path: parquet/file sources + ``processAllAvailable``
     drive a streaming plan to completion deterministically.
     """
-    _MEMORY_SINK_SEQ[0] += 1
-    table = name or f"stream_sink_{_MEMORY_SINK_SEQ[0]}"
-    q = (
-        df.writeStream.format("memory")
-        .queryName(table)
-        .outputMode(output_mode)
-        .start()
-    )
+    writer, table = _memory_writer(df, output_mode, name)
+    q = writer.start()
     q.processAllAvailable()
     return q, table
 
@@ -263,15 +280,8 @@ def run_available_now(
     batch-job economics. ``awaitTermination`` returns when the backlog is
     drained.
     """
-    _MEMORY_SINK_SEQ[0] += 1
-    table = name or f"stream_sink_{_MEMORY_SINK_SEQ[0]}"
-    q = (
-        df.writeStream.format("memory")
-        .queryName(table)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
+    writer, table = _memory_writer(df, output_mode, name)
+    q = writer.trigger(availableNow=True).start()
     q.awaitTermination()
     return q, table
 

@@ -119,6 +119,24 @@ def make_trend_fn(
     return fn
 
 
+def _grouped_by_key(keyed: DataFrame, key_col: str, ts_col: str):
+    """The stateful operators' input: ``key, ts`` rows grouped by key."""
+    return keyed.select(
+        F.col(key_col).alias("key"), F.col(ts_col).alias("ts")
+    ).groupBy("key")
+
+
+def _with_window_timestamps(result: DataFrame) -> DataFrame:
+    """The stateful operators' output: ``window_start`` (epoch seconds in
+    :data:`OUTPUT_SCHEMA`) back as a timestamp."""
+    return result.select(
+        "key",
+        F.timestamp_seconds("window_start").alias("window_start"),
+        "cnt",
+        "prev_cnt",
+    )
+
+
 def trending_stateful(
     keyed: DataFrame,
     key_col: str = "headquarters",
@@ -132,20 +150,14 @@ def trending_stateful(
     (key, window_start(ts), cnt, prev_cnt) emitted when the trend condition
     first becomes true for that window.
     """
-    prepared = keyed.select(F.col(key_col).alias("key"), F.col(ts_col).alias("ts"))
-    result = prepared.groupBy("key").applyInPandasWithState(
+    result = _grouped_by_key(keyed, key_col, ts_col).applyInPandasWithState(
         make_trend_fn(window_seconds, min_count),
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf="NoTimeout",
     )
-    return result.select(
-        "key",
-        F.timestamp_seconds("window_start").alias("window_start"),
-        "cnt",
-        "prev_cnt",
-    )
+    return _with_window_timestamps(result)
 
 
 class StatefulApiUnavailable(RuntimeError):
@@ -204,16 +216,10 @@ def trending_stateful_tws(
         def close(self) -> None:
             pass
 
-    prepared = keyed.select(F.col(key_col).alias("key"), F.col(ts_col).alias("ts"))
-    result = prepared.groupBy("key").transformWithStateInPandas(
+    result = _grouped_by_key(keyed, key_col, ts_col).transformWithStateInPandas(
         statefulProcessor=TrendProcessor(),
         outputStructType=OUTPUT_SCHEMA,
         outputMode="append",
         timeMode="none",
     )
-    return result.select(
-        "key",
-        F.timestamp_seconds("window_start").alias("window_start"),
-        "cnt",
-        "prev_cnt",
-    )
+    return _with_window_timestamps(result)

@@ -11,6 +11,7 @@ benchmark loops).
 
 from __future__ import annotations
 
+import gc
 import os
 from collections.abc import MutableMapping
 
@@ -40,24 +41,31 @@ def table_path(sf_dir: str, name: str) -> str:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
+    if name == "events":
+        return _normalize_ts(raw_events(spark, sf_dir))
     # Oracle parity must not depend on the caller's session configs: DuckDB
     # timestamps are UTC-naive, so pin the session timezone (runtime-settable).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if name == "events":
-        # events.ts has shipped as both parquet TIMESTAMP(NANOS) (Spark
-        # rejects by default → read raw int64 nanos, floor to micros) and
-        # TIMESTAMP(MICROS, isAdjustedToUTC=false) (reads as
-        # timestamp_ntz). Normalize either to a session-timezone TIMESTAMP
-        # (the session is pinned UTC above, so the instant is unchanged and
-        # DuckDB's naive timestamps agree) so downstream epoch arithmetic
-        # (cast to bigint, unix_timestamp) stays legal.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
-        return _normalize_ts(df)
     return spark.read.parquet(table_path(sf_dir, name))
 
 
+def raw_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events parquet as stored, in a session pinned for it: UTC, and
+    TIMESTAMP(NANOS) read as raw int64 (Spark rejects it by default).
+    :func:`_normalize_ts` turns ``ts`` into a TIMESTAMP; batch and
+    streaming reads of events both go through the pair."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.parquet(table_path(sf_dir, "events"))
+
+
 def _normalize_ts(df: DataFrame) -> DataFrame:
+    """events.ts has shipped as both parquet TIMESTAMP(NANOS) (read as raw
+    int64 nanos → floored to micros) and TIMESTAMP(MICROS,
+    isAdjustedToUTC=false) (reads as timestamp_ntz). Normalize either to a
+    session-timezone TIMESTAMP (the session is pinned UTC, so the instant
+    is unchanged and DuckDB's naive timestamps agree) so downstream epoch
+    arithmetic (cast to bigint, unix_timestamp) stays legal."""
     dtype = dict(df.dtypes).get("ts")
     if dtype == "bigint":
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -251,6 +259,16 @@ def clear_persist_slots() -> None:
     while _SLOTS:
         _, (_, value, release, _) = _SLOTS.popitem()
         _release(value, release)
+
+
+def clear_all(spark: SparkSession) -> None:
+    """Benchmark and tool hygiene between queries: release every slot
+    value, drop the session's cached tables, then collect garbage so the
+    ContextCleaner frees localCheckpoint RDDs whose Python references
+    died."""
+    clear_persist_slots()
+    spark.catalog.clearCache()
+    gc.collect()
 
 
 def local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:

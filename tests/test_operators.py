@@ -2557,6 +2557,27 @@ def test_band_bucket_cap_bounds_degenerate_corpus(spark):
     )
 
 
+@pytest.mark.parametrize("n_probes", [0, 2])
+def test_lsh_band_bucket_cap_bounds_identical_vectors(spark, n_probes):
+    """The random-hyperplane band join is capped like dedup's: > cap
+    identical vectors share every band key, so each band is ONE bucket
+    that must be dropped (single-key posting explode and multi-probe
+    join alike), while a same-shape table under the cap still pairs."""
+    vec = [float(i % 7 - 3) for i in range(64)]
+
+    def table(n):
+        return {
+            "embeddings": spark.createDataFrame(
+                [(i, vec) for i in range(n)], "vec_id long, embedding array<float>"
+            )
+        }
+
+    hot = table(dedup.BAND_BUCKET_CAP + 88)
+    assert similarity.lsh_bucketed_pairs(hot, n_probes=n_probes).count() == 0
+    cool = similarity.lsh_bucketed_pairs(table(12), n_probes=n_probes)
+    assert cool.count() == 12 * 11 // 2
+
+
 def test_simhash_degenerate_fingerprints_excluded(spark):
     """Empty/whitespace docs fingerprint to NULL (no tokens — the actual
     degenerate condition, ADVICE r10, not the VALUE 0); they must never

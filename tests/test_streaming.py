@@ -163,6 +163,32 @@ def test_streaming_geofence_counts(spark, tmp_path):
     assert got == EXPECTED_GEOFENCE_HOURLY
 
 
+def test_task4_state_store_holds_batch_counts(spark, tmp_path):
+    """The Task4 drain's state store is read back by the taxi benchmark's
+    correctness check: its rows are ``key.window.start``,
+    ``key.headquarters`` and ``value.count``, equal to the batch counts."""
+    d = str(tmp_path / "taxi")
+    ckpt = str(tmp_path / "ckpt")
+    write_taxi_files(d, default_plan())
+    q = run_foreach_batch(
+        geofence_10min_counts(_trips_stream(spark, d)),
+        lambda df, _id: df.collect(),
+        "update",
+        ckpt,
+    )
+    q.processAllAvailable()
+    q.stop()
+    state = (
+        spark.read.format("statestore")
+        .load(ckpt)
+        .select("key.window.start", "key.headquarters", "value.count")
+    )
+    batch = geofence_10min_counts(normalize_trips(read_taxi_csv(spark, d)))
+    assert sorted(map(tuple, state.collect())) == sorted(
+        (r["window_start"], r["headquarters"], r["cnt"]) for r in batch.collect()
+    )
+
+
 def test_hourly_file_sink_naming_and_contents(spark, tmp_path):
     """Reference Task2 naming (output-{hour*360000}, hour 0→24) with
     per-window-correct contents."""

@@ -6,7 +6,7 @@ Usage:
         query_a query_b ...
 
 For each query: N warm iterations with the bench's exact hygiene
-(clear_persist_slots + clearCache + gc between runs), then a per-job table for
+(tables.clear_all between runs), then a per-job table for
 the LAST iteration (description, wall ms, task count, executor run time)
 pulled from the UI REST API, so per-stage task time and job-count claims
 in OPTIMIZATION_r12.md are reproducible.
@@ -14,7 +14,6 @@ in OPTIMIZATION_r12.md are reproducible.
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import sys
@@ -29,7 +28,7 @@ sys.path.insert(0, ROOT)
 
 from streamming_processing_pyspark_spark.registry import build_queries
 from streamming_processing_pyspark_spark.session import get_spark
-from streamming_processing_pyspark_spark.tables import clear_persist_slots
+from streamming_processing_pyspark_spark.tables import clear_all
 
 N_ITERS = int(os.environ.get("PROFILE_ITERS", "3"))
 
@@ -56,9 +55,7 @@ def main() -> int:
         fn = queries[name]
         walls = []
         for i in range(N_ITERS):
-            clear_persist_slots()
-            spark.catalog.clearCache()
-            gc.collect()
+            clear_all(spark)
             sc.setJobGroup(f"{name}#{i}", name)
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.mode("overwrite").format("noop").save()

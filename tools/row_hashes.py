@@ -26,7 +26,6 @@ hash differs or that only one map has; it exits 1 on any difference and
 
 from __future__ import annotations
 
-import gc
 import hashlib
 import json
 import os
@@ -40,7 +39,7 @@ sys.path.insert(0, ROOT)
 
 from streamming_processing_pyspark_spark.registry import build_queries
 from streamming_processing_pyspark_spark.session import get_spark
-from streamming_processing_pyspark_spark.tables import clear_persist_slots
+from streamming_processing_pyspark_spark.tables import clear_all
 
 
 def query_hash(df) -> str:
@@ -83,9 +82,7 @@ def main() -> int:
             out[name] = "!unknown"
             continue
         if not hot:
-            clear_persist_slots()
-            spark.catalog.clearCache()
-            gc.collect()
+            clear_all(spark)
         try:
             df = queries[name](spark, sf_dir)
             h = query_hash(df)

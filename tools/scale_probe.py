@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from streamming_processing_pyspark_spark.session import get_spark
 from streamming_processing_pyspark_spark.tables import (
+    clear_all,
     clear_persist_slots,
     load_tables,
 )
@@ -315,9 +316,7 @@ def main() -> None:
                 )
             # the probe rewrites its replicated corpus between ks, and a
             # plan-level reuse guard can't see bytes change behind a path
-            clear_persist_slots()
-            spark.catalog.clearCache()
-            gc.collect()
+            clear_all(spark)
             cnote = (
                 f" rows={counts[name][k]:,}"
                 if counts.get(name, {}).get(k) is not None
@@ -364,9 +363,7 @@ def main() -> None:
             runs = []
             try:
                 for _ in range(2):
-                    clear_persist_slots()
-                    spark.catalog.clearCache()
-                    gc.collect()
+                    clear_all(spark)
                     t0 = time.perf_counter()
                     fn(ext_tables).write.mode("overwrite").format(
                         "noop"
