@@ -15,7 +15,9 @@ extensions from BASELINE.json, designed Spark-first:
 - packing is windowed *per shard*, so at 100 TB each shard's running sum
   is an independent partition — no global sort, no single-task window;
 - clustering is iterative min-label propagation over DataFrames (the
-  standard large-graph connected-components formulation; GraphFrames-free).
+  standard large-graph connected-components formulation; GraphFrames-free);
+  a pair graph smaller than one of its partitions is labelled by a driver
+  union-find instead.
 
 Every op but the iterative one has a DuckDB oracle.
 """
@@ -336,8 +338,13 @@ def regex_scrub(t: Tables) -> DataFrame:
 
 #: rounds the last _connected_components call took to converge (the
 #: O(log diameter) bound is pinned by tests/test_operators.py on a
-#: 64-edge chain graph — a plain neighbor-min loop would take ~64 rounds)
+#: 64-edge chain graph — a plain neighbor-min loop would take ~64 rounds);
+#: 0 when the graph was small enough to be labelled on the driver
 LAST_CC_ROUNDS = 0
+
+#: pair-graph edges per partition of the CC loop's shuffles; a graph with
+#: fewer edges than one partition's worth is labelled on the driver
+CC_PAIRS_PER_PARTITION = 50_000
 
 #: CC labels live in the slot table, released by its one clear
 clear_cc_memo = clear_persist_slots
@@ -347,33 +354,46 @@ def _connected_components(
     pairs: DataFrame, slot: str, checkpoint_dir: str | None = None
 ) -> DataFrame:
     """Min-label connected components over an (id_a, id_b) pair frame →
-    (doc_id, component) labels. The pair plan is checkpointed here —
-    exactly once — so the (expensive) pair-discovery pipeline
-    materializes a single time and a single copy of the pair RDD sits in
-    executor storage; edge mirroring and every CC round replay from the
-    checkpoint (downstream stages reuse its shuffle files, they don't
-    recompute the source).
+    (doc_id, component) labels, component = the minimum id reachable. The
+    pair plan is checkpointed here — exactly once, eagerly — so the
+    (expensive) pair-discovery pipeline materializes a single time and the
+    edge count that picks the path below is free.
 
-    Iterative min-label propagation on DataFrames — each round is one
-    neighbor-min join + one pointer-doubling self-join (label ←
-    label[label]). Plain neighbor-min alone needs O(component diameter)
-    rounds; the doubling step halves the distance to the component minimum
-    every round, so chain-shaped clusters converge in O(log diameter) —
-    the same round bound as star-contraction CC. Checkpointing truncates
-    lineage so plans don't grow exponentially.
+    Two paths, one output (same rows, same schema, nullability included):
 
-    Durability: ``checkpoint_dir`` (or ``$SPARK_GRAFT_CHECKPOINT_DIR``)
-    switches the loop from ``localCheckpoint`` (executor-local blocks —
-    fast, but lost with a failed executor, killing a long campaign run)
-    to RELIABLE ``checkpoint()`` into that directory (HDFS/S3 on a
-    cluster): every round's state survives executor loss and the loop
-    restarts tasks, not the campaign. Local mode keeps the default
-    localCheckpoint — single-JVM executors can't fail independently.
-    This is the scalable GraphFrames-free formulation, shared by every
-    registered pair source.
+    - **Driver** — a graph with fewer than ``CC_PAIRS_PER_PARTITION``
+      edges (less than one loop partition's worth) is collected and
+      labelled by one union-find pass that keeps each component's minimum
+      id, and returned as an Arrow-backed frame. On a small graph the
+      loop's cost is per-job planning and scheduling, not graph work:
+      at sf0.1 it ran 2 rounds and 22 jobs to label 256 edges, where the
+      driver pass runs the one collect job. The labels sit in driver
+      memory and the frame's plan carries them, so they need no reliable
+      checkpoint: losing an executor loses nothing that cannot be
+      re-sent.
+    - **Loop** — every larger graph runs iterative min-label propagation
+      on DataFrames, the only path that scales to a 100 TB pair graph.
+      Each round is one neighbor-min join + one pointer-doubling
+      self-join (label ← label[label]). Plain neighbor-min alone needs
+      O(component diameter) rounds; the doubling step halves the distance
+      to the component minimum every round, so chain-shaped clusters
+      converge in O(log diameter) — the same round bound as
+      star-contraction CC. Checkpointing truncates lineage so plans don't
+      grow exponentially.
 
-    The converged labels are held in the caller's ``slot`` of the slot
-    table (:func:`tables.persist_replacing`), one per checkpoint mode.
+    Durability (loop): ``checkpoint_dir`` (or
+    ``$SPARK_GRAFT_CHECKPOINT_DIR``) switches the checkpoints from
+    ``localCheckpoint`` (executor-local blocks — fast, but lost with a
+    failed executor, killing a long campaign run) to RELIABLE
+    ``checkpoint()`` into that directory (HDFS/S3 on a cluster): every
+    round's state survives executor loss and the loop restarts tasks,
+    not the campaign. Local mode keeps the default localCheckpoint —
+    single-JVM executors can't fail independently. The pair checkpoint
+    honours the same mode on both paths. This is the scalable
+    GraphFrames-free formulation, shared by every registered pair source.
+
+    The labels are held in the caller's ``slot`` of the slot table
+    (:func:`tables.persist_replacing`), one per checkpoint mode.
     """
     import os
 
@@ -399,25 +419,75 @@ def _cc_labels(pairs: DataFrame, checkpoint_dir: str | None) -> DataFrame:
     # the pair RDD twice until GC — the storage leak bench.py has to
     # gc-collect around.)
     pairs = _ckpt(pairs)
+    n_pairs = pairs.count()
+    if n_pairs < CC_PAIRS_PER_PARTITION:
+        global LAST_CC_ROUNDS
+        LAST_CC_ROUNDS = 0
+        return _driver_labels(pairs)
     # Size the loop's shuffles to the GRAPH, not the corpus: near-dup pairs
     # are a tiny fraction of the input, so running every CC round at the
     # corpus-sized shuffle width pays pure scheduling overhead per round;
     # the width grows back to the configured shuffle partitions once the
     # pair graph is big enough to need them. The repartition stays LAZY —
     # its shuffle runs once and later jobs reuse the shuffle files.
-    n_pairs = pairs.count()
     width = max(
         2,
         min(
             int(spark.conf.get("spark.sql.shuffle.partitions")),
-            n_pairs // 50_000 + 2,
+            n_pairs // CC_PAIRS_PER_PARTITION + 2,
         ),
     )
-    pairs = pairs.repartition(width)
-    edges = pairs.union(pairs.select(F.col("id_b"), F.col("id_a"))).toDF(
+    return _loop_labels(pairs.repartition(width), _ckpt)
+
+
+def _edges(pairs: DataFrame) -> DataFrame:
+    """(src, dst): the pair graph mirrored, each edge in both directions."""
+    return pairs.union(pairs.select(F.col("id_b"), F.col("id_a"))).toDF(
         "src", "dst"
     )
-    labels = _ckpt(
+
+
+def _driver_labels(pairs: DataFrame) -> DataFrame:
+    """The driver path of :func:`_connected_components`: collect the
+    pairs, union-find with the smaller root kept, and return the labels
+    with the loop's schema. Built from a pyarrow table, so the frame is
+    Arrow-backed whatever the session's Arrow setting: reading it needs no
+    Python worker (a pickled row list would cost a worker round trip on
+    every read). A NULL id labels itself NULL and joins nothing, as in the
+    loop, whose joins never match a NULL key."""
+    import pyarrow as pa
+
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs.collect():
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        if a is None or b is None:
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    src = F.col("src")
+    schema = _edges(pairs).select(src.alias("doc_id"), src.alias("component")).schema
+    nodes = list(parent)
+    # createDataFrame casts the columns to the schema's Arrow types
+    table = pa.table({"doc_id": nodes, "component": [find(x) for x in nodes]})
+    return pairs.sparkSession.createDataFrame(table, schema)
+
+
+def _loop_labels(pairs: DataFrame, ckpt) -> DataFrame:
+    """The loop path of :func:`_connected_components` over checkpointed
+    ``pairs``, ``ckpt`` the checkpoint of the caller's mode."""
+    edges = _edges(pairs)
+    labels = ckpt(
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node")),
@@ -453,7 +523,7 @@ def _cc_labels(pairs: DataFrame, checkpoint_dir: str | None) -> DataFrame:
         # lazy checkpoint: the convergence aggregate right below is the
         # round's one action — it materializes the checkpoint as a side
         # effect, halving the jobs per round vs an eager checkpoint
-        new_labels = _ckpt(
+        new_labels = ckpt(
             propagated.join(parent, propagated.label == parent.p_node, "left")
             .select(
                 "node",
@@ -482,8 +552,8 @@ def dedup_clusters(t: Tables, checkpoint_dir: str | None = None) -> DataFrame:
     labels: one canonical component id (= min doc_id reachable) per
     clustered document. Pair source: :func:`dedup.ngram_jaccard_pairs`
     (capped inverted index). Oracle: DuckDB recursive CTE computing min
-    reachable id. CC loop shared with :func:`dedup_clusters_minhash` —
-    see :func:`_connected_components` for the algorithm and its bounds.
+    reachable id. CC shared with :func:`dedup_clusters_minhash` — see
+    :func:`_connected_components` for its two paths and their bounds.
 
     The shared loop checkpoints the pair list BEFORE edge mirroring: a
     union of the raw pair plan with its swap would run the whole

@@ -10,7 +10,8 @@ per micro-batch of documents →
   1. intra-batch exact dedup (keep min doc_id per text),
   2. exact check against the corpus (anti-join on md5 — fixed-width keys),
   3. near-dup check against the corpus BAND INDEX (banded MinHash probe;
-     candidates verified with exact Jaccard — cost ∝ candidates),
+     corpus band buckets over ``BAND_BUCKET_CAP`` docs dropped; candidates
+     verified with exact Jaccard — cost ∝ candidates),
   4. survivors appended to the corpus table AND the band index.
 
 The corpus directory holds two parquet tables that grow batch-over-batch:
@@ -39,7 +40,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import (
+    BAND_BUCKET_CAP,
     _banded,
+    _posting,
     _shingles,
     _signatures_from_shingles,
     _verify_jaccard,
@@ -59,6 +62,23 @@ def _corpus_exists(spark: SparkSession, corpus_dir: str) -> bool:
     d = _docs_dir(corpus_dir)
     return os.path.isdir(d) and any(
         f.endswith(".parquet") for f in os.listdir(d)
+    )
+
+
+def _band_candidates(b_bands: DataFrame, bands: DataFrame) -> DataFrame:
+    """(new_id, old_id): batch docs × corpus docs sharing a band key. A
+    corpus bucket holding more than ``BAND_BUCKET_CAP`` docs is dropped
+    before the join, the hot-bucket bound of every dedup band join: one
+    template family's shared band key would otherwise make one task
+    build |batch bucket| × |corpus bucket| candidates and verify each."""
+    corpus = _posting(bands, "doc_id", "bk").where(
+        F.size("ds") <= BAND_BUCKET_CAP
+    )
+    return (
+        b_bands.select(F.col("doc_id").alias("new_id"), "bk")
+        .join(corpus.select("bk", F.explode("ds").alias("old_id")), "bk")
+        .select("new_id", "old_id")
+        .dropDuplicates(["new_id", "old_id"])
     )
 
 
@@ -85,12 +105,7 @@ def ingest_batch(batch_df: DataFrame, corpus_dir: str) -> None:
         bands = spark.read.parquet(_bands_dir(corpus_dir))
         b_sh = _shingles(batch).localCheckpoint()
         b_bands = _banded(_signatures_from_shingles(b_sh))
-        cands = (
-            b_bands.select(F.col("doc_id").alias("new_id"), "bk")
-            .join(bands.select(F.col("doc_id").alias("old_id"), "bk"), "bk")
-            .select("new_id", "old_id")
-            .dropDuplicates(["new_id", "old_id"])
-        )
+        cands = _band_candidates(b_bands, bands)
         # verify on candidate docs ONLY: shingle just the matched corpus rows
         old_ids = cands.select(F.col("old_id").alias("doc_id")).distinct()
         o_sh = _shingles(corpus.join(old_ids, "doc_id"))

@@ -332,7 +332,7 @@ def test_dedup_clusters_transitive(spark):
     assert out == {10: 10, 11: 10, 12: 10}
 
 
-def test_cc_reliable_checkpoint_identical_labels(spark, tmp_path):
+def test_cc_reliable_checkpoint_identical_labels(spark, tmp_path, monkeypatch):
     """With a reliable checkpoint dir configured (the cluster-durable
     posture — localCheckpoint blocks die with their executor), the CC
     loop must produce byte-identical labels AND actually write checkpoint
@@ -340,6 +340,9 @@ def test_cc_reliable_checkpoint_identical_labels(spark, tmp_path):
     slot's identity: with the local labels still held, the reliable
     request must miss and run its own loop."""
     import os
+
+    # the graph is small: lower the gate so the loop, not the driver, runs
+    monkeypatch.setattr(pipeline, "CC_PAIRS_PER_PARTITION", 1)
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)],
@@ -368,11 +371,13 @@ def test_cc_reliable_checkpoint_identical_labels(spark, tmp_path):
     pipeline.clear_cc_memo()
 
 
-def test_cc_chain_converges_in_log_rounds(spark):
+def test_cc_chain_converges_in_log_rounds(spark, monkeypatch):
     """Pointer doubling must bound the round count at O(log diameter):
     a 64-edge chain (diameter 64) converges in ~log2(64)+2 rounds, not
     ~64 — the property that makes the loop viable on a 100 TB pair graph
     with long thin components."""
+    # the graph is small: lower the gate so the loop, not the driver, runs
+    monkeypatch.setattr(pipeline, "CC_PAIRS_PER_PARTITION", 1)
     n = 65
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
@@ -384,6 +389,100 @@ def test_cc_chain_converges_in_log_rounds(spark):
     # log2(64) = 6 doubling rounds + neighbor slack + the equal-sum
     # convergence round; a plain neighbor-min loop would need ~64
     assert pipeline.LAST_CC_ROUNDS <= 12, pipeline.LAST_CC_ROUNDS
+    pipeline.clear_cc_memo()
+
+
+def _cc_graph(spark, kind):
+    """A named (id_a long, id_b long) pair graph for the CC path tests."""
+    import random
+
+    schema = "id_a long, id_b long"
+    if kind.startswith("random"):
+        rng = random.Random(int(kind[len("random"):]))
+        rows = [(rng.randrange(300), rng.randrange(300)) for _ in range(200)]
+    elif kind == "chain":
+        rows = [(i, i + 1) for i in range(64)]
+    elif kind == "star":
+        rows = [(i, 7) for i in range(40) if i != 7]
+    elif kind == "disjoint":  # spark.range: NOT NULL columns
+        return spark.range(30).select(
+            (F.col("id") * 2).alias("id_a"), (F.col("id") * 2 + 1).alias("id_b")
+        )
+    else:
+        rows = {"empty": [], "single_edge": [(1, 2)], "self_pair": [(5, 5)]}[kind]
+    return spark.createDataFrame(rows, schema)
+
+
+@pytest.mark.parametrize(
+    "kind",
+    ["random1", "random2", "random3", "chain", "star", "disjoint",
+     "empty", "single_edge", "self_pair"],
+)
+def test_cc_driver_path_equals_loop(spark, kind):
+    """The driver union-find and the distributed loop label every graph
+    alike: same rows, same schema (nullability included)."""
+    pairs = _cc_graph(spark, kind).localCheckpoint()
+    driver = pipeline._driver_labels(pairs)
+    loop = pipeline._loop_labels(
+        pairs, lambda df, eager=True: df.localCheckpoint(eager=eager)
+    )
+    assert repr(driver.schema) == repr(loop.schema)
+    got = sorted(map(tuple, driver.collect()))
+    assert got == sorted(map(tuple, loop.collect()))
+    expected = {
+        "empty": [],
+        "single_edge": [(1, 1), (2, 1)],
+        "self_pair": [(5, 5)],
+        "chain": [(i, 0) for i in range(65)],
+        "star": [(i, 0) for i in range(40)],
+        "disjoint": [(i, i - i % 2) for i in range(60)],
+    }
+    if kind in expected:
+        assert got == expected[kind]
+
+
+def test_cc_gate_boundary(spark):
+    """A graph one edge below ``CC_PAIRS_PER_PARTITION`` is labelled on
+    the driver (0 loop rounds); one at the bound runs the loop. Both give
+    each disjoint pair its smaller id, with the same schema."""
+    bound = pipeline.CC_PAIRS_PER_PARTITION
+    schemas = []
+    for n, driver in ((bound - 1, True), (bound, False)):
+        pipeline.clear_cc_memo()
+        pairs = spark.range(n).select(
+            (F.col("id") * 2).alias("id_a"), (F.col("id") * 2 + 1).alias("id_b")
+        )
+        labels = pipeline._connected_components(pairs, "test")
+        assert (pipeline.LAST_CC_ROUNDS == 0) == driver, pipeline.LAST_CC_ROUNDS
+        row = labels.agg(
+            F.count("*").alias("n"),
+            F.sum(
+                (F.col("component") != F.col("doc_id") - F.col("doc_id") % 2).cast(
+                    "long"
+                )
+            ).alias("bad"),
+        ).first()
+        assert (row["n"], row["bad"]) == (2 * n, 0)
+        schemas.append(repr(labels.schema))
+    assert schemas[0] == schemas[1]
+    pipeline.clear_cc_memo()
+
+
+def test_dedup_clusters_empty_documents(spark):
+    """Over an empty documents table the cluster queries return 0 rows
+    with the schema they have over a non-empty corpus."""
+    y = "one two three four five six seven eight nine ten"
+    full = spark.createDataFrame(
+        [(10, y + " aa bb"), (11, y + " aa cc")], "doc_id long, text string"
+    )
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    for query in (pipeline.dedup_clusters, pipeline.dedup_cluster_size_histogram):
+        pipeline.clear_cc_memo()
+        usual = query({"documents": full})
+        assert usual.count() > 0
+        out = query({"documents": empty})
+        assert out.collect() == []
+        assert repr(out.schema) == repr(usual.schema)
     pipeline.clear_cc_memo()
 
 
@@ -2576,6 +2675,54 @@ def test_lsh_band_bucket_cap_bounds_identical_vectors(spark, n_probes):
     assert similarity.lsh_bucketed_pairs(hot, n_probes=n_probes).count() == 0
     cool = similarity.lsh_bucketed_pairs(table(12), n_probes=n_probes)
     assert cool.count() == 12 * 11 // 2
+
+
+def test_ingest_dedup_caps_hot_corpus_band_bucket(spark, tmp_path):
+    """The corpus side of the ingest band probe is capped at
+    ``BAND_BUCKET_CAP`` docs per band key, like every dedup band join: a
+    corpus holding a 600-doc family of near-identical (not byte-identical)
+    documents must not turn a new family member into 600 candidates, and
+    an ordinary near-dup of a corpus document is still suppressed."""
+    from streamming_processing_pyspark_spark.streaming.ingest_dedup import (
+        _band_candidates,
+        ingest_batch,
+    )
+
+    corpus = str(tmp_path / "corpus")
+    template = " ".join(f"boiler{i} plate{i % 7}" for i in range(30))
+    base = "the quick brown fox jumps over the lazy dog again and again today"
+    family = 600
+    first = [(i, f"{template} variant{i}") for i in range(family)]
+    first.append((10_000, base))
+    ingest_batch(spark.createDataFrame(first, "doc_id long, text string"), corpus)
+
+    probe = spark.createDataFrame(
+        [
+            (20_000, f"{template} variant{family}"),  # new family member
+            (20_001, base + " extra"),  # near-dup of doc 10000
+            (20_002, "entirely novel unrelated second batch document text"),
+        ],
+        "doc_id long, text string",
+    )
+    cands = _band_candidates(
+        dedup._banded(dedup._signatures_from_shingles(dedup._shingles(probe))),
+        spark.read.parquet(corpus + "/bands"),
+    )
+    per_new = {
+        r["new_id"]: r["n"]
+        for r in cands.groupBy("new_id").agg(F.count("*").alias("n")).collect()
+    }
+    assert per_new.get(20_000, 0) <= dedup.BAND_BUCKET_CAP < family, per_new
+    assert per_new.get(20_001) == 1, per_new
+
+    ingest_batch(probe, corpus)
+    got = {
+        r["doc_id"]
+        for r in spark.read.parquet(corpus + "/docs")
+        .where(F.col("doc_id") >= 20_000)
+        .collect()
+    }
+    assert 20_001 not in got and 20_002 in got, got
 
 
 def test_simhash_degenerate_fingerprints_excluded(spark):
