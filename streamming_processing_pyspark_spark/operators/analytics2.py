@@ -215,9 +215,9 @@ def merge_upsert_orders(tables: dict[str, DataFrame]) -> DataFrame:
     coalesce-based column resolution: matched → source wins, unmatched
     target → row kept, unmatched source → row inserted. This is exactly
     the join MERGE compiles to in lakehouse engines; with a real table
-    format (Delta/Iceberg, classpath-gated in sources/connectors.py)
-    the same change set feeds ``MERGE INTO``, which additionally prunes
-    untouched files. Bucketing both sides on the key makes the join
+    format (Delta/Iceberg, whose connector jars this build does not
+    ship) the same change set feeds ``MERGE INTO``, which additionally
+    prunes untouched files. Bucketing both sides on the key makes the join
     shuffle-free on repeated merges.
 
     All money is integer cents (+5 % as ``cents DIV 20``), so the

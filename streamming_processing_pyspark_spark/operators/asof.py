@@ -1,22 +1,16 @@
 """As-of (point-in-time) join — an operator Spark lacks natively.
 
-Two formulations, row-for-row equal (pinned in tests):
-
-- :func:`asof_join_window` (the registered plan): ONE window over the
-  tagged union of both sides — a single exchange on the key, fully
-  JVM-side, tie-break folded into the window ordering. The 100 TB
-  default.
-- :func:`asof_join` (cogrouped ``applyInPandas``): both sides
-  hash-partition on the equi-key and each bucket merges with
-  ``pd.merge_asof`` inside an Arrow batch — kept as the carrier for
-  wide right payloads, where unioning the two schemas would widen
-  every left row with mostly-null right columns before the filter.
+:func:`asof_join_window` is ONE window over the tagged union of both
+sides: a single exchange on the key, fully JVM-side, tie-break folded
+into the window ordering.
 
 The DuckDB oracle uses its native ``ASOF JOIN``. To keep both engines
-deterministic the right side is deduplicated to one row per
-(key, time) — max o_orderkey wins — since as-of tie-breaking between equal
-timestamps is otherwise engine-defined (the window form encodes the same
-tie-break in its ordering instead of a separate dedup pass).
+deterministic the oracle deduplicates the right side to one row per
+(key, time) — max o_orderkey wins — since as-of tie-breaking between
+equal timestamps is otherwise engine-defined; the window form encodes the
+same tie-break in its ordering instead of a separate dedup pass. A
+brute-force Python as-of pins the tie-break on random inputs
+(tests/test_property.py::test_asof_window_matches_python_reimpl).
 """
 
 from __future__ import annotations
@@ -25,92 +19,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 Tables = dict[str, DataFrame]
-
-ASOF_OUTPUT_SCHEMA = (
-    "event_id bigint, user_id bigint, ts timestamp, "
-    "o_orderkey bigint, o_orderdate timestamp"
-)
-
-
-def _dedup_orders(orders: DataFrame) -> DataFrame:
-    w = Window.partitionBy("o_custkey", "o_orderdate").orderBy(
-        F.col("o_orderkey").desc()
-    )
-    return (
-        orders.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("o_custkey", "o_orderdate", "o_orderkey")
-    )
-
-
-def _asof_buckets(df: DataFrame) -> int:
-    """Bucket count scales with the cluster (≈2 waves of cogroup tasks)
-    instead of a fixed constant: enough buckets to occupy every core, few
-    enough that each pandas invocation amortizes over a large merge."""
-    return max(16, 2 * df.sparkSession.sparkContext.defaultParallelism)
-
-
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_key: str,
-    right_key: str,
-    left_time: str,
-    right_time: str,
-    schema: str,
-    right_cols: list[str],
-) -> DataFrame:
-    """Generic as-of join: for each left row, the latest right row with
-    ``right_time <= left_time`` within the same key. Inner semantics
-    (unmatched left rows drop).
-
-    Cogrouping is by a *hash bucket* of the key, not the key itself: with
-    per-key cogroups each group pays the Python/pandas invocation overhead
-    (1500 keys ≈ 20s at sf0.1); with ~64 buckets each invocation runs ONE
-    vectorized ``pd.merge_asof(..., by=key)`` over the whole bucket
-    (same result, 1.5s). Key skew spreads only as far as its bucket —
-    acceptable because merge_asof is linear in the bucket size.
-    """
-
-    def merge(lpdf, rpdf):
-        import pandas as pd
-
-        if len(lpdf) == 0 or len(rpdf) == 0:
-            return pd.DataFrame(
-                {c: pd.Series(dtype="object") for c in list(lpdf.columns) + right_cols}
-            )
-        lpdf = lpdf.copy()
-        lpdf[left_time] = lpdf[left_time].astype("datetime64[us]")
-        rpdf = rpdf.copy()
-        rpdf[right_time] = rpdf[right_time].astype("datetime64[us]")
-        if right_key != left_key:
-            rpdf = rpdf.rename(columns={right_key: left_key})
-        merged = pd.merge_asof(
-            lpdf.sort_values(left_time, kind="mergesort"),
-            rpdf[[left_key, right_time, *[c for c in right_cols if c != right_time]]]
-            .sort_values(right_time, kind="mergesort"),
-            left_on=left_time,
-            right_on=right_time,
-            by=left_key,
-            direction="backward",
-        )
-        matched = merged.dropna(subset=[c for c in right_cols if c != right_time])
-        return matched[list(lpdf.columns) + right_cols]
-
-    n_buckets = _asof_buckets(left)
-    lb = left.withColumn("_bk", F.pmod(F.xxhash64(left_key), F.lit(n_buckets)))
-    rb = right.withColumn("_bk", F.pmod(F.xxhash64(right_key), F.lit(n_buckets)))
-
-    def merge_drop_bucket(lpdf, rpdf):
-        out = merge(lpdf.drop(columns=["_bk"]), rpdf.drop(columns=["_bk"]))
-        return out
-
-    return (
-        lb.groupBy("_bk")
-        .cogroup(rb.groupBy("_bk"))
-        .applyInPandas(merge_drop_bucket, schema=schema)
-    )
-
 
 def asof_join_window(
     left: DataFrame,
@@ -134,14 +42,12 @@ def asof_join_window(
     timestamps right sorts before left (inclusive ``right_time <=
     left_time``), and among equal-time right rows the greatest
     ``right_tiebreak`` sorts last and wins — so the one-row-per-(key,time)
-    dedup of the cogroup form needs NO separate shuffle here.
+    dedup needs NO separate shuffle here.
 
     Plan shape: scan+scan → union → ONE hash exchange on the key →
-    per-partition sort → window → filter. vs the cogrouped
-    :func:`asof_join`'s 3 exchanges + FlatMapCoGroupsInPandas (r4 plan
-    audit), this is 1 exchange and stays inside whole-stage codegen —
-    the right shape for a 100 TB fact stream. Skewed keys sort within
-    one partition either way; the window is linear per partition.
+    per-partition sort → window → filter: 1 exchange, inside whole-stage
+    codegen — the right shape for a 100 TB fact stream. Skewed keys sort
+    within one partition; the window is linear per partition.
 
     ``direction="forward"`` flips the scan to time-DESCENDING, giving
     the NEAREST right row at-or-after the left time (inclusive
@@ -212,10 +118,7 @@ def asof_join_window(
 def asof_latest_order(t: Tables) -> DataFrame:
     """Each event joined to the user's most recent order at event time.
 
-    Runs the single-shuffle :func:`asof_join_window` plan (the cogrouped
-    :func:`asof_join` remains the generic carrier for wide right payloads;
-    equality of the two pinned in
-    tests/test_operators.py::test_asof_window_equals_cogroup). The
+    Runs the single-shuffle :func:`asof_join_window` plan. The
     max-orderkey tie-break at equal (user, date) is expressed in the
     window ordering, so no pre-dedup shuffle is needed."""
     ev = t["events"].select("event_id", "user_id", "ts")
@@ -230,23 +133,6 @@ def asof_latest_order(t: Tables) -> DataFrame:
         right_time="o_orderdate",
         right_cols=["o_orderkey", "o_orderdate"],
         right_tiebreak="o_orderkey",
-    )
-
-
-def asof_latest_order_cogroup(t: Tables) -> DataFrame:
-    """The cogrouped-pandas form of :func:`asof_latest_order` (kept as the
-    equality twin and the template for wide right payloads)."""
-    ev = t["events"].select("event_id", "user_id", "ts")
-    orders = _dedup_orders(t["orders"]).withColumnRenamed("o_custkey", "user_id")
-    return asof_join(
-        ev,
-        orders,
-        left_key="user_id",
-        right_key="user_id",
-        left_time="ts",
-        right_time="o_orderdate",
-        schema=ASOF_OUTPUT_SCHEMA,
-        right_cols=["o_orderkey", "o_orderdate"],
     )
 
 

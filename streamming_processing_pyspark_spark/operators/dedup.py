@@ -804,11 +804,6 @@ def near_dup_threshold_sweep_check(t: Tables) -> DataFrame:
     return _sweep_rollup(pc)
 
 
-def minhash_signatures(t: Tables) -> DataFrame:
-    """k MinHash values per doc from one xxhash64 pass over shingles."""
-    return _signatures_from_shingles(_shingles(t["documents"]))
-
-
 def _signatures_from_shingles(sh: DataFrame) -> DataFrame:
     """k MinHash values per doc from one xxhash64 pass over a shingle frame.
 
@@ -1568,7 +1563,7 @@ ORACLES: dict[str, str] = {
                               AS BIGINT) END AS transitivity_bp
         FROM np, wd, tr
     """,
-    # minhash_lsh_pairs / minhash_signatures / simhash_fingerprints:
+    # minhash_lsh_pairs / simhash_fingerprints:
     # xxhash64-based — rows-only driver check; minhash_recall_check below
     # turns the subset + recall contract into a hard driver check.
     "minhash_recall_check": f"""

@@ -75,10 +75,6 @@ DSIR_TARGET_LANG = "en"
 #: how many raw docs the resampling step keeps
 DSIR_N = 100
 
-#: temperature-mix group key lives on documents.lang (en is ~3× fr in the
-#: synthetic corpus, so the flattening is visibly non-trivial)
-TEMP_TAU_NUM, TEMP_TAU_DEN = 1, 2  # tau = 1/2 → rate = sqrt(n_min/n_g)
-
 #: gate-grade hash constants: a Bernoulli accept gate needs a UNIFORM
 #: u = h/MOD, which the affine char-fold does not give for short keys
 #: (nearby ids differ by tiny deltas; measured mean(u) ≈ 0.25 on

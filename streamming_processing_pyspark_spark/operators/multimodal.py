@@ -6,12 +6,12 @@ runs as Arrow-batched ``mapInPandas`` so each task processes whole record
 batches without per-row Python overhead, and the *schema* is declared up
 front so Catalyst can prune/pushdown around the opaque column.
 
-The container has no image/audio libraries, so the actual media decode is a
-clearly-marked stub (:func:`decode_media_stub`); everything Spark-side —
-binary column handling, metadata struct, mapInPandas batch shape,
-deterministic feature extraction — is real and oracle-checked
-(:func:`multimodal_features` reproduces byte-exact integer features that the
-DuckDB oracle recomputes from the text the binary was derived from).
+No image/audio codec is bundled, so no operator decodes media; the
+features are deterministic byte statistics instead. Everything
+Spark-side — binary column handling, metadata struct, mapInPandas batch
+shape, feature extraction — is oracle-checked (:func:`multimodal_features`
+reproduces byte-exact integer features that the DuckDB oracle recomputes
+from the text the binary was derived from).
 """
 
 from __future__ import annotations
@@ -78,27 +78,6 @@ def multimodal_features(t: Tables) -> DataFrame:
     payload = with_binary_payload(t["documents"])
     return payload.select("doc_id", "payload").mapInPandas(
         _extract_features, schema=FEATURE_SCHEMA
-    )
-
-
-def decode_media_stub(t: Tables) -> DataFrame:
-    """Media decode stub — the production signature without the codec.
-
-    Raises NotImplementedError at execution: image/audio codecs are not in
-    this container. The plumbing (schema, batch iteration) is the same as
-    :func:`multimodal_features`.
-    """
-
-    def _decode(batches: Iterator) -> Iterator:
-        raise NotImplementedError(
-            "media decode requires image/audio codecs not present in this "
-            "environment; see multimodal_features for the checked plumbing"
-        )
-        yield  # pragma: no cover
-
-    payload = with_binary_payload(t["documents"])
-    return payload.mapInPandas(
-        _decode, schema="doc_id bigint, width int, height int"
     )
 
 

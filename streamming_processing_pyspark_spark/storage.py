@@ -1,52 +1,21 @@
-"""Storage layout & skew utilities — the 100 TB posture as code.
+"""Storage layouts that let min/max statistics skip files.
 
-- :func:`write_partitioned_by_date` — the canonical fact-table layout:
-  parquet partitioned by event date, so date-ranged queries prune whole
-  directories (PartitionFilters) before any IO.
-- :func:`write_bucketed` / :func:`read_bucketed_join` — bucketing on the
-  join key: two tables bucketed the same way join with zero shuffle
-  (asserted in tests/test_storage.py on the physical plan).
-- :func:`salted_aggregate` — two-phase aggregation for skewed keys: salt →
-  partial agg on (key, salt) → final agg on key. AQE's skew-join handling
-  covers joins; this covers the pathological hot-key *aggregation* case
-  where one key carries a large share of all rows.
 - :func:`write_range_clustered` — range-partition + sort-within-partitions
   on a clustering column before writing: each parquet file covers a narrow,
   non-overlapping value range, so min/max row-group statistics prune files
-  for range predicates (the single-column equivalent of Z-ordering; the
-  data-layout lever once directory-level partition pruning is exhausted).
+  for range predicates (the data-layout lever once directory-level
+  partition pruning is exhausted).
+- :func:`zorder_key` / :func:`write_zordered` — the two-column form: files
+  clustered on a Morton key prune for predicates on either column.
+
+Directory partitioning and bucketing are Spark's own
+``DataFrameWriter.partitionBy`` and ``bucketBy``; they need no wrapper.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def write_partitioned_by_date(
-    df: DataFrame, path: str, ts_col: str = "ts", mode: str = "overwrite"
-) -> None:
-    """Write parquet partitioned by the event date of ``ts_col``."""
-    (
-        df.withColumn("dt", F.to_date(F.col(ts_col)))
-        .write.mode(mode)
-        .partitionBy("dt")
-        .parquet(path)
-    )
-
-
-def write_bucketed(
-    df: DataFrame, table: str, key: str, n_buckets: int = 8, mode: str = "overwrite"
-) -> None:
-    """Persist hash-bucketed by ``key`` (sorted within buckets) so later
-    equi-joins/aggregations on ``key`` need no shuffle."""
-    (
-        df.write.mode(mode)
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .format("parquet")
-        .saveAsTable(table)
-    )
 
 
 def write_range_clustered(
@@ -128,172 +97,3 @@ def write_zordered(
         .write.mode(mode)
         .parquet(path)
     )
-
-
-def salted_aggregate(
-    df: DataFrame,
-    key: str,
-    aggs: dict[str, Column],
-    n_salt: int = 16,
-) -> DataFrame:
-    """Skew-resistant aggregation for algebraic aggregates (sum/count/min/max).
-
-    Phase 1 groups on (key, salt) — the hot key's rows spread over
-    ``n_salt`` reducers — phase 2 merges the partials per key. The salt is
-    derived deterministically from the whole row (xxhash64 of all columns),
-    no RNG. ``aggs`` maps output column name -> phase-1 aggregate; phase 2
-    re-merges with the matching algebraic combiner (sum for sum/count,
-    min/max for min/max) inferred from the name prefix.
-    """
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_salt))
-    )
-    partial = salted.groupBy(key, "_salt").agg(
-        *[a.alias(f"_p_{name}") for name, a in aggs.items()]
-    )
-
-    def _combiner(name: str) -> Column:
-        col = F.col(f"_p_{name}")
-        if name.startswith(("min", "_min")):
-            return F.min(col)
-        if name.startswith(("max", "_max")):
-            return F.max(col)
-        return F.sum(col)  # sums and counts both merge by summation
-
-    return partial.groupBy(key).agg(
-        *[_combiner(name).alias(name) for name in aggs]
-    )
-
-
-def write_inverted_index(
-    docs: DataFrame,
-    table: str = "term_index",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 16,
-    mode: str = "overwrite",
-) -> None:
-    """Materialize a term → posting-list inverted index, hash-bucketed by
-    term.
-
-    The serving-side complement to the batch retrieval operators
-    (bm25_search scans; an index answers point term lookups): one
-    explode + groupBy builds sorted posting lists with document
-    frequency, and bucketing by term means (a) an equality lookup scans
-    ONE bucket (``SelectedBucketsCount`` in the plan — file-level
-    pruning without any shuffle) and (b) index-index or index-query
-    joins on term need no exchange. Postings are sorted so downstream
-    list intersections can merge.
-    """
-    idx = (
-        docs.select(
-            F.explode(F.split(F.trim(text_col), r"\s+")).alias("term"),
-            F.col(id_col),
-        )
-        .groupBy("term")
-        .agg(
-            F.sort_array(F.collect_set(id_col)).alias("postings"),
-            F.count("*").alias("tf_total"),
-        )
-        .withColumn("df", F.size("postings"))
-    )
-    (
-        idx.write.mode(mode)
-        .bucketBy(n_buckets, "term")
-        .sortBy("term")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
-def write_with_bloom_filters(
-    df: DataFrame, path: str, cols: list[str], ndv: int = 100_000, mode: str = "overwrite"
-) -> None:
-    """Write parquet with bloom filters on ``cols``.
-
-    Min/max row-group stats only skip for RANGE-correlated layouts
-    (:func:`write_range_clustered` / :func:`write_zordered`); point
-    lookups on high-cardinality, unclustered columns (user_id, event_id,
-    doc hash) need bloom filters — the reader proves absence per row
-    group without scanning it. ``ndv`` sizes the filter (expected
-    distinct values per row group). Note parquet-mr only materializes the
-    filter when the column falls back from dictionary encoding (a
-    complete dictionary already answers membership exactly), so
-    low-cardinality columns show no filter — which is correct: they don't
-    need one.
-    """
-    w = df.write.mode(mode)
-    for c in cols:
-        w = w.option(f"parquet.bloom.filter.enabled#{c}", "true").option(
-            f"parquet.bloom.filter.expected.ndv#{c}", str(ndv)
-        )
-    w.parquet(path)
-
-
-def compact_parquet(
-    spark,
-    path: str,
-    out_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Compact a small-file parquet directory into ~``target_file_bytes``
-    files; returns the output file count.
-
-    Streaming sinks and fine-grained partition overwrites leave thousands
-    of tiny files per directory; at 100 TB the resulting scan is dominated
-    by open/footer costs and the NameNode/object-store listing, so
-    periodic compaction is standing maintenance. File count is derived
-    from the actual on-disk byte size; the rewrite is one round-robin
-    repartition (even output sizes, no skew by input layout).
-    """
-    import math
-    import os
-
-    df = spark.read.parquet(path)
-    total = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    n = max(1, math.ceil(total / target_file_bytes))
-    df.repartition(n).write.mode("overwrite").parquet(out_path)
-    return len(
-        [
-            f
-            for dp, _, files in os.walk(out_path)
-            for f in files
-            if f.endswith(".parquet")
-        ]
-    )
-
-
-#: batch file formats bundled with Spark (no extra jars). Avro/Delta/Iceberg
-#: need their connector on the classpath — see sources/connectors.py gating.
-SUPPORTED_BATCH_FORMATS = ("parquet", "orc", "json", "csv")
-
-
-def write_table(
-    df: DataFrame, path: str, fmt: str = "parquet", mode: str = "overwrite", **options
-) -> None:
-    """Write ``df`` at ``path`` in any bundled batch format.
-
-    CSV defaults to header=true so files are self-describing; parquet/orc
-    carry their schema natively. Column-oriented formats (parquet, orc)
-    are the only sane choice at 100 TB — json/csv exist for interchange.
-    """
-    if fmt == "csv":
-        options.setdefault("header", "true")
-    df.write.mode(mode).options(**options).format(fmt).save(path)
-
-
-def read_table_fmt(spark, path: str, fmt: str = "parquet", schema=None, **options):
-    """Read ``path`` back; pass ``schema`` for text formats (json/csv infer
-    strings/doubles otherwise — at scale, inference is also a full extra
-    pass over the data, so production readers always declare the schema)."""
-    if fmt == "csv":
-        options.setdefault("header", "true")
-    r = spark.read.options(**options)
-    if schema is not None:
-        r = r.schema(schema)
-    return r.format(fmt).load(path)

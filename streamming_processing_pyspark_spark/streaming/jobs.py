@@ -317,39 +317,6 @@ def run_foreach_batch(
     return writer.start()
 
 
-def upsert_partition_overwrite(
-    batch_df: DataFrame, out_dir: str, partition_cols: list[str]
-) -> None:
-    """Exactly-once parquet upsert for an UPDATE-mode aggregation stream:
-    each micro-batch dynamically overwrites ONLY the partitions it carries
-    (``partitionOverwriteMode=dynamic``), replacing stale aggregates for
-    re-emitted keys and leaving untouched partitions in place.
-
-    With checkpointing this gives end-to-end exactly-once on a plain
-    parquet table: a replayed batch rewrites the same partitions with the
-    same content (idempotent), and a crashed write is replaced wholesale on
-    retry. This is the production fan-out of the reference's per-window
-    file sinks — same per-window-replacement contract, but distributed,
-    columnar, and readable as one table.
-
-    CONTRACT: ``partition_cols`` must cover the stream's full grouping key
-    (one aggregate row group per partition directory). If the partition is
-    coarser — e.g. grouped by (window, key) but partitioned only by window
-    — a micro-batch that re-emits one key of a window would overwrite that
-    window's whole partition and DELETE the other keys' aggregates.
-    """
-    # writer-level option, NOT session conf: a session-wide flip (even
-    # restored in finally) is visible to any concurrent query on the same
-    # SparkSession — a second stream's static overwrite could silently turn
-    # dynamic or clobber the restore. The option scopes it to this write.
-    (
-        batch_df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .parquet(out_dir)
-    )
-
-
 def sessionize_stream(
     events: DataFrame, gap: str = "30 minutes", watermark: str | None = None
 ) -> DataFrame:

@@ -12,6 +12,11 @@ Emission is at-most-once per (key, window): a window is emitted the first
 time the trend condition becomes true for it. State is bounded by eviction:
 windows older than ``retention_windows`` behind the max seen window are
 dropped (the watermark analogue for this hand-rolled state).
+
+``applyInPandasWithState`` is the one stateful API used. Spark 4's
+``transformWithStateInPandas`` would carry the same :func:`_trend_step`,
+but its state-server protocol needs the ``protobuf`` package, which this
+build does not ship.
 """
 
 from __future__ import annotations
@@ -52,8 +57,8 @@ def _bucket_counts(windows: dict, pdf_iter: Iterator, window_seconds: int) -> No
 
 def _trend_core(windows: dict, emitted_set: set, window_seconds: int,
                 min_count: int, retention_windows: int):
-    """The trend rule and its state eviction (run by :func:`_trend_step`
-    for both stateful APIs). A window trends when it has ≥ ``min_count`` rows and at least
+    """The trend rule and its state eviction (run by :func:`_trend_step`).
+    A window trends when it has ≥ ``min_count`` rows and at least
     twice its predecessor's count; each trending window is emitted once
     (``emitted_set``). Windows older than ``retention_windows`` behind the
     newest are evicted. Returns (rows (w, cnt, prev_cnt), windows,
@@ -78,10 +83,9 @@ def _trend_core(windows: dict, emitted_set: set, window_seconds: int,
 
 def _trend_step(key, prior, rows: Iterator, window_seconds: int,
                 min_count: int, retention_windows: int):
-    """One state update, shared by both stateful APIs: decode the stored
-    ``(starts, counts, emitted)`` tuple ``prior`` (``None`` for a new
-    key), add ``rows``' window buckets, apply :func:`_trend_core`, and
-    encode the state again. Returns (state tuple, pandas output frame —
+    """One state update: decode the stored ``(starts, counts, emitted)``
+    tuple ``prior`` (``None`` for a new key), add ``rows``' window
+    buckets, apply :func:`_trend_core`, and encode the state again. Returns (state tuple, pandas output frame —
     ``None`` when nothing trends)."""
     import pandas as pd
 
@@ -119,24 +123,6 @@ def make_trend_fn(
     return fn
 
 
-def _grouped_by_key(keyed: DataFrame, key_col: str, ts_col: str):
-    """The stateful operators' input: ``key, ts`` rows grouped by key."""
-    return keyed.select(
-        F.col(key_col).alias("key"), F.col(ts_col).alias("ts")
-    ).groupBy("key")
-
-
-def _with_window_timestamps(result: DataFrame) -> DataFrame:
-    """The stateful operators' output: ``window_start`` (epoch seconds in
-    :data:`OUTPUT_SCHEMA`) back as a timestamp."""
-    return result.select(
-        "key",
-        F.timestamp_seconds("window_start").alias("window_start"),
-        "cnt",
-        "prev_cnt",
-    )
-
-
 def trending_stateful(
     keyed: DataFrame,
     key_col: str = "headquarters",
@@ -150,76 +136,21 @@ def trending_stateful(
     (key, window_start(ts), cnt, prev_cnt) emitted when the trend condition
     first becomes true for that window.
     """
-    result = _grouped_by_key(keyed, key_col, ts_col).applyInPandasWithState(
-        make_trend_fn(window_seconds, min_count),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
+    result = (
+        keyed.select(F.col(key_col).alias("key"), F.col(ts_col).alias("ts"))
+        .groupBy("key")
+        .applyInPandasWithState(
+            make_trend_fn(window_seconds, min_count),
+            outputStructType=OUTPUT_SCHEMA,
+            stateStructType=STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf="NoTimeout",
+        )
     )
-    return _with_window_timestamps(result)
-
-
-class StatefulApiUnavailable(RuntimeError):
-    """transformWithState's Python-side dependencies are missing."""
-
-
-def trending_stateful_tws(
-    keyed: DataFrame,
-    key_col: str = "headquarters",
-    ts_col: str = "dropoff_ts",
-    window_seconds: int = 600,
-    min_count: int = 10,
-    retention_windows: int = 1000,
-) -> DataFrame:
-    """:func:`trending_stateful` on ``transformWithStateInPandas`` — the
-    Spark 4 stateful-processor API (successor to applyInPandasWithState).
-
-    Same semantics, modern machinery: state lives in named ValueState on a
-    StatefulProcessor handle (composable with timers/TTL; RocksDB-backed on
-    a cluster), instead of a single implicit GroupState tuple. Both
-    variants share ``_trend_step``; a test asserts identical output.
-
-    Requires ``protobuf`` (the TWS state-server protocol) and the RocksDB
-    state store provider; fails fast with an actionable error when the
-    Python dependency is absent (as in this container — the
-    applyInPandasWithState variant above has no such dependency).
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:  # pragma: no cover - env-dependent
-        raise StatefulApiUnavailable(
-            "transformWithStateInPandas needs the 'protobuf' package for its "
-            "state-server protocol; pip install protobuf (and set "
-            "spark.sql.streaming.stateStore.providerClass to "
-            "RocksDBStateStoreProvider). Use trending_stateful() as the "
-            "dependency-free equivalent."
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
+    # window_start is epoch seconds in OUTPUT_SCHEMA; hand it back as a timestamp
+    return result.select(
+        "key",
+        F.timestamp_seconds("window_start").alias("window_start"),
+        "cnt",
+        "prev_cnt",
     )
-
-    class TrendProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("trend", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values):
-            new_state, frame = _trend_step(
-                key, self._state.get() if self._state.exists() else None, rows,
-                window_seconds, min_count, retention_windows,
-            )
-            self._state.update(new_state)
-            if frame is not None:
-                yield frame
-
-        def close(self) -> None:
-            pass
-
-    result = _grouped_by_key(keyed, key_col, ts_col).transformWithStateInPandas(
-        statefulProcessor=TrendProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
-    return _with_window_timestamps(result)

@@ -193,3 +193,87 @@ def test_reused_unpinned_session_keeps_default_checkpoint_manager():
     assert reused == "True"
     assert file_system != S.LOCAL_FILE_SYSTEM
     assert manager.endswith("FileContextBasedCheckpointFileManager")
+
+
+#: Package definitions that only tests reach, kept on purpose (one reason
+#: each). A module entry covers every top-level definition in it.
+_TEST_ONLY_KEEP = {
+    "streaming.jobs.word_counts_stream": "the reference's socket word count (Client.py)",
+    "sources.streams.socket_lines": "the reference's socket source (Client.py)",
+    "streaming.jobs.write_trending_files": "the reference's Task4 trend file sink",
+    "streaming.ingest_dedup.run_streaming_ingest_dedup": "the continuous ingest-dedup loop's entry point",
+    "operators.similarity._lpa_oracle_sql": "DuckDB reference the LPA tests compare against",
+    "operators.similarity._triangles_oracle_sql": "DuckDB reference the triangle tests compare against",
+    "functions.geo.classify_points_pandas_udf": "numpy ray-cast form the codegen'd geofence expression is checked against",
+    "functions.vectors.cosine": "expression form the BLAS cosine_pudf is checked against",
+    "operators.analytics5._docs_with_fps": "batch harness pinning the Arrow winnowing kernel (_fp_batches) to the Catalyst default",
+    "operators.analytics5._winnow_positions": "the Catalyst winnowing selection _docs_with_fps is checked against",
+    "plans.explain": "plan-assertion helpers for the plan tests",
+}
+
+
+def test_no_package_definition_is_reached_only_from_tests():
+    """Every top-level package definition is referenced (a name, an
+    attribute or an import) from package, bench.py, __spark_entry__.py,
+    tools/ or perfbench/ code outside the definition itself, or is on
+    ``_TEST_ONLY_KEEP``. Docstrings and comments do not count. The keep
+    list carries no stale entry."""
+    import ast
+    import glob
+    from collections import Counter
+
+    import streamming_processing_pyspark_spark as pkg
+
+    pkg_dir = os.path.dirname(pkg.__file__)
+    repo = os.path.dirname(pkg_dir)
+    sources = [
+        *glob.glob(os.path.join(pkg_dir, "**", "*.py"), recursive=True),
+        os.path.join(repo, "bench.py"),
+        os.path.join(repo, "__spark_entry__.py"),
+        *glob.glob(os.path.join(repo, "tools", "*.py")),
+        *glob.glob(os.path.join(repo, "perfbench", "**", "*.py"), recursive=True),
+    ]
+
+    def names(node):
+        found = set()
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                found.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                found.add(n.attr)
+            elif isinstance(n, ast.alias):
+                found.add(n.name.rsplit(".", 1)[-1])
+        return found
+
+    mentions = Counter()  # name -> top-level statements that mention it
+    defs = []
+    for path in sources:
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        in_pkg = path.startswith(pkg_dir + os.sep)
+        module = os.path.relpath(path, pkg_dir)[: -len(".py")].replace(os.sep, ".")
+        for node in tree.body:
+            own = names(node)
+            mentions.update(own)
+            if not in_pkg:
+                continue
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defined = [node.name]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                defined = [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+            else:
+                continue
+            defs += [(f"{module}.{name}", name, own) for name in defined]
+    unreached = {
+        qual
+        for qual, name, own in defs
+        if not name.startswith("__") and mentions[name] == (name in own)
+    }
+
+    def covers(entry, qual):
+        return qual == entry or qual.startswith(entry + ".")
+
+    assert sorted(q for q in unreached if not any(covers(k, q) for k in _TEST_ONLY_KEEP)) == []
+    stale = [k for k in _TEST_ONLY_KEEP if not any(covers(k, q) for q in unreached)]
+    assert stale == []

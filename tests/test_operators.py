@@ -12,13 +12,11 @@ from streamming_processing_pyspark_spark.functions.geo import (
     classify_sql,
 )
 from streamming_processing_pyspark_spark.operators import (
-    asof,
     dedup,
     pipeline,
     similarity,
     windowed,
 )
-from streamming_processing_pyspark_spark.operators.multimodal import decode_media_stub
 from streamming_processing_pyspark_spark.operators.windowed import with_coordinates
 from streamming_processing_pyspark_spark.tables import load_table, load_tables
 
@@ -32,17 +30,6 @@ def test_trending_lag_equals_selfjoin(spark):
     a = {tuple(r) for r in windowed.trending(ev).collect()}
     b = {tuple(r) for r in windowed.trending_selfjoin(ev).collect()}
     assert a == b
-
-
-def test_asof_window_equals_cogroup(spark):
-    """The single-shuffle window formulation of the as-of join must equal
-    the cogrouped merge_asof form row-for-row (same key/time/tie-break
-    semantics, radically different physical plan)."""
-    t = load_tables(spark, SF_DIR)
-    a = {tuple(r) for r in asof.asof_latest_order(t).collect()}
-    b = {tuple(r) for r in asof.asof_latest_order_cogroup(t).collect()}
-    assert a == b
-    assert a, "as-of join matched nothing at sf"
 
 
 def test_minhash_lsh_subset_and_recall(spark):
@@ -240,13 +227,6 @@ def test_geofence_sql_equals_pandas_udf(spark):
     assert both.where(F.col("sql_hq") != F.col("udf_hq")).count() == 0
     # and the classifier actually fires on this data
     assert both.where(F.col("sql_hq") != "none").count() > 0
-
-
-def test_decode_media_stub_raises(spark):
-    t = load_tables(spark, SF_DIR)
-    df = decode_media_stub(t)
-    with pytest.raises(Exception, match="NotImplementedError|media decode"):
-        df.collect()
 
 
 def test_exact_dedup_on_constructed_duplicates(spark):

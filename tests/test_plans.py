@@ -333,7 +333,7 @@ def test_aqe_splits_skewed_join_partition(spark):
     median must be split by AQE (SortMergeJoin(skew=true) + skewed
     AQEShuffleRead) instead of serializing one straggler task — the
     runtime complement to the deterministic salting in
-    storage.salted_aggregate / analytics2.salted_customer_join."""
+    analytics2.salted_customer_join."""
     from pyspark.sql import functions as F
 
     from streamming_processing_pyspark_spark.plans.explain import (
@@ -450,6 +450,7 @@ def test_asof_window_single_exchange(spark):
     assert s.count("Exchange") == 1, s
     assert_no_python_eval(df)
     assert_read_schema_only(df, "orders", {"o_orderkey", "o_custkey", "o_orderdate"})
+    assert df.take(1), "as-of join matched nothing at sf"
 
 
 def test_campaign_gate_is_mapside(spark):

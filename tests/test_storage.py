@@ -1,81 +1,14 @@
-"""Storage layout gates: partition pruning, shuffle-free bucketed joins,
-salted aggregation correctness."""
+"""Storage layout gates: file skipping on range-clustered and Z-ordered
+layouts, sketch percentile accuracy."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from streamming_processing_pyspark_spark.plans.explain import (
-    executed_plan_string,
-    plan_string,
-)
-from streamming_processing_pyspark_spark.storage import (
-    salted_aggregate,
-    write_bucketed,
-    write_partitioned_by_date,
-    write_range_clustered,
-)
+from streamming_processing_pyspark_spark.storage import write_range_clustered
 from streamming_processing_pyspark_spark.tables import load_table
 
 from .conftest import SF_DIR
-
-
-def test_partitioned_write_prunes(spark, tmp_path):
-    ev = load_table(spark, SF_DIR, "events")
-    path = str(tmp_path / "events_by_dt")
-    write_partitioned_by_date(ev, path)
-
-    back = spark.read.parquet(path)
-    one_day = back.where(F.col("dt") == "2024-01-05")
-    plan = plan_string(one_day)
-    assert "PartitionFilters" in plan and "2024-01-05" in plan, plan
-    # pruned read matches the unpartitioned filter
-    want = ev.where(F.to_date("ts") == "2024-01-05").count()
-    assert one_day.count() == want
-
-
-def test_bucketed_join_no_shuffle(spark, tmp_path):
-    import shutil
-
-    spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-    # tiny test tables would broadcast; force the shuffle-join path so the
-    # assertion exercises what bucketing buys at scale
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for tbl in ("orders_b", "lineitem_b"):
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        shutil.rmtree(f"{warehouse}/{tbl}", ignore_errors=True)
-    orders = load_table(spark, SF_DIR, "orders")
-    lineitem = load_table(spark, SF_DIR, "lineitem").withColumnRenamed(
-        "l_orderkey", "o_orderkey"
-    )
-    write_bucketed(orders, "orders_b", "o_orderkey", 4)
-    write_bucketed(lineitem, "lineitem_b", "o_orderkey", 4)
-    joined = (
-        spark.table("orders_b")
-        .join(spark.table("lineitem_b"), "o_orderkey")
-        .groupBy("o_orderstatus")
-        .agg(F.count("*").alias("n"))
-    )
-    try:
-        plan = executed_plan_string(joined)
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
-        # the join inputs come straight from bucketed scans — no hash
-        # exchange on the join key anywhere in the plan
-        assert "Exchange hashpartitioning(o_orderkey" not in plan, plan
-        assert "Bucketed: true" in plan, plan
-        # and it is still correct
-        plain = (
-            orders.join(lineitem, "o_orderkey")
-            .groupBy("o_orderstatus")
-            .agg(F.count("*").alias("n"))
-        )
-        assert sorted(map(tuple, joined.collect())) == sorted(
-            map(tuple, plain.collect())
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
 
 
 def test_range_clustered_layout_skips_files(spark, tmp_path):
@@ -118,47 +51,6 @@ def test_approx_percentiles_accuracy(spark):
         spread = max(abs(er["p75"]), abs(er["p25"]), 1.0)
         for q in ("p25", "p50", "p75"):
             assert abs(er[q] - ar[q]) <= 0.05 * spread, (et, q, er[q], ar[q])
-
-
-def test_salted_aggregate_matches_plain(spark):
-    ev = load_table(spark, SF_DIR, "events")
-    salted = salted_aggregate(
-        ev,
-        "event_type",
-        {
-            "n": F.count("*"),
-            "sum_value": F.sum("value"),
-            "min_value": F.min("value"),
-            "max_value": F.max("value"),
-        },
-    )
-    plain = ev.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.sum("value").alias("sum_value"),
-        F.min("value").alias("min_value"),
-        F.max("value").alias("max_value"),
-    )
-    a = {r["event_type"]: (r["n"], round(r["sum_value"], 6), r["min_value"], r["max_value"]) for r in salted.collect()}
-    b = {r["event_type"]: (r["n"], round(r["sum_value"], 6), r["min_value"], r["max_value"]) for r in plain.collect()}
-    assert a == b
-
-
-def test_format_roundtrips(spark, tmp_path):
-    """orders survives a write/read round-trip in every bundled format
-    (schema supplied on read for the text formats)."""
-    from streamming_processing_pyspark_spark.storage import (
-        SUPPORTED_BATCH_FORMATS,
-        read_table_fmt,
-        write_table,
-    )
-
-    orders = load_table(spark, SF_DIR, "orders").limit(200)
-    want = sorted(map(tuple, orders.collect()))
-    for fmt in SUPPORTED_BATCH_FORMATS:
-        p = str(tmp_path / f"rt_{fmt}")
-        write_table(orders, p, fmt)
-        got = read_table_fmt(spark, p, fmt, schema=orders.schema)
-        assert sorted(map(tuple, got.collect())) == want, fmt
 
 
 def test_zordered_layout_skips_files_on_both_dims(spark, tmp_path):
@@ -206,83 +98,3 @@ def test_zordered_layout_skips_files_on_both_dims(spark, tmp_path):
     }
     assert len(r_hit) == len(r_all)  # no skipping without value in the layout
     assert len(z_hit) < len(all_files)
-
-
-def test_compact_parquet_reduces_files(spark, tmp_path):
-    from streamming_processing_pyspark_spark.storage import compact_parquet
-
-    ev = load_table(spark, SF_DIR, "events")
-    frag = str(tmp_path / "fragmented")
-    ev.repartition(64).write.parquet(frag)  # simulate a small-file sink
-    out = str(tmp_path / "compacted")
-    n = compact_parquet(spark, frag, out, target_file_bytes=64 * 1024 * 1024)
-    assert n < 64
-    back = spark.read.parquet(out)
-    assert back.count() == ev.count()
-
-
-def test_bloom_filter_written_to_parquet(spark, tmp_path):
-    """Bloom filters must actually land in the written files (this
-    pyarrow build doesn't expose bloom offsets, so assert via the
-    file-size delta the filter bytes add) and reads stay correct."""
-    import os
-
-    from streamming_processing_pyspark_spark.storage import write_with_bloom_filters
-
-    ev = load_table(spark, SF_DIR, "events").select("event_id", "user_id", "value")
-    plain_path = str(tmp_path / "events_plain")
-    bloom_path = str(tmp_path / "events_bloom")
-    ev.coalesce(1).write.parquet(plain_path)
-    # bloom on the high-cardinality key: parquet-mr skips the filter for
-    # fully dictionary-encoded columns (the dictionary already answers
-    # membership exactly), so a low-cardinality column would show no delta
-    write_with_bloom_filters(ev.coalesce(1), bloom_path, ["event_id"], ndv=10_000)
-
-    def pbytes(p):
-        return sum(
-            os.path.getsize(os.path.join(p, f))
-            for f in os.listdir(p)
-            if f.endswith(".parquet")
-        )
-
-    # an ndv=10k bloom filter is >= a few KiB of filter bits per row group
-    assert pbytes(bloom_path) >= pbytes(plain_path) + 4096
-    back = spark.read.parquet(bloom_path)
-    assert back.count() == ev.count()
-    assert (
-        back.where(F.col("event_id") == -1).count() == 0  # absent-key probe
-    )
-
-
-def test_inverted_index_bucket_pruned_lookup(spark, tmp_path):
-    """A term lookup against the bucketed inverted index must scan ONE
-    bucket (SelectedBucketsCount in the plan) and agree with a direct
-    recount from the corpus."""
-    import shutil
-
-    from streamming_processing_pyspark_spark.storage import write_inverted_index
-
-    spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-    # the planner turns bucketed scans off when nothing exploits the
-    # partitioning; bucket PRUNING needs the bucketed scan, so force it
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    spark.sql("DROP TABLE IF EXISTS term_index_t")
-    shutil.rmtree(f"{warehouse}/term_index_t", ignore_errors=True)
-    docs = load_table(spark, SF_DIR, "documents")
-    write_inverted_index(docs, "term_index_t", n_buckets=16)
-
-    hit = spark.table("term_index_t").where(F.col("term") == "spark")
-    plan = executed_plan_string(hit)
-    assert "SelectedBucketsCount: 1 out of 16" in plan, plan
-    row = hit.collect()[0]
-    want = (
-        docs.select(F.explode(F.split(F.trim("text"), r"\s+")).alias("w"), "doc_id")
-        .where(F.col("w") == "spark")
-    )
-    assert row["tf_total"] == want.count()
-    assert row["df"] == want.select("doc_id").distinct().count()
-    assert row["postings"] == sorted(
-        r[0] for r in want.select("doc_id").distinct().collect()
-    )
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "true")

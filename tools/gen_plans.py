@@ -354,7 +354,7 @@ def summarize(plan: str) -> list[str]:
 def aqe_skew_demo(spark) -> list[str]:
     """Executed-plan evidence for AQE's AUTOMATIC skew-join split (the
     runtime complement to the deterministic salting in
-    salted_customer_join / storage.salted_aggregate): a join where half
+    analytics2.salted_customer_join): a join where half
     the probe rows share one key, run under proportionally lowered skew
     thresholds (the demo is ~MBs where production partitions are ~GBs),
     must show SortMergeJoin(skew=true) + skewed AQEShuffleRead — pinned
