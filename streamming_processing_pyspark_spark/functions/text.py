@@ -28,6 +28,9 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 
 FINGERPRINT_MOD = 1_000_003
 
+#: modulus of the portable affine-fold hash (cf. pipeline._group_hash)
+HASH_MOD = 1_000_000_007
+
 
 def words(text: Column | str) -> Column:
     """Whitespace tokens (regex split of trimmed text — no empty tokens)."""

@@ -11,8 +11,8 @@ DuckDB-oracle-checked:
   matrices: the feature-redundancy audit run before whitening/PCA or
   product-quantization subspace splits.
 - ``token_len_percentiles_by_source`` — exact P50/P90/P99 document
-  lengths (tokens) per source via the cumulative-histogram machinery
-  (no global sort) — the length-profile every mixing/packing decision
+  lengths (tokens) per source via :func:`distribution.exact_cuts` (no
+  global sort) — the length-profile every mixing/packing decision
   reads.
 - ``dedup_survivorship_by_source`` — per-source retention after exact
   keep-first dedup, including docs whose canonical copy lives in a
@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import token_count
+from .distribution import exact_cuts, exact_gini
 
 Tables = dict[str, DataFrame]
 
@@ -111,11 +112,10 @@ def embedding_gram_offdiag_topk(t: Tables) -> DataFrame:
 def token_len_percentiles_by_source(t: Tables) -> DataFrame:
     """Exact P50/P90/P99 token counts per source — without a global sort:
     the corpus reduces to a per-(source, n_tokens) histogram (map-side
-    combinable, ONE shuffle of |distinct lengths| rows), cumulative
-    counts run over the tiny histogram, and each percentile is the
-    smallest length whose cumulative count reaches ``ceil(q·n)``. Same
-    machinery as relational2.exact_percentiles_by_type — the standard
-    way to take exact quantiles of 100 TB. All-integer, so it
+    combinable, ONE shuffle of |distinct lengths| rows) and
+    :func:`distribution.exact_cuts` takes each percentile as the
+    smallest length whose cumulative count reaches ``ceil(q·n)`` — the
+    standard way to take exact quantiles of 100 TB. All-integer, so it
     hash-matches the oracle.
     """
     hist = (
@@ -123,22 +123,10 @@ def token_len_percentiles_by_source(t: Tables) -> DataFrame:
         .groupBy("source", token_count("text").cast("long").alias("n_tok"))
         .agg(F.count("*").alias("cnt"))
     )
-    w = Window.partitionBy("source").orderBy("n_tok")
-    w_all = Window.partitionBy("source")
-    cum = hist.select(
-        "source",
-        "n_tok",
-        F.sum("cnt").over(w).alias("cum"),
-        F.sum("cnt").over(w_all).alias("n"),
+    cuts = {f"p{q}_tokens": (q, 100) for q in TOKEN_PCT}
+    return exact_cuts(hist, "n_tok", "cnt", cuts, "source").withColumnRenamed(
+        "n", "n_docs"
     )
-    aggs = [F.max("n").alias("n_docs")]
-    for q in TOKEN_PCT:
-        aggs.append(
-            F.min(
-                F.when(F.expr(f"cum >= ({q} * n + 99) DIV 100"), F.col("n_tok"))
-            ).alias(f"p{q}_tokens")
-        )
-    return cum.groupBy("source").agg(*aggs)
 
 
 def dedup_survivorship_by_source(t: Tables) -> DataFrame:
@@ -296,13 +284,13 @@ def ship_lag_profile(t: Tables) -> DataFrame:
 def customer_revenue_deciles(t: Tables) -> DataFrame:
     """Revenue concentration by customer decile — the Pareto table
     ("which tenth of customers carries which share of revenue") — with
-    NO global sort and NO NTILE window: decile boundaries come from the
-    cumulative-histogram percentile machinery (exact, integer cents),
-    the 10-row boundary table BROADCASTS back onto the per-customer
-    revenue frame, and each customer takes the smallest decile whose
-    boundary covers its revenue. Deciles are value-buckets at exact
-    ceil(k·n/10) cut points, so boundary-tied customers share a decile
-    (counts can be lumpy around ties; shares stay exact).
+    NO global sort and NO NTILE window: decile boundaries are
+    :func:`distribution.exact_cuts` of the revenue histogram (exact,
+    integer cents), the one-row boundary table BROADCASTS back onto the
+    per-customer revenue frame, and each customer takes the smallest
+    decile whose boundary covers its revenue. Deciles are value-buckets
+    at exact ceil(k·n/10) cut points, so boundary-tied customers share a
+    decile (counts can be lumpy around ties; shares stay exact).
     """
     from ..tables import persist_replacing
 
@@ -317,35 +305,17 @@ def customer_revenue_deciles(t: Tables) -> DataFrame:
         "analytics4.cust_rev",
     )
     hist = rev.groupBy("rev_c").agg(F.count("*").alias("cnt"))
-    w = Window.orderBy("rev_c")
-    cum = hist.select(
-        "rev_c",
-        F.sum("cnt").over(w).alias("cum"),
-        F.sum("cnt").over(
-            Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        ).alias("n"),
-    )
-    ks = rev.sparkSession.range(1, REV_DECILES + 1).select(
-        F.col("id").alias("k")
-    )
-    bounds = (
-        cum.select("rev_c", "cum", "n")
-        .crossJoin(F.broadcast(ks))
-        .groupBy("k")
-        .agg(
-            F.min(
-                F.when(
-                    F.expr(f"cum >= (k * n + {REV_DECILES - 1}) DIV {REV_DECILES}"),
-                    F.col("rev_c"),
-                )
-            ).alias("cut")
-        )
-    )
+    ks = range(1, REV_DECILES + 1)
+    cuts = {f"cut{k}": (k, REV_DECILES) for k in ks}
+    bounds = exact_cuts(hist, "rev_c", "cnt", cuts)
+    # the smallest covering decile; a NULL revenue has none and drops out
+    decile = F.coalesce(
+        *(F.when(F.col("rev_c") <= F.col(f"cut{k}"), F.lit(k)) for k in ks)
+    ).cast("long")
     assigned = (
         rev.crossJoin(F.broadcast(bounds))
-        .where(F.col("rev_c") <= F.col("cut"))
-        .groupBy("o_custkey", "rev_c")
-        .agg(F.min("k").alias("decile"))
+        .select("rev_c", decile.alias("decile"))
+        .where(F.col("decile").isNotNull())
     )
     total = rev.agg(F.sum("rev_c").alias("total_c"))
     return (
@@ -447,71 +417,21 @@ def doc_length_gini_by_source(t: Tables) -> DataFrame:
     concentrated in few giant docs packs and mixes very differently from
     its document count).
 
-    Same exact-integer machinery as distribution.nation_revenue_gini:
-    with per-doc token counts x₁ ≤ … ≤ xₙ (ties broken by doc_id — both
-    statistics are invariant under permuting equal values), Gini =
-    (2·Σi·xᵢ − (n+1)·Σx)/(n·Σx), emitted as floor(1e6·num/den) with one
-    int64→double cast so the IEEE chain matches the oracle. Windows
-    partition by SOURCE (bounded cardinality) — per-partition sorts,
-    never a global one.
+    :func:`distribution.exact_gini` over per-doc token counts, ties
+    broken by doc_id. Windows partition by SOURCE (bounded cardinality)
+    — per-partition sorts, never a global one.
     """
-    from ..tables import persist_replacing
-
     tok = t["documents"].select(
         "doc_id", "source", token_count("text").cast("long").alias("n_tok")
     )
-    ranked = persist_replacing(
-        tok.withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("source").orderBy(
-                    F.col("n_tok").asc(), F.col("doc_id").asc()
-                )
-            ),
-        ),
-        "analytics4.length_gini_ranked",
-    )
-    per_src = ranked.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tok").alias("total_tokens"),
-        F.sum(F.col("rn").cast("long") * F.col("n_tok")).alias("t_weighted"),
-    )
-    top = (
-        ranked.join(
-            F.broadcast(
-                per_src.select(
-                    F.col("source").alias("src2"),
-                    F.col("n_docs").alias("n2"),
-                )
-            ),
-            F.col("source") == F.col("src2"),
-        )
-        .where(F.col("rn") >= F.col("n2") - F.ceil(F.col("n2") / 10) + 1)
-        .groupBy("source")
-        .agg(F.sum("n_tok").alias("top_tokens"))
-    )
-    num = (
-        F.lit(2) * F.col("t_weighted")
-        - (F.col("n_docs") + F.lit(1)) * F.col("total_tokens")
-    ).cast("double")
-    den = (F.col("n_docs") * F.col("total_tokens")).cast("double")
-    return (
-        per_src.join(top, "source")
-        .select(
-            "source",
-            "n_docs",
-            "total_tokens",
-            F.floor(F.lit(1000000.0) * num / den)
-            .cast("long")
-            .alias("gini_micro"),
-            F.floor(
-                F.lit(1000000.0)
-                * F.col("top_tokens").cast("double")
-                / F.col("total_tokens").cast("double")
-            )
-            .cast("long")
-            .alias("top_decile_share_micro"),
-        )
+    return exact_gini(
+        tok, "source", "n_tok", "doc_id", "analytics4.length_gini_ranked"
+    ).select(
+        "source",
+        F.col("n").alias("n_docs"),
+        F.col("total").alias("total_tokens"),
+        "gini_micro",
+        "top_decile_share_micro",
     )
 
 

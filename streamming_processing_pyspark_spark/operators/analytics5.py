@@ -22,8 +22,8 @@ DuckDB-oracle-checked:
   synthetic-data pools before they enter a mix.
 - ``curriculum_stage_assign`` — token-mass-balanced curriculum stages
   keyed on document length (the standard length-curriculum proxy):
-  stage boundaries from the exact cumulative-histogram percentile
-  machinery, NO global sort, broadcast assignment.
+  stage boundaries from :func:`distribution.exact_cuts`, NO global
+  sort, broadcast assignment.
 - ``order_backlog_aging`` — open-order backlog aged into integer day
   buckets per priority as of the warehouse's latest order date: one
   scan, ≤ |priorities|·|buckets| output cells.
@@ -48,8 +48,11 @@ one-scan + small-rollup shapes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .analytics4 import _TOKC_DUCK
+from .distribution import exact_cuts
 
 Tables = dict[str, DataFrame]
 
@@ -453,10 +456,9 @@ def curriculum_stage_assign(t: Tables) -> DataFrame:
     ~equal TOKEN mass rather than equal doc counts, so late stages
     aren't dominated by a few long documents' tokens.
 
-    Boundaries come from the exact cumulative-histogram machinery
-    (same pattern as ``customer_revenue_deciles``): the length histogram
-    is |distinct lengths| rows, its cumulative token mass picks the
-    smallest length covering ceil(k·total/K) tokens, the K-row boundary
+    Boundaries are :func:`distribution.exact_cuts` of the length
+    histogram weighted by token mass (|distinct lengths| rows): the
+    smallest length covering ceil(k·total/K) tokens. The one-row boundary
     table broadcasts, and docs take the smallest covering stage at scan
     speed. NO global sort, NO NTILE. Output: one row per stage with doc
     count, token mass, share (bp), and the length range."""
@@ -470,45 +472,19 @@ def curriculum_stage_assign(t: Tables) -> DataFrame:
         ),
         "analytics5.curriculum_docs",
     )
-    hist = docs.groupBy("n_tok").agg(
-        F.count("*").alias("cnt"),
-        F.sum("n_tok").alias("mass"),
+    hist = docs.groupBy("n_tok").agg(F.sum("n_tok").alias("mass"))
+    ks = range(1, CURRICULUM_STAGES + 1)
+    bounds = exact_cuts(
+        hist, "n_tok", "mass", {f"cut{k}": (k, CURRICULUM_STAGES) for k in ks}
     )
-    w = Window.orderBy("n_tok")
-    cum = hist.select(
-        "n_tok",
-        F.sum("mass").over(w).alias("cum_mass"),
-        F.sum("mass")
-        .over(
-            Window.rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        )
-        .alias("total"),
-    )
-    ks = docs.sparkSession.range(1, CURRICULUM_STAGES + 1).select(
-        F.col("id").alias("k")
-    )
-    bounds = (
-        cum.crossJoin(F.broadcast(ks))
-        .groupBy("k")
-        .agg(
-            F.min(
-                F.when(
-                    F.expr(
-                        f"cum_mass >= (k * total + {CURRICULUM_STAGES - 1})"
-                        f" DIV {CURRICULUM_STAGES}"
-                    ),
-                    F.col("n_tok"),
-                )
-            ).alias("cut")
-        )
-    )
+    # the smallest covering stage; a NULL length has none and drops out
+    stage = F.coalesce(
+        *(F.when(F.col("n_tok") <= F.col(f"cut{k}"), F.lit(k)) for k in ks)
+    ).cast("long")
     assigned = (
         docs.crossJoin(F.broadcast(bounds))
-        .where(F.col("n_tok") <= F.col("cut"))
-        .groupBy("doc_id", "n_tok")
-        .agg(F.min("k").alias("stage"))
+        .select("n_tok", stage.alias("stage"))
+        .where(F.col("stage").isNotNull())
     )
     total = docs.agg(F.sum("n_tok").alias("total_tok"))
     return (
@@ -566,9 +542,6 @@ def order_backlog_aging(t: Tables) -> DataFrame:
             F.sum("value_c").alias("backlog_cents"),
         )
     )
-
-
-_TOKC_DUCK = "CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)"
 
 
 _W1 = WINNOW_W - 1

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..tables import broadcast_replacing, local_df
+from .featurize import _LEHMER_MOD, _LEHMER_MUL
 
 Tables = dict[str, DataFrame]
 
@@ -51,12 +52,6 @@ POOL_N = 64
 
 #: number of centers the greedy traversal picks
 KCENTER_K = 8
-
-#: Lehmer-permutation constants for the pool order — Park–Miller minimal
-#: standard generator applied once to vec_id; (2^31-2)·48271 < 2^63, so
-#: the product is overflow-safe BIGINT arithmetic in both engines
-_LEHMER_MOD = 2147483647
-_LEHMER_MUL = 48271
 
 
 def _assign_to_centers(batches, ce, cn, cv):

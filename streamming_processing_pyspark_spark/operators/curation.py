@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .distribution import exact_cuts
+
 Tables = dict[str, DataFrame]
 
 #: per-source document cap for source_cap_sample
@@ -65,45 +67,18 @@ def perplexity_buckets(t: Tables) -> DataFrame:
     """CCNet head/middle/tail bucketing by per-language score terciles.
 
     Thresholds are EXACT 1/3 and 2/3 quantiles computed without sorting
-    the table: aggregate to a per-(lang, score) histogram, cumulate counts
-    over the histogram (a window over |distinct scores| rows per lang —
-    thousands, not billions), take the smallest score whose cumulative
-    count reaches ceil(n/3) / ceil(2n/3), broadcast the 2-value-per-lang
-    threshold table back, and assign buckets map-side. The only
-    input-sized stages are the initial histogram aggregation and the final
-    broadcast-join scan — the standard way to take exact quantiles of
-    100 TB.
+    the table: :func:`distribution.exact_cuts` over the per-(lang,
+    score) histogram (a window over |distinct scores| rows per lang —
+    thousands, not billions) takes the smallest score whose cumulative
+    count reaches ceil(n/3) / ceil(2n/3); the 2-value-per-lang threshold
+    table broadcasts back and buckets are assigned map-side. The only
+    input-sized stages are the initial histogram aggregation and the
+    final broadcast-join scan — the standard way to take exact quantiles
+    of 100 TB.
     """
     d = t["documents"].select("doc_id", "lang", _ppl_score().alias("ppl_score"))
     hist = d.groupBy("lang", "ppl_score").agg(F.count("*").alias("cnt"))
-    # cumulative count AND per-lang total from the SAME window partition —
-    # one sort over the tiny histogram, and the heavy text-scoring scan
-    # runs once for the histogram plus once for the final assignment
-    # (instead of once per threshold input)
-    w = Window.partitionBy("lang").orderBy("ppl_score")
-    w_all = Window.partitionBy("lang")
-    cum = hist.select(
-        "lang",
-        "ppl_score",
-        F.sum("cnt").over(w).alias("cum"),
-        F.sum("cnt").over(w_all).alias("n"),
-    )
-    th = (
-        cum.groupBy("lang")
-        .agg(
-            F.min(
-                F.when(
-                    F.col("cum") >= F.floor((F.col("n") + 2) / 3), F.col("ppl_score")
-                )
-            ).alias("t1"),
-            F.min(
-                F.when(
-                    F.col("cum") >= F.floor((2 * F.col("n") + 2) / 3),
-                    F.col("ppl_score"),
-                )
-            ).alias("t2"),
-        )
-    )
+    th = exact_cuts(hist, "ppl_score", "cnt", {"t1": (1, 3), "t2": (2, 3)}, "lang")
     return d.join(F.broadcast(th), "lang").select(
         "doc_id",
         "lang",

@@ -83,6 +83,20 @@ def _pct_ok(part: str, whole: str, pct: int) -> F.Column:
     return F.lit(100) * F.col(part) >= F.lit(pct) * F.col(whole)
 
 
+def _recall_contract(
+    exact: DataFrame, approx: DataFrame, pct: int, count: str = "n_exact"
+) -> DataFrame:
+    """The recall contract of an approximate (id_a, id_b) pair set: one
+    row with the exact pair count (named ``count``), ``subset_ok``
+    (nothing outside the exact set) and ``recall_ok`` (≥ ``pct``% of the
+    exact set found)."""
+    return _overlap_counts(exact, approx, ["id_a", "id_b"]).select(
+        F.col("n_exact").alias(count),
+        (F.col("n_outside") == 0).alias("subset_ok"),
+        _pct_ok("n_hit", "n_exact", pct).alias("recall_ok"),
+    )
+
+
 JACCARD_THRESHOLD = 0.3
 SHINGLE_WORDS = 3
 
@@ -992,11 +1006,7 @@ def incremental_ingest_check(t: Tables) -> DataFrame:
         F.least("new_id", "old_id").alias("id_a"),
         F.greatest("new_id", "old_id").alias("id_b"),
     )
-    return _overlap_counts(exact_cross, inc, ["id_a", "id_b"]).select(
-        F.col("n_exact").alias("n_exact_cross"),
-        (F.col("n_outside") == 0).alias("subset_ok"),
-        _pct_ok("n_hit", "n_exact", MINHASH_RECALL_PCT).alias("recall_ok"),
-    )
+    return _recall_contract(exact_cross, inc, MINHASH_RECALL_PCT, "n_exact_cross")
 
 
 #: recall bound the driver-checked minhash claim asserts (percent).
@@ -1016,15 +1026,10 @@ def minhash_recall_check(t: Tables) -> DataFrame:
     contract is driver-verified as data — the same bound the local test
     pins, now hash-checked every rotation.
     """
-    c = _overlap_counts(
+    return _recall_contract(
         ngram_jaccard_pairs(t, max_shingle_df=None),
         minhash_lsh_pairs(t),
-        ["id_a", "id_b"],
-    )
-    return c.select(
-        "n_exact",
-        (F.col("n_outside") == 0).alias("subset_ok"),
-        _pct_ok("n_hit", "n_exact", MINHASH_RECALL_PCT).alias("recall_ok"),
+        MINHASH_RECALL_PCT,
     )
 
 
@@ -1191,15 +1196,10 @@ def containment_recall_check(t: Tables) -> DataFrame:
     the banded route). The uncapped exact side deliberately bypasses
     AUTO_DF_CAP so the subset claim cannot be broken by cap-reduced
     ``common`` (see :func:`containment_pairs`'s cap-asymmetry note)."""
-    c = _overlap_counts(
+    return _recall_contract(
         containment_pairs(t, max_shingle_df=None),
         containment_pairs_banded(t),
-        ["id_a", "id_b"],
-    )
-    return c.select(
-        "n_exact",
-        (F.col("n_outside") == 0).alias("subset_ok"),
-        _pct_ok("n_hit", "n_exact", CONTAINMENT_RECALL_PCT).alias("recall_ok"),
+        CONTAINMENT_RECALL_PCT,
     )
 
 

@@ -16,13 +16,22 @@ concentrated is the spend (Gini), and do the raw amounts look organic
   pinned integer constants (``floor(1e6*log10(1+1/d))``), not a runtime
   ``log10`` — DuckDB's and the JVM's ``log10`` are only 1-ulp classes and
   a ``floor`` straddling the ulp would flip a digit's expected ppm.
-- Quartile scores come from the histogram-cumsum pattern (groupBy value →
-  cumulative count → broadcast join back), NOT a global ``ntile`` sort:
+- Quartile scores come from :func:`cdf_buckets` (groupBy value →
+  cumulative weight → broadcast join back), NOT a global ``ntile`` sort:
   the only window runs over the DISTINCT-value histogram, and ties get
   one consistent score (``ceil(4·cum_le/n)``) instead of ntile's
-  order-dependent tie splitting. Same design as
-  ``curation.perplexity_buckets``; at 100 TB the histogram stays
+  order-dependent tie splitting. At 100 TB the histogram stays
   |distinct values| wide no matter how many customers there are.
+
+The module also owns the package's exact-statistics kernels, which the
+other operator modules call instead of restating them:
+
+- :func:`exact_cuts` — exact quantile cut points of a histogram: for a
+  fraction num/den, the smallest value whose cumulative weight reaches
+  ``ceil(num·W/den)``, tested as ``den·cum ≥ num·W`` in integers;
+- :func:`cdf_buckets` — each distinct value's CDF bucket
+  ``ceil(k·cum_le/n)``;
+- :func:`exact_gini` — per-group exact Gini and Lorenz top-decile share.
 
 Scale notes per operator are in the docstrings; the shared posture: one
 scan of ``orders``, map-side-combinable aggregates, windows only over
@@ -52,34 +61,143 @@ def _order_cents(tables: dict[str, DataFrame]) -> DataFrame:
     )
 
 
-def _quartile_scores(per_cust: DataFrame, col: str, out: str) -> DataFrame:
-    """Map each distinct value of ``col`` to its CDF quartile 1..RFM_Q.
+def exact_cuts(
+    hist: DataFrame, value: str, weight: str, cuts: dict, *group: str
+) -> DataFrame:
+    """Exact quantile cut points of a histogram, without a global sort.
 
-    Histogram-cumsum: groupBy the value (map-side combinable), ONE window
-    over the distinct-value histogram (|distinct| rows — bounded by the
-    value domain, not the customer count), score = ceil(Q·cum_le/n).
-    Equal values always share a score, unlike ``ntile``.
+    ``hist`` has one row per (``group``…, ``value``) and that row's
+    ``weight``. ONE window per group runs over the histogram (|distinct
+    values| rows, bounded by the value domain rather than the row count)
+    to get each value's cumulative weight ``cum`` and the group's total
+    ``W``. Each cut ``name: (num, den)`` is the smallest value with
+    ``den·cum ≥ num·W``, i.e. the smallest value whose cumulative weight
+    reaches ``ceil(num·W/den)``. The test is all-integer, so the cuts
+    hash-match an oracle that writes ``cum >= (num·W + den − 1) DIV den``.
+
+    A NULL value sorts first: its weight counts in ``W`` and in every
+    ``cum``, but it is never a cut.
+
+    Returns one row per group: the group columns, ``n`` (= ``W``) and one
+    column per cut, in ``cuts`` order.
     """
-    hist = per_cust.groupBy(F.col(col).alias("v")).agg(
-        F.count("*").alias("cnt")
+    by_value = Window.partitionBy(*group).orderBy(value)
+    cum = hist.select(
+        *group,
+        value,
+        F.sum(weight)
+        .over(by_value.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        .alias("cum"),
+        F.sum(weight).over(Window.partitionBy(*group)).alias("n"),
     )
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return cum.groupBy(*group).agg(
+        F.max("n").alias("n"),
+        *(
+            F.min(
+                F.when(
+                    F.lit(den) * F.col("cum") >= F.lit(num) * F.col("n"),
+                    F.col(value),
+                )
+            ).alias(name)
+            for name, (num, den) in cuts.items()
+        ),
+    )
+
+
+def cdf_buckets(
+    hist: DataFrame, value: str, weight: str, k: int, out: str
+) -> DataFrame:
+    """Map each distinct ``value`` of a histogram to its CDF bucket
+    ``out`` = ceil(k·cum_le/n), 1..k.
+
+    ONE window over the distinct-value histogram (|distinct| rows —
+    bounded by the value domain, not the row count). Equal values always
+    share a bucket, unlike ``ntile``. The ratio is the float chain
+    ``(k·cum_le)/n`` that the oracles write as ``(k.0 * cum) / n``.
+    """
+    w = Window.orderBy(value).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    every = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return hist.select(
-        "v",
-        F.sum("cnt").over(w).alias("cum_le"),
-        F.sum("cnt").over(
-            Window.rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).alias("n"),
-    ).select(
-        F.col("v").alias(col),
+        value,
         F.ceil(
-            F.lit(float(RFM_Q)) * F.col("cum_le").cast("double")
-            / F.col("n").cast("double")
+            F.lit(float(k))
+            * F.sum(weight).over(w).cast("double")
+            / F.sum(weight).over(every).cast("double")
         )
         .cast("int")
         .alias(out),
+    )
+
+
+def exact_gini(
+    frame: DataFrame, group: str, value: str, tie: str, slot: str
+) -> DataFrame:
+    """Per-``group`` exact Gini coefficient and Lorenz top-decile share
+    of ``value``.
+
+    With values x_1 ≤ … ≤ x_n per group (ties broken by ``tie``, which
+    leaves both statistics unchanged — Σi·x_i is invariant under
+    permuting equal values), Gini = (2·Σi·x_i − (n+1)·Σx) / (n·Σx) and
+    the top-decile share is the sum of the ceil(n/10) largest values over
+    Σx. Both are emitted as ``floor(1e6·num/den)`` micros; num and den
+    are exact int64s cast to double once, so the IEEE divide/multiply/
+    floor chain is identical on both engines.
+
+    Plan: per-GROUP ranks (windows partitioned by ``group``: a
+    per-partition sort, never a global one), persisted in ``slot`` — the
+    Gini aggregate and the top-decile branch both read the ranked frame
+    instead of recomputing ``frame`` → per-group aggregate.
+
+    Returns the group column, ``n``, ``total`` (Σx), ``gini_micro`` and
+    ``top_decile_share_micro``.
+    """
+    from ..tables import persist_replacing
+
+    ranked = persist_replacing(
+        frame.withColumn(
+            "rn",
+            F.row_number().over(
+                Window.partitionBy(group).orderBy(
+                    F.col(value).asc(), F.col(tie).asc()
+                )
+            ),
+        ),
+        slot,
+    )
+    per_group = ranked.groupBy(group).agg(
+        F.count("*").alias("n"),
+        F.sum(value).alias("total"),
+        F.sum(F.col("rn").cast("long") * F.col(value)).alias("t_weighted"),
+    )
+    top = (
+        ranked.join(
+            F.broadcast(
+                per_group.select(
+                    F.col(group).alias("g2"), F.col("n").alias("n2")
+                )
+            ),
+            F.col(group) == F.col("g2"),
+        )
+        .where(F.col("rn") >= F.col("n2") - F.ceil(F.col("n2") / 10) + 1)
+        .groupBy(group)
+        .agg(F.sum(value).alias("top"))
+    )
+    num = (
+        F.lit(2) * F.col("t_weighted") - (F.col("n") + F.lit(1)) * F.col("total")
+    ).cast("double")
+    den = (F.col("n") * F.col("total")).cast("double")
+    return per_group.join(top, group).select(
+        group,
+        "n",
+        "total",
+        F.floor(F.lit(1000000.0) * num / den).cast("long").alias("gini_micro"),
+        F.floor(
+            F.lit(1000000.0)
+            * F.col("top").cast("double")
+            / F.col("total").cast("double")
+        )
+        .cast("long")
+        .alias("top_decile_share_micro"),
     )
 
 
@@ -97,8 +215,8 @@ def rfm_segments(tables: dict[str, DataFrame]) -> DataFrame:
     persisted — the max-day agg, the three histogram score maps, and the
     output all branch off the cached |customers|-row frame instead of
     re-reading orders (without the persist this plan re-scans the corpus
-    8×) → 1-row max-day agg broadcast-crossed in → three histogram-cumsum
-    score maps broadcast-joined back. Nothing downstream sorts globally.
+    8×) → 1-row max-day agg broadcast-crossed in → three
+    :func:`cdf_buckets` score maps broadcast-joined back. Nothing downstream sorts globally.
     """
     from ..tables import persist_replacing
 
@@ -125,7 +243,9 @@ def rfm_segments(tables: dict[str, DataFrame]) -> DataFrame:
         ("frequency", "f_q"),
         ("monetary_cents", "m_q"),
     ):
-        out = out.join(F.broadcast(_quartile_scores(per_cust, col, score)), col)
+        hist = per_cust.groupBy(col).agg(F.count("*").alias("cnt"))
+        scores = cdf_buckets(hist, col, "cnt", RFM_Q, score)
+        out = out.join(F.broadcast(scores), col)
     return out.select(
         "custkey",
         "recency_days",
@@ -142,28 +262,18 @@ def rfm_segments(tables: dict[str, DataFrame]) -> DataFrame:
 
 def nation_revenue_gini(tables: dict[str, DataFrame]) -> DataFrame:
     """Per-nation revenue concentration: exact Gini coefficient and the
-    Lorenz top-decile share of customer lifetime spend.
-
-    With per-customer cents x_1 ≤ … ≤ x_n (ties broken by custkey, which
-    leaves both statistics unchanged — Σi·x_i is invariant under permuting
-    equal values), Gini = (2·Σi·x_i − (n+1)·Σx) / (n·Σx) and the decile
-    share is the spend of the ceil(n/10) largest customers over Σx. Both
-    are emitted as ``floor(1e6·num/den)`` micros; num and den are exact
-    int64s cast to double once, so the IEEE divide/multiply/floor chain is
-    identical on both engines.
+    Lorenz top-decile share of customer lifetime spend
+    (:func:`exact_gini` over per-customer cents, ties broken by custkey).
 
     Plan: per-customer agg (1 shuffle) → broadcast customer→nation map →
-    per-NATION ranks (windows partitioned by nationkey: a per-partition
-    sort, never a global one), persisted — the Gini aggregate and the
-    top-decile branch both read the cached |customers|-row ranked frame
-    instead of re-scanning orders (3× without the persist) → per-nation
-    agg. At 100 TB the window input is |customers| rows spread over 25
-    nation partitions; a skewed nation would take the salted two-level
-    rank variant, but nation cardinality here is the bounded TPC-H
-    dimension.
+    :func:`exact_gini` per nation, its ranked frame persisted — the Gini
+    aggregate and the top-decile branch both read the cached
+    |customers|-row ranked frame instead of re-scanning orders (3×
+    without the persist). At 100 TB the window input is |customers| rows
+    spread over 25 nation partitions; a skewed nation would take the
+    salted two-level rank variant, but nation cardinality here is the
+    bounded TPC-H dimension.
     """
-    from ..tables import persist_replacing
-
     rev = (
         _order_cents(tables)
         .groupBy("o_custkey")
@@ -173,61 +283,21 @@ def nation_revenue_gini(tables: dict[str, DataFrame]) -> DataFrame:
         F.col("c_custkey").alias("o_custkey"), "c_nationkey"
     )
     nation = tables["nation"].select("n_nationkey", "n_name")
-    ranked = persist_replacing(
-        rev.join(F.broadcast(cust), "o_custkey")
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("c_nationkey").orderBy(
-                    F.col("cents").asc(), F.col("o_custkey").asc()
-                )
-            ),
-        ),
+    gini = exact_gini(
+        rev.join(F.broadcast(cust), "o_custkey"),
+        "c_nationkey",
+        "cents",
+        "o_custkey",
         "distribution.gini_ranked",
     )
-    per_nation = ranked.groupBy("c_nationkey").agg(
-        F.count("*").alias("n_customers"),
-        F.sum("cents").alias("total_cents"),
-        F.sum(F.col("rn").cast("long") * F.col("cents")).alias("t_weighted"),
-    )
-    top = (
-        ranked.join(
-            F.broadcast(
-                per_nation.select(
-                    F.col("c_nationkey").alias("nk2"),
-                    F.col("n_customers").alias("n2"),
-                )
-            ),
-            F.col("c_nationkey") == F.col("nk2"),
-        )
-        .where(F.col("rn") >= F.col("n2") - F.ceil(F.col("n2") / 10) + 1)
-        .groupBy("c_nationkey")
-        .agg(F.sum("cents").alias("top_cents"))
-    )
-    num = (
-        F.lit(2) * F.col("t_weighted")
-        - (F.col("n_customers") + F.lit(1)) * F.col("total_cents")
-    ).cast("double")
-    den = (F.col("n_customers") * F.col("total_cents")).cast("double")
-    return (
-        per_nation.join(top, "c_nationkey")
-        .join(
-            F.broadcast(nation),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .select(
-            "n_name",
-            "n_customers",
-            "total_cents",
-            F.floor(F.lit(1000000.0) * num / den).cast("long").alias("gini_micro"),
-            F.floor(
-                F.lit(1000000.0)
-                * F.col("top_cents").cast("double")
-                / F.col("total_cents").cast("double")
-            )
-            .cast("long")
-            .alias("top_decile_share_micro"),
-        )
+    return gini.join(
+        F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey")
+    ).select(
+        "n_name",
+        F.col("n").alias("n_customers"),
+        F.col("total").alias("total_cents"),
+        "gini_micro",
+        "top_decile_share_micro",
     )
 
 

@@ -51,8 +51,9 @@ WOE_BUCKET = 50
 #: fold count for out-of-fold target encoding
 TE_FOLDS = 5
 
-#: portable fold hash: Park–Miller permutation of event_id (overflow-safe
-#: BIGINT arithmetic, identical in both engines)
+#: portable fold hash: Park–Miller minimal standard Lehmer permutation of
+#: a BIGINT id; (2^31-2)·48271 < 2^63, so the product is overflow-safe
+#: BIGINT arithmetic, identical in both engines
 _LEHMER_MOD = 2147483647
 _LEHMER_MUL = 48271
 

@@ -58,12 +58,9 @@ from pyspark.sql import functions as F
 
 from ..tables import local_df
 
-from ..functions.text import words as _words
+from ..functions.text import HASH_MOD, words as _words
 
 Tables = dict[str, DataFrame]
-
-#: modulus of the portable affine-fold hash (cf. pipeline._group_hash)
-_HASH_MOD = 1_000_000_007
 
 #: hashed-ngram feature buckets (DSIR uses 10k on real corpora; 512 keeps
 #: the synthetic vocab from spreading one word over many buckets)
@@ -85,9 +82,9 @@ GATE_A, GATE_B = 736_338_717, 198_491_317
 
 
 def _gate_hash(col: str) -> F.Column:
-    """Uniform portable hash of a BIGINT column into [0, _HASH_MOD)."""
+    """Uniform portable hash of a BIGINT column into [0, HASH_MOD)."""
     return F.expr(
-        f"(({col} % {_HASH_MOD}) * {GATE_A} + {GATE_B}) % {_HASH_MOD}"
+        f"(({col} % {HASH_MOD}) * {GATE_A} + {GATE_B}) % {HASH_MOD}"
     )
 
 
@@ -101,13 +98,13 @@ def _doc_bucket_hits(docs: DataFrame) -> DataFrame:
     run); the batched form does identical string work in Python with a
     per-batch memo on repeated bigrams. Semantics unchanged and
     oracle-portable: whitespace split of trimmed text, 0-based bigram
-    position, affine char fold mod ``_HASH_MOD`` into ``DSIR_BUCKETS``.
+    position, affine char fold mod ``HASH_MOD`` into ``DSIR_BUCKETS``.
     """
 
     def hit_batches(batches):
         import pandas as pd
 
-        mod, nb = _HASH_MOD, DSIR_BUCKETS
+        mod, nb = HASH_MOD, DSIR_BUCKETS
         memo: dict[str, int] = {}
         for pdf in batches:
             ids, langs, poss, buckets = [], [], [], []
@@ -226,7 +223,7 @@ def temperature_mix_sample(t: Tables) -> DataFrame:
         .where(
             F.expr(
                 "CAST(h * h AS DECIMAL(38,0)) * n_g"
-                f" < CAST({_HASH_MOD} AS DECIMAL(38,0)) * {_HASH_MOD} * n_min"
+                f" < CAST({HASH_MOD} AS DECIMAL(38,0)) * {HASH_MOD} * n_min"
             )
         )
         .select("doc_id", "lang")
@@ -278,7 +275,7 @@ def kl_source_divergence(t: Tables) -> DataFrame:
     sw = toks.groupBy("source", "w").agg(F.count("*").alias("c"))
     fold = F.expr(
         "aggregate(split(w, ''), CAST(7 AS BIGINT),"
-        f" (acc, c) -> (acc * 31 + ascii(c)) % {_HASH_MOD})"
+        f" (acc, c) -> (acc * 31 + ascii(c)) % {HASH_MOD})"
     )
     sb = (
         sw.select("source", (fold % KL_BUCKETS).alias("bucket"), "c")
@@ -401,7 +398,7 @@ def epoch_upsample_manifest(t: Tables) -> DataFrame:
     extra = F.expr(
         "CASE WHEN CAST(h + f * {mod} AS DECIMAL(38,0)) * (h + f * {mod}) * n_s"
         " < CAST({mod} AS DECIMAL(38,0)) * {mod} * n_max"
-        " THEN 1 ELSE 0 END".format(mod=_HASH_MOD)
+        " THEN 1 ELSE 0 END".format(mod=HASH_MOD)
     )
     return (
         d.join(F.broadcast(rates), "source")
@@ -678,7 +675,7 @@ _FOLD = (
     "list_reduce(list_prepend(CAST(7 AS BIGINT),"
     " list_transform(string_split_regex({s}, ''),"
     " c -> CAST(ascii(c) AS BIGINT))),"
-    f" (a, b) -> (a * 31 + b) % {_HASH_MOD})"
+    f" (a, b) -> (a * 31 + b) % {HASH_MOD})"
 )
 
 ORACLES: dict[str, str] = {
@@ -769,8 +766,8 @@ ORACLES: dict[str, str] = {
     "temperature_mix_sample": f"""
         WITH d AS (
           SELECT doc_id, lang,
-                 ((doc_id % {_HASH_MOD}) * {GATE_A} + {GATE_B})
-                   % {_HASH_MOD} AS h
+                 ((doc_id % {HASH_MOD}) * {GATE_A} + {GATE_B})
+                   % {HASH_MOD} AS h
           FROM documents
         ),
         g AS (SELECT lang, count(*) AS n_g FROM d GROUP BY lang),
@@ -778,13 +775,13 @@ ORACLES: dict[str, str] = {
         SELECT doc_id, lang
         FROM d JOIN g USING (lang), m
         WHERE CAST(h AS HUGEINT) * h * n_g
-              < CAST({_HASH_MOD} AS HUGEINT) * {_HASH_MOD} * n_min
+              < CAST({HASH_MOD} AS HUGEINT) * {HASH_MOD} * n_min
     """,
     "epoch_upsample_manifest": f"""
         WITH d AS (
           SELECT doc_id, source,
-                 ((doc_id % {_HASH_MOD}) * {GATE_A} + {GATE_B})
-                   % {_HASH_MOD} AS h
+                 ((doc_id % {HASH_MOD}) * {GATE_A} + {GATE_B})
+                   % {HASH_MOD} AS h
           FROM documents
         ),
         g AS (SELECT source, count(*) AS n_s FROM d GROUP BY source),
@@ -803,10 +800,10 @@ ORACLES: dict[str, str] = {
           FROM f0
         )
         SELECT doc_id, source,
-               CAST(f + CASE WHEN CAST(h + f * {_HASH_MOD} AS HUGEINT)
-                                  * (h + f * {_HASH_MOD}) * n_s
-                                < CAST({_HASH_MOD} AS HUGEINT)
-                                  * {_HASH_MOD} * n_max
+               CAST(f + CASE WHEN CAST(h + f * {HASH_MOD} AS HUGEINT)
+                                  * (h + f * {HASH_MOD}) * n_s
+                                < CAST({HASH_MOD} AS HUGEINT)
+                                  * {HASH_MOD} * n_max
                         THEN 1 ELSE 0 END AS BIGINT) AS n_epochs
         FROM d JOIN fx USING (source)
     """,

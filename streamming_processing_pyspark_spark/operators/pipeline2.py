@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import HASH_MOD
 from .dedup import _SHINGLE_DUCK, _exploded_shingles, _shingles
 
 Tables = dict[str, DataFrame]
@@ -197,9 +198,6 @@ def span_dedup(t: Tables) -> DataFrame:
 #: span/chunk granularity of the fixed-position variants above.
 CDC_MOD = 12
 
-#: modulus of the portable affine-fold hash (cf. pipeline._group_hash)
-_CDC_HASH_MOD = 1_000_000_007
-
 
 def cdc_chunks(t: Tables) -> DataFrame:
     """Content-defined chunking — the dedup granularity between
@@ -232,7 +230,7 @@ def cdc_chunks(t: Tables) -> DataFrame:
     )
     fold = F.expr(
         "aggregate(split(w, ''), CAST(7 AS BIGINT),"
-        f" (acc, c) -> (acc * 31 + ascii(c)) % {_CDC_HASH_MOD})"
+        f" (acc, c) -> (acc * 31 + ascii(c)) % {HASH_MOD})"
     )
     vocab = (
         toks.select("w")
@@ -293,7 +291,7 @@ ORACLES: dict[str, str] = {
                  CASE WHEN list_reduce(list_prepend(CAST(7 AS BIGINT),
                         list_transform(string_split_regex(w, ''),
                           c -> CAST(ascii(c) AS BIGINT))),
-                        (a, b) -> (a * 31 + b) % {_CDC_HASH_MOD})
+                        (a, b) -> (a * 31 + b) % {HASH_MOD})
                       % {CDC_MOD} = 0 THEN 1 ELSE 0 END AS b
           FROM (SELECT DISTINCT w FROM toks)
         ),

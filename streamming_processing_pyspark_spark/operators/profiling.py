@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .distribution import exact_cuts
+
 #: value in cents ≤ ~50k, event_id < 1e6 at any test SF → composite fits
 #: int64 with room to spare (cents * 1e9 + id < 5e13, double-exact too).
 _RANK_SCALE = 1_000_000_000
@@ -264,8 +266,8 @@ def psi_value_drift(tables: dict[str, DataFrame]) -> DataFrame:
 
     Shape: the SAME single conditional-sum histogram as
     :func:`value_drift_ks` (one map-combinable shuffle of |distinct
-    cents| rows) → decile edges via histogram-cumsum (no global sort,
-    same trick as ``value_winsorize``) → bucket the histogram rows (not
+    cents| rows) → decile edges from :func:`distribution.exact_cuts` of
+    the first half's counts (no global sort) → bucket the histogram rows (not
     the raw rows) against the broadcast 9-edge array → 10 add-one-
     smoothed terms. Each term's log is ONE ``ln`` of an exact integer
     rational and the 10 terms fold in bucket order (collect→sort→
@@ -303,25 +305,10 @@ def psi_value_drift(tables: dict[str, DataFrame]) -> DataFrame:
         ),
         "psi_hist",
     )
-    w = Window.orderBy("v_c").rowsBetween(Window.unboundedPreceding, 0)
     w_all = Window.partitionBy()
-    cum = hist.select(
-        "v_c",
-        "c1",
-        "c2",
-        F.sum("c1").over(w).alias("cum1"),
-        F.sum("c1").over(w_all).alias("n1"),
+    edges = exact_cuts(
+        hist, "v_c", "c1", {f"e{j}": (j, PSI_BUCKETS) for j in range(1, PSI_BUCKETS)}
     )
-    edge_cols = [
-        F.min(
-            F.when(
-                F.lit(PSI_BUCKETS) * F.col("cum1") >= F.lit(j) * F.col("n1"),
-                F.col("v_c"),
-            )
-        ).alias(f"e{j}")
-        for j in range(1, PSI_BUCKETS)
-    ]
-    edges = cum.agg(*edge_cols)
     edge_arr = "array(" + ", ".join(f"e{j}" for j in range(1, PSI_BUCKETS)) + ")"
     bucketed = (
         hist.crossJoin(F.broadcast(edges))
@@ -382,17 +369,13 @@ def value_winsorize(tables: dict[str, DataFrame]) -> DataFrame:
     """Outlier clipping (winsorization) of ``value`` at the exact
     per-event-type 5th/95th percentiles — the feature-preprocessing step
     that stops heavy-tailed values from dominating normalization, done
-    WITHOUT a global sort: per-(type, cent) histogram → cumulative counts
-    over the tiny histogram → threshold pick → broadcast back → map-side
-    clip (the same exact-quantile machinery as
-    ``curation.perplexity_buckets``, applied to a numeric feature).
-    Thresholds use integer cross-multiplication (``100·cum ≥ p·n``) and
-    values bucket to cents, so the clipped output hash-matches the
-    oracle. NULL values are dropped explicitly (the engines disagree on
-    NULL sort placement).
+    WITHOUT a global sort: per-(type, cent) histogram →
+    :func:`distribution.exact_cuts` thresholds → broadcast back →
+    map-side clip. Thresholds use integer cross-multiplication
+    (``100·cum ≥ p·n``) and values bucket to cents, so the clipped output
+    hash-matches the oracle. NULL values are dropped explicitly (the
+    engines disagree on NULL sort placement).
     """
-    from pyspark.sql import Window
-
     ev = tables["events"].where(F.col("value").isNotNull())
     d = ev.select(
         "event_id",
@@ -400,22 +383,8 @@ def value_winsorize(tables: dict[str, DataFrame]) -> DataFrame:
         F.floor(F.col("value") * 100).cast("long").alias("v_c"),
     )
     hist = d.groupBy("event_type", "v_c").agg(F.count("*").alias("cnt"))
-    w = Window.partitionBy("event_type").orderBy("v_c")
-    w_all = Window.partitionBy("event_type")
-    cum = hist.select(
-        "event_type",
-        "v_c",
-        F.sum("cnt").over(w).alias("cum"),
-        F.sum("cnt").over(w_all).alias("n"),
-    )
-    th = cum.groupBy("event_type").agg(
-        F.min(
-            F.when(100 * F.col("cum") >= WINSOR_LO_PCT * F.col("n"), F.col("v_c"))
-        ).alias("lo_c"),
-        F.min(
-            F.when(100 * F.col("cum") >= WINSOR_HI_PCT * F.col("n"), F.col("v_c"))
-        ).alias("hi_c"),
-    )
+    cuts = {"lo_c": (WINSOR_LO_PCT, 100), "hi_c": (WINSOR_HI_PCT, 100)}
+    th = exact_cuts(hist, "v_c", "cnt", cuts, "event_type")
     return d.join(F.broadcast(th), "event_type").select(
         "event_id",
         "event_type",
@@ -554,53 +523,34 @@ def join_key_skew_report(tables: dict[str, DataFrame]) -> DataFrame:
 
     Plan shape at 100 TB: ONE map-side-combined groupBy(key) builds the
     per-key counts; the count-of-counts histogram (≤ |distinct count
-    values| rows — tiny) does the exact p99 via cumulative sums, so the
-    skew numbers come out bit-exact with no sort over the corpus and no
-    sampling. Mean is integer micros; skew_bp = 10000·max·keys/rows.
+    values| rows — tiny) gives the exact p99 through
+    :func:`distribution.exact_cuts`, so the skew numbers come out
+    bit-exact with no sort over the corpus and no sampling. Mean is
+    integer micros; skew_bp = 10000·max·keys/rows.
     """
-    from pyspark.sql import Window
-
     counts = tables["orders"].groupBy("o_custkey").agg(
         F.count("*").alias("c")
     )
     hist = counts.groupBy("c").agg(F.count("*").alias("n_keys"))
-    w = Window.orderBy("c")
-    cum = hist.select(
-        "c",
-        F.sum("n_keys").over(w).alias("cum"),
-        F.sum("n_keys")
-        .over(
-            Window.rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        )
-        .alias("keys"),
-        F.sum(F.col("c") * F.col("n_keys"))
-        .over(
-            Window.rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        )
-        .alias("rows"),
-    )
-    return cum.agg(
-        F.max("rows").alias("n_rows"),
-        F.max("keys").alias("n_keys"),
+    p99 = f"p{SKEW_PCT}_rows_per_key"
+    rows = hist.agg(
+        F.sum(F.col("c") * F.col("n_keys")).alias("n_rows"),
         F.max("c").alias("max_rows_per_key"),
-        F.min(
-            F.when(
-                F.expr(f"100 * cum >= {SKEW_PCT} * keys"), F.col("c")
-            )
-        ).alias(f"p{SKEW_PCT}_rows_per_key"),
-    ).select(
-        "n_rows",
-        "n_keys",
-        "max_rows_per_key",
-        f"p{SKEW_PCT}_rows_per_key",
-        F.expr("1000000 * n_rows DIV n_keys").alias("mean_rows_micro"),
-        F.expr("10000 * max_rows_per_key * n_keys DIV n_rows").alias(
-            "skew_bp"
-        ),
+    )
+    return (
+        exact_cuts(hist, "c", "n_keys", {p99: (SKEW_PCT, 100)})
+        .crossJoin(rows)
+        .withColumnRenamed("n", "n_keys")
+        .select(
+            "n_rows",
+            "n_keys",
+            "max_rows_per_key",
+            p99,
+            F.expr("1000000 * n_rows DIV n_keys").alias("mean_rows_micro"),
+            F.expr("10000 * max_rows_per_key * n_keys DIV n_rows").alias(
+                "skew_bp"
+            ),
+        )
     )
 
 

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..streaming.jobs import sessionize_stream
 from ..tables import local_df
+from .distribution import exact_cuts
 
 Tables = dict[str, DataFrame]
 
@@ -356,13 +357,12 @@ EXACT_PCT = (50, 90, 99)
 def exact_percentiles_by_type(t: Tables) -> DataFrame:
     """EXACT P50/P90/P99 of the event value (cents) per type — without a
     global sort: aggregate to a per-(type, cents) histogram (map-side
-    combinable, one shuffle of |distinct cents| rows), cumulate counts
-    over the tiny histogram with one window per type, and pick the
-    smallest value whose cumulative count reaches ``ceil(q·n)`` — the
-    same machinery as ``curation.perplexity_buckets``' terciles, the
-    standard way to take exact quantiles of 100 TB. All-integer
-    (``cum ≥ (q·n + 99) DIV 100``), so it hash-matches the oracle; the
-    sketch twin is :func:`approx_percentiles_by_type`.
+    combinable, one shuffle of |distinct cents| rows) and take
+    :func:`distribution.exact_cuts` over it: the smallest value whose
+    cumulative count reaches ``ceil(q·n)``, the standard way to take
+    exact quantiles of 100 TB. All-integer (``cum ≥ (q·n + 99) DIV
+    100``), so it hash-matches the oracle; the sketch twin is
+    :func:`approx_percentiles_by_type`.
     """
     hist = (
         t["events"]
@@ -372,24 +372,10 @@ def exact_percentiles_by_type(t: Tables) -> DataFrame:
         )
         .agg(F.count("*").alias("cnt"))
     )
-    w = Window.partitionBy("event_type").orderBy("v_c")
-    w_all = Window.partitionBy("event_type")
-    cum = hist.select(
-        "event_type",
-        "v_c",
-        F.sum("cnt").over(w).alias("cum"),
-        F.sum("cnt").over(w_all).alias("n"),
+    cuts = {f"p{q}_cents": (q, 100) for q in EXACT_PCT}
+    return exact_cuts(hist, "v_c", "cnt", cuts, "event_type").withColumnRenamed(
+        "n", "n_events"
     )
-    aggs = [F.max("n").alias("n_events")]
-    for q in EXACT_PCT:
-        aggs.append(
-            F.min(
-                F.when(
-                    F.expr(f"cum >= ({q} * n + 99) DIV 100"), F.col("v_c")
-                )
-            ).alias(f"p{q}_cents")
-        )
-    return cum.groupBy("event_type").agg(*aggs)
 
 
 def value_outliers_by_percentile(t: Tables) -> DataFrame:

@@ -31,13 +31,13 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import HASH_MOD
+from .distribution import cdf_buckets
+
 Tables = dict[str, DataFrame]
 
 #: sample size per language for weighted_sample_per_lang
 SAMPLE_PER_LANG = 25
-
-#: modulus of the portable affine-fold hash (cf. pipeline._group_hash)
-_HASH_MOD = 1_000_000_007
 
 #: Gopher-style rule thresholds (scaled to the synthetic corpus: docs are
 #: 10-99 whitespace tokens; real MassiveText bounds are 50/100k words)
@@ -50,7 +50,7 @@ ALPHA_NUM, ALPHA_DEN = 4, 5
 
 
 def _doc_hash() -> Column:
-    """Portable per-doc uniform hash in [0, _HASH_MOD): reuses
+    """Portable per-doc uniform hash in [0, HASH_MOD): reuses
     ``pipeline._group_hash``'s affine character fold (the single source
     of truth for the SQL-portable hash) on the decimal doc_id string so
     DuckDB replays it exactly."""
@@ -77,7 +77,7 @@ def weighted_sample_per_lang(t: Tables) -> DataFrame:
         F.size(F.split(F.trim("text"), r"\s+")).cast("long").alias("n_tokens"),
         _doc_hash().alias("h"),
     )
-    key = -F.log((F.col("h") + 1) / F.lit(float(_HASH_MOD + 1))) / F.col("n_tokens")
+    key = -F.log((F.col("h") + 1) / F.lit(float(HASH_MOD + 1))) / F.col("n_tokens")
     w = Window.partitionBy("lang").orderBy(key.asc(), "doc_id")
     return (
         d.select("doc_id", "lang", "n_tokens", F.row_number().over(w).alias("rk"))
@@ -254,7 +254,7 @@ _BOOT_MUL = 48271
 #: Lehmer rounds ((r+1)·SALT < 4e7, so h0 + shift < 2·MOD — int64-safe)
 _BOOT_SALT = 1_000_003
 _BOOT_CUTOFFS = tuple(
-    int(sum(math.exp(-1.0) / math.factorial(i) for i in range(k + 1)) * _HASH_MOD)
+    int(sum(math.exp(-1.0) / math.factorial(i) for i in range(k + 1)) * HASH_MOD)
     for k in range(5)
 )
 #: order-statistic indices (1-based) into the sorted replicate means:
@@ -312,9 +312,9 @@ def poisson_bootstrap_ci(t: Tables) -> DataFrame:
             F.array(*[F.lit(r) for r in range(BOOT_REPLICATES)])
         ).alias("r"),
     )
-    mixed = (F.col("h0") + (F.col("r") + 1) * _BOOT_SALT) % _HASH_MOD
+    mixed = (F.col("h0") + (F.col("r") + 1) * _BOOT_SALT) % HASH_MOD
     hashed = reps.withColumn(
-        "h", (mixed * _BOOT_MUL % _HASH_MOD) * _BOOT_MUL % _HASH_MOD
+        "h", (mixed * _BOOT_MUL % HASH_MOD) * _BOOT_MUL % HASH_MOD
     )
     w = sum(
         (F.col("h") >= F.lit(cut)).cast("long") for cut in _BOOT_CUTOFFS
@@ -438,14 +438,14 @@ ORACLES: dict[str, str] = {
                    list_prepend(CAST(7 AS BIGINT),
                      list_transform(string_split_regex(CAST(doc_id AS VARCHAR), ''),
                                     c -> CAST(ascii(c) AS BIGINT))),
-                   (a, b) -> (a * 31 + b) % {_HASH_MOD}) AS h
+                   (a, b) -> (a * 31 + b) % {HASH_MOD}) AS h
           FROM documents
         ),
         r AS (
           SELECT doc_id, lang, n_tokens,
                  row_number() OVER (
                    PARTITION BY lang
-                   ORDER BY -ln((h + 1) / {float(_HASH_MOD + 1)}) / n_tokens,
+                   ORDER BY -ln((h + 1) / {float(HASH_MOD + 1)}) / n_tokens,
                             doc_id) AS rk
           FROM d
         )
@@ -492,7 +492,7 @@ ORACLES["label_balanced_sample"] = f"""
                list_prepend(CAST(7 AS BIGINT),
                  list_transform(string_split_regex(CAST(vec_id AS VARCHAR), ''),
                                 c -> CAST(ascii(c) AS BIGINT))),
-               (a, b) -> (a * 31 + b) % {_HASH_MOD}) AS hh
+               (a, b) -> (a * 31 + b) % {HASH_MOD}) AS hh
       FROM embeddings
     ),
     q AS (SELECT min(cnt) AS quota
@@ -513,10 +513,10 @@ def _boot_oracle() -> str:
     from .sketches import _hash_duck
 
     h0 = _hash_duck("CAST(event_id AS VARCHAR)", "0")
-    mixed = f"((h0 + (r + 1) * {_BOOT_SALT}) % {_HASH_MOD})"
+    mixed = f"((h0 + (r + 1) * {_BOOT_SALT}) % {HASH_MOD})"
     h = (
-        f"({mixed} * {_BOOT_MUL} % {_HASH_MOD})"
-        f" * {_BOOT_MUL} % {_HASH_MOD}"
+        f"({mixed} * {_BOOT_MUL} % {HASH_MOD})"
+        f" * {_BOOT_MUL} % {HASH_MOD}"
     )
     w = " + ".join(
         f"(CASE WHEN {h} >= {cut} THEN 1 ELSE 0 END)" for cut in _BOOT_CUTOFFS
@@ -600,10 +600,10 @@ def classifier_decile_lift(t: Tables) -> DataFrame:
     score threshold ("decile 10 carries 3.1x base rate and the top three
     deciles capture 60% of rule-kept docs").
 
-    Deciles come from the histogram-cumsum pattern
-    (``distribution._quartile_scores`` design): groupBy the integer score,
-    one window over the DISTINCT-score histogram, ``ceil(10·cum_le/n)``
-    broadcast-joined back — tie-stable and no corpus sort. The lift and
+    Deciles come from :func:`distribution.cdf_buckets` over the
+    integer-score histogram: one window over the DISTINCT-score
+    histogram, ``ceil(10·cum_le/n)`` broadcast-joined back — tie-stable
+    and no corpus sort. The lift and
     capture ratios keep the float chain identical on both engines
     (left-associative ``(1e6·n_pos)/n_docs·n_tot/p_tot``) and NULL out if
     the gate keeps nothing. Final windows run over ≤ 10 decile rows.
@@ -621,22 +621,7 @@ def classifier_decile_lift(t: Tables) -> DataFrame:
         "sampling.lift_joined",
     )
     hist = j.groupBy("score").agg(F.count("*").alias("cnt"))
-    wcum = Window.orderBy("score").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    wall = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    dec_map = hist.select(
-        "score",
-        F.ceil(
-            F.lit(float(LIFT_DECILES))
-            * F.sum("cnt").over(wcum).cast("double")
-            / F.sum("cnt").over(wall).cast("double")
-        )
-        .cast("int")
-        .alias("score_decile"),
-    )
+    dec_map = cdf_buckets(hist, "score", "cnt", LIFT_DECILES, "score_decile")
     per_dec = (
         j.join(F.broadcast(dec_map), "score")
         .groupBy("score_decile")

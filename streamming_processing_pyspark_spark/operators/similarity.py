@@ -19,7 +19,8 @@ cores.
   (:func:`_branch_stage`) and the in-branch fine split
   (:func:`_fine_cells`).
 - Contracts: every exact-vs-approximate ``*_check`` projects its flags
-  from one row of :func:`dedup._overlap_counts`; the flat indexes share
+  from one row of :func:`dedup._overlap_counts`; the pair-recall checks
+  share :func:`dedup._recall_contract` and the flat indexes
   :func:`_topk_contract`.
 - LSH (:func:`lsh_bucketed_pairs`, :func:`lsh_query_topk`), whitening,
   MMR and Matryoshka audits stand alone.
@@ -45,6 +46,7 @@ from .dedup import (
     _pct_ok,
     _posting,
     _posting_pairs,
+    _recall_contract,
 )
 
 Tables = dict[str, DataFrame]
@@ -1806,13 +1808,10 @@ def lsh_theta_recall_check(t: Tables) -> DataFrame:
     collision probability for cos 0.4 is ~0.16/band, ~50% over 4 bands;
     the pin is set below the worst measured fixture).
     """
-    c = _overlap_counts(
-        _all_pairs_at(t, SEMDEDUP_THRESHOLD), lsh_pairs_at_theta(t), ["id_a", "id_b"]
-    )
-    return c.select(
-        "n_exact",
-        (F.col("n_outside") == 0).alias("subset_ok"),
-        _pct_ok("n_hit", "n_exact", LSH_THETA_RECALL_PCT).alias("recall_ok"),
+    return _recall_contract(
+        _all_pairs_at(t, SEMDEDUP_THRESHOLD),
+        lsh_pairs_at_theta(t),
+        LSH_THETA_RECALL_PCT,
     )
 
 
@@ -1854,13 +1853,10 @@ def lsh_multiprobe_recall_check(t: Tables) -> DataFrame:
     exact-cosine verified), and a recall floor strictly above the
     single-probe theory value (~50% at cos 0.4), so a regression that
     silently drops the probe keys trips the check."""
-    c = _overlap_counts(
-        _all_pairs_at(t, SEMDEDUP_THRESHOLD), lsh_multiprobe_pairs(t), ["id_a", "id_b"]
-    )
-    return c.select(
-        "n_exact",
-        (F.col("n_outside") == 0).alias("subset_ok"),
-        _pct_ok("n_hit", "n_exact", LSH_MULTIPROBE_RECALL_PCT).alias("recall_ok"),
+    return _recall_contract(
+        _all_pairs_at(t, SEMDEDUP_THRESHOLD),
+        lsh_multiprobe_pairs(t),
+        LSH_MULTIPROBE_RECALL_PCT,
     )
 
 
@@ -1975,11 +1971,7 @@ def incremental_semantic_check(t: Tables) -> DataFrame:
         F.least("new_id", "old_id").alias("id_a"),
         F.greatest("new_id", "old_id").alias("id_b"),
     )
-    return _overlap_counts(exact, inc, ["id_a", "id_b"]).select(
-        F.col("n_exact").alias("n_exact_cross"),
-        (F.col("n_outside") == 0).alias("subset_ok"),
-        _pct_ok("n_hit", "n_exact", INCR_SEM_RECALL_PCT).alias("recall_ok"),
-    )
+    return _recall_contract(exact, inc, INCR_SEM_RECALL_PCT, "n_exact_cross")
 
 
 #: CORPUS-SIZED TUNING: the classic IVF setting is n_centroids ≈ √n with
@@ -2153,7 +2145,9 @@ def ivf_topk(
     qvec = _unit_query_vec(emb)
     if qvec is None:
         return _rerank_exact(emb, None, None)
-    b_cents = emb.sparkSession.sparkContext.broadcast(cents)
+    b_cents = broadcast_replacing(
+        emb.sparkSession.sparkContext, cents, "similarity.ivf_centroids"
+    )
 
     def assign_buckets(batches):
         cc = b_cents.value
@@ -2294,10 +2288,10 @@ def _spherical_kmeans(emb: DataFrame, k: int, iters: int, tol: float = KMEANS_TO
     movement (1 − cos(old, new)) drops under ``tol`` instead of always
     running ``iters`` rounds.
 
-    Broadcast hygiene (ADVICE r7): every Lloyd round's partial-sum
-    broadcast is unpersisted as soon as the round's toPandas() completes
-    (the job is done with it); the one assignment broadcast is held in a
-    slot (:func:`tables.broadcast_replacing`).
+    Broadcast hygiene: every Lloyd round's partial-sum broadcast is
+    destroyed as soon as the round's toPandas() completes (the job is
+    done with it); the one assignment broadcast, which the returned
+    lazy frames read, is held in a slot (:func:`tables.broadcast_replacing`).
 
     Deterministic: init = the k lowest vec_ids; no RNG anywhere.
     Returns (centroids ndarray, assign_fn, persisted_emb) where
@@ -2413,9 +2407,9 @@ def _spherical_kmeans(emb: DataFrame, k: int, iters: int, tol: float = KMEANS_TO
                 .applyInPandas(reduce_cluster, schema=_REDUCED_SCHEMA)
                 .toPandas()
             )
-        # the round's job is complete — its centroid broadcast is garbage
-        # now, not at session end (ADVICE r7: these accumulated per round)
-        b_round.unpersist(blocking=False)
+        # the round's job is complete: destroy its centroid broadcast now,
+        # pickled driver file included, not at session end
+        b_round.destroy()
         upd = upd.sort_values("cluster", kind="mergesort")
         moved = 0.0
         for _, row in upd.iterrows():
@@ -2606,8 +2600,10 @@ def pq_topk(t: Tables) -> DataFrame:
     qvec = _unit_query_vec(emb)
     if qvec is None:
         return _rerank_exact(emb, None, None)
-    b_model = emb.sparkSession.sparkContext.broadcast(
-        (books, _adc_table(books, qvec))
+    b_model = broadcast_replacing(
+        emb.sparkSession.sparkContext,
+        (books, _adc_table(books, qvec)),
+        "similarity.pq_model",
     )
 
     def adc_scores(batches):
@@ -2678,14 +2674,16 @@ def ivfpq_topk(
     qvec = _unit_query_vec(emb)
     if qvec is None:
         return _rerank_exact(emb, None, None)
-    b_model = emb.sparkSession.sparkContext.broadcast(
+    b_model = broadcast_replacing(
+        emb.sparkSession.sparkContext,
         (
             cents,
             books,
             set(_probe_buckets(cents, qvec, n_probe)),
             cents @ qvec,  # q·c_b per bucket
             _adc_table(books, qvec),
-        )
+        ),
+        "similarity.ivfpq_model",
     )
 
     def adc_probed(batches):
@@ -2967,7 +2965,7 @@ def whiten_check(t: Tables) -> DataFrame:
         n, s, g = _collect_moment_partials(parts)
     finally:
         # the moment pass is eager: nothing lazy outlives this call
-        b.unpersist(blocking=False)
+        b.destroy()
     d = len(s)
     mu = s / n
     cov = g.reshape(d, d) / n - np.outer(mu, mu)

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import HASH_MOD
 from .text import words
 
 Tables = dict[str, DataFrame]
@@ -46,7 +47,6 @@ CMS_DEPTH = 4
 CMS_WIDTH = 1024
 #: heavy hitters whose estimates the check emits
 CMS_TOPK = 20
-_HASH_MOD = 1_000_000_007
 
 
 def _seeded_hash(col_sql: str, seed: int) -> Column:
@@ -55,7 +55,7 @@ def _seeded_hash(col_sql: str, seed: int) -> Column:
     DuckDB mirrors each row with ``list_reduce`` over ascii codes."""
     return F.expr(
         f"aggregate(split({col_sql}, ''), CAST({7 + seed} AS BIGINT),"
-        f" (acc, c) -> (acc * 31 + ascii(c)) % {_HASH_MOD})"
+        f" (acc, c) -> (acc * 31 + ascii(c)) % {HASH_MOD})"
     )
 
 
@@ -155,7 +155,7 @@ def _hash_duck(expr: str, seed_expr: str) -> str:
         f"list_reduce(list_prepend(CAST(7 + {seed_expr} AS BIGINT),"
         f" list_transform(string_split_regex({expr}, ''),"
         " c -> CAST(ascii(c) AS BIGINT))),"
-        f" (a, b) -> (a * 31 + b) % {_HASH_MOD})"
+        f" (a, b) -> (a * 31 + b) % {HASH_MOD})"
     )
 
 
@@ -195,7 +195,7 @@ _KMV_A, _KMV_B = 736_338_717, 198_491_317
 
 
 def _kmv_hash(col: str) -> Column:
-    return F.expr(f"(({col} % {_HASH_MOD}) * {_KMV_A} + {_KMV_B}) % {_HASH_MOD}")
+    return F.expr(f"(({col} % {HASH_MOD}) * {_KMV_A} + {_KMV_B}) % {HASH_MOD}")
 
 
 def kmv_type_overlap(t: Tables) -> DataFrame:
@@ -314,7 +314,7 @@ def kmv_type_overlap(t: Tables) -> DataFrame:
 
 
 #: per-depth multipliers for the integer-key CMS (LCG-derived like
-#: dedup._minhash_coeffs; each odd, < _HASH_MOD, so (key%MOD)*A < 1e18
+#: dedup._minhash_coeffs; each odd, < HASH_MOD, so (key%MOD)*A < 1e18
 #: stays inside int64 in both engines)
 CMS_KEY_AS = (736_338_717, 890_588_165, 214_580_541, 443_804_041)
 CMS_KEY_B = 198_491_317
@@ -323,7 +323,7 @@ CMS_KEY_B = 198_491_317
 def _key_cell(col: str, d: int) -> Column:
     a = CMS_KEY_AS[d]
     return F.expr(
-        f"((({col} % {_HASH_MOD}) * {a} + {CMS_KEY_B}) % {_HASH_MOD})"
+        f"((({col} % {HASH_MOD}) * {a} + {CMS_KEY_B}) % {HASH_MOD})"
         f" % {CMS_WIDTH}"
     )
 
@@ -426,7 +426,7 @@ def cms_join_size_check(t: Tables) -> DataFrame:
 KMV_SKETCH_ORACLE = f"""
     WITH h AS (
       SELECT DISTINCT event_type,
-             ((user_id % {_HASH_MOD}) * {_KMV_A} + {_KMV_B}) % {_HASH_MOD} AS h
+             ((user_id % {HASH_MOD}) * {_KMV_A} + {_KMV_B}) % {HASH_MOD} AS h
       FROM events
     ),
     rk AS (

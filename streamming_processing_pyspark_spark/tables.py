@@ -160,7 +160,12 @@ _SLOTS: dict[str, tuple] = {}
 
 
 def _unpersist(value) -> None:
-    value.unpersist(blocking=False)  # DataFrame or Broadcast
+    value.unpersist(blocking=False)
+
+
+def _destroy(broadcast) -> None:
+    # executor copies AND the driver's pickled file, which unpersist keeps
+    broadcast.destroy(blocking=False)
 
 
 def _release(value, release) -> None:
@@ -217,8 +222,9 @@ def persist_replacing(df: DataFrame, slot: str, fill: bool = False) -> DataFrame
     value and places the new one, which caps storage at one value per
     slot: DataFrame.persist blocks, checkpoint-backed labels and
     broadcasts are NOT reclaimed when the Python object dies. Releasing
-    is always safe — a still-live plan built on a released value just
-    recomputes (a broadcast is re-sent from the driver).
+    a frame is always safe — a still-live plan built on it just
+    recomputes. Releasing a broadcast destroys it (see
+    :func:`broadcast_replacing`).
 
     ``fill=True`` runs one ``count()`` unless the held frame was placed
     by a fill request: AQE materializes sibling query stages
@@ -249,8 +255,12 @@ def persist_replacing(df: DataFrame, slot: str, fill: bool = False) -> DataFrame
 def broadcast_replacing(sc, value, slot: str):
     """``sc.broadcast(value)`` for a LAZY frame: the broadcast must outlive
     the call that builds the frame, so the slot holds it until the next
-    request on that slot (see :func:`persist_replacing`)."""
-    return held(slot, None, lambda: sc.broadcast(value), _unpersist)[1]
+    request on that slot or the next :func:`clear_persist_slots` (see
+    :func:`persist_replacing`). Release destroys it: ``unpersist`` would
+    keep the pickled value in a driver temp file for the life of the
+    SparkContext, one file per call. A frame that reads the broadcast
+    must therefore run before the next request on its slot."""
+    return held(slot, None, lambda: sc.broadcast(value), _destroy)[1]
 
 
 def clear_persist_slots() -> None:

@@ -212,6 +212,18 @@ _TEST_ONLY_KEEP = {
 }
 
 
+def _defined_names(node) -> list[str]:
+    """Names a top-level statement binds: a def/class, or assignment targets."""
+    import ast
+
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    if isinstance(node, (ast.Assign, ast.AnnAssign)):
+        targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+        return [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+    return []
+
+
 def test_no_package_definition_is_reached_only_from_tests():
     """Every top-level package definition is referenced (a name, an
     attribute or an import) from package, bench.py, __spark_entry__.py,
@@ -255,16 +267,8 @@ def test_no_package_definition_is_reached_only_from_tests():
         for node in tree.body:
             own = names(node)
             mentions.update(own)
-            if not in_pkg:
-                continue
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                defined = [node.name]
-            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
-                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
-                defined = [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
-            else:
-                continue
-            defs += [(f"{module}.{name}", name, own) for name in defined]
+            if in_pkg:
+                defs += [(f"{module}.{name}", name, own) for name in _defined_names(node)]
     unreached = {
         qual
         for qual, name, own in defs
@@ -277,3 +281,39 @@ def test_no_package_definition_is_reached_only_from_tests():
     assert sorted(q for q in unreached if not any(covers(k, q) for k in _TEST_ONLY_KEEP)) == []
     stale = [k for k in _TEST_ONLY_KEEP if not any(covers(k, q) for q in unreached)]
     assert stale == []
+
+
+#: Top-level names that several package modules define on purpose (one
+#: reason each).
+_PER_MODULE_NAMES = {
+    "QUERIES": "each operator module's query table, merged by registry.build_queries",
+    "ORACLES": "each operator module's oracle SQL table, merged by registry.build_oracles",
+    "Tables": "the one-line alias of the table dict each operator module takes",
+    "_oracles": "the builder of its own module's ORACLES",
+}
+
+
+def test_no_top_level_name_is_defined_in_two_package_modules():
+    """A constant or helper is defined in one package module and imported
+    where else it is used, so nothing has to keep two copies equal (a
+    hash modulus, a PRNG constant, an oracle SQL fragment). Names on
+    ``_PER_MODULE_NAMES`` are exempt; that list carries no stale entry."""
+    import ast
+    import glob
+    from collections import defaultdict
+
+    import streamming_processing_pyspark_spark as pkg
+
+    pkg_dir = os.path.dirname(pkg.__file__)
+    modules = defaultdict(set)  # name -> package modules that bind it
+    for path in glob.glob(os.path.join(pkg_dir, "**", "*.py"), recursive=True):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        module = os.path.relpath(path, pkg_dir)[: -len(".py")].replace(os.sep, ".")
+        for node in tree.body:
+            for name in _defined_names(node):
+                if not name.startswith("__"):
+                    modules[name].add(module)
+    repeated = {n: sorted(m) for n, m in modules.items() if len(m) > 1}
+    assert {n: m for n, m in repeated.items() if n not in _PER_MODULE_NAMES} == {}
+    assert sorted(set(_PER_MODULE_NAMES) - set(repeated)) == []

@@ -496,6 +496,30 @@ def test_cc_memo_reuses_converged_labels(spark):
 
 
 @pytest.mark.parametrize(
+    "query",
+    ["ivf_topk", "pq_topk", "ivfpq_topk", "whiten_check", "semantic_dedup_pairs"],
+)
+def test_query_broadcasts_released_by_clear_all(spark, query):
+    """Every broadcast a vector-index query makes is destroyed, with its
+    pickled file in the driver's temp dir: when its eager job returns,
+    or by ``clear_all`` releasing the slot that holds it for a lazy
+    frame. Repeating the query with ``clear_all`` in between leaves that
+    dir no fuller than it started."""
+    import os
+
+    from streamming_processing_pyspark_spark.tables import clear_all
+
+    t = load_tables(spark, SF_DIR)
+    temp_dir = spark.sparkContext._temp_dir
+    clear_all(spark)
+    before = len(os.listdir(temp_dir))
+    for _ in range(3):
+        getattr(similarity, query)(t).collect()
+        clear_all(spark)
+    assert len(os.listdir(temp_dir)) <= before
+
+
+@pytest.mark.parametrize(
     "module, fill_fn",
     [
         ("analytics5", "_winnow_doc_arrays"),

@@ -4,7 +4,7 @@ on randomized inputs, including geometry boundary regions.
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -119,22 +119,88 @@ def test_cms_seeded_hash_matches_python_reimpl(spark, tokens, seed):
     """The CMS's seeded portable hash must equal a character-fold Python
     reimplementation (the same recurrence DuckDB's list_reduce mirrors),
     including the space inside bigram keys."""
-    from streamming_processing_pyspark_spark.operators.sketches import (
-        _HASH_MOD,
-        _seeded_hash,
-    )
+    from streamming_processing_pyspark_spark.functions.text import HASH_MOD
+    from streamming_processing_pyspark_spark.operators.sketches import _seeded_hash
 
     text = " ".join(tokens)
 
     def py_hash(s: str, seed: int) -> int:
         acc = 7 + seed
         for ch in s:
-            acc = (acc * 31 + ord(ch)) % _HASH_MOD
+            acc = (acc * 31 + ord(ch)) % HASH_MOD
         return acc
 
     df = spark.createDataFrame([(text,)], "bigram string")
     got = df.select(_seeded_hash("bigram", seed).alias("h")).collect()[0]["h"]
     assert got == py_hash(text, seed)
+
+
+def _cut_reference(rows, num, den):
+    """Sorted-expansion reference of one exact cut over (value, weight)
+    rows: expand each row into ``weight`` copies, sort them with NULL
+    first (Spark's ascending order) and read the copy at 1-based rank
+    ceil(num·W/den). When that rank is 0 or falls on a NULL copy, every
+    non-NULL value's cumulative weight reaches it, so the cut is the
+    smallest non-NULL value, zero-weight values included."""
+    copies = sorted(
+        (v for v, w in rows for _ in range(w)),
+        key=lambda v: (v is not None, 0 if v is None else v),
+    )
+    rank = -(-num * len(copies) // den)
+    at = copies[rank - 1] if rank else None
+    if at is not None:
+        return at
+    return min((v for v, _ in rows if v is not None), default=None)
+
+
+# (group, value) -> weight: one histogram row per key; small domains give
+# ties across groups, zero weights and a NULL value
+_hist = st.dictionaries(
+    st.tuples(st.sampled_from("ab"), st.one_of(st.none(), st.integers(-3, 6))),
+    st.integers(0, 4),
+    min_size=1,
+    max_size=12,
+)
+
+
+@settings(**_SETTINGS)
+@given(_hist, st.integers(1, 10))
+@example({("a", 5): 1}, 1)
+@example({("a", None): 2, ("a", 0): 0, ("a", 2): 1, ("b", 2): 3, ("b", 4): 0}, 4)
+@example({("a", None): 3, ("a", 1): 0}, 2)
+def test_exact_cuts_match_sorted_expansion(spark, hist, big_k):
+    """distribution.exact_cuts, per group and over the whole histogram,
+    returns for every fraction k/K (k = 0..K) the cut the sorted-expansion
+    reference reads, and the group's total weight."""
+    from collections import defaultdict
+
+    from streamming_processing_pyspark_spark.operators.distribution import (
+        exact_cuts,
+    )
+
+    cuts = {f"c{k}": (k, big_k) for k in range(big_k + 1)}
+    df = spark.createDataFrame(
+        [(g, v, w) for (g, v), w in hist.items()], "g string, v long, w long"
+    )
+    by_group = defaultdict(list)
+    merged = defaultdict(int)
+    for (g, v), w in hist.items():
+        by_group[g].append((v, w))
+        merged[v] += w
+
+    got = {r["g"]: r for r in exact_cuts(df, "v", "w", cuts, "g").collect()}
+    assert set(got) == set(by_group)
+    for g, rows in by_group.items():
+        assert got[g]["n"] == sum(w for _, w in rows)
+        for name, (num, den) in cuts.items():
+            assert got[g][name] == _cut_reference(rows, num, den), (g, name)
+
+    whole = df.groupBy("v").agg(F.sum("w").alias("w"))
+    (row,) = exact_cuts(whole, "v", "w", cuts).collect()
+    rows = list(merged.items())
+    assert row["n"] == sum(merged.values())
+    for name, (num, den) in cuts.items():
+        assert row[name] == _cut_reference(rows, num, den), name
 
 
 @settings(max_examples=500, deadline=None)
