@@ -28,8 +28,34 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 
 FINGERPRINT_MOD = 1_000_003
 
-#: modulus of the portable affine-fold hash (cf. pipeline._group_hash)
+#: modulus of the portable affine-fold hash (:func:`fold_hash`)
 HASH_MOD = 1_000_000_007
+
+
+def fold_hash(col: Column | str, seed: int = 0) -> Column:
+    """SQL-portable string hash in [0, HASH_MOD): fold each character's
+    code into an affine accumulator, ``acc·31 + ascii(c) mod HASH_MOD``,
+    starting at ``7 + seed``. ``col`` is a Column or a SQL expression
+    string. Production would use xxhash64; the portable form makes every
+    hash-derived assignment oracle-checkable (:func:`fold_hash_duck` is
+    the DuckDB mirror)."""
+    return F.aggregate(
+        F.split(F.expr(col) if isinstance(col, str) else col, ""),
+        F.lit(7 + seed).cast("bigint"),
+        lambda acc, c: (acc * 31 + F.ascii(c)) % HASH_MOD,
+    )
+
+
+def fold_hash_duck(s: str, seed: str | None = None) -> str:
+    """DuckDB mirror of :func:`fold_hash` over the string SQL expression
+    ``s``; ``seed`` is a SQL expression added to the start."""
+    start = "7" if seed is None else f"7 + {seed}"
+    return (
+        f"list_reduce(list_prepend(CAST({start} AS BIGINT),"
+        f" list_transform(string_split_regex({s}, ''),"
+        " c -> CAST(ascii(c) AS BIGINT))),"
+        f" (a, b) -> (a * 31 + b) % {HASH_MOD})"
+    )
 
 
 def words(text: Column | str) -> Column:

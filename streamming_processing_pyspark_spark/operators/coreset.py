@@ -21,13 +21,16 @@ serialize k full scans. The production pattern separates concerns:
    per-center population and max radius.
 
 Determinism: every dot product / norm is a LEFT FOLD over the dimension
-index in all three engines (Python loop, Spark ``aggregate`` over
-``zip_with``, DuckDB ``list_reduce`` — never ``list_dot_product`` or
-numpy, whose summation order is unspecified), embeddings are widened
+index in all three engines (``functions.vectors``: ``fold_dot`` in
+Python, ``dot``/``norm`` in Spark, ``dot_duck`` in DuckDB — never
+``list_dot_product`` or a numpy reduction, whose summation order is
+unspecified), embeddings are widened
 float32→float64 (exact) first, and +,·,/ and ``sqrt`` are all
 correctly-rounded IEEE ops — so distances are BIT-IDENTICAL across
 engines and every argmax/argmin tie-break (``vec_id`` / center rank) is
-total. ``max_radius_micro`` hash-matches exactly.
+total. ``max_radius_micro`` hash-matches exactly. A zero-norm vector
+has no cosine distance: it is dropped from the pool sample and never
+picked or assigned.
 
 Reference scope note: the reference project (``/root/reference``,
 Task2-4/Client.py) has no coreset surface; this extends the engine for
@@ -42,6 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.vectors import dot_duck, fold_dot, norm
 from ..tables import broadcast_replacing, local_df
 from .featurize import _LEHMER_MOD, _LEHMER_MUL
 
@@ -57,17 +61,19 @@ KCENTER_K = 8
 def _assign_to_centers(batches, ce, cn, cv):
     """Per Arrow batch of (vec_id, e, nr) rows: the nearest center by
     cosine distance against the center vectors ``ce``, their norms ``cn``
-    and vec_ids ``cv``. A 0-row batch is skipped: its vector matrix is
-    1-D and has no dimension axis to fold over."""
+    and vec_ids ``cv``. Zero-norm rows are never assigned. A 0-row batch
+    is skipped: its vector matrix is 1-D and has no dimension axis to
+    fold over."""
     import numpy as np
 
     for pdf in batches:
+        pdf = pdf[pdf["nr"] > 0]  # a zero-norm row has no distance
         if pdf.empty:
             continue
         m = np.array(pdf["e"].tolist(), dtype="float64")
         nr = pdf["nr"].to_numpy()
         acc = np.zeros((len(m), len(ce)))
-        for i in range(m.shape[1]):  # left fold over dims == _dot
+        for i in range(m.shape[1]):  # left fold over dims == fold_dot
             acc = acc + m[:, i : i + 1] * ce[:, i][None, :]
         d = 1.0 - acc / (nr[:, None] * cn[None, :])
         pick = np.argmin(d, axis=1)  # first min == lowest rank
@@ -78,14 +84,6 @@ def _assign_to_centers(batches, ce, cn, cv):
                 "d": d[np.arange(len(m)), pick],
             }
         )
-
-
-def _dot(a: list[float], b: list[float]) -> float:
-    """Left-fold dot product — the pinned summation order."""
-    acc = 0.0
-    for i in range(len(a)):
-        acc = acc + a[i] * b[i]
-    return acc
 
 
 def kcenter_coreset(t: Tables) -> DataFrame:
@@ -105,19 +103,13 @@ def kcenter_coreset(t: Tables) -> DataFrame:
     ``vec_id``) from the chosen set.
     """
     spark = t["embeddings"].sparkSession
-    emb = t["embeddings"].select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    norm = F.sqrt(
-        F.aggregate(
-            F.zip_with("e", "e", lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+    emb = (
+        t["embeddings"]
+        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
+        .select("vec_id", "e", norm(F.col("e")).alias("nr"))
     )
     pool_rows = (
-        emb.select("vec_id", "e", norm.alias("nr"))
-        .orderBy(
+        emb.orderBy(
             (F.col("vec_id") % _LEHMER_MOD) * _LEHMER_MUL % _LEHMER_MOD,
             "vec_id",
         )
@@ -125,18 +117,18 @@ def kcenter_coreset(t: Tables) -> DataFrame:
         .collect()
     )
     pool = sorted(
-        ((r["vec_id"], list(r["e"]), r["nr"]) for r in pool_rows)
+        (r["vec_id"], list(r["e"]), r["nr"]) for r in pool_rows if r["nr"] > 0
     )
     centers = [pool[0]]  # seed: smallest vec_id in the pool
     md = {
-        vid: 1.0 - _dot(e, centers[0][1]) / (nr * centers[0][2])
+        vid: 1.0 - fold_dot(e, centers[0][1]) / (nr * centers[0][2])
         for vid, e, nr in pool
     }
     for _ in range(1, KCENTER_K):
         far = max(pool, key=lambda p: (md[p[0]], -p[0]))
         centers.append(far)
         for vid, e, nr in pool:
-            d = 1.0 - _dot(e, far[1]) / (nr * far[2])
+            d = 1.0 - fold_dot(e, far[1]) / (nr * far[2])
             if d < md[vid]:
                 md[vid] = d
     # ASSIGN: one map-only Arrow pass against the BROADCAST center matrix
@@ -146,7 +138,7 @@ def kcenter_coreset(t: Tables) -> DataFrame:
     # cost ~1 s per call (job walls summed to 0.5 s of a 1.5 s query);
     # the pandas-UDF twin runs the identical left fold vectorized over
     # rows (sequential over dims, so the float summation ORDER matches
-    # `_dot` and the DuckDB oracle exactly), then 1.0 − dot/(|x||c|) and
+    # `fold_dot` and the DuckDB oracle exactly), then 1.0 − dot/(|x||c|) and
     # first-minimum pick — argmin's first-occurrence tie-break IS the
     # struct array_min (d, rank) ordering. Measured 1.77 → 0.60 s with
     # collected rows equal; output hash-pinned by the oracle either way.
@@ -166,8 +158,7 @@ def kcenter_coreset(t: Tables) -> DataFrame:
         return _assign_to_centers(batches, *b.value)
 
     assigned = (
-        emb.select("vec_id", "e", norm.alias("nr"))
-        .mapInPandas(
+        emb.mapInPandas(
             assign_batches,
             schema="center_rank int, center_vec_id bigint, d double",
         )
@@ -197,32 +188,27 @@ def kcenter_coreset(t: Tables) -> DataFrame:
     )
 
 
-_FOLD_DOT = (
-    "list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
-    " list_transform(generate_series(1, len({a})),"
-    " i -> {a}[i] * {b}[i])), (x, y) -> x + y)"
-)
-
-
 def _kcenter_oracle_sql(k: int) -> str:
     """DuckDB twin: same Lehmer pool, ``k`` unrolled farthest-point picks
     (each round folds the new center's distance into the running min via
     ``CASE WHEN d < md``), then the cross-join assignment with the
     identical left-fold distance."""
-    dot_pc = _FOLD_DOT.format(a="p.e", b="c.e")
+    dot_pc = dot_duck("p.e", "c.e")
     parts = [
         f"""
         WITH n AS MATERIALIZED (
           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-                 sqrt({_FOLD_DOT.format(a="CAST(embedding AS DOUBLE[])",
-                                        b="CAST(embedding AS DOUBLE[])")}) AS nr
+                 sqrt({dot_duck("CAST(embedding AS DOUBLE[])",
+                                "CAST(embedding AS DOUBLE[])")}) AS nr
           FROM embeddings
         ),
         pool AS MATERIALIZED (
-          SELECT vec_id, e, nr FROM n
-          ORDER BY (vec_id % {_LEHMER_MOD}) * {_LEHMER_MUL} % {_LEHMER_MOD},
-                   vec_id
-          LIMIT {POOL_N}
+          SELECT * FROM (
+            SELECT vec_id, e, nr FROM n
+            ORDER BY (vec_id % {_LEHMER_MOD}) * {_LEHMER_MUL} % {_LEHMER_MOD},
+                     vec_id
+            LIMIT {POOL_N}
+          ) WHERE nr > 0
         ),
         c1 AS MATERIALIZED (
           SELECT vec_id, e, nr FROM pool ORDER BY vec_id LIMIT 1
@@ -261,9 +247,10 @@ def _kcenter_oracle_sql(k: int) -> str:
           SELECT a.vec_id,
                  c.center_rank,
                  c.vec_id AS center_vec_id,
-                 1.0 - {_FOLD_DOT.format(a="a.e", b="c.e")} / (a.nr * c.nr)
+                 1.0 - {dot_duck("a.e", "c.e")} / (a.nr * c.nr)
                    AS dist
           FROM n a CROSS JOIN centers c
+          WHERE a.nr > 0
         ),
         best AS (
           SELECT vec_id, center_rank, center_vec_id, dist FROM d

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import fold_hash, fold_hash_duck, words
 from .distribution import exact_cuts
 
 Tables = dict[str, DataFrame]
@@ -95,11 +96,10 @@ def classifier_score_col() -> Column:
     exposed so composite queries (calibration bins, decile lift, kappa)
     can evaluate the classifier and the Gopher gate in a SINGLE documents
     scan projection instead of joining two scans."""
-    return F.expr(
-        "aggregate(transform(split(trim(text), '\\\\s+'),"
-        " tok -> aggregate(split(tok, ''), CAST(7 AS BIGINT),"
-        "   (a, c) -> (a * 31 + ascii(c)) % 1000000007) % 21 - 10),"
-        f" CAST({CLASSIFIER_BIAS} AS BIGINT), (acc, x) -> acc + x)"
+    return F.aggregate(
+        F.transform(words("text"), lambda tok: fold_hash(tok) % 21 - 10),
+        F.lit(CLASSIFIER_BIAS).cast("bigint"),
+        lambda acc, x: acc + x,
     )
 
 
@@ -107,7 +107,7 @@ def quality_classifier_scores(t: Tables) -> DataFrame:
     """Hashed-feature linear classifier score per document, map-only.
 
     Each whitespace token is feature-hashed with the SQL-portable affine
-    fold (cf. ``pipeline._group_hash``) and mapped to an integer weight in
+    fold (``functions.text.fold_hash``) and mapped to an integer weight in
     [-10, 10] (``h % 21 - 10`` — a deterministic stand-in for trained
     fastText weights; a real model would broadcast its weight table and
     the plan would be identical). Document score = sum of token weights +
@@ -232,6 +232,12 @@ _PPL_SQL = """
       FROM documents
 """
 
+#: DuckDB mirror of :func:`classifier_score_col`
+_CLASSIFIER_SCORE_DUCK = (
+    "list_sum(list_transform(string_split_regex(trim(text), '\\s+'),"
+    f" tok -> {fold_hash_duck('tok')} % 21 - 10)) + {CLASSIFIER_BIAS}"
+)
+
 ORACLES: dict[str, str] = {
     "dataset_card_rollup": r"""
         SELECT source,
@@ -274,14 +280,7 @@ ORACLES: dict[str, str] = {
     "quality_classifier_scores": f"""
         WITH s AS (
           SELECT doc_id,
-                 list_sum(list_transform(
-                   string_split_regex(trim(text), '\\s+'),
-                   tok -> list_reduce(
-                     list_prepend(CAST(7 AS BIGINT),
-                       list_transform(string_split_regex(tok, ''),
-                                      c -> CAST(ascii(c) AS BIGINT))),
-                     (a, b) -> (a * 31 + b) % 1000000007) % 21 - 10))
-                 + {CLASSIFIER_BIAS} AS score
+                 {_CLASSIFIER_SCORE_DUCK} AS score
           FROM documents
         )
         SELECT doc_id, CAST(score AS BIGINT) AS score, score > 0 AS keep
@@ -290,14 +289,7 @@ ORACLES: dict[str, str] = {
     "quality_mass_filter": f"""
         WITH sc AS (
           SELECT doc_id,
-                 list_sum(list_transform(
-                   string_split_regex(trim(text), '\\s+'),
-                   tok -> list_reduce(
-                     list_prepend(CAST(7 AS BIGINT),
-                       list_transform(string_split_regex(tok, ''),
-                                      c -> CAST(ascii(c) AS BIGINT))),
-                     (a, b) -> (a * 31 + b) % 1000000007) % 21 - 10))
-                 + {CLASSIFIER_BIAS} AS score
+                 {_CLASSIFIER_SCORE_DUCK} AS score
           FROM documents
         ),
         j AS (

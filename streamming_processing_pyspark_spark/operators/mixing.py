@@ -58,7 +58,7 @@ from pyspark.sql import functions as F
 
 from ..tables import local_df
 
-from ..functions.text import HASH_MOD, words as _words
+from ..functions.text import HASH_MOD, fold_hash, fold_hash_duck, words as _words
 
 Tables = dict[str, DataFrame]
 
@@ -273,12 +273,8 @@ def kl_source_divergence(t: Tables) -> DataFrame:
         "source", F.explode(F.split(F.trim("text"), r"\s+")).alias("w")
     )
     sw = toks.groupBy("source", "w").agg(F.count("*").alias("c"))
-    fold = F.expr(
-        "aggregate(split(w, ''), CAST(7 AS BIGINT),"
-        f" (acc, c) -> (acc * 31 + ascii(c)) % {HASH_MOD})"
-    )
     sb = (
-        sw.select("source", (fold % KL_BUCKETS).alias("bucket"), "c")
+        sw.select("source", (fold_hash("w") % KL_BUCKETS).alias("bucket"), "c")
         .groupBy("source", "bucket")
         .agg(F.sum("c").alias("c_sb"))
     )
@@ -670,14 +666,6 @@ QUERIES = {
     "token_budget_waterfill": token_budget_waterfill,
 }
 
-#: DuckDB mirror of the affine-fold hash over a string expression
-_FOLD = (
-    "list_reduce(list_prepend(CAST(7 AS BIGINT),"
-    " list_transform(string_split_regex({s}, ''),"
-    " c -> CAST(ascii(c) AS BIGINT))),"
-    f" (a, b) -> (a * 31 + b) % {HASH_MOD})"
-)
-
 ORACLES: dict[str, str] = {
     "dsir_resample": f"""
         WITH toks AS (
@@ -691,7 +679,7 @@ ORACLES: dict[str, str] = {
         ),
         bg AS (
           SELECT doc_id, lang, CAST(i AS INT) AS pos,
-                 {_FOLD.format(s="tk[CAST(i + 1 AS INT)] || ' ' || tk[CAST(i + 2 AS INT)]")}
+                 {fold_hash_duck("tk[CAST(i + 1 AS INT)] || ' ' || tk[CAST(i + 2 AS INT)]")}
                    % {DSIR_BUCKETS} AS bucket
           FROM idx
         ),
@@ -732,7 +720,7 @@ ORACLES: dict[str, str] = {
         ),
         sw AS (SELECT source, w, count(*) AS c FROM toks GROUP BY source, w),
         sb AS (
-          SELECT source, {_FOLD.format(s="w")} % {KL_BUCKETS} AS bucket,
+          SELECT source, {fold_hash_duck("w")} % {KL_BUCKETS} AS bucket,
                  sum(c) AS c_sb
           FROM sw GROUP BY 1, 2
         ),

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import words
+from ..functions.text import fold_hash, fold_hash_duck, words
 from ..tables import clear_persist_slots, held
 from .dedup import (
     INCR_BATCH_MOD,
@@ -223,17 +223,6 @@ SPLIT_TRAIN_END = 90
 SPLIT_VAL_END = 95
 
 
-def _group_hash(col: str) -> Column:
-    # SQL-portable string hash (DuckDB mirrors it with list_reduce over
-    # ascii codes): fold each character into an affine accumulator mod a
-    # prime. Production would use xxhash64; the portable form makes the
-    # split assignment itself oracle-checkable.
-    return F.expr(
-        f"aggregate(split({col}, ''), CAST(7 AS BIGINT),"
-        " (acc, c) -> (acc * 31 + ascii(c)) % 1000000007)"
-    )
-
-
 def leakage_safe_split(t: Tables) -> DataFrame:
     """Group-aware train/val/test split: every document from one ``source``
     lands in the SAME split.
@@ -251,7 +240,7 @@ def leakage_safe_split(t: Tables) -> DataFrame:
     """
     return (
         t["documents"]
-        .withColumn("bucket", _group_hash("source") % 100)
+        .withColumn("bucket", fold_hash("source") % 100)
         .select(
             "doc_id",
             "source",
@@ -906,11 +895,7 @@ ORACLES: dict[str, str] = {
     "leakage_safe_split": f"""
         WITH h AS (
           SELECT doc_id, source,
-                 list_reduce(
-                   list_prepend(CAST(7 AS BIGINT),
-                     list_transform(string_split_regex(source, ''),
-                                    c -> CAST(ascii(c) AS BIGINT))),
-                   (a, b) -> (a * 31 + b) % 1000000007) % 100 AS bucket
+                 {fold_hash_duck("source")} % 100 AS bucket
           FROM documents
         )
         SELECT doc_id, source, bucket,

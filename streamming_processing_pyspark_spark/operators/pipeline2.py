@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import HASH_MOD
+from ..functions.text import fold_hash, fold_hash_duck
 from .dedup import _SHINGLE_DUCK, _exploded_shingles, _shingles
 
 Tables = dict[str, DataFrame]
@@ -228,14 +228,10 @@ def cdc_chunks(t: Tables) -> DataFrame:
     toks = t["documents"].select(
         "doc_id", F.posexplode(F.split(F.trim("text"), r"\s+")).alias("pos", "w")
     )
-    fold = F.expr(
-        "aggregate(split(w, ''), CAST(7 AS BIGINT),"
-        f" (acc, c) -> (acc * 31 + ascii(c)) % {HASH_MOD})"
-    )
     vocab = (
         toks.select("w")
         .distinct()
-        .select("w", (fold % CDC_MOD == 0).cast("long").alias("b"))
+        .select("w", (fold_hash("w") % CDC_MOD == 0).cast("long").alias("b"))
     )
     w_run = (
         Window.partitionBy("doc_id")
@@ -288,11 +284,8 @@ ORACLES: dict[str, str] = {
         ),
         vocab AS (
           SELECT w,
-                 CASE WHEN list_reduce(list_prepend(CAST(7 AS BIGINT),
-                        list_transform(string_split_regex(w, ''),
-                          c -> CAST(ascii(c) AS BIGINT))),
-                        (a, b) -> (a * 31 + b) % {HASH_MOD})
-                      % {CDC_MOD} = 0 THEN 1 ELSE 0 END AS b
+                 CASE WHEN {fold_hash_duck("w")} % {CDC_MOD} = 0
+                      THEN 1 ELSE 0 END AS b
           FROM (SELECT DISTINCT w FROM toks)
         ),
         marked AS (

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import HASH_MOD
 from .distribution import exact_cuts
 
 #: value in cents ≤ ~50k, event_id < 1e6 at any test SF → composite fits
@@ -408,7 +409,6 @@ BLOOM_SEEDS = (
     (613_651_349, 87_178_291),
     (297_521_401, 514_229_077),
 )
-_BLOOM_MOD = 1_000_000_007
 #: dim-side predicate for the check query
 BLOOM_SEGMENT = "BUILDING"
 
@@ -417,7 +417,7 @@ def _bloom_positions(key_sql: str) -> list[str]:
     """The k probe-bit positions of an integer key, as SQL expressions
     portable to DuckDB (all intermediates < 10^18, BIGINT-safe)."""
     return [
-        f"((({key_sql}) % {_BLOOM_MOD}) * {a} + {b}) % {_BLOOM_MOD} % {BLOOM_BITS}"
+        f"((({key_sql}) % {HASH_MOD}) * {a} + {b}) % {HASH_MOD} % {BLOOM_BITS}"
         for a, b in BLOOM_SEEDS
     ]
 
@@ -802,7 +802,7 @@ ORACLES["bloom_prefilter_check"] = f"""
     ),
     seeds(a, b) AS (VALUES {_BLOOM_SEEDS_SQL}),
     bits AS (
-      SELECT DISTINCT ((k % {_BLOOM_MOD}) * a + b) % {_BLOOM_MOD}
+      SELECT DISTINCT ((k % {HASH_MOD}) * a + b) % {HASH_MOD}
                         % {BLOOM_BITS} AS pos
       FROM dim, seeds
     ),

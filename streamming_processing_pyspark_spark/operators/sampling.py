@@ -31,7 +31,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import HASH_MOD
+from ..functions.text import HASH_MOD, fold_hash, fold_hash_duck
 from .distribution import cdf_buckets
 
 Tables = dict[str, DataFrame]
@@ -50,13 +50,10 @@ ALPHA_NUM, ALPHA_DEN = 4, 5
 
 
 def _doc_hash() -> Column:
-    """Portable per-doc uniform hash in [0, HASH_MOD): reuses
-    ``pipeline._group_hash``'s affine character fold (the single source
-    of truth for the SQL-portable hash) on the decimal doc_id string so
-    DuckDB replays it exactly."""
-    from .pipeline import _group_hash
-
-    return _group_hash("CAST(doc_id AS STRING)")
+    """Portable per-doc uniform hash in [0, HASH_MOD): the affine
+    character fold (``functions.text.fold_hash``) of the decimal doc_id
+    string, so DuckDB replays it exactly."""
+    return fold_hash("CAST(doc_id AS STRING)")
 
 
 def weighted_sample_per_lang(t: Tables) -> DataFrame:
@@ -223,10 +220,8 @@ def label_balanced_sample(t: Tables) -> DataFrame:
     spec); the dynamic min-count form shown here costs one extra tiny
     aggregation branch, nothing corpus-sized.
     """
-    from .pipeline import _group_hash
-
     emb = t["embeddings"].select(
-        "vec_id", "label", _group_hash("CAST(vec_id AS STRING)").alias("h")
+        "vec_id", "label", fold_hash("CAST(vec_id AS STRING)").alias("h")
     )
     quota = (
         emb.groupBy("label")
@@ -276,7 +271,7 @@ def poisson_bootstrap_ci(t: Tables) -> DataFrame:
 
     Determinism: the weight is the count of Python-precomputed integer
     CDF cutoffs ≤ a portable uniform in [0, MOD): the affine fold of
-    the ``event_id`` string (``pipeline._group_hash`` recurrence,
+    the ``event_id`` string (``functions.text.fold_hash`` recurrence,
     folded ONCE per row), shifted by a prime per replicate and passed
     through TWO Lehmer rounds (``·48271 mod MOD`` twice, overflow-safe
     in int64). The permutation matters: the bare fold is a base-31
@@ -292,8 +287,6 @@ def poisson_bootstrap_ci(t: Tables) -> DataFrame:
     ``boot_median_cents`` / ``boot_hi_cents`` (~5/50/95th percentile
     replicate means).
     """
-    from .pipeline import _group_hash
-
     ev = t["events"].select(
         "event_type",
         F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
@@ -303,7 +296,7 @@ def poisson_bootstrap_ci(t: Tables) -> DataFrame:
     # each replicate derives its uniform with pure int64 arithmetic —
     # a prime per-replicate shift then the two Lehmer rounds (the
     # string-per-(row, replicate) form cost 32x the fold work)
-    base = ev.withColumn("h0", _group_hash("CAST(event_id AS STRING)"))
+    base = ev.withColumn("h0", fold_hash("CAST(event_id AS STRING)"))
     reps = base.select(
         "event_type",
         "cents",
@@ -434,11 +427,7 @@ ORACLES: dict[str, str] = {
           SELECT doc_id, lang,
                  CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
                    AS n_tokens,
-                 list_reduce(
-                   list_prepend(CAST(7 AS BIGINT),
-                     list_transform(string_split_regex(CAST(doc_id AS VARCHAR), ''),
-                                    c -> CAST(ascii(c) AS BIGINT))),
-                   (a, b) -> (a * 31 + b) % {HASH_MOD}) AS h
+                 {fold_hash_duck("CAST(doc_id AS VARCHAR)")} AS h
           FROM documents
         ),
         r AS (
@@ -488,11 +477,7 @@ ORACLES["filter_agreement_kappa"] = _kappa_oracle()
 ORACLES["label_balanced_sample"] = f"""
     WITH h AS (
       SELECT vec_id, label,
-             list_reduce(
-               list_prepend(CAST(7 AS BIGINT),
-                 list_transform(string_split_regex(CAST(vec_id AS VARCHAR), ''),
-                                c -> CAST(ascii(c) AS BIGINT))),
-               (a, b) -> (a * 31 + b) % {HASH_MOD}) AS hh
+             {fold_hash_duck("CAST(vec_id AS VARCHAR)")} AS hh
       FROM embeddings
     ),
     q AS (SELECT min(cnt) AS quota
@@ -507,12 +492,10 @@ ORACLES["label_balanced_sample"] = f"""
 
 def _boot_oracle() -> str:
     """DuckDB twin of :func:`poisson_bootstrap_ci`: the same affine-fold
-    hash (sketches._hash_duck, seed 0 = the _group_hash recurrence), the
+    hash (``functions.text.fold_hash_duck``), the
     same Python-precomputed integer cutoffs, truncating integer means,
     and 1-based order statistics over the sorted replicate means."""
-    from .sketches import _hash_duck
-
-    h0 = _hash_duck("CAST(event_id AS VARCHAR)", "0")
+    h0 = fold_hash_duck("CAST(event_id AS VARCHAR)")
     mixed = f"((h0 + (r + 1) * {_BOOT_SALT}) % {HASH_MOD})"
     h = (
         f"({mixed} * {_BOOT_MUL} % {HASH_MOD})"

@@ -2,10 +2,18 @@
 the approximate indexes that scale them, each index built from shared
 cores.
 
+- Exact cosine kernels, each written once: :func:`_cos_matrix` (the
+  6-dp rounded ``dot / (|a|·|b|)`` matrix every numpy scorer uses),
+  :func:`_tied_topk` (the tie-inclusive per-row top-k cut) and
+  :func:`_ranked` (the per-anchor ``(cos_sim DESC, nbr_id)`` rank
+  window of the four kNN ops). The left-fold dot/norm of the
+  bit-identical operators (LSH query, MMR, k-center) lives in
+  ``functions.vectors``.
 - Exact baselines: :func:`cosine_topk` (one scan scored by the BLAS
   pandas UDF, ``TakeOrderedAndProject`` top-k), and the blocked-matmul
-  harness :func:`_block_pair_groups` behind :func:`_all_pairs_at`,
-  :func:`knn_join_topk` and :func:`hard_negative_mining`.
+  harness :func:`_block_pair_groups` behind :func:`_all_pairs_at` and
+  :func:`_exact_topk` (:func:`knn_join_topk`,
+  :func:`hard_negative_mining`).
 - Flat indexes (:func:`ivf_topk`, :func:`pq_topk`, :func:`ivfpq_topk`):
   the deterministic quantizer sample (:func:`_quantizer_sample`), sample
   k-means (:func:`_sample_kmeans`), PQ codebooks and ADC scoring
@@ -33,10 +41,18 @@ import math
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import as_double, cosine_pudf
+from ..functions.vectors import (
+    as_double,
+    cosine,
+    cosine_pudf,
+    dot,
+    dot_duck,
+    fold_dot,
+    norm,
+)
 from ..tables import broadcast_replacing, fan_out, local_df, persist_replacing
 from .dedup import (
     _ID_PAIR,
@@ -204,20 +220,103 @@ def filtered_cosine_topk(t: Tables) -> DataFrame:
     )
 
 
+def _cos_matrix(
+    a: np.ndarray, b: np.ndarray, na: np.ndarray, nb: np.ndarray
+) -> np.ndarray:
+    """The exact cosine kernel: ``dot / (|a|·|b|)`` rounded to 6 dp, for
+    rows ``a`` against rows ``b`` with row norms ``na``/``nb``.
+
+    Operation order is the ORACLE's (not normalize-then-dot, whose
+    different per-element rounding raises the boundary-flip odds).
+    Residual BLAS blocked-summation vs DuckDB sequential
+    list_dot_product reorderings can still flip a 6-dp rounded score
+    sitting exactly at a threshold or rank boundary — ~1e-7 per pair, the
+    same accepted risk documented for udtf._geomean. Pass the same array
+    twice for a self product: NumPy may pick another BLAS routine for
+    ``x @ x.T`` than for ``x @ copy.T``. A zero-norm row scores NaN/inf,
+    which no threshold passes and :func:`_tied_topk` never ranks."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.round((a @ b.T) / np.outer(na, nb), 6)
+
+
+def _tied_topk(sims: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """The tie-inclusive per-row top-``k`` cut: ``(rows, cols)`` of every
+    finite score ≥ its row's k-th largest, found in O(width) per row by
+    ``np.partition`` (no full sort). Non-finite scores become −inf in
+    place (callers mask self/label pairs with −inf first) and are never
+    kept, so a NaN or fully masked row emits nothing; ``k`` is clamped to
+    the width. Every candidate tied at the k-th score survives, so the
+    cut can never drop one that the global :func:`_ranked` window's
+    deterministic (score DESC, nbr_id) tie-break would have chosen."""
+    sims[~np.isfinite(sims)] = -np.inf
+    k = min(k, sims.shape[1])
+    kth = -np.partition(-sims, k - 1, axis=1)[:, k - 1]
+    return np.nonzero((sims >= kth[:, None]) & np.isfinite(sims))
+
+
+def _ranked(cands: DataFrame, cols: list[str], k: int) -> DataFrame:
+    """The global rank window of the four kNN ops: each anchor's
+    candidates ordered (cos_sim DESC, nbr_id), ``rk`` ≤ ``k`` kept.
+    Catalyst plans a partial ``WindowGroupLimit`` below the shuffle, so
+    candidates are pruned map-side, not sorted globally."""
+    w = Window.partitionBy("vec_id").orderBy(
+        F.col("cos_sim").desc(), F.col("nbr_id")
+    )
+    return (
+        cands.withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= k)
+        .select(*cols, F.col("rk").cast("int").alias("rk"))
+    )
+
+
+#: candidate schema of the per-anchor top-k ops, without and with labels
+_TOPK_SCHEMA = {
+    False: "vec_id bigint, nbr_id bigint, cos_sim double",
+    True: "vec_id bigint, label int, nbr_id bigint, nbr_label int,"
+    " cos_sim double",
+}
+
+
+def _schema_cols(schema: str) -> list[str]:
+    return [f.split()[0] for f in schema.split(",")]
+
+
+def _topk_frame(sims, k, q_ids, c_ids, q_lab=None, c_lab=None) -> pd.DataFrame:
+    """One score matrix's :func:`_tied_topk` candidates (query rows
+    ``q_ids``, candidate columns ``c_ids``), labelled when labels are
+    given."""
+    rows, cols = _tied_topk(sims, k)
+    out = {
+        "vec_id": q_ids[rows],
+        "nbr_id": c_ids[cols],
+        "cos_sim": sims[rows, cols],
+    }
+    if q_lab is not None:
+        out |= {"label": q_lab[rows], "nbr_label": c_lab[cols]}
+    return pd.DataFrame(out)
+
+
+def _block_arrays(pdf: pd.DataFrame):
+    """A block's rows as (pdf, ids, vector matrix, row norms)."""
+    mat = np.array(pdf["vec"].tolist(), dtype="float64")
+    return pdf, pdf["vec_id"].to_numpy(), mat, np.linalg.norm(mat, axis=1)
+
+
 def _block_pair_groups(emb: DataFrame, score_fn, schema: str) -> DataFrame:
     """Shared harness for the distributed blocked-matmul operators.
 
     Rows are hash-assigned to NB blocks; every unordered block pair
     (i ≤ j) becomes ONE groupBy key carrying block i's rows tagged
     ``side=0`` and block j's tagged ``side=1`` (each row is replicated to
-    the ~NB/2 pairs it participates in). ``score_fn(key, a_pdf, b_pdf)``
-    sees the two blocks as separate frames. A single tagged union +
-    grouped ``applyInPandas`` rather than ``cogroup``: identical shuffle
-    volume, but it avoids the SELF-cogroup (both sides the same
-    embeddings relation), where Spark 4.1's relation deduplication +
-    column pruning drop the right side's payload columns whenever the
-    operator's output is only partially consumed (``.count()``, a
-    projected join — observed empirically; pinned in
+    the ~NB/2 pairs it participates in). ``score_fn(key, a, b)`` sees
+    the two blocks as ``(pdf, ids, vector matrix, row norms)`` tuples;
+    a pair with an empty side emits no rows without calling it. A single
+    tagged union + grouped ``applyInPandas`` rather than ``cogroup``:
+    identical shuffle volume, but it avoids the SELF-cogroup (both sides
+    the same embeddings relation), where Spark 4.1's relation
+    deduplication + column pruning drop the right side's payload columns
+    whenever the operator's output is only partially consumed
+    (``.count()``, a projected join — observed empirically; pinned in
     tests/test_operators.py::test_blocked_matmul_partial_consumption).
     Cogroups over two DISTINCT relations (operators/asof.py) are not
     affected. Grouped-map prunes correctly.
@@ -242,11 +341,14 @@ def _block_pair_groups(emb: DataFrame, score_fn, schema: str) -> DataFrame:
         .where(F.col("bi") <= F.col("bj"))
         .withColumn("side", F.lit(1))
     )
+    empty = {c: [] for c in _schema_cols(schema)}
 
     def split_and_score(key, pdf):
         a_pdf = pdf[pdf["side"] == 0]
         b_pdf = pdf[pdf["side"] == 1]
-        return score_fn(key[:2], a_pdf, b_pdf)
+        if not len(a_pdf) or not len(b_pdf):
+            return pd.DataFrame(empty)
+        return score_fn(key[:2], _block_arrays(a_pdf), _block_arrays(b_pdf))
 
     return (
         left.unionByName(right)
@@ -261,24 +363,9 @@ def _all_pairs_at(t: Tables, threshold: float) -> DataFrame:
     contract check."""
     emb = t["embeddings"].select("vec_id", as_double("embedding").alias("vec"))
 
-    def score_block_pair(key, a_pdf, b_pdf):
-        if not len(a_pdf) or not len(b_pdf):
-            return pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []})
-        a_ids = a_pdf["vec_id"].to_numpy()
-        b_ids = b_pdf["vec_id"].to_numpy()
-        a_mat = np.array(a_pdf["vec"].tolist(), dtype="float64")
-        b_mat = np.array(b_pdf["vec"].tolist(), dtype="float64")
-        # dot / (|a|·|b|) in the ORACLE's operation order (not
-        # normalize-then-dot, whose different per-element rounding raises
-        # the boundary-flip odds). Residual BLAS blocked-summation vs
-        # DuckDB sequential list_dot_product reorderings can still flip a
-        # 6-dp rounded score sitting exactly at the threshold — ~1e-7 per
-        # pair, the same accepted risk documented for udtf._geomean.
-        norms = np.outer(
-            np.linalg.norm(a_mat, axis=1), np.linalg.norm(b_mat, axis=1)
-        )
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = np.round((a_mat @ b_mat.T) / norms, 6)
+    def score_block_pair(key, a, b):
+        (_, a_ids, a_mat, a_nr), (_, b_ids, b_mat, b_nr) = a, b
+        sims = _cos_matrix(a_mat, b_mat, a_nr, b_nr)
         mask = sims >= threshold
         if key[0] == key[1]:
             # diagonal block: both sides are the same rows — a strict
@@ -313,76 +400,54 @@ def embedding_near_dup_pairs(t: Tables) -> DataFrame:
 KNN_K = 5
 
 
+def _exact_topk(t: Tables, k: int, with_label: bool) -> DataFrame:
+    """Exact per-anchor top-``k`` cosine neighbors over the blocked-matmul
+    harness (:func:`_block_pair_groups`) — the body of
+    :func:`knn_join_topk` and :func:`hard_negative_mining`, the exact
+    twin of :func:`_ann_topk_candidates`.
+
+    Each block pair scores one matmul (:func:`_cos_matrix`) and emits
+    BOTH directions' block-local candidates by the tie-inclusive cut
+    (:func:`_tied_topk`); a row's global top-k is then found among its
+    ~NB·k candidates by the one window of :func:`_ranked`. Self pairs are
+    masked; ``with_label`` also masks SAME-label pairs, so the cut is
+    taken over valid negatives only (the hard-negative shape). Shuffle
+    volume after the matmul stage is O(n·NB·k + ties), independent of
+    pairwise count; executor memory stays two blocks per task. Without
+    labels the ``label`` column is never read."""
+    schema = _TOPK_SCHEMA[with_label]
+    emb = t["embeddings"].select(
+        "vec_id",
+        as_double("embedding").alias("vec"),
+        *(["label"] if with_label else []),
+    )
+
+    def block_topk(key, a, b):
+        (a_pdf, a_ids, a_mat, a_nr), (b_pdf, b_ids, b_mat, b_nr) = a, b
+        sims = _cos_matrix(a_mat, b_mat, a_nr, b_nr)
+        if key[0] == key[1]:
+            sims[a_ids[:, None] == b_ids[None, :]] = -np.inf  # mask self
+        a_lab = b_lab = None
+        if with_label:
+            a_lab, b_lab = a_pdf["label"].to_numpy(), b_pdf["label"].to_numpy()
+            sims[a_lab[:, None] == b_lab[None, :]] = -np.inf  # mask same label
+        frames = [_topk_frame(sims, k, a_ids, b_ids, a_lab, b_lab)]
+        if key[0] != key[1]:
+            # off-diagonal: serve b-rows (neighbors in block i) from the
+            # same matmul
+            frames.append(_topk_frame(sims.T, k, b_ids, a_ids, b_lab, a_lab))
+        return pd.concat(frames, ignore_index=True)
+
+    return _ranked(
+        _block_pair_groups(emb, block_topk, schema), _schema_cols(schema), k
+    )
+
+
 def knn_join_topk(t: Tables) -> DataFrame:
     """kNN self-join: each vector's top-K cosine neighbors (excluding
     itself) — the retrieval-evaluation / cluster-assignment primitive.
-
-    Same distributed blocked-matmul harness as
-    :func:`embedding_near_dup_pairs`, but each block pair emits BOTH
-    directions' per-row block-local top-K candidates via ``np.partition``
-    (O(width) per row, no full sort), WITH every candidate tied at the
-    k-th score included — so the block-local cut can never drop a tied
-    candidate that the global window's deterministic (score DESC, nbr_id)
-    tie-break would have chosen. A row's global top-K is then found among
-    its ~NB·K candidates by one groupBy window. Shuffle volume after the
-    matmul stage is O(n·NB·K + ties), independent of pairwise count;
-    executor memory stays two blocks per task.
-    """
-    emb = t["embeddings"].select("vec_id", as_double("embedding").alias("vec"))
-
-    def block_topk(key, a_pdf, b_pdf):
-        if not len(a_pdf) or not len(b_pdf):
-            return pd.DataFrame({"vec_id": [], "nbr_id": [], "cos_sim": []})
-        a_ids = a_pdf["vec_id"].to_numpy()
-        b_ids = b_pdf["vec_id"].to_numpy()
-        a_mat = np.array(a_pdf["vec"].tolist(), dtype="float64")
-        b_mat = np.array(b_pdf["vec"].tolist(), dtype="float64")
-        # dot / (|a|·|b|) in the oracle's operation order; residual BLAS
-        # summation reorder risk at a rounded rank boundary is the same
-        # accepted ~1e-7 class documented in embedding_near_dup_pairs
-        norms = np.outer(
-            np.linalg.norm(a_mat, axis=1), np.linalg.norm(b_mat, axis=1)
-        )
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = np.round((a_mat @ b_mat.T) / norms, 6)
-        sims[~np.isfinite(sims)] = -np.inf  # zero-norm rows can't rank
-        if key[0] == key[1]:
-            sims[a_ids[:, None] == b_ids[None, :]] = -np.inf  # mask self
-            views = [(a_ids, b_ids, sims)]
-        else:
-            # off-diagonal: serve a-rows (neighbors in block j) AND b-rows
-            # (neighbors in block i) from the one matmul
-            views = [(a_ids, b_ids, sims), (b_ids, a_ids, sims.T)]
-        frames = []
-        for q_ids, c_ids, m in views:
-            k = min(KNN_K, m.shape[1])
-            # kth largest per row in O(width); emit EVERYTHING >= it so
-            # score ties at the cut survive to the global window, whose
-            # (score DESC, nbr_id) ordering resolves them deterministically
-            kth = -np.partition(-m, k - 1, axis=1)[:, k - 1]
-            rows, cols = np.nonzero((m >= kth[:, None]) & np.isfinite(m))
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "vec_id": q_ids[rows],
-                        "nbr_id": c_ids[cols],
-                        "cos_sim": m[rows, cols],
-                    }
-                )
-            )
-        return pd.concat(frames, ignore_index=True)
-
-    cands = _block_pair_groups(
-        emb, block_topk, "vec_id bigint, nbr_id bigint, cos_sim double"
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cos_sim").desc(), F.col("nbr_id")
-    )
-    return (
-        cands.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= KNN_K)
-        .select("vec_id", "nbr_id", "cos_sim", F.col("rk").cast("int").alias("rk"))
-    )
+    The exact all-pairs kernel :func:`_exact_topk` without labels."""
+    return _exact_topk(t, KNN_K, with_label=False)
 
 
 #: negatives reported per anchor by hard_negative_mining
@@ -394,16 +459,7 @@ def hard_negative_mining(t: Tables) -> DataFrame:
     ``HARDNEG_K`` most-similar vectors with a DIFFERENT label — the
     standard mining step for embedding/reranker training data (the
     near-misses the model must learn to push apart; easy random negatives
-    teach nothing).
-
-    Same distributed blocked-matmul harness and budget as
-    :func:`knn_join_topk` (two blocks per task, candidates
-    O(n·NB·K + ties) after the matmul stage) — the only change is the
-    mask: SAME-label pairs are excluded instead of just self, so the
-    block-local top-K cut is taken over valid negatives only. Ties at the
-    k-th block-local score are all emitted and the global per-anchor
-    window resolves them with the deterministic (score DESC, nbr_id)
-    order, exactly as knn_join_topk does.
+    teach nothing). :func:`_exact_topk` with the same-label mask.
 
     STATUS (VERDICT r9 §2): this is the EXACT, campaign-priced baseline
     (α≈0.85 all-pairs matmul). The 100 TB production path is
@@ -414,73 +470,7 @@ def hard_negative_mining(t: Tables) -> DataFrame:
     Output: ``vec_id``, ``label``, ``nbr_id``, ``nbr_label``,
     ``cos_sim`` (6 dp), ``rk`` (1..K).
     """
-    emb = t["embeddings"].select(
-        "vec_id", as_double("embedding").alias("vec"), "label"
-    )
-
-    def block_topk(key, a_pdf, b_pdf):
-        cols = ["vec_id", "label", "nbr_id", "nbr_label", "cos_sim"]
-        if not len(a_pdf) or not len(b_pdf):
-            return pd.DataFrame({c: [] for c in cols})
-        a_ids = a_pdf["vec_id"].to_numpy()
-        b_ids = b_pdf["vec_id"].to_numpy()
-        a_lab = a_pdf["label"].to_numpy()
-        b_lab = b_pdf["label"].to_numpy()
-        a_mat = np.array(a_pdf["vec"].tolist(), dtype="float64")
-        b_mat = np.array(b_pdf["vec"].tolist(), dtype="float64")
-        norms = np.outer(
-            np.linalg.norm(a_mat, axis=1), np.linalg.norm(b_mat, axis=1)
-        )
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = np.round((a_mat @ b_mat.T) / norms, 6)
-        sims[~np.isfinite(sims)] = -np.inf
-        sims[a_lab[:, None] == b_lab[None, :]] = -np.inf  # mask same label
-        if key[0] == key[1]:
-            views = [(a_ids, a_lab, b_ids, b_lab, sims)]
-        else:
-            views = [
-                (a_ids, a_lab, b_ids, b_lab, sims),
-                (b_ids, b_lab, a_ids, a_lab, sims.T),
-            ]
-        frames = []
-        for q_ids, q_lab, c_ids, c_lab, m in views:
-            k = min(HARDNEG_K, m.shape[1])
-            kth = -np.partition(-m, k - 1, axis=1)[:, k - 1]
-            rows, cc = np.nonzero((m >= kth[:, None]) & np.isfinite(m))
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "vec_id": q_ids[rows],
-                        "label": q_lab[rows],
-                        "nbr_id": c_ids[cc],
-                        "nbr_label": c_lab[cc],
-                        "cos_sim": m[rows, cc],
-                    }
-                )
-            )
-        return pd.concat(frames, ignore_index=True)
-
-    cands = _block_pair_groups(
-        emb,
-        block_topk,
-        "vec_id bigint, label int, nbr_id bigint, nbr_label int,"
-        " cos_sim double",
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cos_sim").desc(), F.col("nbr_id")
-    )
-    return (
-        cands.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= HARDNEG_K)
-        .select(
-            "vec_id",
-            "label",
-            "nbr_id",
-            "nbr_label",
-            "cos_sim",
-            F.col("rk").cast("int").alias("rk"),
-        )
-    )
+    return _exact_topk(t, HARDNEG_K, with_label=True)
 
 
 def hard_negative_mining_ann(t: Tables) -> DataFrame:
@@ -655,6 +645,18 @@ LSH_QUERY_BITS = 5
 LSH_QUERY_DIM = 64
 
 
+def _lit_vec(vals: list[float]) -> Column:
+    return F.array(*[F.lit(v) for v in vals])
+
+
+def _cos_to_query(qvec: list[float]) -> Column:
+    """Left-fold cosine of column ``e`` to the driver-fetched query vector
+    (its norm folded on the driver, as a literal); NULL — never ranked —
+    when either norm is zero (:func:`vectors.cosine`)."""
+    q_norm = math.sqrt(fold_dot(qvec, qvec))
+    return cosine(F.col("e"), _lit_vec(qvec), F.lit(q_norm))
+
+
 def lsh_query_topk(t: Tables, n_bits: int = LSH_QUERY_BITS) -> DataFrame:
     """Query-time LSH ANN: hash every vector to a ``n_bits`` hyperplane
     signature ONCE, probe the query's bucket plus all 1-bit flips
@@ -692,47 +694,27 @@ def lsh_query_topk(t: Tables, n_bits: int = LSH_QUERY_BITS) -> DataFrame:
             "thereby the oracle) for this corpus."
         )
     planes = _hyperplanes(len(qvec), n_bits)
-
-    def py_dot(a, b):
-        acc = 0.0
-        for i in range(len(a)):
-            acc = acc + a[i] * b[i]
-        return acc
-
-    q_norm = math.sqrt(py_dot(qvec, qvec))
-    q_bucket = 0
-    for i, pl in enumerate(planes):
-        if py_dot(qvec, pl) >= 0.0:
-            q_bucket += 1 << i
+    q_bucket = sum(
+        1 << i for i, pl in enumerate(planes) if fold_dot(qvec, pl) >= 0.0
+    )
     probes = [q_bucket] + [q_bucket ^ (1 << i) for i in range(n_bits)]
-
-    def fold_dot(col, vals):
-        return F.aggregate(
-            F.zip_with(col, F.array(*[F.lit(v) for v in vals]), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
 
     bucket = None
     for i, pl in enumerate(planes):
-        bit = F.when(fold_dot("e", pl) >= 0.0, F.lit(1 << i)).otherwise(F.lit(0))
+        bit = F.when(
+            dot(F.col("e"), _lit_vec(pl)) >= 0.0, F.lit(1 << i)
+        ).otherwise(F.lit(0))
         bucket = bit if bucket is None else bucket + bit
-    norm = F.sqrt(
-        F.aggregate(
-            F.zip_with("e", "e", lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
     return (
         emb.withColumn("bucket", bucket)
         .where(F.col("bucket").isin(probes) & (F.col("vec_id") != QUERY_VEC_ID))
-        .select(
-            "vec_id",
-            (fold_dot("e", qvec) / (norm * F.lit(q_norm))).alias("cos_sim"),
-        )
+        .select("vec_id", _cos_to_query(qvec).alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), "vec_id")
         .limit(TOPK)
+        # NULLs sort last, so dropping them after the cut keeps the top
+        # TOPK scored rows (a filter before it would be pushed below the
+        # projection and fold every cosine twice)
+        .where(F.col("cos_sim").isNotNull())
         .select(
             "vec_id",
             "cos_sim",
@@ -753,19 +735,11 @@ def _lsh_query_oracle_sql(n_bits: int) -> str:
     # different embedding width raises there instead of silently
     # comparing against a wrong-dim oracle.
     planes = _hyperplanes(LSH_QUERY_DIM, n_bits)
-
-    def fold(a, b):
-        return (
-            f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
-            f" list_transform(generate_series(1, len({a})),"
-            f" i -> {a}[i] * {b}[i])), (x, y) -> x + y)"
-        )
-
     lits = [
         "([" + ", ".join(repr(v) for v in pl) + "]::DOUBLE[])" for pl in planes
     ]
     bucket_expr = " + ".join(
-        f"(CASE WHEN {fold('e', lit)} >= 0.0 THEN {1 << i} ELSE 0 END)"
+        f"(CASE WHEN {dot_duck('e', lit)} >= 0.0 THEN {1 << i} ELSE 0 END)"
         for i, lit in enumerate(lits)
     )
     probe_cond = " OR ".join(
@@ -779,14 +753,14 @@ def _lsh_query_oracle_sql(n_bits: int) -> str:
         ),
         sig AS MATERIALIZED (
           SELECT vec_id, e,
-                 sqrt({fold('e', 'e')}) AS nr,
+                 sqrt({dot_duck('e', 'e')}) AS nr,
                  {bucket_expr} AS bucket
           FROM n
         ),
         q AS (SELECT e, nr, bucket FROM sig WHERE vec_id = {QUERY_VEC_ID}),
         cand AS (
           SELECT c.vec_id,
-                 {fold('c.e', 'q.e')} / (c.nr * q.nr) AS cos_sim
+                 {dot_duck('c.e', 'q.e')} / (c.nr * q.nr) AS cos_sim
           FROM sig c, q
           WHERE ({probe_cond}) AND c.vec_id != {QUERY_VEC_ID}
         )
@@ -794,6 +768,7 @@ def _lsh_query_oracle_sql(n_bits: int) -> str:
                CAST(row_number() OVER (ORDER BY cos_sim DESC, vec_id)
                     AS INTEGER) AS rk
         FROM cand
+        WHERE cos_sim IS NOT NULL
         ORDER BY cos_sim DESC, vec_id
         LIMIT {TOPK}
     """
@@ -833,43 +808,23 @@ def mmr_diverse_topk(t: Tables) -> DataFrame:
     emb = t["embeddings"].select("vec_id", as_double("embedding").alias("e"))
     qrow = emb.where(F.col("vec_id") == QUERY_VEC_ID).collect()[0]
     qvec = list(qrow["e"])
-
-    def py_dot(a, b):
-        acc = 0.0
-        for i in range(len(a)):
-            acc = acc + a[i] * b[i]
-        return acc
-
-    q_norm = math.sqrt(py_dot(qvec, qvec))
-
-    def fold_dot(col, vals):
-        return F.aggregate(
-            F.zip_with(col, F.array(*[F.lit(v) for v in vals]), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    norm = F.sqrt(
-        F.aggregate(
-            F.zip_with("e", "e", lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
     pool_rows = (
         emb.where(F.col("vec_id") != QUERY_VEC_ID)
         .select(
             "vec_id",
             "e",
-            norm.alias("nr"),
-            (fold_dot("e", qvec) / (norm * F.lit(q_norm))).alias("rel"),
+            norm(F.col("e")).alias("nr"),
+            _cos_to_query(qvec).alias("rel"),
         )
         .orderBy(F.col("rel").desc(), "vec_id")
         .limit(MMR_POOL)
         .collect()
     )
+    # a NULL relevance (zero norm) sorts last and is never a candidate
     cands = {
-        r["vec_id"]: (list(r["e"]), r["nr"], r["rel"]) for r in pool_rows
+        r["vec_id"]: (list(r["e"]), r["nr"], r["rel"])
+        for r in pool_rows
+        if r["rel"] is not None
     }
     maxsim = {vid: 0.0 for vid in cands}
     picks = []
@@ -894,7 +849,7 @@ def mmr_diverse_topk(t: Tables) -> DataFrame:
             )
         )
         for vid, (e_v, nr_v, _rel) in cands.items():
-            s = py_dot(e_v, e_b) / (nr_v * nr_b)
+            s = fold_dot(e_v, e_b) / (nr_v * nr_b)
             if s > maxsim[vid]:
                 maxsim[vid] = s
     return local_df(
@@ -911,28 +866,21 @@ def _mmr_oracle_sql(k: int) -> str:
     newly-picked vector's cosine into the running max-sim via CASE, with
     the identical left-fold dot and exact double weights."""
 
-    def fold(a, b):
-        return (
-            f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
-            f" list_transform(generate_series(1, len({a})),"
-            f" i -> {a}[i] * {b}[i])), (x, y) -> x + y)"
-        )
-
     lam, dw = repr(MMR_LAMBDA), repr(MMR_DIV_WEIGHT)
     parts = [
         f"""
         WITH n AS MATERIALIZED (
           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-                 sqrt({fold("CAST(embedding AS DOUBLE[])",
+                 sqrt({dot_duck("CAST(embedding AS DOUBLE[])",
                             "CAST(embedding AS DOUBLE[])")}) AS nr
           FROM embeddings
         ),
         q AS (SELECT e, nr FROM n WHERE vec_id = {QUERY_VEC_ID}),
         m0 AS MATERIALIZED (
           SELECT c.vec_id, c.e, c.nr,
-                 {fold('c.e', 'q.e')} / (c.nr * q.nr) AS rel,
+                 {dot_duck('c.e', 'q.e')} / (c.nr * q.nr) AS rel,
                  CAST(0.0 AS DOUBLE) AS ms
-          FROM n c, q WHERE c.vec_id != {QUERY_VEC_ID}
+          FROM n c, q WHERE c.vec_id != {QUERY_VEC_ID} AND rel IS NOT NULL
           ORDER BY rel DESC, c.vec_id LIMIT {MMR_POOL}
         )"""
     ]
@@ -951,8 +899,8 @@ def _mmr_oracle_sql(k: int) -> str:
                 f"""
         , m{j} AS MATERIALIZED (
           SELECT p.vec_id, p.e, p.nr, p.rel,
-                 CASE WHEN {fold('p.e', 'c.e')} / (p.nr * c.nr) > p.ms
-                      THEN {fold('p.e', 'c.e')} / (p.nr * c.nr)
+                 CASE WHEN {dot_duck('p.e', 'c.e')} / (p.nr * c.nr) > p.ms
+                      THEN {dot_duck('p.e', 'c.e')} / (p.nr * c.nr)
                       ELSE p.ms END AS ms
           FROM m{j - 1} p, s{j} c WHERE p.vec_id != c.vec_id
         )"""
@@ -1051,10 +999,8 @@ def _branch_stage(assigned: DataFrame, k_coarse: int, fn, schema: str) -> DataFr
 def _branch_arrays(pdf: pd.DataFrame):
     """A branch's rows sorted by ``vec_id`` — the fine init (lowest
     vec_ids) and float mean order must not depend on shuffle arrival
-    order — as (sorted pdf, ids, vector matrix, row norms)."""
-    pdf = pdf.sort_values("vec_id", kind="mergesort")
-    mat = np.array(pdf["vec"].tolist(), dtype="float64")
-    return pdf, pdf["vec_id"].to_numpy(), mat, np.linalg.norm(mat, axis=1)
+    order — as :func:`_block_arrays`."""
+    return _block_arrays(pdf.sort_values("vec_id", kind="mergesort"))
 
 
 def _fine_cells(mat: np.ndarray, norms: np.ndarray) -> list[np.ndarray]:
@@ -1110,10 +1056,10 @@ def _ann_topk_candidates(t: Tables, k: int, with_label: bool) -> DataFrame:
     :func:`semantic_dedup_pairs` (:func:`_coarse_route` with
     multi-probe, then :func:`_fine_cells` inside each branch task), but
     each fine cell emits per-row TOP-K
-    candidates (ties at the k-th score included, exactly like
-    :func:`knn_join_topk`'s block-local cut) instead of ≥-threshold
+    candidates (the tie-inclusive cut :func:`_tied_topk`, exactly like
+    :func:`_exact_topk`'s block-local cut) instead of ≥-threshold
     pairs. The per-anchor global top-k over the deduped candidate union
-    is one bounded window.
+    is the same bounded window, :func:`_ranked`.
 
     Cost: assignment FLOPs ~n·d·√(n/TARGET), per-cell top-k ~n·TARGET·P²
     (linear in n), candidates ≤ n·P·(k + ties) — never all-pairs.
@@ -1130,14 +1076,8 @@ def _ann_topk_candidates(t: Tables, k: int, with_label: bool) -> DataFrame:
         assigned = assigned.join(
             t["embeddings"].select("vec_id", "label"), "vec_id"
         )
-        schema = (
-            "vec_id bigint, label int, nbr_id bigint, nbr_label int,"
-            " cos_sim double"
-        )
-        cols = ["vec_id", "label", "nbr_id", "nbr_label", "cos_sim"]
-    else:
-        schema = "vec_id bigint, nbr_id bigint, cos_sim double"
-        cols = ["vec_id", "nbr_id", "cos_sim"]
+    schema = _TOPK_SCHEMA[with_label]
+    cols = _schema_cols(schema)
 
     def topk_in_branch(pdf):
         pdf, ids, mat, norms = _branch_arrays(pdf)
@@ -1147,32 +1087,15 @@ def _ann_topk_candidates(t: Tables, k: int, with_label: bool) -> DataFrame:
             if len(idx) < 2:
                 continue
             sub = mat[idx]
-            # same operation order + 6 dp rounding as knn_join_topk's
-            # blocked matmul, so overlapping candidates carry the same
-            # score up to the documented ~1e-7 BLAS-order class
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = np.round(
-                    (sub @ sub.T) / np.outer(norms[idx], norms[idx]), 6
-                )
-            sims[~np.isfinite(sims)] = -np.inf
+            # the blocked matmul's kernel, so overlapping candidates carry
+            # knn_join_topk's score up to the documented ~1e-7 BLAS class
+            sims = _cos_matrix(sub, sub, norms[idx], norms[idx])
             np.fill_diagonal(sims, -np.inf)
+            cl = None
             if with_label:
                 cl = labs[idx]
                 sims[cl[:, None] == cl[None, :]] = -np.inf
-            kk = min(k, sims.shape[1])
-            kth = -np.partition(-sims, kk - 1, axis=1)[:, kk - 1]
-            rows, cc = np.nonzero(
-                (sims >= kth[:, None]) & np.isfinite(sims)
-            )
-            data = {
-                "vec_id": ids[idx[rows]],
-                "nbr_id": ids[idx[cc]],
-                "cos_sim": sims[rows, cc],
-            }
-            if with_label:
-                data["label"] = labs[idx[rows]]
-                data["nbr_label"] = labs[idx[cc]]
-            frames.append(pd.DataFrame(data))
+            frames.append(_topk_frame(sims, k, ids[idx], ids[idx], cl, cl))
         if not frames:
             return pd.DataFrame({c: [] for c in cols})
         return pd.concat(frames, ignore_index=True)[cols]
@@ -1185,14 +1108,7 @@ def _ann_topk_candidates(t: Tables, k: int, with_label: bool) -> DataFrame:
     deduped = cands.groupBy(*group_cols).agg(
         F.max("cos_sim").alias("cos_sim")
     )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cos_sim").desc(), F.col("nbr_id")
-    )
-    return (
-        deduped.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select(*cols, F.col("rk").cast("int").alias("rk"))
-    )
+    return _ranked(deduped, cols, k)
 
 
 def ann_knn_topk(t: Tables) -> DataFrame:
@@ -1938,12 +1854,9 @@ def incremental_semantic_pairs(t: Tables) -> DataFrame:
             oi = idx[~is_new[idx]]
             if not len(ni) or not len(oi):
                 continue
-            # same operation order as _all_pairs_at (dot / (|a|·|b|),
-            # 6 dp) so the subset claim vs the exact cross set can't
-            # flip at the threshold boundary
-            sims = np.round(
-                (mat[ni] @ mat[oi].T) / np.outer(norms[ni], norms[oi]), 6
-            )
+            # _all_pairs_at's kernel, so the subset claim vs the exact
+            # cross set can't flip at the threshold boundary
+            sims = _cos_matrix(mat[ni], mat[oi], norms[ni], norms[oi])
             ia, ib = np.where(sims >= SEMDEDUP_THRESHOLD)
             parts.append((ids[ni[ia]], ids[oi[ib]], sims[ia, ib]))
         return _cell_pairs(cols, parts)
@@ -2488,13 +2401,10 @@ def semantic_dedup_pairs(t: Tables) -> DataFrame:
             if len(idx) < 2:
                 continue
             sub = mat[idx]
-            # same operation order as _all_pairs_at (dot / (|a|·|b|),
-            # rounded to 6 dp) so a threshold-boundary pair can never
-            # appear here while missing from the exact set
+            # _all_pairs_at's kernel, so a threshold-boundary pair can
+            # never appear here while missing from the exact set
             # semdedup_check compares against
-            sims = np.round(
-                (sub @ sub.T) / np.outer(norms[idx], norms[idx]), 6
-            )
+            sims = _cos_matrix(sub, sub, norms[idx], norms[idx])
             ia, ib = np.where(np.triu(sims >= SEMDEDUP_THRESHOLD, k=1))
             gi, gj = ids[idx[ia]], ids[idx[ib]]
             parts.append((np.minimum(gi, gj), np.maximum(gi, gj), sims[ia, ib]))
@@ -3187,7 +3097,7 @@ ORACLES: dict[str, str] = {
         FROM (
           SELECT *, row_number() OVER (PARTITION BY vec_id
                                        ORDER BY cos_sim DESC, nbr_id) AS rk
-          FROM sims
+          FROM sims WHERE cos_sim IS NOT NULL
         )
         WHERE rk <= {HARDNEG_K}
     """,
@@ -3201,7 +3111,7 @@ ORACLES: dict[str, str] = {
           SELECT vec_id, nbr_id, cos_sim,
                  row_number() OVER (PARTITION BY vec_id
                                     ORDER BY cos_sim DESC, nbr_id) AS rk
-          FROM sims
+          FROM sims WHERE cos_sim IS NOT NULL
         )
         WHERE rk <= {KNN_K}
     """,

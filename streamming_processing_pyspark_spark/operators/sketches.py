@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import HASH_MOD
+from ..functions.text import HASH_MOD, fold_hash, fold_hash_duck
 from .text import words
 
 Tables = dict[str, DataFrame]
@@ -47,16 +47,6 @@ CMS_DEPTH = 4
 CMS_WIDTH = 1024
 #: heavy hitters whose estimates the check emits
 CMS_TOPK = 20
-
-
-def _seeded_hash(col_sql: str, seed: int) -> Column:
-    """Per-depth variant of the portable affine fold: same recurrence as
-    ``pipeline._group_hash`` with a seed-shifted accumulator start, so
-    DuckDB mirrors each row with ``list_reduce`` over ascii codes."""
-    return F.expr(
-        f"aggregate(split({col_sql}, ''), CAST({7 + seed} AS BIGINT),"
-        f" (acc, c) -> (acc * 31 + ascii(c)) % {HASH_MOD})"
-    )
 
 
 _BIGRAM = (
@@ -82,7 +72,7 @@ def _cell_structs() -> Column:
         *[
             F.struct(
                 F.lit(d).cast("long").alias("d"),
-                (_seeded_hash("bigram", d) % CMS_WIDTH).alias("cell"),
+                (fold_hash("bigram", seed=d) % CMS_WIDTH).alias("cell"),
             )
             for d in range(CMS_DEPTH)
         ]
@@ -150,15 +140,6 @@ def cms_bigram_check(t: Tables) -> DataFrame:
     )
 
 
-def _hash_duck(expr: str, seed_expr: str) -> str:
-    return (
-        f"list_reduce(list_prepend(CAST(7 + {seed_expr} AS BIGINT),"
-        f" list_transform(string_split_regex({expr}, ''),"
-        " c -> CAST(ascii(c) AS BIGINT))),"
-        f" (a, b) -> (a * 31 + b) % {HASH_MOD})"
-    )
-
-
 #: standalone cells oracle — shared by the streaming twin
 #: (``registry.streaming_cms_cells``), which drains the same aggregation
 #: as a Structured Streaming query
@@ -173,7 +154,7 @@ CELLS_ORACLE = f"""
       FROM wl WHERE len(ws) >= 2
     ),
     depths AS (SELECT unnest(generate_series(0, {CMS_DEPTH - 1})) AS d)
-    SELECT d, {_hash_duck("bigram", "d")} % {CMS_WIDTH} AS cell,
+    SELECT d, {fold_hash_duck("bigram", seed="d")} % {CMS_WIDTH} AS cell,
            CAST(count(*) AS BIGINT) AS cell_cnt
     FROM bg, depths GROUP BY 1, 2
 """
@@ -523,19 +504,19 @@ def latest_kmv_emission(drained: DataFrame) -> DataFrame:
 
 
 ORACLES: dict[str, str] = {
-    "cms_join_size_check": """
+    "cms_join_size_check": f"""
         WITH ca AS (SELECT user_id AS k, count(*) AS c FROM events GROUP BY 1),
         cb AS (SELECT o_custkey AS k, count(*) AS c FROM orders GROUP BY 1),
-        depths AS (SELECT unnest(generate_series(0, 3)) AS d,
-                          unnest([736338717, 890588165, 214580541, 443804041]) AS a),
+        depths AS (SELECT unnest(generate_series(0, {CMS_DEPTH - 1})) AS d,
+                          unnest({list(CMS_KEY_AS)}) AS a),
         cells_a AS (
-          SELECT d, (((k % 1000000007) * a + 198491317) % 1000000007)
-                    % 1024 AS cell, sum(c) AS cnt
+          SELECT d, (((k % {HASH_MOD}) * a + {CMS_KEY_B}) % {HASH_MOD})
+                    % {CMS_WIDTH} AS cell, sum(c) AS cnt
           FROM ca, depths GROUP BY 1, 2
         ),
         cells_b AS (
-          SELECT d, (((k % 1000000007) * a + 198491317) % 1000000007)
-                    % 1024 AS cell, sum(c) AS cnt
+          SELECT d, (((k % {HASH_MOD}) * a + {CMS_KEY_B}) % {HASH_MOD})
+                    % {CMS_WIDTH} AS cell, sum(c) AS cnt
           FROM cb, depths GROUP BY 1, 2
         ),
         est AS (
@@ -559,7 +540,7 @@ ORACLES: dict[str, str] = {
                  <= 4 * n_a * n_b AS bound_ok
         FROM n, ex, est
     """,
-    "kmv_type_overlap": """
+    "kmv_type_overlap": f"""
         WITH du AS (SELECT DISTINCT event_type, user_id FROM events),
         n AS (SELECT event_type, count(*) AS n FROM du GROUP BY 1),
         pairs AS (
@@ -576,7 +557,7 @@ ORACLES: dict[str, str] = {
         ),
         h AS (
           SELECT DISTINCT event_type,
-                 ((user_id % 1000000007) * 736338717 + 198491317) % 1000000007 AS h
+                 ((user_id % {HASH_MOD}) * {_KMV_A} + {_KMV_B}) % {HASH_MOD} AS h
           FROM du
         ),
         rk AS (
@@ -626,7 +607,7 @@ ORACLES: dict[str, str] = {
         ),
         depths AS (SELECT unnest(generate_series(0, {CMS_DEPTH - 1})) AS d),
         cells AS (
-          SELECT d, {_hash_duck("bigram", "d")} % {CMS_WIDTH} AS cell,
+          SELECT d, {fold_hash_duck("bigram", seed="d")} % {CMS_WIDTH} AS cell,
                  CAST(count(*) AS BIGINT) AS cell_cnt
           FROM bg, depths GROUP BY 1, 2
         ),
@@ -640,7 +621,7 @@ ORACLES: dict[str, str] = {
                min(c.cell_cnt) >= t.true_cnt AS ge_ok
         FROM top t
         JOIN cells c
-          ON c.cell = {_hash_duck("t.bigram", "c.d")} % {CMS_WIDTH}
+          ON c.cell = {fold_hash_duck("t.bigram", seed="c.d")} % {CMS_WIDTH}
         GROUP BY 1, 2
     """,
 }

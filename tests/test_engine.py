@@ -205,7 +205,6 @@ _TEST_ONLY_KEEP = {
     "operators.similarity._lpa_oracle_sql": "DuckDB reference the LPA tests compare against",
     "operators.similarity._triangles_oracle_sql": "DuckDB reference the triangle tests compare against",
     "functions.geo.classify_points_pandas_udf": "numpy ray-cast form the codegen'd geofence expression is checked against",
-    "functions.vectors.cosine": "expression form the BLAS cosine_pudf is checked against",
     "operators.analytics5._docs_with_fps": "batch harness pinning the Arrow winnowing kernel (_fp_batches) to the Catalyst default",
     "operators.analytics5._winnow_positions": "the Catalyst winnowing selection _docs_with_fps is checked against",
     "plans.explain": "plan-assertion helpers for the plan tests",

@@ -1836,6 +1836,105 @@ def test_lsh_query_topk_exact_cosines(spark):
     assert [r["rk"] for r in got] == list(range(1, len(got) + 1))
 
 
+def test_tied_topk_cut():
+    """The tie-inclusive block-local cut keeps every score tied with the
+    k-th, emits nothing for a NaN or fully masked row, never keeps a
+    non-finite score, and clamps k to the width — driver-only."""
+    import numpy as np
+
+    inf = np.inf
+    sims = np.array(
+        [
+            [0.9, 0.5, 0.5, 0.5, 0.1],  # three-way tie at the 2nd score
+            [np.nan, np.nan, np.nan, np.nan, np.nan],
+            [-inf, -inf, -inf, -inf, -inf],  # fully masked
+            [0.3, np.nan, inf, 0.2, -inf],  # only finite scores rank
+        ]
+    )
+    rows, cols = similarity._tied_topk(sims.copy(), 2)
+    assert sorted(zip(rows.tolist(), cols.tolist())) == [
+        (0, 0), (0, 1), (0, 2), (0, 3), (3, 0), (3, 3)
+    ]
+    rows, cols = similarity._tied_topk(sims.copy(), 1)
+    assert sorted(zip(rows.tolist(), cols.tolist())) == [(0, 0), (3, 0)]
+    rows, cols = similarity._tied_topk(sims.copy(), 50)  # k > width
+    assert sorted(zip(rows.tolist(), cols.tolist())) == [
+        (0, 0), (0, 1), (0, 2), (0, 3), (0, 4), (3, 0), (3, 3)
+    ]
+
+
+def test_zero_norm_vector_is_never_ranked(spark, tmp_path):
+    """A zero-norm embedding has no cosine: the exact rankers do not
+    crash on it (ANSI DIVIDE_BY_ZERO, a driver ZeroDivisionError), never
+    rank, pick or assign it, and still match their DuckDB oracles. The
+    zero row is the first of the kcenter Lehmer pool, and a one-bit LSH
+    signature probes every bucket, so each operator's division meets
+    it."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from streamming_processing_pyspark_spark.operators import coreset
+    from streamming_processing_pyspark_spark.operators.featurize import (
+        _LEHMER_MOD,
+        _LEHMER_MUL,
+    )
+
+    from .conftest import assert_frames_match
+
+    src = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    ids = src["vec_id"].to_pylist()
+    zero_id = min(
+        (i for i in ids if i != similarity.QUERY_VEC_ID),
+        key=lambda i: ((i % _LEHMER_MOD) * _LEHMER_MUL % _LEHMER_MOD, i),
+    )
+    vecs = [
+        [0.0] * len(e) if i == zero_id else e
+        for i, e in zip(ids, src["embedding"].to_pylist())
+    ]
+    col = src.schema.get_field_index("embedding")
+    field = src.schema.field(col)
+    pq.write_table(
+        src.set_column(col, field, pa.array(vecs, field.type)),
+        tmp_path / "embeddings.parquet",
+    )
+    duck = duckdb.connect()
+    duck.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{tmp_path}/embeddings.parquet'"
+    )
+    t = load_tables(spark, str(tmp_path))
+    cases = {
+        "mmr_diverse_topk": (
+            similarity.mmr_diverse_topk(t),
+            similarity._mmr_oracle_sql(similarity.MMR_K),
+        ),
+        "kcenter_coreset": (
+            coreset.kcenter_coreset(t),
+            coreset._kcenter_oracle_sql(coreset.KCENTER_K),
+        ),
+        "lsh_query_topk": (
+            similarity.lsh_query_topk(t, n_bits=1),
+            similarity._lsh_query_oracle_sql(1),
+        ),
+        "knn_join_topk": (
+            similarity.knn_join_topk(t),
+            similarity.ORACLES["knn_join_topk"],
+        ),
+        "hard_negative_mining": (
+            similarity.hard_negative_mining(t),
+            similarity.ORACLES["hard_negative_mining"],
+        ),
+    }
+    for name, (df, sql) in cases.items():
+        got = df.toPandas()
+        assert_frames_match(got, duck.execute(sql).df(), name)
+        id_cols = [c for c in ("vec_id", "center_vec_id", "nbr_id") if c in got]
+        assert not got[id_cols].isin([zero_id]).any().any(), name
+    kc = cases["kcenter_coreset"][0].collect()
+    assert sum(r["n_assigned"] for r in kc) == len(ids) - 1
+    assert len(cases["lsh_query_topk"][0].collect()) == similarity.TOPK
+
+
 def test_apply_merge_column_equals_python_exhaustive(spark):
     """The BPE merge-application rule has two implementations — the
     driver-side scan (_merge_word, used by the learn loop) and the

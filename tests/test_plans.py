@@ -8,6 +8,10 @@ top-k avoids a full sort.
 
 from __future__ import annotations
 
+import re
+
+import pytest
+
 from streamming_processing_pyspark_spark.operators import pipeline, relational, windowed
 from streamming_processing_pyspark_spark.plans.explain import (
     assert_broadcast_join,
@@ -255,6 +259,32 @@ def test_knn_join_partial_topk(spark):
     s = plan_string(df)
     assert "WindowGroupLimit" in s, s
     assert "Partial" in s, s
+
+
+@pytest.mark.parametrize(
+    "op", ["hard_negative_mining", "ann_knn_topk", "hard_negative_mining_ann"]
+)
+def test_knn_rank_window_prunes_below_shuffle(spark, op):
+    """The shared per-anchor rank window (``similarity._ranked``) of the
+    exact and ANN kNN ops: the final WindowGroupLimit sits over the
+    ``vec_id`` shuffle and a partial one under it, so candidates are cut
+    to k per anchor map-side before they are shuffled."""
+    from streamming_processing_pyspark_spark.operators import similarity
+
+    t = load_tables(spark, SF_DIR)
+    plan = plan_string(getattr(similarity, op)(t))
+    nodes = re.findall(r"(\w+) +\((\d+)\)\n", plan.split("\n\n")[0])
+    names = [name for name, _ in nodes]
+    top = names.index("WindowGroupLimit")
+    assert names[top : top + 5] == [
+        "WindowGroupLimit", "Sort", "Exchange", "WindowGroupLimit", "Sort"
+    ], plan
+    final, exchange, partial = (nodes[top + i][1] for i in (0, 2, 3))
+    assert re.search(rf"\({final}\) WindowGroupLimit\n.*\n.*, Final\n", plan), plan
+    assert re.search(
+        rf"\({exchange}\) Exchange\n.*\nArguments: hashpartitioning\(vec_id#\d+L, ", plan
+    ), plan
+    assert re.search(rf"\({partial}\) WindowGroupLimit\n.*\n.*, Partial\n", plan), plan
 
 
 def test_leakage_safe_split_map_only(spark):

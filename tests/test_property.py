@@ -119,8 +119,7 @@ def test_cms_seeded_hash_matches_python_reimpl(spark, tokens, seed):
     """The CMS's seeded portable hash must equal a character-fold Python
     reimplementation (the same recurrence DuckDB's list_reduce mirrors),
     including the space inside bigram keys."""
-    from streamming_processing_pyspark_spark.functions.text import HASH_MOD
-    from streamming_processing_pyspark_spark.operators.sketches import _seeded_hash
+    from streamming_processing_pyspark_spark.functions.text import HASH_MOD, fold_hash
 
     text = " ".join(tokens)
 
@@ -131,7 +130,7 @@ def test_cms_seeded_hash_matches_python_reimpl(spark, tokens, seed):
         return acc
 
     df = spark.createDataFrame([(text,)], "bigram string")
-    got = df.select(_seeded_hash("bigram", seed).alias("h")).collect()[0]["h"]
+    got = df.select(fold_hash("bigram", seed).alias("h")).collect()[0]["h"]
     assert got == py_hash(text, seed)
 
 
