@@ -640,12 +640,24 @@ def _ladder_level_sql(width: int) -> str:
 
 
 def _oracles() -> dict[str, str]:
-    from .dedup import JACCARD_THRESHOLD, _SHINGLE_DUCK
+    from .dedup import _SHINGLE_DUCK, _contract_duck, _jaccard_pairs_duck
     from .pipeline import PACK_SEQ_LEN, PACK_SHARDS
 
     gram = " || ' ' || ".join(
         f"ws[i + {j}]" for j in range(COMPRESS_NGRAM)
     )
+    leakage = f"""
+        WITH {_SHINGLE_DUCK},
+        jp AS ({_jaccard_pairs_duck()})
+        SELECT least(da.source, db.source) AS source_a,
+               greatest(da.source, db.source) AS source_b,
+               count(*) AS n_pairs,
+               least(da.source, db.source)
+                 != greatest(da.source, db.source) AS cross_source
+        FROM jp JOIN documents da ON jp.id_a = da.doc_id
+                JOIN documents db ON jp.id_b = db.doc_id
+        GROUP BY 1, 2, 4
+    """
     return {
         "rolling_7d_active_users": f"""
             WITH du AS (
@@ -729,47 +741,13 @@ def _oracles() -> dict[str, str]:
                         AS BIGINT) AS n_price_mismatch
             FROM j2
         """,
-        "dup_leakage_matrix": f"""
-            WITH {_SHINGLE_DUCK},
-            jp AS (
-              SELECT id_a, id_b
-              FROM p JOIN n na ON p.id_a = na.doc_id
-                     JOIN n nb ON p.id_b = nb.doc_id
-              WHERE round(common * 1.0 / (na.n + nb.n - common), 4)
-                    >= {JACCARD_THRESHOLD}
-            )
-            SELECT least(da.source, db.source) AS source_a,
-                   greatest(da.source, db.source) AS source_b,
-                   count(*) AS n_pairs,
-                   least(da.source, db.source)
-                     != greatest(da.source, db.source) AS cross_source
-            FROM jp JOIN documents da ON jp.id_a = da.doc_id
-                    JOIN documents db ON jp.id_b = db.doc_id
-            GROUP BY 1, 2, 4
-        """,
+        "dup_leakage_matrix": leakage,
         # the minhash-sourced matrix itself is rows-only (xxhash64 isn't
         # SQL-reproducible); this check recomputes the EXACT matrix's cell
         # count and expects the subset/bound claims to hold as data
-        "dup_leakage_matrix_minhash_check": f"""
-            WITH {_SHINGLE_DUCK},
-            jp AS (
-              SELECT id_a, id_b
-              FROM p JOIN n na ON p.id_a = na.doc_id
-                     JOIN n nb ON p.id_b = nb.doc_id
-              WHERE round(common * 1.0 / (na.n + nb.n - common), 4)
-                    >= {JACCARD_THRESHOLD}
-            ),
-            cells AS (
-              SELECT DISTINCT least(da.source, db.source) AS source_a,
-                     greatest(da.source, db.source) AS source_b
-              FROM jp JOIN documents da ON jp.id_a = da.doc_id
-                      JOIN documents db ON jp.id_b = db.doc_id
-            )
-            SELECT count(*) AS n_cells_exact,
-                   TRUE AS subset_ok,
-                   TRUE AS bounded_ok
-            FROM cells
-        """,
+        "dup_leakage_matrix_minhash_check": _contract_duck(
+            leakage, "subset_ok", "bounded_ok", count="count(*) AS n_cells_exact"
+        ),
         "embedding_norm_audit": f"""
             WITH m AS (
               SELECT list_reduce(list_prepend(CAST(0 AS BIGINT),

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import JACCARD_THRESHOLD, SHINGLE_WORDS, _CAP_DUCK, ngram_jaccard_pairs
+from .dedup import _near_dup_components_duck, ngram_jaccard_pairs
 from .pipeline import PACK_SEQ_LEN, PACK_SHARDS, _connected_components
 from .sampling import (
     ALPHA_DEN,
@@ -201,37 +201,7 @@ ORACLES: dict[str, str] = {
         WITH RECURSIVE
         {_GATE_DUCK},
         x AS (SELECT min(doc_id) AS doc_id, text FROM g GROUP BY text),
-        w AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ws
-              FROM x),
-        s AS (SELECT doc_id,
-                     list_distinct(list_transform(
-                       generate_series(1, len(ws) - {SHINGLE_WORDS - 1}),
-                       i -> {" || ' ' || ".join(f"ws[i + {j}]" for j in range(SHINGLE_WORDS))}
-                     )) AS shingles
-              FROM w WHERE len(ws) >= {SHINGLE_WORDS}),
-        e AS (SELECT doc_id, unnest(shingles) AS sh FROM s),
-        n AS (SELECT doc_id, count(*) AS n FROM e GROUP BY doc_id),
-        hot AS (SELECT sh FROM e GROUP BY sh
-                HAVING count(DISTINCT doc_id) > {_CAP_DUCK}),
-        ek AS (SELECT doc_id, sh FROM e WHERE sh NOT IN (SELECT sh FROM hot)),
-        p AS (SELECT e1.doc_id AS id_a, e2.doc_id AS id_b, count(*) AS common
-              FROM ek e1 JOIN ek e2 ON e1.sh = e2.sh
-              WHERE e1.doc_id < e2.doc_id GROUP BY 1, 2),
-        jp AS (
-          SELECT id_a, id_b
-          FROM p JOIN n na ON p.id_a = na.doc_id
-                 JOIN n nb ON p.id_b = nb.doc_id
-          WHERE round(common * 1.0 / (na.n + nb.n - common), 4)
-                >= {JACCARD_THRESHOLD}
-        ),
-        edges AS (SELECT id_a AS s, id_b AS d FROM jp
-                  UNION SELECT id_b, id_a FROM jp),
-        reach(node, lab) AS (
-          SELECT s, s FROM edges
-          UNION
-          SELECT e2.d, r.lab FROM reach r JOIN edges e2 ON e2.s = r.node
-        ),
-        comp AS (SELECT node, min(lab) AS component FROM reach GROUP BY node),
+        {_near_dup_components_duck("x")},
         surv AS (SELECT x.doc_id, x.text
                  FROM x LEFT JOIN comp ON x.doc_id = comp.node
                  WHERE comp.component IS NULL OR comp.component = x.doc_id),

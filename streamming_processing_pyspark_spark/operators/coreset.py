@@ -61,14 +61,14 @@ KCENTER_K = 8
 def _assign_to_centers(batches, ce, cn, cv):
     """Per Arrow batch of (vec_id, e, nr) rows: the nearest center by
     cosine distance against the center vectors ``ce``, their norms ``cn``
-    and vec_ids ``cv``. Zero-norm rows are never assigned. A 0-row batch
-    is skipped: its vector matrix is 1-D and has no dimension axis to
-    fold over."""
+    and vec_ids ``cv``. Zero-norm rows are never assigned, and no row is
+    when there is no center. A 0-row batch is skipped: its vector matrix
+    is 1-D and has no dimension axis to fold over."""
     import numpy as np
 
     for pdf in batches:
         pdf = pdf[pdf["nr"] > 0]  # a zero-norm row has no distance
-        if pdf.empty:
+        if pdf.empty or not len(cv):
             continue
         m = np.array(pdf["e"].tolist(), dtype="float64")
         nr = pdf["nr"].to_numpy()
@@ -100,7 +100,8 @@ def kcenter_coreset(t: Tables) -> DataFrame:
     selected exemplars give (greedy is the classic 2-approximation).
     Seed: the pool row with the smallest ``vec_id``; each next center is
     the pool row farthest (max min-cosine-distance, ties to smaller
-    ``vec_id``) from the chosen set.
+    ``vec_id``) from the chosen set. A pool without a nonzero-norm row
+    (an empty table, or all-zero vectors) has no seed: 0 rows.
     """
     spark = t["embeddings"].sparkSession
     emb = (
@@ -119,12 +120,11 @@ def kcenter_coreset(t: Tables) -> DataFrame:
     pool = sorted(
         (r["vec_id"], list(r["e"]), r["nr"]) for r in pool_rows if r["nr"] > 0
     )
-    centers = [pool[0]]  # seed: smallest vec_id in the pool
-    md = {
-        vid: 1.0 - fold_dot(e, centers[0][1]) / (nr * centers[0][2])
-        for vid, e, nr in pool
-    }
-    for _ in range(1, KCENTER_K):
+    # every distance starts infinite, so the first pick (the seed) is the
+    # smallest vec_id; an empty pool picks no center
+    md = {vid: math.inf for vid, _e, _nr in pool}
+    centers = []
+    while pool and len(centers) < KCENTER_K:
         far = max(pool, key=lambda p: (md[p[0]], -p[0]))
         centers.append(far)
         for vid, e, nr in pool:

@@ -45,6 +45,21 @@ Oracle policy: exact ops have DuckDB oracles; MinHash/SimHash depend on
 xxhash64 (not reproducible in DuckDB) → rows-only driver check, with
 subset/equivalence assertions against the exact pairs in tests/ and as
 data in the ``*_check`` queries.
+
+The DuckDB reference rules are each written once, and the oracles here
+and in ``pipeline``, ``campaign``, ``analytics3`` and ``similarity``
+compose them:
+
+- :func:`_shingle_duck` — the word-shingle CTE chain over any
+  ``(doc_id, text)`` relation, down to the capped / uncapped ``common``
+  counts ``p`` / ``pu``.
+- :func:`_scores_duck` and :func:`_jaccard_pairs_duck` — the exact
+  Jaccard and containment scores of a pair relation, and the exact
+  near-duplicate set at ``JACCARD_THRESHOLD``.
+- :func:`_components_duck` — min-label connected components (recursive
+  ``reach``); :func:`_near_dup_components_duck` clusters a corpus with it.
+- :func:`_contract_duck` — a contract check's oracle row: its exact
+  twin's SQL counted, every claim flag TRUE.
 """
 
 from __future__ import annotations
@@ -1431,12 +1446,20 @@ def simhash_locality_check(t: Tables) -> DataFrame:
     )
 
 
-_SHINGLE_DUCK = f"""
-    w AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ws FROM documents),
-    s AS (SELECT doc_id,
+def _shingle_duck(src: str = "documents", keep: str = "") -> str:
+    """DuckDB twin of :func:`_shingles` and :func:`_shingle_commons`, the
+    exact shingle CTE chain over the ``(doc_id, text)`` relation ``src``:
+    ``s`` the distinct word-``SHINGLE_WORDS``-gram list per doc (with the
+    extra column ``keep``), ``e`` one row per (doc, shingle), ``n`` the set
+    sizes, ``ek`` without the shingles of df > ``AUTO_DF_CAP``, and ``p`` /
+    ``pu`` the capped / uncapped ``common`` count per doc pair."""
+    k = f", {keep}" if keep else ""
+    gram = " || ' ' || ".join(f"ws[i + {j}]" for j in range(SHINGLE_WORDS))
+    return f"""
+    w AS (SELECT doc_id{k}, string_split_regex(trim(text), '\\s+') AS ws FROM {src}),
+    s AS (SELECT doc_id{k},
                  list_distinct(list_transform(
-                   generate_series(1, len(ws) - {SHINGLE_WORDS - 1}),
-                   i -> {" || ' ' || ".join(f"ws[i + {j}]" for j in range(SHINGLE_WORDS))}
+                   generate_series(1, len(ws) - {SHINGLE_WORDS - 1}), i -> {gram}
                  )) AS shingles
           FROM w WHERE len(ws) >= {SHINGLE_WORDS}),
     e AS (SELECT doc_id, unnest(shingles) AS sh FROM s),
@@ -1451,6 +1474,63 @@ _SHINGLE_DUCK = f"""
            FROM e e1 JOIN e e2 ON e1.sh = e2.sh
            WHERE e1.doc_id < e2.doc_id GROUP BY 1, 2)
 """
+
+
+_SHINGLE_DUCK = _shingle_duck()
+
+
+def _scores_duck(pairs: str = "p") -> str:
+    """Every doc pair of ``pairs`` (``p`` capped, ``pu`` uncapped, after
+    :func:`_shingle_duck`) with ``common``, both set sizes ``n_a``/``n_b``
+    and the 4-dp ``containment`` and ``jaccard`` of
+    :func:`_containment_cols` and :func:`_jaccard_from_common`."""
+    return f"""
+      SELECT id_a, id_b, common, na.n AS n_a, nb.n AS n_b,
+             round(common * 1.0 / least(na.n, nb.n), 4) AS containment,
+             round(common * 1.0 / (na.n + nb.n - common), 4) AS jaccard
+      FROM {pairs} JOIN n na ON id_a = na.doc_id JOIN n nb ON id_b = nb.doc_id"""
+
+
+def _jaccard_pairs_duck(pairs: str = "p") -> str:
+    """The exact near-duplicate set: ``(id_a, id_b, jaccard)`` of the
+    pairs of ``pairs`` at Jaccard ≥ ``JACCARD_THRESHOLD``."""
+    return f"""
+      SELECT id_a, id_b, jaccard FROM ({_scores_duck(pairs)})
+      WHERE jaccard >= {JACCARD_THRESHOLD}"""
+
+
+def _components_duck(pairs: str, a: str = "id_a", b: str = "id_b") -> str:
+    """Min-label connected components of the pair relation ``pairs``
+    (columns ``a``, ``b``) as recursive CTEs (the query starts ``WITH
+    RECURSIVE``): ``comp(node, component)``, the smallest id reachable
+    from each node."""
+    return f"""
+    edges AS (SELECT {a} AS s, {b} AS d FROM {pairs}
+              UNION SELECT {b}, {a} FROM {pairs}),
+    reach(node, lab) AS (
+      SELECT s, s FROM edges
+      UNION
+      SELECT edges.d, reach.lab FROM reach JOIN edges ON edges.s = reach.node
+    ),
+    comp AS (SELECT node, min(lab) AS component FROM reach GROUP BY node)"""
+
+
+def _near_dup_components_duck(src: str = "documents") -> str:
+    """The exact near-duplicate clustering of ``src`` as recursive CTEs:
+    :func:`_shingle_duck`, the capped pair set ``jp`` and its
+    :func:`_components_duck` ``comp``."""
+    return f"""{_shingle_duck(src)},
+    jp AS ({_jaccard_pairs_duck()}),
+    {_components_duck("jp")}"""
+
+
+def _contract_duck(exact: str, *flags: str, count: str = "count(*) AS n_exact") -> str:
+    """The oracle row of an exact-vs-approximate contract check: the
+    exact twin's rows ``exact`` counted by the select list ``count``, and
+    every claim in ``flags`` expected TRUE."""
+    claims = "".join(f", TRUE AS {f}" for f in flags)
+    return f"SELECT {count}{claims} FROM ({exact})"
+
 
 ORACLES: dict[str, str] = {
     "exact_dedup": """
@@ -1501,11 +1581,7 @@ ORACLES: dict[str, str] = {
     """,
     "near_dup_threshold_sweep_check": f"""
         WITH {_SHINGLE_DUCK},
-        sc AS (SELECT p.id_a, p.id_b,
-                      round(common * 1.0 / (na.n + nb.n - common), 4)
-                        AS jaccard
-               FROM p JOIN n na ON p.id_a = na.doc_id
-                      JOIN n nb ON p.id_b = nb.doc_id),
+        sc AS ({_scores_duck()}),
         th AS (SELECT unnest([{", ".join(str(x) for x in SWEEP_THETAS_PCT)}])
                         AS theta_pct),
         hits AS (SELECT theta_pct, id_a, id_b
@@ -1524,26 +1600,14 @@ ORACLES: dict[str, str] = {
         FROM th LEFT JOIN pairs_per ON th.theta_pct = pairs_per.theta_pct
                 LEFT JOIN docs_per ON th.theta_pct = docs_per.theta_pct
     """,
-    "ngram_jaccard_pairs": f"""
-        WITH {_SHINGLE_DUCK}
-        SELECT id_a, id_b,
-               round(common * 1.0 / (na.n + nb.n - common), 4) AS jaccard
-        FROM p JOIN n na ON p.id_a = na.doc_id JOIN n nb ON p.id_b = nb.doc_id
-        WHERE round(common * 1.0 / (na.n + nb.n - common), 4) >= {JACCARD_THRESHOLD}
-    """,
+    "ngram_jaccard_pairs": f"WITH {_SHINGLE_DUCK} {_jaccard_pairs_duck()}",
     "dedup_graph_stats": f"""
         WITH {_SHINGLE_DUCK},
-        pr AS (
-          SELECT id_a, id_b
-          FROM p JOIN n na ON p.id_a = na.doc_id
-                 JOIN n nb ON p.id_b = nb.doc_id
-          WHERE round(common * 1.0 / (na.n + nb.n - common), 4)
-                >= {JACCARD_THRESHOLD}
-        ),
+        jp AS ({_jaccard_pairs_duck()}),
         deg AS (
           SELECT node, count(*) AS d
-          FROM (SELECT id_a AS node FROM pr
-                UNION ALL SELECT id_b FROM pr)
+          FROM (SELECT id_a AS node FROM jp
+                UNION ALL SELECT id_b FROM jp)
           GROUP BY node
         ),
         wd AS (
@@ -1553,10 +1617,10 @@ ORACLES: dict[str, str] = {
         ),
         tr AS (
           SELECT CAST(count(*) AS BIGINT) AS n_triangles
-          FROM pr p1 JOIN pr p2 ON p1.id_b = p2.id_a
-               JOIN pr p3 ON p3.id_a = p1.id_a AND p3.id_b = p2.id_b
+          FROM jp p1 JOIN jp p2 ON p1.id_b = p2.id_a
+               JOIN jp p3 ON p3.id_a = p1.id_a AND p3.id_b = p2.id_b
         ),
-        np AS (SELECT CAST(count(*) AS BIGINT) AS n_pairs FROM pr)
+        np AS (SELECT CAST(count(*) AS BIGINT) AS n_pairs FROM jp)
         SELECT np.n_pairs, wd.n_nodes, tr.n_triangles, wd.n_wedges,
                CASE WHEN wd.n_wedges > 0
                     THEN CAST(3 * tr.n_triangles * 10000 // wd.n_wedges
@@ -1566,95 +1630,53 @@ ORACLES: dict[str, str] = {
     # minhash_lsh_pairs / simhash_fingerprints:
     # xxhash64-based — rows-only driver check; minhash_recall_check below
     # turns the subset + recall contract into a hard driver check.
-    "minhash_recall_check": f"""
-        WITH {_SHINGLE_DUCK},
-        jx AS (
-          SELECT id_a, id_b
-          FROM pu JOIN n na ON pu.id_a = na.doc_id
-                  JOIN n nb ON pu.id_b = nb.doc_id
-          WHERE round(common * 1.0 / (na.n + nb.n - common), 4)
-                >= {JACCARD_THRESHOLD}
-        )
-        SELECT count(*) AS n_exact,
-               TRUE AS subset_ok,
-               TRUE AS recall_ok
-        FROM jx
-    """,
+    "minhash_recall_check": _contract_duck(
+        f"WITH {_SHINGLE_DUCK} {_jaccard_pairs_duck('pu')}", "subset_ok", "recall_ok"
+    ),
     # incremental_minhash_pairs: xxhash64-based → rows-only; the check
     # below is its hard driver-checked contract.
-    "incremental_ingest_check": f"""
-        WITH {_SHINGLE_DUCK},
-        jx AS (
-          SELECT id_a, id_b
-          FROM pu JOIN n na ON pu.id_a = na.doc_id
-                  JOIN n nb ON pu.id_b = nb.doc_id
-          WHERE round(common * 1.0 / (na.n + nb.n - common), 4)
-                >= {JACCARD_THRESHOLD}
-            AND ((id_a % {INCR_BATCH_MOD} = 0) != (id_b % {INCR_BATCH_MOD} = 0))
-        )
-        SELECT count(*) AS n_exact_cross,
-               TRUE AS subset_ok,
-               TRUE AS recall_ok
-        FROM jx
-    """,
-    "simhash_locality_check": f"""
-        WITH {_SHINGLE_DUCK},
-        jc AS (
-          SELECT id_a, id_b
-          FROM p JOIN n na ON p.id_a = na.doc_id
-                 JOIN n nb ON p.id_b = nb.doc_id
-          WHERE round(common * 1.0 / (na.n + nb.n - common), 4)
-                >= {JACCARD_THRESHOLD}
-        )
-        SELECT count(*) AS n_pairs, TRUE AS locality_ok FROM jc
-    """,
+    "incremental_ingest_check": _contract_duck(
+        f"""WITH {_SHINGLE_DUCK} SELECT * FROM ({_jaccard_pairs_duck('pu')})
+        WHERE (id_a % {INCR_BATCH_MOD} = 0) != (id_b % {INCR_BATCH_MOD} = 0)""",
+        "subset_ok",
+        "recall_ok",
+        count="count(*) AS n_exact_cross",
+    ),
     # simhash_near_dup_pairs: rows-only (crc32 fingerprints); the band
     # check's doc counts are SQL-recomputable and the oracle expects both
     # pigeonhole flags TRUE — the completeness contract as data.
     # n_excluded = token-less docs (NULL text or no non-whitespace
     # character — the NULL-fingerprint degenerate condition, ADVICE r10); ASCII
     # whitespace on both engines, pinned by test on constructed frames.
-    "simhash_band_check": r"""
-        SELECT count(*) AS n_docs,
-               count(*) FILTER (WHERE text IS NULL
-                                   OR NOT regexp_matches(text, '\S'))
-                 AS n_excluded,
-               TRUE AS complete_ok,
-               TRUE AS subset_ok
-        FROM documents
-    """,
+    "simhash_band_check": _contract_duck(
+        "SELECT text FROM documents",
+        "complete_ok",
+        "subset_ok",
+        count="count(*) AS n_docs, count(*) FILTER (WHERE text IS NULL"
+        " OR NOT regexp_matches(text, '\\S')) AS n_excluded",
+    ),
     # containment_pairs_banded: xxhash64 band candidates → rows-only;
     # containment_recall_check is its hash-green contract (UNCAPPED
     # exact count + subset + recall flags — see the cap-asymmetry note
     # in containment_pairs)
-    "containment_recall_check": f"""
-        WITH {_SHINGLE_DUCK},
-        cx AS (
-          SELECT pu.id_a, pu.id_b
-          FROM pu JOIN n na ON pu.id_a = na.doc_id
-                  JOIN n nb ON pu.id_b = nb.doc_id
-          WHERE round(common * 1.0 / least(na.n, nb.n), 4)
-                >= {CONTAINMENT_MIN}
-        )
-        SELECT count(*) AS n_exact,
-               TRUE AS subset_ok,
-               TRUE AS recall_ok
-        FROM cx
-    """,
+    "containment_recall_check": _contract_duck(
+        f"""WITH {_SHINGLE_DUCK} SELECT * FROM ({_scores_duck('pu')})
+        WHERE containment >= {CONTAINMENT_MIN}""",
+        "subset_ok",
+        "recall_ok",
+    ),
     "containment_pairs": f"""
         WITH {_SHINGLE_DUCK}
-        SELECT p.id_a, p.id_b,
-               CAST(common AS BIGINT) AS common,
-               CAST(na.n AS BIGINT) AS n_a,
-               CAST(nb.n AS BIGINT) AS n_b,
-               round(common * 1.0 / least(na.n, nb.n), 4) AS containment,
-               round(common * 1.0 / (na.n + nb.n - common), 4) AS jaccard
-        FROM p JOIN n na ON p.id_a = na.doc_id
-               JOIN n nb ON p.id_b = nb.doc_id
-        WHERE round(common * 1.0 / least(na.n, nb.n), 4)
-              >= {CONTAINMENT_MIN}
+        SELECT id_a, id_b, CAST(common AS BIGINT) AS common,
+               CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
+               containment, jaccard
+        FROM ({_scores_duck()}) WHERE containment >= {CONTAINMENT_MIN}
     """,
 }
+ORACLES["simhash_locality_check"] = _contract_duck(
+    ORACLES["ngram_jaccard_pairs"], "locality_ok", count="count(*) AS n_pairs"
+)
+
 
 def dedup_graph_stats(t: Tables) -> DataFrame:
     """Structure report over the near-dup pair graph: pair / node /
@@ -1837,21 +1859,10 @@ QUERIES = {
 }
 
 ORACLES["source_overlap_matrix"] = f"""
-    WITH w AS (
-      SELECT doc_id, source, string_split_regex(trim(text), '\\s+') AS ws
-      FROM documents
-    ),
-    s AS (
-      SELECT doc_id, source,
-             list_distinct(list_transform(
-               generate_series(1, len(ws) - {SHINGLE_WORDS - 1}),
-               i -> {" || ' ' || ".join(f"ws[i + {j}]" for j in range(SHINGLE_WORDS))}
-             )) AS shingles
-      FROM w WHERE len(ws) >= {SHINGLE_WORDS}
-    ),
+    WITH {_shingle_duck(keep="source")},
     ss AS (SELECT DISTINCT source, unnest(shingles) AS sh FROM s),
     sizes AS (SELECT source, count(*) AS n_sh FROM ss GROUP BY source),
-    p AS (
+    sp AS (
       SELECT a.source AS source_a, b.source AS source_b,
              CAST(count(*) AS BIGINT) AS n_common
       FROM ss a JOIN ss b ON a.sh = b.sh AND a.source < b.source
@@ -1862,25 +1873,13 @@ ORACLES["source_overlap_matrix"] = f"""
            n_common,
            CAST(10000 * n_common // (sa.n_sh + sb.n_sh - n_common) AS BIGINT)
              AS jaccard_bp
-    FROM p
-    JOIN sizes sa ON sa.source = p.source_a
-    JOIN sizes sb ON sb.source = p.source_b
+    FROM sp
+    JOIN sizes sa ON sa.source = sp.source_a
+    JOIN sizes sb ON sb.source = sp.source_b
 """
 
 ORACLES["shingle_novelty_scores"] = f"""
-    WITH w AS (
-      SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ws
-      FROM documents
-    ),
-    s AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               generate_series(1, len(ws) - {SHINGLE_WORDS - 1}),
-               i -> {" || ' ' || ".join(f"ws[i + {j}]" for j in range(SHINGLE_WORDS))}
-             )) AS shingles
-      FROM w WHERE len(ws) >= {SHINGLE_WORDS}
-    ),
-    e AS (SELECT doc_id, unnest(shingles) AS sh FROM s),
+    WITH {_SHINGLE_DUCK},
     m AS (
       SELECT doc_id,
              (min(doc_id) OVER (PARTITION BY sh) < doc_id) AS seen_before
@@ -1971,30 +1970,17 @@ ORACLES["er_match_scores"] = f"""
     FROM scored
 """
 
-ORACLES["er_entity_clusters"] = f"""
+
+def _er_clusters_duck(linked: str) -> str:
+    """DuckDB twin of :func:`_er_clusters`: the min-label entity of every
+    name in an ``er_match_scores`` pair whose tier passes ``linked``."""
+    return f"""
     WITH RECURSIVE er AS ({ORACLES["er_match_scores"]}),
-    jp AS (SELECT name_a, name_b FROM er WHERE tier <> 'weak'),
-    edges AS (SELECT name_a AS s, name_b AS d FROM jp
-              UNION SELECT name_b, name_a FROM jp),
-    reach(node, lab) AS (
-      SELECT s, s FROM edges
-      UNION
-      SELECT e.d, r.lab FROM reach r JOIN edges e ON e.s = r.node
-    )
-    SELECT node AS p_name, min(lab) AS entity_id
-    FROM reach GROUP BY node
+    jp AS (SELECT name_a, name_b FROM er WHERE {linked}),
+    {_components_duck("jp", "name_a", "name_b")}
+    SELECT node AS p_name, component AS entity_id FROM comp
 """
 
-ORACLES["er_match_clusters"] = f"""
-    WITH RECURSIVE er AS ({ORACLES["er_match_scores"]}),
-    jp AS (SELECT name_a, name_b FROM er WHERE tier = 'match'),
-    edges AS (SELECT name_a AS s, name_b AS d FROM jp
-              UNION SELECT name_b, name_a FROM jp),
-    reach(node, lab) AS (
-      SELECT s, s FROM edges
-      UNION
-      SELECT e.d, r.lab FROM reach r JOIN edges e ON e.s = r.node
-    )
-    SELECT node AS p_name, min(lab) AS entity_id
-    FROM reach GROUP BY node
-"""
+
+ORACLES["er_entity_clusters"] = _er_clusters_duck("tier <> 'weak'")
+ORACLES["er_match_clusters"] = _er_clusters_duck("tier = 'match'")

@@ -31,8 +31,8 @@ from ..functions.text import fold_hash, fold_hash_duck, words
 from ..tables import clear_persist_slots, held
 from .dedup import (
     INCR_BATCH_MOD,
-    JACCARD_THRESHOLD,
-    _SHINGLE_DUCK,
+    _contract_duck,
+    _near_dup_components_duck,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
 )
@@ -805,25 +805,8 @@ _RATE_CASE = " ".join(
     f"WHEN '{lang}' THEN {rate}" for lang, rate in SAMPLE_RATES.items()
 )
 
-ORACLE_DEDUP_CLUSTERS = f"""
-        WITH RECURSIVE {_SHINGLE_DUCK},
-        jp AS (
-          SELECT id_a, id_b
-          FROM p JOIN n na ON p.id_a = na.doc_id
-                 JOIN n nb ON p.id_b = nb.doc_id
-          WHERE round(common * 1.0 / (na.n + nb.n - common), 4)
-                >= {JACCARD_THRESHOLD}
-        ),
-        edges AS (SELECT id_a AS s, id_b AS d FROM jp
-                  UNION SELECT id_b, id_a FROM jp),
-        reach(node, lab) AS (
-          SELECT s, s FROM edges
-          UNION
-          SELECT e.d, r.lab FROM reach r JOIN edges e ON e.s = r.node
-        )
-        SELECT node AS doc_id, min(lab) AS component
-        FROM reach GROUP BY node
-    """
+_DEDUP_COMP_DUCK = f"WITH RECURSIVE {_near_dup_components_duck()}"
+ORACLE_DEDUP_CLUSTERS = f"{_DEDUP_COMP_DUCK} SELECT node AS doc_id, component FROM comp"
 
 ORACLES: dict[str, str] = {
     "repetition_filter": """
@@ -944,66 +927,21 @@ ORACLES: dict[str, str] = {
     # the star-contraction loop must land on the identical labels
     "dedup_clusters_star": ORACLE_DEDUP_CLUSTERS,
     "dedup_canonical_docs": f"""
-        WITH RECURSIVE {_SHINGLE_DUCK},
-        jp AS (
-          SELECT id_a, id_b
-          FROM p JOIN n na ON p.id_a = na.doc_id
-                 JOIN n nb ON p.id_b = nb.doc_id
-          WHERE round(common * 1.0 / (na.n + nb.n - common), 4)
-                >= {JACCARD_THRESHOLD}
-        ),
-        edges AS (SELECT id_a AS s, id_b AS d FROM jp
-                  UNION SELECT id_b, id_a FROM jp),
-        reach(node, lab) AS (
-          SELECT s, s FROM edges
-          UNION
-          SELECT e.d, r.lab FROM reach r JOIN edges e ON e.s = r.node
-        ),
-        comp AS (SELECT node, min(lab) AS component FROM reach GROUP BY node)
+        {_DEDUP_COMP_DUCK}
         SELECT doc_id FROM documents LEFT JOIN comp ON doc_id = comp.node
         WHERE component IS NULL OR component = doc_id
     """,
     # recomputes the exact clustering's size and expects both claim flags
     # TRUE (MinHash clusters refine — never merge — exact clusters)
-    "dedup_clusters_minhash_check": f"""
-        WITH RECURSIVE {_SHINGLE_DUCK},
-        jp AS (
-          SELECT id_a, id_b
-          FROM p JOIN n na ON p.id_a = na.doc_id
-                 JOIN n nb ON p.id_b = nb.doc_id
-          WHERE round(common * 1.0 / (na.n + nb.n - common), 4)
-                >= {JACCARD_THRESHOLD}
-        ),
-        edges AS (SELECT id_a AS s, id_b AS d FROM jp
-                  UNION SELECT id_b, id_a FROM jp),
-        reach(node, lab) AS (
-          SELECT s, s FROM edges
-          UNION
-          SELECT e.d, r.lab FROM reach r JOIN edges e ON e.s = r.node
-        ),
-        comp AS (SELECT node, min(lab) AS component FROM reach GROUP BY node)
-        SELECT CAST(count(*) AS BIGINT) AS n_exact_docs,
-               CAST(count(DISTINCT component) AS BIGINT) AS n_exact_components,
-               TRUE AS refine_ok, TRUE AS covered_ok
-        FROM comp
-    """,
+    "dedup_clusters_minhash_check": _contract_duck(
+        ORACLE_DEDUP_CLUSTERS,
+        "refine_ok",
+        "covered_ok",
+        count="CAST(count(*) AS BIGINT) AS n_exact_docs,"
+        " CAST(count(DISTINCT component) AS BIGINT) AS n_exact_components",
+    ),
     "dedup_cluster_size_histogram": f"""
-        WITH RECURSIVE {_SHINGLE_DUCK},
-        jp AS (
-          SELECT id_a, id_b
-          FROM p JOIN n na ON p.id_a = na.doc_id
-                 JOIN n nb ON p.id_b = nb.doc_id
-          WHERE round(common * 1.0 / (na.n + nb.n - common), 4)
-                >= {JACCARD_THRESHOLD}
-        ),
-        edges AS (SELECT id_a AS s, id_b AS d FROM jp
-                  UNION SELECT id_b, id_a FROM jp),
-        reach(node, lab) AS (
-          SELECT s, s FROM edges
-          UNION
-          SELECT e.d, r.lab FROM reach r JOIN edges e ON e.s = r.node
-        ),
-        comp AS (SELECT node, min(lab) AS component FROM reach GROUP BY node),
+        {_DEDUP_COMP_DUCK},
         cs AS (SELECT component, count(*) AS cluster_size
                FROM comp GROUP BY component)
         SELECT cluster_size, count(*) AS n_clusters,

@@ -29,7 +29,14 @@ cores.
 - Contracts: every exact-vs-approximate ``*_check`` projects its flags
   from one row of :func:`dedup._overlap_counts`; the pair-recall checks
   share :func:`dedup._recall_contract` and the flat indexes
-  :func:`_topk_contract`.
+  :func:`_topk_contract`. Each check's oracle is
+  :func:`dedup._contract_duck` over its exact twin's oracle.
+- DuckDB cosine builders, each written once: :func:`_cos_duck` (the
+  rounded cosine of two aliases), :func:`_probe_cos_duck` /
+  :func:`_probe_topk_duck` (every vector against the probe
+  ``QUERY_VEC_ID``), :func:`_cos_join_duck` (the one pair join),
+  :func:`_cos_pairs_duck` (the pair set at a threshold) and
+  :func:`_exact_topk_duck` (the twin of :func:`_exact_topk`).
 - LSH (:func:`lsh_bucketed_pairs`, :func:`lsh_query_topk`), whitening,
   MMR and Matryoshka audits stand alone.
 """
@@ -58,6 +65,7 @@ from .dedup import (
     _ID_PAIR,
     BAND_BUCKET_CAP,
     INCR_BATCH_MOD,
+    _contract_duck,
     _overlap_counts,
     _pct_ok,
     _posting,
@@ -679,13 +687,16 @@ def lsh_query_topk(t: Tables, n_bits: int = LSH_QUERY_BITS) -> DataFrame:
     :func:`lsh_tuning_for` keeps probed candidates ≈ (bits+1)·occupancy,
     corpus-independent; the registered contract pins bits for oracle
     staticness and documents that), then ``TakeOrdered`` on the
-    candidates. The query vector/bucket is the usual 1-row driver fetch.
+    candidates. The query vector/bucket is the usual 1-row driver fetch;
+    without a query row the result is empty, with the same schema.
     """
     emb = t["embeddings"].select(
         "vec_id", as_double("embedding").alias("e")
     )
-    q = emb.where(F.col("vec_id") == QUERY_VEC_ID).collect()[0]
-    qvec = list(q["e"])
+    q = emb.where(F.col("vec_id") == QUERY_VEC_ID).collect()
+    if not q:
+        emb, q = emb.where(F.lit(False)), [{"e": [0.0] * LSH_QUERY_DIM}]
+    qvec = list(q[0]["e"])
     if len(qvec) != LSH_QUERY_DIM:
         raise ValueError(
             f"lsh_query_topk: embedding dim {len(qvec)} != LSH_QUERY_DIM "
@@ -802,19 +813,19 @@ def mmr_diverse_topk(t: Tables) -> DataFrame:
 
     Output (``MMR_K`` rows): ``mmr_rank``, ``vec_id``, ``rel_micro``,
     ``maxsim_micro`` (redundancy vs the already-picked set at pick
-    time; 0 for the first pick), ``score_micro``.
+    time; 0 for the first pick), ``score_micro``. Without a query row
+    there is no pick.
     """
     spark = t["embeddings"].sparkSession
     emb = t["embeddings"].select("vec_id", as_double("embedding").alias("e"))
-    qrow = emb.where(F.col("vec_id") == QUERY_VEC_ID).collect()[0]
-    qvec = list(qrow["e"])
-    pool_rows = (
+    q = emb.where(F.col("vec_id") == QUERY_VEC_ID).collect()
+    pool_rows = q and (
         emb.where(F.col("vec_id") != QUERY_VEC_ID)
         .select(
             "vec_id",
             "e",
             norm(F.col("e")).alias("nr"),
-            _cos_to_query(qvec).alias("rel"),
+            _cos_to_query(list(q[0]["e"])).alias("rel"),
         )
         .orderBy(F.col("rel").desc(), "vec_id")
         .limit(MMR_POOL)
@@ -1393,21 +1404,11 @@ def embedding_centroid_drift(t: Tables) -> DataFrame:
 
 
 def _knn_edge_cte() -> str:
-    """Shared oracle CTE chain building the mutual-kNN edge list (the
-    same sims + rk≤K definition as the knn_join_topk oracle)."""
+    """Shared oracle CTE chain building the mutual-kNN edge list ``e``
+    from the knn_join_topk oracle's neighbors."""
     return f"""
-        sims AS MATERIALIZED (
-          SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
-                 {_COS_DUCK} AS cos_sim
-          FROM embeddings a JOIN embeddings b ON a.vec_id != b.vec_id
-        ),
         knn AS MATERIALIZED (
-          SELECT vec_id, nbr_id FROM (
-            SELECT vec_id, nbr_id,
-                   row_number() OVER (PARTITION BY vec_id
-                                      ORDER BY cos_sim DESC, nbr_id) AS rk
-            FROM sims
-          ) WHERE rk <= {KNN_K}
+          SELECT vec_id, nbr_id FROM ({_exact_topk_duck(KNN_K, with_label=False)})
         ),
         e AS MATERIALIZED (
           SELECT vec_id AS a, nbr_id AS b FROM knn WHERE vec_id < nbr_id
@@ -2891,151 +2892,91 @@ def whiten_check(t: Tables) -> DataFrame:
     )
 
 
-_COS_DUCK = (
-    "round(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) / "
-    "(sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[]))) * "
-    "sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))), 6)"
-)
+def _cos_duck(x: str = "a", y: str = "b") -> str:
+    """DuckDB twin of :func:`_cos_matrix`: the 6-dp rounded cosine of the
+    ``embedding`` columns of the relations aliased ``x`` and ``y``."""
+    ex, ey = f"CAST({x}.embedding AS DOUBLE[])", f"CAST({y}.embedding AS DOUBLE[])"
+    return (
+        f"round(list_dot_product({ex}, {ey}) / (sqrt(list_dot_product({ex}, {ex}))"
+        f" * sqrt(list_dot_product({ey}, {ey}))), 6)"
+    )
+
+
+def _probe_cos_duck(cols: str = "", where: str = "", src: str = "embeddings a") -> str:
+    """``(vec_id[, cols], cos_sim)``: the exact cosine to the probe vector
+    ``QUERY_VEC_ID`` of every other row of ``src`` (aliased ``a``) that
+    passes ``where``."""
+    return f"""
+        SELECT a.vec_id AS vec_id{cols}, {_cos_duck("a", "q")} AS cos_sim
+        FROM {src}
+        CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = {QUERY_VEC_ID}) q
+        WHERE a.vec_id != {QUERY_VEC_ID}{where}"""
+
+
+def _probe_topk_duck(cols: str = "", where: str = "", src: str = "embeddings a") -> str:
+    """The ``TOPK`` best rows of :func:`_probe_cos_duck`, ties to the
+    smaller ``vec_id``."""
+    return f"{_probe_cos_duck(cols, where, src)}\n        ORDER BY cos_sim DESC, a.vec_id LIMIT {TOPK}"
+
+
+def _cos_join_duck(on: str, cols: str) -> str:
+    """``(cols, cos_sim)`` of every embeddings pair ``a``, ``b`` joined on
+    ``on``."""
+    return f"SELECT {cols}, {_cos_duck()} AS cos_sim FROM embeddings a JOIN embeddings b ON {on}"
+
+
+def _cos_pairs_duck(theta: float, where: str = "") -> str:
+    """The exact cosine pair set: ``(id_a, id_b, cos_sim)`` with
+    ``id_a < id_b`` and cosine ≥ ``theta``, also passing ``where``."""
+    return f"""
+        SELECT * FROM ({_cos_join_duck("a.vec_id < b.vec_id", "a.vec_id AS id_a, b.vec_id AS id_b")})
+        WHERE cos_sim >= {theta}{where}"""
+
+
+def _exact_topk_duck(k: int, with_label: bool) -> str:
+    """DuckDB twin of :func:`_exact_topk`: each anchor's ``k`` best
+    neighbors by ``(cos_sim DESC, nbr_id)``, of another label when
+    ``with_label``; a NULL cosine is never ranked."""
+    on, cols = "a.vec_id != b.vec_id", "a.vec_id AS vec_id, b.vec_id AS nbr_id"
+    if with_label:
+        on = "a.label != b.label"
+        cols = "a.vec_id AS vec_id, a.label AS label, b.vec_id AS nbr_id, b.label AS nbr_label"
+    return f"""
+        SELECT * EXCLUDE (rk), CAST(rk AS INTEGER) AS rk FROM (
+          SELECT *, row_number() OVER (PARTITION BY vec_id
+                                       ORDER BY cos_sim DESC, nbr_id) AS rk
+          FROM ({_cos_join_duck(on, cols)}) WHERE cos_sim IS NOT NULL
+        ) WHERE rk <= {k}"""
+
 
 ORACLES: dict[str, str] = {
-    "cosine_topk": f"""
-        SELECT a.vec_id AS vec_id, {_COS_DUCK.replace('b.embedding', 'q.embedding')} AS cos_sim
-        FROM embeddings a,
-             (SELECT embedding FROM embeddings WHERE vec_id = {QUERY_VEC_ID}) q
-        WHERE a.vec_id != {QUERY_VEC_ID}
-        ORDER BY cos_sim DESC, a.vec_id
-        LIMIT {TOPK}
-    """,
-    "cosine_range_search": f"""
-        SELECT a.vec_id AS vec_id,
-               {_COS_DUCK.replace('b.embedding', 'q.embedding')} AS cos_sim
-        FROM embeddings a,
-             (SELECT embedding FROM embeddings WHERE vec_id = {QUERY_VEC_ID}) q
-        WHERE a.vec_id != {QUERY_VEC_ID}
-          AND {_COS_DUCK.replace('b.embedding', 'q.embedding')} >= {RANGE_THRESHOLD}
-    """,
-    "filtered_cosine_topk": f"""
-        SELECT a.vec_id AS vec_id, a.label AS label,
-               {_COS_DUCK.replace('b.embedding', 'q.embedding')} AS cos_sim
-        FROM embeddings a,
-             (SELECT embedding FROM embeddings WHERE vec_id = {QUERY_VEC_ID}) q
-        WHERE a.label = {FILTER_LABEL} AND a.vec_id != {QUERY_VEC_ID}
-        ORDER BY cos_sim DESC, a.vec_id
-        LIMIT {TOPK}
-    """,
-    "embedding_near_dup_pairs": f"""
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b, {_COS_DUCK} AS cos_sim
-        FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        WHERE {_COS_DUCK} >= {NEAR_DUP_THRESHOLD}
-    """,
-    # lsh_bucketed_pairs / ivf_topk: approximate — rows-only by design;
-    # the *_check companions below turn their quality contracts into hard
-    # driver checks (count + TRUE-flag hash comparison).
-    "ivf_recall_check": f"""
-        SELECT count(*) AS n_exact, TRUE AS recall_ok, TRUE AS precision_ok
-        FROM (
-          SELECT a.vec_id
-          FROM embeddings a,
-               (SELECT embedding FROM embeddings
-                WHERE vec_id = {QUERY_VEC_ID}) q
-          WHERE a.vec_id != {QUERY_VEC_ID}
-          ORDER BY {_COS_DUCK.replace('b.embedding', 'q.embedding')} DESC, a.vec_id
-          LIMIT {TOPK}
-        )
-    """,
-    "pq_recall_check": f"""
-        SELECT count(*) AS n_exact, TRUE AS recall_ok, TRUE AS precision_ok
-        FROM (
-          SELECT a.vec_id
-          FROM embeddings a,
-               (SELECT embedding FROM embeddings
-                WHERE vec_id = {QUERY_VEC_ID}) q
-          WHERE a.vec_id != {QUERY_VEC_ID}
-          ORDER BY {_COS_DUCK.replace('b.embedding', 'q.embedding')} DESC, a.vec_id
-          LIMIT {TOPK}
-        )
-    """,
-    "ivfpq_recall_check": f"""
-        SELECT count(*) AS n_exact, TRUE AS recall_ok, TRUE AS precision_ok
-        FROM (
-          SELECT a.vec_id
-          FROM embeddings a,
-               (SELECT embedding FROM embeddings
-                WHERE vec_id = {QUERY_VEC_ID}) q
-          WHERE a.vec_id != {QUERY_VEC_ID}
-          ORDER BY {_COS_DUCK.replace('b.embedding', 'q.embedding')} DESC, a.vec_id
-          LIMIT {TOPK}
-        )
-    """,
+    "cosine_topk": _probe_topk_duck(),
+    "cosine_range_search": f"SELECT * FROM ({_probe_cos_duck()}) WHERE cos_sim >= {RANGE_THRESHOLD}",
+    "filtered_cosine_topk": _probe_topk_duck(
+        cols=", a.label AS label", where=f" AND a.label = {FILTER_LABEL}"
+    ),
+    "embedding_near_dup_pairs": _cos_pairs_duck(NEAR_DUP_THRESHOLD),
+    # the VALUE-hashed exact twin at the same operating point (VERDICT
+    # r10 §4: non-empty on the immutable fixtures, unlike the 0.95 rows)
+    "embedding_near_dup_pairs_theta": _cos_pairs_duck(SEMDEDUP_THRESHOLD),
     # embedding_whiten_audit: rows-only (eigenvectors aren't
     # SQL-reproducible); whiten_check carries the identity-covariance
     # contract with the corpus size as its oracle-recomputed exact field
-    "whiten_check": """
-        SELECT count(*) AS n_vecs, TRUE AS diag_ok, TRUE AS offdiag_ok
-        FROM embeddings
-    """,
-    # semantic_dedup_pairs: float kmeans isn't SQL-replayable — rows-only;
-    # semdedup_check is its hard driver contract (exact pair count + the
-    # exact-precision subset claim).
-    "semdedup_check": f"""
-        SELECT count(*) AS n_exact, TRUE AS subset_ok
-        FROM (
-          SELECT a.vec_id AS id_a, b.vec_id AS id_b
-          FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-          WHERE {_COS_DUCK} >= {SEMDEDUP_THRESHOLD}
-        )
-    """,
-    "lsh_subset_check": f"""
-        SELECT count(*) AS n_exact, TRUE AS subset_ok
-        FROM (
-          SELECT a.vec_id AS id_a, b.vec_id AS id_b
-          FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-          WHERE {_COS_DUCK} >= {NEAR_DUP_THRESHOLD}
-        )
-    """,
-    # lsh_pairs_at_theta: rows-only (hyperplane signatures); its contract
-    # check quantifies subset AND recall over the 0.4-threshold pairs the
-    # fixtures actually contain (lsh_subset_check's n_exact is 0 there)
-    "lsh_theta_recall_check": f"""
-        SELECT count(*) AS n_exact, TRUE AS subset_ok, TRUE AS recall_ok
-        FROM (
-          SELECT a.vec_id AS id_a, b.vec_id AS id_b
-          FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-          WHERE {_COS_DUCK} >= {SEMDEDUP_THRESHOLD}
-        )
-    """,
-    # lsh_multiprobe_pairs: rows-only (hyperplane signatures + probe
-    # sequences); its contract pins subset + a recall floor ABOVE the
-    # single-probe theory value, over the same exact 0.4-threshold pairs
-    "lsh_multiprobe_recall_check": f"""
-        SELECT count(*) AS n_exact, TRUE AS subset_ok, TRUE AS recall_ok
-        FROM (
-          SELECT a.vec_id AS id_a, b.vec_id AS id_b
-          FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-          WHERE {_COS_DUCK} >= {SEMDEDUP_THRESHOLD}
-        )
-    """,
-    # the VALUE-hashed exact twin at the same operating point (VERDICT
-    # r10 §4: non-empty on the immutable fixtures, unlike the 0.95 rows)
-    "embedding_near_dup_pairs_theta": f"""
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b, {_COS_DUCK} AS cos_sim
-        FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        WHERE {_COS_DUCK} >= {SEMDEDUP_THRESHOLD}
-    """,
+    "whiten_check": _contract_duck(
+        "SELECT vec_id FROM embeddings", "diag_ok", "offdiag_ok", count="count(*) AS n_vecs"
+    ),
     # incremental_semantic_pairs: rows-only (float k-means); its ingest
     # contract quantifies subset + recall over the exact CROSS pairs of
     # the shared batch split (VERDICT r10 §6)
-    "incremental_semantic_check": f"""
-        SELECT count(*) AS n_exact_cross, TRUE AS subset_ok,
-               TRUE AS recall_ok
-        FROM (
-          SELECT a.vec_id AS id_a, b.vec_id AS id_b
-          FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-          WHERE {_COS_DUCK} >= {SEMDEDUP_THRESHOLD}
-            AND ((a.vec_id % {INCR_BATCH_MOD} = 0)
-                 != (b.vec_id % {INCR_BATCH_MOD} = 0))
-        )
-    """,
+    "incremental_semantic_check": _contract_duck(
+        _cos_pairs_duck(
+            SEMDEDUP_THRESHOLD,
+            f" AND (id_a % {INCR_BATCH_MOD} = 0) != (id_b % {INCR_BATCH_MOD} = 0)",
+        ),
+        "subset_ok",
+        "recall_ok",
+        count="count(*) AS n_exact_cross",
+    ),
     "lsh_query_topk": _lsh_query_oracle_sql(LSH_QUERY_BITS),
     "mmr_diverse_topk": _mmr_oracle_sql(MMR_K),
     # knn_graph_triangles / label_propagation_knn: now ride the
@@ -3045,12 +2986,12 @@ ORACLES: dict[str, str] = {
     # exact-edge oracles live on in tests/test_oracle_parity.py, which
     # pins the exact builds (_mutual_knn_edges_exact + the unchanged
     # downstream algebra) against _triangles_oracle_sql/_lpa_oracle_sql.
-    "knn_edge_agreement_check": f"""
-        WITH {_knn_edge_cte()}
-        SELECT count(*) AS n_exact_edges, TRUE AS recall_ok,
-               TRUE AS edge_ratio_ok
-        FROM e
-    """,
+    "knn_edge_agreement_check": _contract_duck(
+        f"WITH {_knn_edge_cte()} SELECT * FROM e",
+        "recall_ok",
+        "edge_ratio_ok",
+        count="count(*) AS n_exact_edges",
+    ),
     "embedding_centroid_drift": f"""
         WITH e AS (
           SELECT label, vec_id % 2 = 0 AS half_a,
@@ -3085,36 +3026,8 @@ ORACLES: dict[str, str] = {
                     AS BIGINT) AS drift_micro
         FROM lab
     """,
-    "hard_negative_mining": f"""
-        WITH sims AS (
-          SELECT a.vec_id AS vec_id, a.label AS label,
-                 b.vec_id AS nbr_id, b.label AS nbr_label,
-                 {_COS_DUCK} AS cos_sim
-          FROM embeddings a JOIN embeddings b ON a.label != b.label
-        )
-        SELECT vec_id, label, nbr_id, nbr_label, cos_sim,
-               CAST(rk AS INTEGER) AS rk
-        FROM (
-          SELECT *, row_number() OVER (PARTITION BY vec_id
-                                       ORDER BY cos_sim DESC, nbr_id) AS rk
-          FROM sims WHERE cos_sim IS NOT NULL
-        )
-        WHERE rk <= {HARDNEG_K}
-    """,
-    "knn_join_topk": f"""
-        WITH sims AS (
-          SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id, {_COS_DUCK} AS cos_sim
-          FROM embeddings a JOIN embeddings b ON a.vec_id != b.vec_id
-        )
-        SELECT vec_id, nbr_id, cos_sim, CAST(rk AS INTEGER) AS rk
-        FROM (
-          SELECT vec_id, nbr_id, cos_sim,
-                 row_number() OVER (PARTITION BY vec_id
-                                    ORDER BY cos_sim DESC, nbr_id) AS rk
-          FROM sims WHERE cos_sim IS NOT NULL
-        )
-        WHERE rk <= {KNN_K}
-    """,
+    "hard_negative_mining": _exact_topk_duck(HARDNEG_K, with_label=True),
+    "knn_join_topk": _exact_topk_duck(KNN_K, with_label=False),
     "label_centroid_sim": """
         WITH e AS (
           SELECT vec_id, label, generate_subscripts(embedding, 1) AS dim,
@@ -3139,33 +3052,38 @@ def _quality_filtered_ann_oracle() -> str:
     # module's top keeps the dependency one-directional and obvious
     from .campaign import _GATE_DUCK
 
-    return f"""
-        WITH {_GATE_DUCK}
-        SELECT a.vec_id AS vec_id,
-               {_COS_DUCK.replace('b.embedding', 'q.embedding')} AS cos_sim
-        FROM embeddings a
-        JOIN g ON a.vec_id = g.doc_id
-        CROSS JOIN (SELECT embedding FROM embeddings
-                    WHERE vec_id = {QUERY_VEC_ID}) q
-        WHERE a.vec_id != {QUERY_VEC_ID}
-        ORDER BY cos_sim DESC, a.vec_id
-        LIMIT {TOPK}
-    """
+    return f"WITH {_GATE_DUCK} {_probe_topk_duck(src='embeddings a JOIN g ON a.vec_id = g.doc_id')}"
 
 
 ORACLES["quality_filtered_ann"] = _quality_filtered_ann_oracle()
 
-# ann_knn_topk / hard_negative_mining_ann: rows-only (IVF route); their
-# hash-green companions recompute the exact denominators in SQL and
-# expect the recall flags TRUE.
-ORACLES["ann_knn_recall_check"] = f"""
-    SELECT count(*) AS n_exact, TRUE AS recall_ok
-    FROM ({ORACLES["knn_join_topk"]})
-"""
-ORACLES["hardneg_recall_check"] = f"""
-    SELECT count(*) AS n_exact, TRUE AS recall_ok
-    FROM ({ORACLES["hard_negative_mining"]})
-"""
+# The contract checks' oracles, each the row count of its exact twin
+# with every claim flag TRUE. lsh_bucketed_pairs / ivf_topk / pq_topk /
+# ivfpq_topk / lsh_pairs_at_theta / lsh_multiprobe_pairs /
+# semantic_dedup_pairs / ann_knn_topk / hard_negative_mining_ann are
+# approximate, rows-only by design; these checks turn their quality
+# contracts into hard driver checks.
+ORACLES.update(
+    dict.fromkeys(
+        ("ivf_recall_check", "pq_recall_check", "ivfpq_recall_check"),
+        _contract_duck(ORACLES["cosine_topk"], "recall_ok", "precision_ok"),
+    )
+)
+ORACLES["lsh_subset_check"] = _contract_duck(ORACLES["embedding_near_dup_pairs"], "subset_ok")
+ORACLES["semdedup_check"] = _contract_duck(
+    ORACLES["embedding_near_dup_pairs_theta"], "subset_ok"
+)
+# the LSH theta and multi-probe checks quantify subset AND recall over the
+# 0.4-threshold pairs the fixtures actually contain (lsh_subset_check's
+# n_exact is 0 there)
+ORACLES.update(
+    dict.fromkeys(
+        ("lsh_theta_recall_check", "lsh_multiprobe_recall_check"),
+        _contract_duck(ORACLES["embedding_near_dup_pairs_theta"], "subset_ok", "recall_ok"),
+    )
+)
+ORACLES["ann_knn_recall_check"] = _contract_duck(ORACLES["knn_join_topk"], "recall_ok")
+ORACLES["hardneg_recall_check"] = _contract_duck(ORACLES["hard_negative_mining"], "recall_ok")
 
 # margin mining: exact op hash-checked (integer-micro scoring); the ANN
 # twin is rows-only with bitext_ann_agreement_check as its contract
@@ -3195,10 +3113,9 @@ ORACLES["bitext_margin_pairs"] = f"""
     WHERE rn = 1
 """
 
-ORACLES["bitext_ann_agreement_check"] = f"""
-    SELECT count(*) AS n_exact, TRUE AS agree_ok
-    FROM ({ORACLES["bitext_margin_pairs"]})
-"""
+ORACLES["bitext_ann_agreement_check"] = _contract_duck(
+    ORACLES["bitext_margin_pairs"], "agree_ok"
+)
 
 #: Matryoshka prefix dimensions audited against the full 64-dim cosine
 MATRYOSHKA_DIMS = (8, 16, 32)

@@ -316,3 +316,33 @@ def test_no_top_level_name_is_defined_in_two_package_modules():
     repeated = {n: sorted(m) for n, m in modules.items() if len(m) > 1}
     assert {n: m for n, m in repeated.items() if n not in _PER_MODULE_NAMES} == {}
     assert sorted(set(_PER_MODULE_NAMES) - set(repeated)) == []
+
+
+#: The defining fragment of each exact DuckDB reference rule, and the
+#: one builder that writes it. Oracles compose the builder instead of
+#: re-typing the rule.
+_REFERENCE_RULE_FRAGMENTS = {
+    "for j in range(SHINGLE_WORDS)": "dedup._shingle_duck, the word-shingle join",
+    "na.n + nb.n - common": "dedup._scores_duck, the exact Jaccard score",
+    "reach(node, lab)": "dedup._components_duck, the min-label components",
+    "embeddings a JOIN embeddings b": "similarity._cos_join_duck, the cosine pair join",
+}
+
+
+def test_each_duckdb_reference_rule_is_written_once():
+    """Each fragment of ``_REFERENCE_RULE_FRAGMENTS`` appears exactly
+    once in package source, and no oracle derives a cosine by rewriting
+    another's SQL text (``.replace('b.embedding', ...)``)."""
+    import glob
+    import re
+
+    import streamming_processing_pyspark_spark as pkg
+
+    pkg_dir = os.path.dirname(pkg.__file__)
+    src = ""
+    for path in sorted(glob.glob(os.path.join(pkg_dir, "**", "*.py"), recursive=True)):
+        with open(path) as f:
+            src += f.read()
+    counts = {frag: src.count(frag) for frag in _REFERENCE_RULE_FRAGMENTS}
+    assert counts == dict.fromkeys(_REFERENCE_RULE_FRAGMENTS, 1)
+    assert re.findall(r"\.replace\(\s*['\"]b\.embedding", src) == []

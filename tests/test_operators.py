@@ -1863,6 +1863,40 @@ def test_tied_topk_cut():
     ]
 
 
+@pytest.mark.parametrize(
+    "op, rows",
+    [
+        ("lsh_query_topk", "empty"),
+        ("mmr_diverse_topk", "empty"),
+        ("kcenter_coreset", "empty"),
+        ("kcenter_coreset", "all_zero_norm"),
+    ],
+)
+def test_query_vector_ops_without_usable_embeddings(spark, op, rows):
+    """Over an embeddings table with no rows, or (k-center) with no
+    nonzero-norm row to seed from, the query-vector and coreset operators
+    return 0 rows with the schema they have over a usable table, as the
+    flat indexes do without a query vector."""
+    from streamming_processing_pyspark_spark.operators import coreset
+
+    schema = "vec_id long, embedding array<float>, label int"
+    dim = similarity.LSH_QUERY_DIM
+    usable = [
+        (i, [float((i * 7 + d * 3) % 11 - 5) for d in range(dim)], i % 3)
+        for i in range(12)
+    ]
+    degenerate = {
+        "empty": [],
+        "all_zero_norm": [(i, [0.0] * dim, 0) for i in range(5)],
+    }[rows]
+    fn = getattr(coreset if op == "kcenter_coreset" else similarity, op)
+    usual = fn({"embeddings": spark.createDataFrame(usable, schema)})
+    assert usual.count() > 0
+    out = fn({"embeddings": spark.createDataFrame(degenerate, schema)})
+    assert out.collect() == []
+    assert repr(out.schema) == repr(usual.schema)
+
+
 def test_zero_norm_vector_is_never_ranked(spark, tmp_path):
     """A zero-norm embedding has no cosine: the exact rankers do not
     crash on it (ANSI DIVIDE_BY_ZERO, a driver ZeroDivisionError), never
